@@ -205,13 +205,16 @@ abstract class EstimatorNode extends Node {
     applyModel(model.getOrElse(
       throw new GraftException(s"estimator node '$name' transformed before fit")), ctx, in)
   def isFitted: Boolean = model.isDefined
+  /** The fitted model; fails loudly on a node that was never fitted. */
+  protected[graft] def fitted: Model =
+    model.getOrElse(throw new GraftException(s"estimator node '$name' not fitted"))
 
   /** Fitted-state persistence (reference per-node `dump(f)`/`load(f)` pickle,
     * mldagbase.py:744-765, 954-977): java serialization of the model. Nodes
     * whose model is not `Serializable` override (e.g. SparkMlNode → MLWriter).
     */
   def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val os = new java.io.ObjectOutputStream(new java.io.FileOutputStream(path))
     try os.writeObject(m.asInstanceOf[AnyRef]) finally os.close()
   }
@@ -243,8 +246,7 @@ class SparkMlNode(
     * java serialization of internal classes. `path` is a directory.
     */
   override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(throw new GraftException(s"estimator node '$name' not fitted"))
-    m match {
+    fitted match {
       case w: org.apache.spark.ml.util.MLWritable => w.write.overwrite().save(path)
       case other => throw new GraftException(
         s"estimator node '$name': fitted model ${other.getClass.getName} is not MLWritable")

@@ -297,9 +297,8 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
                        val compactEvery: Int = 0,
                        val compactPath: Option[String] = None,
                        val maxOverlayRows: Long = 4000000L)
-  extends graft.dag.EstimatorNode with IncrementalIndex {
+  extends StoredIndex {
   type Model = ClusterIndexNode.Index
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   require(maxOverlayRows > 0, "maxOverlayRows must be positive")
   override protected def defaultName: String = "cluster_index"
   val inputs = Seq(Port("pairs"), Port("queries"))
@@ -361,12 +360,14 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
   private def effectiveMapping(m: Model): DataFrame =
     baseEffective(m).union(m.fresh.select("id", "cluster_id"))
 
-  def fitModel(ctx: Ctx, in: In): Model = {
-    val base = persistMapping(
-      cc(ctx, in("pairs")).select(col("id"), col("cluster_id")))
+  /** A model whose overlays are empty: all state in the laid-out base. */
+  private def baseOnly(base: DataFrame): Model = {
     tombstoneRows = 0L; remapRows = 0L
     ClusterIndexNode.Index(base, emptyFresh(base), emptyRemap(base), emptyTomb(base))
   }
+
+  def fitModel(ctx: Ctx, in: In): Model =
+    baseOnly(persistMapping(cc(ctx, in("pairs")).select(col("id"), col("cluster_id"))))
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     val q = in("queries")
@@ -406,8 +407,7 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     * filter delta edges against the deletion set if that is not intended. */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
     import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val d = delta.select(col(idA).as("__a"), col(idB).as("__b"))
     val baseEff = baseEffective(m)
     // contract endpoints through base-effective and fresh (disjoint probes);
@@ -465,12 +465,16 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     val overlayRows = sized.getLong(1)
     model = Some(ClusterIndexNode.Index(m.base, newFresh, newRemap, m.tombstones))
     m.fresh.unpersist(); m.remap.unpersist(); contracted.unpersist()
-    generation += 1
     // the overlay must stay broadcast-sized: amortize a corpus relayout
     // over many batches once the accumulated overlay crosses the bound
     if (overlayRows + tombstoneRows > maxOverlayRows) foldOverlay()
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    endWave()
   }
+
+  /** Retention ledger: (id, cluster_id) — CURRENT labels, so "drop every
+    * member of cluster X" is `cluster_id = X` (whole-cluster takedowns). */
+  override protected def retentionLedger: Option[(DataFrame, String)] =
+    Some((effectiveMapping(fitted), "id"))
 
   /** Remove documents from the mapping. Base rows are masked via the
     * broadcast tombstone overlay (no corpus relayout); fresh rows are
@@ -480,17 +484,8 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     * folded in once and never replayed (the from-scratch equivalent: CC
     * over ALL edges, mapping then restricted to live ids). A deleted id
     * queried afterwards maps to itself (singleton), like any unknown id. */
-  /** Retention ledger: (id, cluster_id) — CURRENT labels, so "drop every
-    * member of cluster X" is `cluster_id = X` (whole-cluster takedowns). */
-  override protected def retentionLedger: Option[(DataFrame, String)] = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    Some((effectiveMapping(m), "id"))
-  }
-
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val del = deletes.select(col(deletes.columns.head).as("id")).distinct()
     val newTomb = persistSmall(m.tombstones.union(del).distinct())
     val newFresh = persistSmall(m.fresh.join(del, Seq("id"), "left_anti"))
@@ -503,54 +498,33 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     val freshRows = sized.getLong(1) - tombstoneRows
     model = Some(ClusterIndexNode.Index(m.base, newFresh, m.remap, newTomb))
     m.fresh.unpersist(); m.tombstones.unpersist()
-    generation += 1
     if (tombstoneRows + freshRows > maxOverlayRows) foldOverlay()
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    endWave()
   }
 
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
   @volatile private var tombstoneRows: Long = 0L
   @volatile private var remapRows: Long = 0L
 
   /** One corpus-sized relayout that folds the overlays into the base and
     * clears them — the amortized cost the per-batch path no longer pays. */
   def foldOverlay(): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val folded = persistMapping(effectiveMapping(m))
-    model = Some(ClusterIndexNode.Index(
-      folded, emptyFresh(folded), emptyRemap(folded), emptyTomb(folded)))
-    tombstoneRows = 0L; remapRows = 0L
-    m.base.unpersist(); m.fresh.unpersist(); m.remap.unpersist(); m.tombstones.unpersist()
+    val m = fitted
+    model = Some(baseOnly(persistMapping(effectiveMapping(m))))
+    releaseFrames(m)
   }
 
-  /** Truncate lineage through parquet (the MinHashIndexNode/IvfIndexNode
-    * double-buffer contract); also folds the overlays — the written
-    * `mapping` is the effective one, keeping the save format unchanged. */
-  def compactIndex(): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) => compactGen += 1; s"$root/gen-${compactGen % 2}"
-      case None =>
-        val t = java.nio.file.Files.createTempDirectory("graft_cluster_compact_")
-        t.toFile.deleteOnExit()
-        t.toString
-    }
-    val session = m.base.sparkSession
-    saveFitted(path)
-    val base = persistMapping(session.read.parquet(s"$path/mapping"))
-    model = Some(ClusterIndexNode.Index(
-      base, emptyFresh(base), emptyRemap(base), emptyTomb(base)))
-    tombstoneRows = 0L; remapRows = 0L
+  override protected def releaseFrames(m: Model): Unit = {
     m.base.unpersist(); m.fresh.unpersist(); m.remap.unpersist(); m.tombstones.unpersist()
   }
-
-  /** Release the persisted frames (fit again to rebuild). */
-  def unpersistIndex(): Unit = model.foreach { m =>
-    m.base.unpersist(); m.fresh.unpersist(); m.remap.unpersist(); m.tombstones.unpersist()
-  }
+  override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
+    m.base.sparkSession
+  /** Writes the EFFECTIVE mapping, so a compaction also folds the overlays
+    * and the save format stays one `mapping` directory. */
+  override protected def writeState(m: Model, path: String): Unit =
+    effectiveMapping(m).write.mode("overwrite").parquet(s"$path/mapping")
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model =
+    baseOnly(persistMapping(spark.read.parquet(s"$path/mapping")))
 
   /** The base mapping frame — exposed for plan tests pinning that update
     * batches do NOT relayout the corpus (reference stays identical until
@@ -562,23 +536,6 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     * inside the foldOverlay that immediately clears it). */
   private[graft] def overlayRowsForTest(tomb: Long, remap: Long): Unit = {
     tombstoneRows = tomb; remapRows = remap
-  }
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    effectiveMapping(m).write.mode("overwrite").parquet(s"$path/mapping")
-    saveMaintenanceState(m.base.sparkSession, path)
-  }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  /** Session-explicit load (the MinHashIndexNode.loadFitted rationale). */
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
-    val base = persistMapping(spark.read.parquet(s"$path/mapping"))
-    model = Some(ClusterIndexNode.Index(
-      base, emptyFresh(base), emptyRemap(base), emptyTomb(base)))
-    tombstoneRows = 0L; remapRows = 0L
-    loadMaintenanceState(spark, path)
   }
 }
 
@@ -964,9 +921,8 @@ class MinHashIndexNode(
     // (0 = never; see updateIndex docs).
     val compactEvery: Int = 0,
     val compactPath: Option[String] = None)
-  extends graft.dag.EstimatorNode with IncrementalIndex {
+  extends BandedBucketIndex {
   require(numHashes % bands == 0, "numHashes must divide into bands")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   type Model = MinHashIndexNode.Index
   override protected def defaultName: String = "minhash_index"
   val inputs = Seq(Port("corpus"), Port("delta"))
@@ -993,32 +949,27 @@ class MinHashIndexNode(
         expr(s"minhash_bands($shCol, $numHashes, $bands)").as("__bands"))
       .selectExpr(id, "posexplode(__bands) as (band, band_hash)")
 
-  // ---- columnar MoR state (SegStore, VERDICT r16 next #2): per-wave
-  // writes are O(delta) parquet segments. The cap-drop semantics that
-  // blocked id-tombstones ("a bucket crossing maxBucket drops WHOLE") are
-  // expressed exactly by COMPOSITE-KEY tombstones on (band, band_hash):
-  // every stored row of the dropped bucket dies at the wave's generation,
-  // while rows inserted into the same bucket by a LATER wave (the restart
-  // semantics fit/update always had) survive the generation rule. ----
-  @volatile private var shStore: Option[SegStore] = None
-  @volatile private var bkStore: Option[SegStore] = None
-  private def segRoot: Option[String] = compactPath.map(_ + "/segs")
-  private def idxStores: Seq[SegStore] = Seq(shStore, bkStore).flatten
+  // ---- columnar MoR state (BandedBucketIndex, VERDICT r16 next #2): the
+  // shingle ledger and the capped (band, band_hash) buckets are SegStores;
+  // per-wave writes are O(delta) parquet segments, cap-drops composite-key
+  // tombstones on the bucket key. ----
+  protected def bucketKey: Seq[String] = Seq("band", "band_hash")
+  protected def bucketRows(ledger: DataFrame): DataFrame = {
+    graft.functions.VecFunctions.register(ledger.sparkSession)
+    bandKeys(ledger, "base_id", "__sh_b").select("band", "band_hash", "base_id")
+  }
+  protected def ledgerFrame(m: Model): DataFrame = m.shingles
+  protected def bucketFrame(m: Model): DataFrame = m.buckets
+  protected def banded(ledger: DataFrame, buckets: DataFrame): Model =
+    MinHashIndexNode.Index(ledger, buckets)
 
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
     graft.functions.VecFunctions.register(ctx.spark)
     val sh = sketch(in("corpus"), "base_id", "__sh_b")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val buckets0 = bandKeys(sh, "base_id", "__sh_b")
-    val ok = buckets0.groupBy("band", "band_hash").count()
-      .filter(col("count") <= maxBucket).select("band", "band_hash")
-    val buckets = buckets0.join(ok, Seq("band", "band_hash"))
-      .select("band", "band_hash", "base_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    idxStores.foreach(_.unpersistAll()) // refit releases any old stores
-    shStore = Some(new SegStore(s"${name}_sh", segRoot).reset(sh))
-    bkStore = Some(new SegStore(s"${name}_bk", segRoot).reset(buckets))
+    val buckets = cappedBuckets(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    seedStores(Seq(sh, buckets))
     MinHashIndexNode.Index(sh, buckets)
   }
 
@@ -1092,225 +1043,39 @@ class MinHashIndexNode(
     * re-sketching the base corpus. The bucket cap is re-applied over the
     * live table: a bucket that crosses `maxBucket` only after growth is
     * dropped whole (it became a boilerplate family; same guard as fit).
-    * Per-wave state writes are O(delta) (SegStore): the delta's shingle
-    * rows and surviving band keys land as parquet segments, cap-drops as
-    * composite-key tombstones, and the live frames are resolved unions —
-    * no corpus-sized copy per wave. The store folds every `foldEvery`
-    * waves (amortized O(corpus/32)); `compactEvery > 0` additionally
-    * round-trips the index through parquet (under `compactPath`, or a JVM
-    * temp dir when unset) as the durable crash-recovery cadence.
-    * saveFitted/loadFitted remains the manual equivalent.
+    * Per-wave state writes are O(delta) (BandedBucketIndex): the delta's
+    * shingle rows and surviving band keys land as parquet segments,
+    * cap-drops as composite-key tombstones, and the live frames are
+    * resolved unions — no corpus-sized copy per wave. The store folds every
+    * `foldEvery` waves (amortized O(corpus/32)); `compactEvery > 0`
+    * additionally round-trips the index through parquet (under
+    * `compactPath`, or a per-node JVM temp dir when unset) as the durable
+    * crash-recovery cadence. saveFitted/loadFitted remains the manual
+    * equivalent.
     */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
     graft.functions.VecFunctions.register(ctx.spark)
     graft.functions.VecFunctions.register(delta.sparkSession)
-    val ss = shStore.get; val bs = bkStore.get
-    // O(delta) state writes (VERDICT r16 next #2 — this was the last
-    // copy-per-wave family): the delta's shingle rows land once as a
-    // parquet segment; fresh band keys derive from the CACHED segment.
-    val shSeg = ss.appendSegment(
-      sketch(delta, "base_id", "__sh_b").select("base_id", "__sh_b"))
-    val freshKeys = bandKeys(shSeg, "base_id", "__sh_b")
-      .select("band", "band_hash", "base_id")
-    // Cap re-evaluation is restricted to the TOUCHED buckets (stored
-    // buckets are ≤ maxBucket by invariant, so only buckets the delta
-    // lands in can cross it): the per-wave count is delta-bucket-sized.
-    // No explicit broadcast hint on `touched` (ADVICE r16: a large wave
-    // makes it delta×bands-sized — let the autoBroadcast threshold
-    // decide from the plan's own stats).
-    val touched = freshKeys.select("band", "band_hash").distinct()
-    val overCap = m.buckets.select("band", "band_hash")
-      .join(touched, Seq("band", "band_hash"), "left_semi")
-      .union(freshKeys.select("band", "band_hash"))
-      .groupBy("band", "band_hash").count()
-      .filter(col("count") > maxBucket).select("band", "band_hash")
-    // a bucket crossing the cap is dropped WHOLE: composite-key tombstone
-    // at this generation (kills every stored row of the bucket), and the
-    // fresh keys landing in it are filtered out of the insert segment —
-    // the exact pre-SegStore newBuckets semantics, including the restart
-    // behavior (a later wave can repopulate the dropped bucket).
-    // Cap-crossings are RARE: most waves drop nothing, and an empty
-    // tombstone costs a full parquet-commit write job plus a permanent
-    // extra channel join in every bucket-live resolution until the next
-    // fold — so one delta-bucket-sized count decides first (the count
-    // doubles as the wave's materializing action: it fills the ledger
-    // segment's cache through freshKeys). The r17 per-wave
-    // materializeAll is gone with it — every remaining frame roots in
-    // this wave's parquet (the derived-segment contract), so caches fill
-    // lazily on first use with no recompute hazard.
-    val overCapC = overCap.persist()
-    val bkSeg = if (overCapC.count() == 0L) {
-      overCapC.unpersist()
-      bs.appendDerivedSegment(freshKeys)
-    } else {
-      val capTomb = bs.appendTombstones(Seq("band", "band_hash"), overCapC)
-      overCapC.unpersist()
-      // DERIVED segment — no second write: band keys are a pure function
-      // of the just-written ledger segment and the written cap tombstones,
-      // so the lineage roots in this wave's parquet (depth 1, recoverable)
-      bs.appendDerivedSegment(
-        freshKeys.join(capTomb, Seq("band", "band_hash"), "left_anti"))
-    }
-    model = Some(MinHashIndexNode.Index(ss.live, bs.live))
-    foldStoresIfDue()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    insertLedgerRows(sketch(delta, "base_id", "__sh_b").select("base_id", "__sh_b"))
   }
 
-  /** Amortized consolidation (the SegStore contract): one O(corpus)
-    * columnar rewrite every `foldEvery` waves per store. */
-  private def foldStoresIfDue(): Unit = {
-    var folded = false
-    idxStores.foreach { st => if (st.needsFold) { st.fold(); folded = true } }
-    if (folded)
-      model = Some(MinHashIndexNode.Index(shStore.get.live, bkStore.get.live))
-  }
-
-  /** Remove deleted documents' shingle rows and band-bucket entries — two
-    * anti joins. Identical to a from-scratch fit over the post-delete
-    * corpus EXCEPT buckets previously dropped whole by `maxBucket`: those
-    * rows were never stored, so a deletion that would bring a dropped
-    * bucket back under the cap cannot resurrect it (under-recall, never
-    * false positives) until `rebuildIndex` re-derives the buckets from the
-    * shingle ledger. Kept buckets only shrink, so the cap needs no
-    * re-evaluation. Tombstones for unknown ids are no-ops. */
   /** Retention ledger: (idCol, n_shingles) — e.g. "drop every doc whose
     * shingle set is smaller than K" (too short to dedup meaningfully). */
-  override protected def retentionLedger: Option[(DataFrame, String)] = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    Some((m.shingles.select(col("base_id").as(idCol),
+  override protected def retentionLedger: Option[(DataFrame, String)] =
+    Some((fitted.shingles.select(col("base_id").as(idCol),
       expr("size(__sh_b)").as("n_shingles")), idCol))
-  }
 
-  def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val ss = shStore.get; val bs = bkStore.get
-    // O(delta) state writes: generation-stamped id tombstones on both
-    // stores, resolved at read (kept buckets only shrink — the cap needs
-    // no re-evaluation; dropped-whole buckets stay dropped until
-    // rebuildIndex, the documented under-recall gap)
-    val del = deletes.select(col(idCol).as("base_id")).distinct()
-    val shTomb = ss.appendTombstones("base_id", del)
-    bs.adoptTombstones("base_id", shTomb) // same ids — one write, one file
-    // no materializing action: the tombstone is already durable (the
-    // append wrote it), and its read-back cache fills on first use
-    model = Some(MinHashIndexNode.Index(ss.live, bs.live))
-    foldStoresIfDue()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  /** Re-derive the band buckets from the SHINGLE LEDGER — the shingles
-    * frame is the full per-doc ground truth (band keys are a pure function
-    * of it), so the rebuilt bucket table equals a from-scratch fit over the
-    * index's current contents BIT-FOR-BIT, including the cap: buckets that
-    * were dropped whole while over `maxBucket` RESURRECT once enough of
-    * their members were deleted to fit again — the exactness gap
-    * deleteFromIndex documents. One delta-free corpus pass over the skinny
-    * shingle frame (no re-tokenization, no data re-read); run after a
-    * deletion wave or on the compaction cadence. */
-  def rebuildIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    graft.functions.VecFunctions.register(m.shingles.sparkSession)
-    val buckets0 = bandKeys(m.shingles, "base_id", "__sh_b")
-    val ok = buckets0.groupBy("band", "band_hash").count()
-      .filter(col("count") <= maxBucket).select("band", "band_hash")
-    val newBuckets = buckets0.join(ok, Seq("band", "band_hash"))
-      .select("band", "band_hash", "base_id")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    newBuckets.count() // materialize before releasing the superseded generation
-    // full bucket-table replacement (cap resurrection included): the
-    // bucket store re-seeds on the rebuilt frame, clearing its tombstones
-    bkStore.foreach { st => st.unpersistAll(); st.reset(newBuckets) }
-    model = Some(MinHashIndexNode.Index(m.shingles, newBuckets))
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  /** updateIndex generations applied since fit (compaction cadence input). */
-  @volatile private var generation: Long = 0L
-
-  /** Truncate the index lineage to a parquet scan: write the current frames,
-    * reload them on the same session, re-persist (cache rebuilds lazily at
-    * the next action). The parquet copy doubles as a crash-recovery point
-    * mid-crawl.
-    *
-    * With a configured `compactPath` the writes DOUBLE-BUFFER between
-    * `gen-0/` and `gen-1/` subdirectories: after the first compaction the
-    * live plan IS a parquet scan of the previous compaction's directory, and
-    * Spark refuses (correctly) to overwrite a path a plan is reading from —
-    * so each compaction writes to the subdirectory the current plan does
-    * NOT read (ADVICE r7). The superseded subdir is left in place until the
-    * next compaction overwrites it; the freshest one is the crash-recovery
-    * point.
-    */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) =>
-        compactGen += 1
-        s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory(s"graft_idx_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.shingles.sparkSession
-    saveFitted(path) // writes the RESOLVED live frames (store pieces folded)
-    val sh = session.read.parquet(s"$path/shingles")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bk = session.read.parquet(s"$path/buckets")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the durable fold doubles as the store fold: release the old
-    // base/segments/tombstones, re-seed on the parquet read-back
-    shStore.foreach { st => st.unpersistAll(); st.reset(sh) }
-    bkStore.foreach { st => st.unpersistAll(); st.reset(bk) }
-    model = Some(MinHashIndexNode.Index(sh, bk))
-  }
-
-  /** Compactions applied so far (selects the gen-0/gen-1 write buffer). */
-  @volatile private var compactGen: Long = 0L
-
-  /** Release the persisted index frames (fit again to rebuild). */
-  def unpersistIndex(): Unit = model.foreach { _ => idxStores.foreach(_.unpersistAll()) }
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+  /** Saved as TWO parquet directories, `shingles` and `buckets`. */
+  override protected def writeState(m: Model, path: String): Unit = {
     m.shingles.write.mode("overwrite").parquet(s"$path/shingles")
     m.buckets.write.mode("overwrite").parquet(s"$path/buckets")
-    saveMaintenanceState(m.shingles.sparkSession, path)
   }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  /** Load the index onto a specific session. `SparkSession.active` is wrong
-    * in multi-session drivers (SessionIsolation clones, per-source streaming
-    * sessions): the index frames would bind to whichever session happens to
-    * be active, missing the VecFunctions registry/confs of the session that
-    * later runs transform (ADVICE r5). Pass the DAG's session explicitly.
-    */
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model = {
     import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
-    // persisted like fit/compact's frames: a loaded index serves every
-    // subsequent delta batch, and the superseded-generation release cycle
-    // must have a persist to release (ADVICE r10)
-    val sh = spark.read.parquet(s"$path/shingles")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bk = spark.read.parquet(s"$path/buckets")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    idxStores.foreach(_.unpersistAll())
-    shStore = Some(new SegStore(s"${name}_sh", segRoot).reset(sh))
-    bkStore = Some(new SegStore(s"${name}_bk", segRoot).reset(bk))
-    model = Some(MinHashIndexNode.Index(sh, bk))
-    loadMaintenanceState(spark, path)
+    MinHashIndexNode.Index(
+      spark.read.parquet(s"$path/shingles").persist(StorageLevel.MEMORY_AND_DISK),
+      spark.read.parquet(s"$path/buckets").persist(StorageLevel.MEMORY_AND_DISK))
   }
 }
 

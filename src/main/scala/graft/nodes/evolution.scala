@@ -429,7 +429,7 @@ class AggIndexNode(
     val idCol: String = "doc_id",
     val compactEvery: Int = 0,
     val compactPath: Option[String] = None)
-  extends EstimatorNode with IncrementalIndex {
+  extends StoredIndex {
   require(groupCols.nonEmpty, "agg_index: groupCols must be non-empty")
   require(sumSqCols.distinct.size == sumSqCols.size &&
     sumSqCols.forall(c => c != idCol && !groupCols.contains(c)),
@@ -460,7 +460,6 @@ class AggIndexNode(
     "agg_index: a decSum column cannot double as a min/max/distinct/hist " +
       "measure — the ledger pins it at DECIMAL(38, decScale), which would " +
       "silently change the other measure's comparison semantics")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   type Model = AggIndexNode.Index
   override protected def defaultName: String = "agg_index"
   val inputs = Seq(Port("corpus"), Port("probe"))
@@ -676,14 +675,15 @@ class AggIndexNode(
   /** Columnar MoR store behind the ledger (see [[SegStore]]): insert and
     * delete waves write O(delta) parquet, reads stay columnar/prunable,
     * folds amortize the consolidation. */
-  @volatile private var ledgerStore: Option[SegStore] = None
+  override protected def storeLabels: Seq[String] = Seq("ledger")
+  override protected def storeFrames(m: Model): Seq[DataFrame] = Seq(m.ledger)
+  override protected def withStoreFrames(m: Model, frames: Seq[DataFrame],
+      folded: Seq[Option[Long]]): Model = m.copy(ledger = frames.head)
 
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
     val ledger = ledgerOf(in("corpus")).persist(StorageLevel.MEMORY_AND_DISK)
-    ledgerStore.foreach(_.unpersistAll()) // refit releases the old store
-    ledgerStore = Some(new SegStore(name, root = compactPath.map(_ + "/segs"))
-      .reset(ledger))
+    seedStores(Seq(ledger))
     val totals = totalsOf(ledger).persist(StorageLevel.MEMORY_AND_DISK)
     val vcs = distinctCols.map(c => c ->
       valueCountsOf(ledger, c).persist(StorageLevel.MEMORY_AND_DISK)).toMap
@@ -717,8 +717,7 @@ class AggIndexNode(
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions.row_number
     require(k >= 1, s"agg_index '$name': topValues k must be >= 1")
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     if (!distinctCols.contains(column))
       throw new GraftException(
         s"agg_index '$name': topValues needs '$column' in distinctCols " +
@@ -735,8 +734,7 @@ class AggIndexNode(
   }
 
   private def histFrame(probe: DataFrame, column: String): (DataFrame, AggIndexNode.HistSpec) = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val spec = histSpecs.find(_.column == column).getOrElse(
       throw new GraftException(
         s"agg_index '$name': no hist spec for '$column' " +
@@ -801,11 +799,8 @@ class AggIndexNode(
     * pays one action per wave instead of one per node. */
   private[nodes] def prepareWave(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared = {
-    val m0 = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val store = ledgerStore.getOrElse(
-      throw new GraftException(s"agg_index '$name': no ledger store"))
-    var cur = m0
+    var cur = fitted
+    val store = stores.head
     var frames = Vector.empty[DataFrame]
     var superseded = Vector.empty[Model]
     def step(run: Model => (Model, Seq[DataFrame])): Unit = {
@@ -818,18 +813,14 @@ class AggIndexNode(
     val fin = cur; val rel = superseded
     IvmUtil.Prepared(frames, _ => {
       model = Some(fin)
-      rel.foreach(releaseIndex)
-      rel.indices.foreach { _ =>
-        generation += 1
-        foldIfDue(store)
-        if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-      }
+      rel.foreach(releaseFrames)
+      rel.foreach(_ => endWave())
     })
   }
 
   /** Release a superseded generation's group-state frames (the ledger's
     * pieces belong to the SegStore, which manages its own lifecycle). */
-  private def releaseIndex(m: Model): Unit = {
+  override protected def releaseFrames(m: Model): Unit = {
     m.totals.unpersist()
     m.valueCounts.values.foreach(_.unpersist())
     m.hists.values.foreach(_.unpersist())
@@ -888,15 +879,6 @@ class AggIndexNode(
       Seq(fresh, newTotals) ++ newVC.values ++ newHists.values)
   }
 
-  /** Amortized consolidation: one O(corpus) columnar rewrite every
-    * `SegStore.foldEvery` waves keeps the live plan and the tombstone set
-    * bounded. */
-  private def foldIfDue(store: SegStore): Unit =
-    if (store.needsFold) {
-      store.fold()
-      model = model.map(_.copy(ledger = store.live))
-    }
-
   /** Exact decrement: the semi-join recovers precisely what each deleted
     * row contributed; unknown ids no-op; groups reaching zero drop.
     * Bit-identical to re-aggregating the post-delete corpus. */
@@ -916,8 +898,7 @@ class AggIndexNode(
     * decrement/splice machinery as deleteFromIndex. */
   override def deleteWhere(ctx: Ctx, condition: String): Unit = {
     import org.apache.spark.sql.functions.coalesce
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val cond = coalesce(expr(condition).cast("boolean"), lit(false))
     // victims resolve to ROW IDS (idCol is the row handle — the ledger
     // keys every contribution by it), so predicate retention rides the
@@ -967,9 +948,7 @@ class AggIndexNode(
     * family carries (here it is equality by construction, pinned in
     * tests rather than needed for a cap). */
   def rebuildIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val newTotals = IvmUtil.barrier(totalsOf(m.ledger))
     val newVC = distinctCols.map(c => c ->
       IvmUtil.barrier(valueCountsOf(m.ledger, c))).toMap
@@ -977,53 +956,8 @@ class AggIndexNode(
       IvmUtil.barrier(binnedOf(m.ledger, s))).toMap
     materializeAll(Seq(newTotals) ++ newVC.values ++ newHists.values)
     model = Some(AggIndexNode.Index(m.ledger, newTotals, newVC, newHists))
-    m.totals.unpersist()
-    m.valueCounts.values.foreach(_.unpersist())
-    m.hists.values.foreach(_.unpersist())
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
-
-  /** Truncate lineage to a parquet scan (double-buffered under
-    * `compactPath` — the family convention). */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) => compactGen += 1; s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory("graft_idx_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.totals.sparkSession
-    saveFitted(path) // writes the RESOLVED live ledger (store pieces folded)
-    val newLedger = session.read.parquet(s"$path/ledger")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the durable fold doubles as the store fold: release the old
-    // base/segments/tombstones, re-seed on the parquet read-back
-    ledgerStore.foreach { st => st.unpersistAll(); st.reset(newLedger) }
-    model = Some(AggIndexNode.Index(
-      newLedger,
-      session.read.parquet(s"$path/totals").persist(StorageLevel.MEMORY_AND_DISK),
-      distinctCols.map(c => c -> session.read.parquet(s"$path/vc_$c")
-        .persist(StorageLevel.MEMORY_AND_DISK)).toMap,
-      histSpecs.map(s => s.column -> session.read.parquet(s"$path/hist_${s.column}")
-        .persist(StorageLevel.MEMORY_AND_DISK)).toMap))
-    m.totals.unpersist()
-    m.valueCounts.values.foreach(_.unpersist())
-    m.hists.values.foreach(_.unpersist())
-  }
-
-  def unpersistIndex(): Unit = model.foreach { m =>
-    ledgerStore.foreach(_.unpersistAll())
-    m.totals.unpersist()
-    m.valueCounts.values.foreach(_.unpersist())
-    m.hists.values.foreach(_.unpersist())
+    releaseFrames(m)
+    endWave()
   }
 
   /** One ledger id, for the chain vid-scheme guard (None if empty). */
@@ -1031,34 +965,24 @@ class AggIndexNode(
     model.flatMap(_.ledger.select(col(idCol)).limit(1)
       .collect().headOption.map(_.get(0).toString))
 
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+  override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
+    m.ledger.sparkSession
+  override protected def writeState(m: Model, path: String): Unit = {
     m.ledger.write.mode("overwrite").parquet(s"$path/ledger")
     m.totals.write.mode("overwrite").parquet(s"$path/totals")
     m.valueCounts.foreach { case (c, vc) =>
       vc.write.mode("overwrite").parquet(s"$path/vc_$c") }
     m.hists.foreach { case (c, h) =>
       h.write.mode("overwrite").parquet(s"$path/hist_$c") }
-    saveMaintenanceState(m.ledger.sparkSession, path)
   }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model = {
     import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
-    val ledger = spark.read.parquet(s"$path/ledger")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ledgerStore.foreach(_.unpersistAll())
-    ledgerStore = Some(new SegStore(name, root = compactPath.map(_ + "/segs"))
-      .reset(ledger))
-    model = Some(AggIndexNode.Index(
-      ledger,
-      spark.read.parquet(s"$path/totals").persist(StorageLevel.MEMORY_AND_DISK),
-      distinctCols.map(c => c -> spark.read.parquet(s"$path/vc_$c")
-        .persist(StorageLevel.MEMORY_AND_DISK)).toMap,
-      histSpecs.map(s => s.column -> spark.read.parquet(s"$path/hist_${s.column}")
-        .persist(StorageLevel.MEMORY_AND_DISK)).toMap))
-    loadMaintenanceState(spark, path)
+    def read(dir: String) =
+      spark.read.parquet(s"$path/$dir").persist(StorageLevel.MEMORY_AND_DISK)
+    AggIndexNode.Index(read("ledger"), read("totals"),
+      distinctCols.map(c => c -> read(s"vc_$c")).toMap,
+      histSpecs.map(s => s.column -> read(s"hist_${s.column}")).toMap)
   }
 }
 
@@ -1131,6 +1055,12 @@ private[nodes] final class SegStore(
     retired = liveFiles
     liveFiles = Vector.empty
     this
+  }
+  /** Release every cached piece and re-seed on `newBase` — the replacement
+    * frame of a compaction, refit, reload or rebuild. */
+  def reseed(newBase: DataFrame): this.type = synchronized {
+    unpersistAll()
+    reset(newBase)
   }
   /** File-count control (VERDICT r16 next #3): a DELTA-SIZED wave (plan
     * stats ≤ one target file) lands as ONE file — the small-files hazard
@@ -1222,7 +1152,7 @@ private[nodes] final class SegStore(
     * read-back (one parquet write per delete wave, not two). Lifetime:
     * safe because the owning ledger store cannot retire the file before
     * this store's next fold clears the channel — both stores fold in the
-    * same `bumpGeneration` pass, the view store appends at least as often
+    * same `endWave` pass, the view store appends at least as often
     * as either ledger store, and retirement is deferred one further fold.
     * The adopted frame is NOT unpersisted here (the owner manages its
     * cache). */
@@ -1239,8 +1169,21 @@ private[nodes] final class SegStore(
   private val adopted: java.util.Set[DataFrame] =
     java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
-  /** The resolved live frame (column set = the base's; `SegCol` internal). */
+  /** The resolved live frame (column set = the base's; `SegCol` internal).
+    * Memoized per state — base, segs and tombs are replaced, never mutated,
+    * on every change — so a wave that reads `live` twice (its own step and
+    * the StoredIndex epilogue) builds and analyzes the plan once. */
   def live: DataFrame = synchronized {
+    liveMemo match {
+      case Some((b, sg, tb, f)) if (b eq base) && (sg eq segs) && (tb eq tombs) => f
+      case _ =>
+        val f = resolve()
+        liveMemo = Some((base, segs, tombs, f))
+        f
+    }
+  }
+  private var liveMemo: Option[(DataFrame, AnyRef, AnyRef, DataFrame)] = None
+  private def resolve(): DataFrame = {
     val cols = base.columns
     if (segs.isEmpty && tombs.isEmpty) return base
     val stacked = (base.withColumn(SegCol, lit(baseGen)) +:
@@ -1546,7 +1489,7 @@ class SketchIndexNode(
     // sketch) state, deletes refused. Serve via `quantilesOf`.
     val quantileCols: Seq[String] = Nil,
     val kllK: Int = 200)
-  extends EstimatorNode with IncrementalIndex {
+  extends StoredIndex {
   require(groupCols.nonEmpty, "sketch_index: groupCols must be non-empty")
   require(cols.nonEmpty || quantileCols.nonEmpty,
     "sketch_index: need at least one HLL or quantile measure")
@@ -1559,7 +1502,6 @@ class SketchIndexNode(
     s"sketch_index: lgConfigK must be in [4, 21], got $lgConfigK")
   require(kllK >= 8 && kllK <= 65535,
     s"sketch_index: kllK must be in [8, 65535], got $kllK")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   type Model = DataFrame // totals: groupCols..., n_rows, __sk_<c> per col
   override protected def defaultName: String = "sketch_index"
   val inputs = Seq(Port("corpus"), Port("probe"))
@@ -1637,8 +1579,7 @@ class SketchIndexNode(
     import org.apache.spark.sql.functions.explode
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"sketch_index '$name': quantiles must be in [0, 1], got ${qs.mkString(", ")}")
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     if (!quantileCols.contains(column))
       throw new GraftException(
         s"sketch_index '$name': quantilesOf needs '$column' in quantileCols " +
@@ -1670,42 +1611,18 @@ class SketchIndexNode(
           s"coalesce(hll_sketch_estimate(`${skName(c)}`), 0L)").as(s"nd_$c")): _*))
   }
 
+  /** Merge a delta's sketches into the totals. A stream-maintained sketch
+    * table deepens its plan by one join per micro-batch, so `compactEvery`
+    * truncates the merge lineage to a parquet scan. */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
     import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val newTotals = sketchMerged(m, sketchTotalsOf(delta))
       .persist(StorageLevel.MEMORY_AND_DISK)
     newTotals.count() // one action; materialize before releasing old
     model = Some(newTotals)
     m.unpersist()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
-
-  /** Truncate the per-batch full-outer-merge lineage to a parquet scan
-    * (double-buffered under `compactPath` — the family convention): a
-    * stream-maintained sketch table otherwise deepens its plan by one
-    * join per micro-batch. */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) => compactGen += 1; s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory("graft_sk_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.sparkSession
-    saveFitted(path)
-    model = Some(session.read.parquet(s"$path/totals")
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    m.unpersist()
+    endWave()
   }
 
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit =
@@ -1717,22 +1634,15 @@ class SketchIndexNode(
         "deletes; this family is for insert-only feeds at cardinalities " +
         "where a (group, value) support frame is itself corpus-sized")
 
-  def unpersistIndex(): Unit = model.foreach(_.unpersist())
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+  override protected def releaseFrames(m: Model): Unit = m.unpersist()
+  override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
+    m.sparkSession
+  override protected def writeState(m: Model, path: String): Unit =
     m.write.mode("overwrite").parquet(s"$path/totals")
-    saveMaintenanceState(m.sparkSession, path)
-  }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
-    model = Some(spark.read.parquet(s"$path/totals")
-      .persist(StorageLevel.MEMORY_AND_DISK))
-    loadMaintenanceState(spark, path)
-  }
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model =
+    spark.read.parquet(s"$path/totals")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 }
 
 /** INCREMENTAL MATERIALIZED JOIN — IVM for the denormalized view every
@@ -1791,14 +1701,13 @@ class MaterializedJoinNode(
     // driver-mediated broadcasts (a degenerate large "dimension" must not
     // OOM the driver at serve time — VERDICT r13 wrong #4)
     val maxBroadcastDim: Long = 5000000L)
-  extends EstimatorNode with IncrementalIndex with graft.dag.ChainSource {
+  extends StoredIndex with graft.dag.ChainSource {
   require(leftOn.nonEmpty && leftOn.size == rightOn.size,
     "materialized_join: leftOn/rightOn must be non-empty and same-length")
   require(Seq("inner", "left_outer").contains(joinType),
     s"materialized_join: joinType must be 'inner' or 'left_outer', got '$joinType'")
   require(!leftOn.contains(leftId),
     "materialized_join: leftId must not be a join column (it is the row id)")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   type Model = MaterializedJoinNode.Index
   override protected def defaultName: String = "materialized_join"
   val inputs = Seq(Port("left"), Port("right"), Port("probe"))
@@ -1981,8 +1890,7 @@ class MaterializedJoinNode(
     * are view columns. */
   def chainAggregate(ctx: Ctx, agg: AggIndexNode): Unit = {
     checkAggChain(agg)
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     agg.fit(ctx, In.single("corpus" -> viewWithVid(m)))
     subscribeAgg(agg)
   }
@@ -2073,8 +1981,7 @@ class MaterializedJoinNode(
     * `next` and lands in ITS dangler (NULL-group) bucket. */
   def chainJoin(ctx: Ctx, next: MaterializedJoinNode, right: DataFrame): Unit = {
     checkJoinChain(next)
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     next.fit(ctx, In.single(
       "left" -> viewWithVid(m)
         .withColumnRenamed(MaterializedJoinNode.ViewIdCol, next.leftId),
@@ -2165,8 +2072,7 @@ class MaterializedJoinNode(
     * generation is the current view, consumers re-seed from it, and the
     * old subscriber is detached so a wave is never written twice. */
   def publishViewDelta(ctx: Ctx, root: String): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val spark = m.view.sparkSession
     val seed = viewWithVid(m)
     val viewSchema = seed.schema
@@ -2257,12 +2163,17 @@ class MaterializedJoinNode(
   // ---- columnar MoR stores (see SegStore): per-wave state writes are
   // O(delta) parquet segments/tombstones; reads stay columnar with the
   // cached-batch + row-group pruning the bucket layout relies on ----
-  @volatile private var leftStore: Option[SegStore] = None
-  @volatile private var rightStore: Option[SegStore] = None
-  @volatile private var viewStore: Option[SegStore] = None
-  private def segRoot: Option[String] = compactPath.map(_ + "/segs")
-  private def stores: Seq[SegStore] =
-    Seq(leftStore, rightStore, viewStore).flatten
+  override protected def storeLabels: Seq[String] = Seq("l", "r", "v")
+  override protected def storeFrames(m: Model): Seq[DataFrame] =
+    Seq(m.left, m.right, m.view)
+  /** A dim-store fold re-derives the cached dim cardinality (ADVICE r16:
+    * the incremental rightCount would drift forever on an upsert-contract
+    * violation — the amortized O(corpus) pass self-heals it, and upgrades
+    * an unknown/MaxValue count to exact for free). */
+  override protected def withStoreFrames(m: Model, frames: Seq[DataFrame],
+      folded: Seq[Option[Long]]): Model =
+    m.copy(left = frames(0), right = frames(1), view = frames(2),
+      rightCount = folded(1).getOrElse(m.rightCount))
 
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
@@ -2277,10 +2188,7 @@ class MaterializedJoinNode(
     val lp = layLeft(l, n)
     val rp = r.persist(StorageLevel.MEMORY_AND_DISK)
     val v = viewOf(lp.drop(BucketCol), rp).persist(StorageLevel.MEMORY_AND_DISK)
-    stores.foreach(_.unpersistAll()) // refit releases any old stores
-    leftStore = Some(new SegStore(s"${name}_l", segRoot).reset(lp))
-    rightStore = Some(new SegStore(s"${name}_r", segRoot).reset(rp))
-    viewStore = Some(new SegStore(s"${name}_v", segRoot).reset(v))
+    seedStores(Seq(lp, rp, v))
     // one fit-time action seeds the cached dim cardinality the broadcast
     // fence reads (and materializes the dim cache as a side effect)
     MaterializedJoinNode.Index(lp, rp, v, n, rightCount = rp.count())
@@ -2334,10 +2242,8 @@ class MaterializedJoinNode(
     * safe to build before anything has materialized). */
   private[nodes] def prepareFactWave(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared = {
-    val m0 = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val ls = leftStore.get; val vs = viewStore.get
-    var cur = m0
+    var cur = fitted
+    val Seq(ls, _, vs) = stores
     var frames = Vector.empty[DataFrame]
     var feedDels: Option[DataFrame] = None
     var feedIns: Option[DataFrame] = None
@@ -2423,7 +2329,7 @@ class MaterializedJoinNode(
     IvmUtil.Prepared(frames ++ downstream.frames, cs => {
       model = Some(fin)
       downstream.commit(cs.drop(own))
-      (1 to n).foreach(_ => bumpGeneration())
+      (1 to n).foreach(_ => endWave())
     }, downstream.wantCounts)
   }
 
@@ -2431,11 +2337,8 @@ class MaterializedJoinNode(
     * payload) — "drop every fact older than X / from source Y" without an
     * id round-trip; the chained Δview feed sees the deletes like any
     * other fact takedown. */
-  override protected def retentionLedger: Option[(DataFrame, String)] = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    Some((leftData(m), leftId))
-  }
+  override protected def retentionLedger: Option[(DataFrame, String)] =
+    Some((leftData(fitted), leftId))
 
   /** Fact takedown: generation-stamped tombstones on the fact row id —
     * O(delta) state write; the ledger and view resolve them at read. */
@@ -2445,10 +2348,9 @@ class MaterializedJoinNode(
   /** L ⋈ ΔR appended; the dim ledger grows by the delta. Re-keyed or
     * re-valued dim rows are upserts: `deleteFromRight` first. */
   def updateRight(ctx: Ctx, delta: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     checkSides(leftData(m), delta)
-    val rs = rightStore.get; val vs = viewStore.get
+    val Seq(_, rs, vs) = stores
     val dRows = delta.select(m.right.columns.map(col): _*)
     // O(delta) state writes: dim tail + view delta land as segments
     val rightSeg = rs.appendSegment(dRows)
@@ -2487,16 +2389,15 @@ class MaterializedJoinNode(
       model = Some(m.copy(right = rs.live, view = vs.live,
         rightCount = newCount))
       downstream.commit(cs.drop(own.length))
-      bumpGeneration()
+      endWave()
     }, wantCounts = true))
   }
 
   /** Dim takedown: generation-stamped tombstones on the dim row id —
     * every pair the dim row participated in leaves the view at read. */
   def deleteFromRight(ctx: Ctx, deletes: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val rs = rightStore.get; val vs = viewStore.get
+    val m = fitted
+    val Seq(_, rs, vs) = stores
     val del = deletes.select(col(rightId)).distinct()
     val tombR = rs.appendTombstones(rightId, del)
     vs.adoptTombstones(rightId, tombR) // view rows carry rightId — one write
@@ -2533,7 +2434,7 @@ class MaterializedJoinNode(
       model = Some(m.copy(right = newRight, view = vs.live,
         rightCount = newCount))
       downstream.commit(cs.drop(own.length))
-      bumpGeneration()
+      endWave()
     }, wantCounts = true))
   }
 
@@ -2562,133 +2463,64 @@ class MaterializedJoinNode(
         outer.deleteFromRight(ctx, deletes)
       /** Retention over the DIM ledger ("drop nation 3") — the dim-side
         * mirror of the fact ledger's predicate path. */
-      override protected def retentionLedger: Option[(DataFrame, String)] = {
-        val m = outer.model.getOrElse(
-          throw new GraftException(s"estimator node '${outer.name}' not fitted"))
-        Some((m.right, outer.rightId))
-      }
+      override protected def retentionLedger: Option[(DataFrame, String)] =
+        Some((outer.fitted.right, outer.rightId))
     }
   }
 
   /** Recompute the view from the ledgers — the exactness pin. */
   def rebuildIndex(): Unit = {
     import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     val newView = viewOf(leftData(m), m.right).persist(StorageLevel.MEMORY_AND_DISK)
     newView.count() // materialize before releasing the old view pieces
-    viewStore.foreach { st => st.unpersistAll(); st.reset(newView) }
-    model = Some(m.copy(view = newView))
-    bumpGeneration()
+    stores(2).reseed(newView)
+    endWave()
   }
 
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
-  private def bumpGeneration(): Unit = {
-    // amortized consolidation: a store past its fold budget rewrites its
-    // resolved live frame once (columnar, stats-laid) and resets. The dim
-    // store's fold count re-derives the cached dim cardinality (ADVICE
-    // r16: the incremental rightCount would drift forever on an
-    // upsert-contract violation — the amortized O(corpus) pass self-heals
-    // it, and upgrades an unknown/MaxValue count to exact for free).
-    var folded = false
-    var rightN: Option[Long] = None
-    stores.foreach { st =>
-      if (st.needsFold) {
-        val n = st.fold()
-        if (rightStore.exists(_ eq st)) rightN = Some(n)
-        folded = true
-      }
-    }
-    if (folded)
-      model = model.map(m => m.copy(left = leftStore.get.live,
-        right = rightStore.get.live, view = viewStore.get.live,
-        rightCount = rightN.getOrElse(m.rightCount)))
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  /** Truncate the per-batch union lineage to parquet scans
-    * (double-buffered under `compactPath` — the family convention). */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) => compactGen += 1; s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory("graft_mjoin_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.right.sparkSession
-    saveFitted(path) // folds the delta-tail back into the bucket layout
-    val lp = session.read.parquet(s"$path/left")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rp = session.read.parquet(s"$path/right")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val vp = session.read.parquet(s"$path/view")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the durable fold doubles as the store folds: release the old
-    // pieces, re-seed each store on its parquet read-back
-    leftStore.foreach { st => st.unpersistAll(); st.reset(lp) }
-    rightStore.foreach { st => st.unpersistAll(); st.reset(rp) }
-    viewStore.foreach { st => st.unpersistAll(); st.reset(vp) }
-    model = Some(MaterializedJoinNode.Index(lp, rp, vp, m.nBuckets,
-      rightCount = m.rightCount)) // fold rewrites, never changes, the dim
-  }
-
-  def unpersistIndex(): Unit = model.foreach { _ =>
-    stores.foreach(_.unpersistAll())
-  }
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val session = m.left.sparkSession
-    // re-lay on write: the un-laid delta-tail appended since the last fold
-    // re-aligns to bucket-per-file, so parquet row-group stats stay
-    // selective for the pruned dim-delta scan after a reload
+  override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
+    m.left.sparkSession
+  /** Re-lays the fact ledger on write: the un-laid delta-tail appended
+    * since the last fold re-aligns to bucket-per-file, so parquet row-group
+    * stats stay selective for the pruned dim-delta scan after a reload (a
+    * compaction folds it back into the bucket layout). */
+  override protected def writeState(m: Model, path: String): Unit = {
     m.left.repartition(m.nBuckets, col(BucketCol))
       .write.mode("overwrite").parquet(s"$path/left")
     m.right.write.mode("overwrite").parquet(s"$path/right")
     m.view.write.mode("overwrite").parquet(s"$path/view")
+    val session = m.left.sparkSession
     import session.implicits._
     Seq(m.nBuckets).toDF("n_buckets").coalesce(1)
       .write.mode("overwrite").parquet(s"$path/layout")
-    saveMaintenanceState(session, path)
   }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
+  /** A compaction keeps the layout and dim cardinality of the model it
+    * replaces (a fold rewrites, never changes, the dim); a load reads the
+    * layout — laying a pre-layout save now, one shuffle — and re-seeds the
+    * broadcast fence's cardinality with one action. */
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model = {
     import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
     val rawLeft = spark.read.parquet(s"$path/left")
-    val layoutP = new org.apache.hadoop.fs.Path(s"$path/layout")
-    val fs = layoutP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val (left, n) =
-      if (rawLeft.columns.contains(BucketCol) && fs.exists(layoutP)) {
-        val nb = spark.read.parquet(layoutP.toString).collect().head.getInt(0)
-        (rawLeft.persist(StorageLevel.MEMORY_AND_DISK), nb)
-      } else { // pre-layout save: lay it now (one shuffle at load)
-        val nb = spark.sessionState.conf.numShufflePartitions
-        (layLeft(rawLeft, nb), nb)
-      }
-    val right = spark.read.parquet(s"$path/right")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val view = spark.read.parquet(s"$path/view")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    stores.foreach(_.unpersistAll())
-    leftStore = Some(new SegStore(s"${name}_l", segRoot).reset(left))
-    rightStore = Some(new SegStore(s"${name}_r", segRoot).reset(right))
-    viewStore = Some(new SegStore(s"${name}_v", segRoot).reset(view))
-    model = Some(MaterializedJoinNode.Index(
-      left,
-      right,
-      view,
-      n,
-      // one load-time action re-seeds the broadcast fence's cardinality
-      rightCount = right.count()))
-    loadMaintenanceState(spark, path)
+    val right = spark.read.parquet(s"$path/right").persist(StorageLevel.MEMORY_AND_DISK)
+    val view = spark.read.parquet(s"$path/view").persist(StorageLevel.MEMORY_AND_DISK)
+    prior match {
+      case Some(m) =>
+        m.copy(left = rawLeft.persist(StorageLevel.MEMORY_AND_DISK),
+          right = right, view = view)
+      case None =>
+        val layoutP = new org.apache.hadoop.fs.Path(s"$path/layout")
+        val fs = layoutP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val (left, n) =
+          if (rawLeft.columns.contains(BucketCol) && fs.exists(layoutP))
+            (rawLeft.persist(StorageLevel.MEMORY_AND_DISK),
+              spark.read.parquet(layoutP.toString).collect().head.getInt(0))
+          else { // pre-layout save: lay it now (one shuffle at load)
+            val nb = spark.sessionState.conf.numShufflePartitions
+            (layLeft(rawLeft, nb), nb)
+          }
+        MaterializedJoinNode.Index(left, right, view, n, rightCount = right.count())
+    }
   }
 }
 

@@ -480,9 +480,8 @@ class DHashIndexNode(
     val maxBucket: Int = 10000,
     val compactEvery: Int = 0,
     val compactPath: Option[String] = None)
-  extends EstimatorNode with IncrementalIndex {
+  extends BandedBucketIndex {
   require(maxHamming >= 0 && maxHamming < 64, "maxHamming must be in [0, 63]")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   type Model = DHashIndexNode.Index
   override protected def defaultName: String = "dhash_index"
   val inputs = Seq(Port("corpus"), Port("delta"))
@@ -497,29 +496,22 @@ class DHashIndexNode(
     df.select(col(idCol).as(outId), col(hashCol).as("__h"))
       .filter(col("__h").isNotNull)
 
-  private def cappedBuckets(ledger: DataFrame): DataFrame = {
-    val chunks = HammingBands.chunkKeys(ledger, maxHamming + 1)
-    val ok = chunks.groupBy("__c", "__v").count()
-      .filter(col("count") <= maxBucket).select("__c", "__v")
-    chunks.join(ok, Seq("__c", "__v"))
-      .select("__c", "__v", "base_id", "__h")
-  }
-
-  // ---- columnar MoR state (SegStore, VERDICT r16 next #2): O(delta)
-  // per-wave writes; cap-drops ride COMPOSITE-KEY tombstones on the
-  // (__c, __v) chunk-bucket key — the MinHashIndexNode conversion's twin ----
-  @volatile private var ledStore: Option[SegStore] = None
-  @volatile private var bkStore: Option[SegStore] = None
-  private def segRoot: Option[String] = compactPath.map(_ + "/segs")
-  private def idxStores: Seq[SegStore] = Seq(ledStore, bkStore).flatten
+  // ---- columnar MoR state (BandedBucketIndex, VERDICT r16 next #2): the
+  // hash ledger and the capped (__c, __v) chunk buckets are SegStores —
+  // the MinHashIndexNode layout's twin ----
+  protected def bucketKey: Seq[String] = Seq("__c", "__v")
+  protected def bucketRows(ledger: DataFrame): DataFrame =
+    HammingBands.chunkKeys(ledger, maxHamming + 1).select("__c", "__v", "base_id", "__h")
+  protected def ledgerFrame(m: Model): DataFrame = m.ledger
+  protected def bucketFrame(m: Model): DataFrame = m.buckets
+  protected def banded(ledger: DataFrame, buckets: DataFrame): Model =
+    DHashIndexNode.Index(ledger, buckets)
 
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
     val ledger = ledgerOf(in("corpus"), "base_id").persist(StorageLevel.MEMORY_AND_DISK)
     val buckets = cappedBuckets(ledger).persist(StorageLevel.MEMORY_AND_DISK)
-    idxStores.foreach(_.unpersistAll()) // refit releases any old stores
-    ledStore = Some(new SegStore(s"${name}_led", segRoot).reset(ledger))
-    bkStore = Some(new SegStore(s"${name}_bk", segRoot).reset(buckets))
+    seedStores(Seq(ledger, buckets))
     DHashIndexNode.Index(ledger, buckets)
   }
 
@@ -545,167 +537,41 @@ class DHashIndexNode(
     Map("result" -> pairs)
   }
 
-  /** Fold a delta into the index with O(delta) state writes (SegStore):
-    * the hash rows and surviving chunk keys land as parquet segments, a
-    * bucket crossing `maxBucket` after growth drops WHOLE via a
-    * composite-key tombstone (the fit-time guard re-applied;
+  /** Fold a delta into the index with O(delta) state writes
+    * (BandedBucketIndex): the hash rows and surviving chunk keys land as
+    * parquet segments, a bucket crossing `maxBucket` after growth drops
+    * WHOLE via a composite-key tombstone (the fit-time guard re-applied;
     * order-sensitive like MinHashIndexNode, `rebuildIndex` is the exact
     * re-derivation). */
-  def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val ls = ledStore.get; val bs = bkStore.get
-    // O(delta) state writes: the delta's hash rows land once as a parquet
-    // segment; chunk keys derive from the CACHED segment
-    val ledSeg = ls.appendSegment(ledgerOf(delta, "base_id").select("base_id", "__h"))
-    val freshKeys = HammingBands.chunkKeys(ledSeg, maxHamming + 1)
-      .select("__c", "__v", "base_id", "__h")
-    // cap re-evaluation restricted to the TOUCHED buckets (stored buckets
-    // are ≤ maxBucket by invariant — only buckets the delta lands in can
-    // cross it): delta-bucket-sized per wave. No explicit broadcast hint
-    // (ADVICE r16 — a large wave makes these delta×chunks-sized; the
-    // autoBroadcast threshold decides from plan stats).
-    val touched = freshKeys.select("__c", "__v").distinct()
-    val overCap = m.buckets.select("__c", "__v")
-      .join(touched, Seq("__c", "__v"), "left_semi")
-      .union(freshKeys.select("__c", "__v"))
-      .groupBy("__c", "__v").count()
-      .filter(col("count") > maxBucket).select("__c", "__v")
-    // a bucket crossing the cap drops WHOLE: composite-key tombstone at
-    // this generation; the fresh keys landing in it are filtered out of
-    // the insert segment (same semantics as the pre-SegStore rewrite,
-    // including later-wave repopulation). Cap-crossings are RARE — an
-    // empty tombstone costs a parquet-commit write plus a permanent
-    // extra channel join until the next fold, so one delta-bucket-sized
-    // count decides first (it doubles as the wave's materializing
-    // action, filling the ledger segment's cache through freshKeys); the
-    // per-wave materializeAll is gone — every remaining frame roots in
-    // this wave's parquet, so caches fill lazily with no recompute hazard
-    val overCapC = overCap.persist()
-    val bkSeg = if (overCapC.count() == 0L) {
-      overCapC.unpersist()
-      bs.appendDerivedSegment(freshKeys)
-    } else {
-      val capTomb = bs.appendTombstones(Seq("__c", "__v"), overCapC)
-      overCapC.unpersist()
-      // DERIVED segment — no second write (lineage roots in this wave's
-      // just-written ledger segment + cap tombstones; depth 1, recoverable)
-      bs.appendDerivedSegment(
-        freshKeys.join(capTomb, Seq("__c", "__v"), "left_anti"))
-    }
-    model = Some(DHashIndexNode.Index(ls.live, bs.live))
-    foldStoresIfDue()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
+  def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
+    insertLedgerRows(ledgerOf(delta, "base_id").select("base_id", "__h"))
 
-  /** Amortized consolidation (the SegStore contract). */
-  private def foldStoresIfDue(): Unit = {
-    var folded = false
-    idxStores.foreach { st => if (st.needsFold) { st.fold(); folded = true } }
-    if (folded)
-      model = Some(DHashIndexNode.Index(ledStore.get.live, bkStore.get.live))
-  }
-
-  /** Two anti joins; kept buckets only shrink so the cap needs no
-    * re-evaluation. Dropped-whole buckets do not resurrect until
-    * `rebuildIndex` (the MinHashIndexNode contract). Unknown ids no-op. */
   /** Retention ledger: (idCol, hash) — the per-doc perceptual hash, so
     * blocklist-style retention ("drop every doc carrying hash H") needs
     * no id round-trip. */
-  override protected def retentionLedger: Option[(DataFrame, String)] = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    Some((m.ledger.select(col("base_id").as(idCol), col("__h").as("hash")), idCol))
-  }
+  override protected def retentionLedger: Option[(DataFrame, String)] =
+    Some((fitted.ledger.select(col("base_id").as(idCol), col("__h").as("hash")), idCol))
 
-  def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val ls = ledStore.get; val bs = bkStore.get
-    val del = deletes.select(col(idCol).as("base_id")).distinct()
-    val ledTomb = ls.appendTombstones("base_id", del)
-    bs.adoptTombstones("base_id", ledTomb) // same ids — one write, one file
-    // no materializing action: the tombstone is already durable, and its
-    // read-back cache fills on first use
-    model = Some(DHashIndexNode.Index(ls.live, bs.live))
-    foldStoresIfDue()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  /** Re-derive the bucket table from the hash ledger — bit-identical to a
-    * from-scratch fit over the live rows, including cap resurrection. */
-  def rebuildIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val newBuckets = cappedBuckets(m.ledger.select("base_id", "__h"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    newBuckets.count()
-    // full bucket-table replacement (cap resurrection): re-seed the store
-    bkStore.foreach { st => st.unpersistAll(); st.reset(newBuckets) }
-    model = Some(DHashIndexNode.Index(m.ledger, newBuckets))
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
-  }
-
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
-
-  /** Truncate lineage to a parquet scan (double-buffered under
-    * `compactPath` — the MinHashIndexNode convention). */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) => compactGen += 1; s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory("graft_idx_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.ledger.sparkSession
-    saveFitted(path) // writes the RESOLVED live frames (store pieces folded)
-    val led = session.read.parquet(s"$path/ledger")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bk = session.read.parquet(s"$path/buckets")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    ledStore.foreach { st => st.unpersistAll(); st.reset(led) }
-    bkStore.foreach { st => st.unpersistAll(); st.reset(bk) }
-    model = Some(DHashIndexNode.Index(led, bk))
-  }
-
-  def unpersistIndex(): Unit = model.foreach { _ => idxStores.foreach(_.unpersistAll()) }
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+  override protected def writeState(m: Model, path: String): Unit = {
     m.ledger.write.mode("overwrite").parquet(s"$path/ledger")
     m.buckets.write.mode("overwrite").parquet(s"$path/buckets")
-    saveMaintenanceState(m.ledger.sparkSession, path)
   }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
+  /** A compaction reads its just-written buckets back; a LOAD re-derives
+    * the bucket table from the ledger (one pass over the skinny (id, hash)
+    * frame): bucket values are a pure function of (hash, chunk layout), and
+    * pre-fix saves carry ceil-width chunk values that would silently
+    * mismatch new delta keys (see HammingBands.chunkKeys). Load therefore
+    * follows the rebuildIndex contract — bit-identical to a from-scratch
+    * fit over the live rows, including cap resurrection. */
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model = {
     import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
-    val ledger = spark.read.parquet(s"$path/ledger")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the bucket table is RE-DERIVED from the ledger at load (one pass
-    // over the skinny (id, hash) frame): bucket values are a pure function
-    // of (hash, chunk layout), and pre-fix saves carry ceil-width chunk
-    // values that would silently mismatch new delta keys (see
-    // HammingBands.chunkKeys). Load therefore follows the rebuildIndex
-    // contract — bit-identical to a from-scratch fit over the live rows,
-    // including cap resurrection.
-    val bk = cappedBuckets(ledger.select("base_id", "__h"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    idxStores.foreach(_.unpersistAll())
-    ledStore = Some(new SegStore(s"${name}_led", segRoot).reset(ledger))
-    bkStore = Some(new SegStore(s"${name}_bk", segRoot).reset(bk))
-    model = Some(DHashIndexNode.Index(ledger, bk))
-    loadMaintenanceState(spark, path)
+    val ledger = spark.read.parquet(s"$path/ledger").persist(StorageLevel.MEMORY_AND_DISK)
+    val buckets = prior match {
+      case Some(_) => spark.read.parquet(s"$path/buckets")
+      case None => cappedBuckets(ledger)
+    }
+    DHashIndexNode.Index(ledger, buckets.persist(StorageLevel.MEMORY_AND_DISK))
   }
 }
 

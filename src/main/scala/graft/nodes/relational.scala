@@ -1707,10 +1707,10 @@ class RepartitionNode(val n: Int, val byCols: Seq[String] = Nil, val coalesce: B
   *     derived Dataset re-analyzes its whole logical tree, so an N-stage
   *     chain pays quadratically growing DRIVER time — the q124 flagship
   *     spent more time analyzing plans than executing them (sf0.1 A/B:
-  *     19.5 s plain, 7.0 s with two lazy barriers; stage-prefix profile
-  *     in Scratch.scala). Place AFTER expensive multi-operator blocks
-  *     whose output feeds several more stages; a barrier blocks pushdown
-  *     across it, so truncate after filters, not before.
+  *     19.5 s plain, 7.0 s with two lazy barriers). Place AFTER
+  *     expensive multi-operator blocks whose output feeds several more
+  *     stages; a barrier blocks pushdown across it, so truncate after
+  *     filters, not before.
   *
   * The output is the SAME rows — q110 pins identity against a plain oracle
   * and PlanSpec pins that downstream plans contain no upstream scan.

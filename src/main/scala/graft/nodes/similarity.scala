@@ -410,10 +410,9 @@ class IvfIndexNode(
     // IDENTICAL to the float path (q170 pins that through day 2).
     val quantized: Boolean = false,
     val rerank: Int = 100)
-  extends EstimatorNode with IncrementalIndex {
+  extends StoredIndex {
   type Model = IvfIndexNode.Index
   require(k > 0 && nClusters > 0 && nProbe > 0, "k/nClusters/nProbe must be positive")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   require(maxLiteralCentroids >= 0, "maxLiteralCentroids must be >= 0")
   require(!quantized || rerank >= k, "rerank must be >= k (re-rank pool feeds the top-k)")
   override protected def defaultName: String = "ivf_index"
@@ -514,16 +513,17 @@ class IvfIndexNode(
       .persist(StorageLevel.MEMORY_AND_DISK)
     val assignments = idxSelect(assign(withVecNorm(in("corpus"), idCol), centroids, cents))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    assignStore.foreach(_.unpersistAll()) // refit releases the old store
-    assignStore = Some(new SegStore(s"${name}_ivf",
-      compactPath.map(_ + "/segs")).reset(assignments))
+    seedStores(Seq(assignments))
     IvfIndexNode.Index(centroids, assignments)
   }
 
   // Columnar MoR store behind the inverted file (see SegStore): insert
   // and delete waves write O(delta) parquet instead of re-copying the
   // whole assignments union per wave; centroids are tiny and frozen.
-  @volatile private var assignStore: Option[SegStore] = None
+  override protected def storeLabels: Seq[String] = Seq("ivf")
+  override protected def storeFrames(m: Model): Seq[DataFrame] = Seq(m.assignments)
+  override protected def withStoreFrames(m: Model, frames: Seq[DataFrame],
+      folded: Seq[Option[Long]]): Model = m.copy(assignments = frames.head)
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     VecExprs.ensure(ctx.spark)
@@ -634,23 +634,16 @@ class IvfIndexNode(
   /** Append a delta into the inverted file against the FROZEN centroids —
     * delta-sized work only (class doc). */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     VecExprs.ensure(ctx.spark)
     graft.functions.VecFunctions.register(delta.sparkSession)
-    val st = assignStore.getOrElse(
-      throw new graft.dag.GraftException(s"ivf_index '$name': no store"))
     // O(delta) state write: the delta's assignments land once as a parquet
-    // segment — no corpus-sized union copy per wave
-    val fresh = st.appendSegment(idxSelect(
+    // segment — no corpus-sized union copy per wave. No materializing
+    // action: the segment is already durable (the append wrote it) and the
+    // read-back cache fills on first use
+    stores.head.appendSegment(idxSelect(
       assign(withVecNorm(delta, idCol), m.centroids, collectCentroids(m))))
-    // no materializing action: the segment is already durable (the append
-    // wrote it) and the read-back cache fills on first use
-    model = Some(IvfIndexNode.Index(m.centroids, st.live))
-    if (st.needsFold) { st.fold(); model = Some(IvfIndexNode.Index(m.centroids, st.live)) }
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    endWave()
   }
 
   /** Re-fit the coarse quantizer and re-assign the whole inverted file —
@@ -672,8 +665,7 @@ class IvfIndexNode(
     * assignment share the NEW centroids. */
   def rebuildIndex(ctx: Ctx): Unit = {
     import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     VecExprs.ensure(ctx.spark)
     val spark = ctx.spark
     import spark.implicits._
@@ -695,12 +687,17 @@ class IvfIndexNode(
     val assignments = idxSelect(assign(withVecNorm(corpus, idCol), centroids, cents))
       .persist(StorageLevel.MEMORY_AND_DISK)
     assignments.count() // materialize before releasing the superseded generation
-    assignStore.foreach { st => st.unpersistAll(); st.reset(assignments) }
+    stores.head.reseed(assignments)
     model = Some(IvfIndexNode.Index(centroids, assignments))
     m.centroids.unpersist()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    endWave()
   }
+
+  /** Retention ledger: (idCol, cluster, norm) — e.g. "drop every
+    * zero-norm vector" or per-cluster takedowns. */
+  override protected def retentionLedger: Option[(DataFrame, String)] =
+    Some((fitted.assignments.select(col(idCol), col("__cluster").as("cluster"),
+      col("__cnorm").as("norm")), idCol))
 
   /** Drop deleted documents' rows from the inverted file — one anti join.
     * Centroids are frozen at fit (class contract), so the result is
@@ -708,91 +705,30 @@ class IvfIndexNode(
     * centroids: assignment is per-row, deletion removes rows, nothing else
     * in the index depends on corpus membership. Tombstones for unknown ids
     * are no-ops. */
-  /** Retention ledger: (idCol, cluster, norm) — e.g. "drop every
-    * zero-norm vector" or per-cluster takedowns. */
-  override protected def retentionLedger: Option[(DataFrame, String)] = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    Some((m.assignments.select(col(idCol), col("__cluster").as("cluster"),
-      col("__cnorm").as("norm")), idCol))
-  }
-
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val st = assignStore.getOrElse(
-      throw new graft.dag.GraftException(s"ivf_index '$name': no store"))
+    fitted
     // O(delta) state write: generation-stamped id tombstones, resolved at
     // read (a re-added vector later survives by generation)
-    val tomb = st.appendTombstones(idCol, deletes.select(col(idCol)).distinct())
-    tomb.count() // materialize the tombstone cache
-    model = Some(IvfIndexNode.Index(m.centroids, st.live))
-    if (st.needsFold) { st.fold(); model = Some(IvfIndexNode.Index(m.centroids, st.live)) }
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    stores.head.appendTombstones(idCol, deletes.select(col(idCol)).distinct())
+      .count() // materialize the tombstone cache
+    endWave()
   }
 
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
-
-  /** Truncate the union-chain lineage to a parquet scan (double-buffered
-    * gen-0/gen-1 under `compactPath`, JVM temp dir otherwise) — same
-    * contract and rationale as MinHashIndexNode.compactIndex. */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) =>
-        compactGen += 1
-        s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory("graft_ivf_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.centroids.sparkSession
-    saveFitted(path) // writes the RESOLVED live assignments
-    val assignments = session.read.parquet(s"$path/assignments")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    assignStore.foreach { st => st.unpersistAll(); st.reset(assignments) }
-    model = Some(IvfIndexNode.Index(
-      session.read.parquet(s"$path/centroids").persist(StorageLevel.MEMORY_AND_DISK),
-      assignments))
-    m.centroids.unpersist()
-  }
-
-  /** Release the persisted index frames (fit again to rebuild). */
-  def unpersistIndex(): Unit = model.foreach { m =>
-    m.centroids.unpersist()
-    assignStore.foreach(_.unpersistAll())
-  }
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+  override protected def releaseFrames(m: Model): Unit = m.centroids.unpersist()
+  override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
+    m.centroids.sparkSession
+  override protected def writeState(m: Model, path: String): Unit = {
     m.centroids.write.mode("overwrite").parquet(s"$path/centroids")
     m.assignments.write.mode("overwrite").parquet(s"$path/assignments")
-    saveMaintenanceState(m.centroids.sparkSession, path)
   }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  /** Session-explicit load (same rationale as MinHashIndexNode.loadFitted).
-    * The loaded frames are persisted like fit/compact's — without it every
-    * query batch re-reads parquet and a later updateIndex's unpersist of
-    * the superseded generation is a no-op (ADVICE r10). */
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model = {
     import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
     val assignments = spark.read.parquet(s"$path/assignments")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    assignStore.foreach(_.unpersistAll())
-    assignStore = Some(new SegStore(s"${name}_ivf",
-      compactPath.map(_ + "/segs")).reset(assignments))
-    model = Some(IvfIndexNode.Index(
+    IvfIndexNode.Index(
       spark.read.parquet(s"$path/centroids").persist(StorageLevel.MEMORY_AND_DISK),
-      assignments))
-    loadMaintenanceState(spark, path)
+      assignments)
   }
 }
 
@@ -1146,11 +1082,10 @@ class InvertedIndexNode(
     val k1Tenths: Int = 12,
     val bHundredths: Int = 75,
     val scale: Long = 1000000L)
-  extends EstimatorNode with IncrementalIndex {
+  extends StoredIndex {
   type Model = InvertedIndexNode.Index
   require(k > 0, "k must be positive")
   require(maxDfFrac > 0 && maxDfFrac <= 1, "maxDfFrac must be in (0, 1]")
-  require(compactEvery >= 0, "compactEvery must be >= 0")
   require(Seq("tf", "bm25").contains(scoring), s"scoring must be 'tf' or 'bm25', got '$scoring'")
   require(k1Tenths >= 0, "k1Tenths must be >= 0")
   require(bHundredths >= 0 && bHundredths <= 100, "bHundredths must be in [0, 100]")
@@ -1204,15 +1139,10 @@ class InvertedIndexNode(
   // insert/delete waves write O(delta) parquet instead of re-copying the
   // whole postings/docs unions; the vocab-sized terms frame keeps the
   // merge-and-materialize path (it is the small side by construction).
-  @volatile private var postStore: Option[SegStore] = None
-  @volatile private var docStore: Option[SegStore] = None
-  private def foldStores(): Unit = {
-    var folded = false
-    Seq(postStore, docStore).flatten.foreach { st =>
-      if (st.needsFold) { st.fold(); folded = true } }
-    if (folded) model = model.map(m =>
-      m.copy(postings = postStore.get.live, docs = docStore.get.live))
-  }
+  override protected def storeLabels: Seq[String] = Seq("post", "doc")
+  override protected def storeFrames(m: Model): Seq[DataFrame] = Seq(m.postings, m.docs)
+  override protected def withStoreFrames(m: Model, frames: Seq[DataFrame],
+      folded: Seq[Option[Long]]): Model = m.copy(postings = frames(0), docs = frames(1))
 
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
@@ -1228,11 +1158,7 @@ class InvertedIndexNode(
     // tokenizes to nothing (they have no postings but still counted in N)
     val docs = corpus.select(col(idCol).as("__id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Seq(postStore, docStore).flatten.foreach(_.unpersistAll())
-    postStore = Some(new SegStore(s"${name}_post",
-      compactPath.map(_ + "/segs")).reset(postings))
-    docStore = Some(new SegStore(s"${name}_doc",
-      compactPath.map(_ + "/segs")).reset(docs))
+    seedStores(Seq(postings, docs))
     InvertedIndexNode.Index(postings, terms, docs.count(), docs, pd, ls)
   }
 
@@ -1327,11 +1253,8 @@ class InvertedIndexNode(
     * result identical to refitting over base ∪ delta (class doc). */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
     import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val ps = postStore.getOrElse(
-      throw new graft.dag.GraftException(s"inverted_index '$name': no store"))
-    val ds = docStore.get
+    val m = fitted
+    val Seq(ps, ds) = stores
     // O(delta) state writes: the batch's postings and doc ids land once as
     // parquet segments (cached, columnar) — no corpus-sized union copy
     val postSeg = ps.appendSegment(termFreqs(delta, idCol, textCol)
@@ -1353,12 +1276,21 @@ class InvertedIndexNode(
       newTerms.agg(count(lit(1)).as("v1"), lit(0L).as("v2"))))
     val dN = st(0)._1
     val (dpd, dls) = st(1)
-    model = Some(InvertedIndexNode.Index(ps.live, newTerms, m.nDocs + dN,
-      ds.live, m.postDocs + dpd, m.lenSum + dls))
+    model = Some(m.copy(terms = newTerms, nDocs = m.nDocs + dN,
+      postDocs = m.postDocs + dpd, lenSum = m.lenSum + dls))
     m.terms.unpersist()
-    foldStores()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    endWave()
+  }
+
+  /** Retention ledger: (idCol, doc_len) — doc_len is the tokenized length
+    * (NULL for docs whose text tokenizes to nothing), so "drop every doc
+    * shorter than K tokens" is `coalesce(doc_len, 0) < K`. */
+  override protected def retentionLedger: Option[(DataFrame, String)] = {
+    val m = fitted
+    Some((m.docs.select(col("__id"))
+      .join(m.postings.select(col("__id"), col("__dl")).distinct(),
+        Seq("__id"), "left")
+      .select(col("__id").as(idCol), col("__dl").as("doc_len")), idCol))
   }
 
   /** Remove documents with EXACT decremental statistics — the takedown path.
@@ -1371,26 +1303,10 @@ class InvertedIndexNode(
     * post-delete corpus, the same proof shape as updateIndex/q141. Work is
     * one semi/anti join pair against the partitioned index plus a
     * delete-sized df aggregate. */
-  /** Retention ledger: (idCol, doc_len) — doc_len is the tokenized length
-    * (NULL for docs whose text tokenizes to nothing), so "drop every doc
-    * shorter than K tokens" is `coalesce(doc_len, 0) < K`. */
-  override protected def retentionLedger: Option[(DataFrame, String)] = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    Some((m.docs.select(col("__id"))
-      .join(m.postings.select(col("__id"), col("__dl")).distinct(),
-        Seq("__id"), "left")
-      .select(col("__id").as(idCol), col("__dl").as("doc_len")), idCol))
-  }
-
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
     import org.apache.spark.storage.StorageLevel
-    import org.apache.spark.sql.functions.coalesce
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val ps = postStore.getOrElse(
-      throw new graft.dag.GraftException(s"inverted_index '$name': no store"))
-    val ds = docStore.get
+    val m = fitted
+    val Seq(ps, ds) = stores
     // O(delta) state write: generation-stamped id tombstones on both
     // corpus-sized frames, resolved at read (re-adding a deleted doc
     // later — the upsert composition — survives by generation)
@@ -1416,59 +1332,16 @@ class InvertedIndexNode(
       newTerms.agg(count(lit(1)).as("v1"), lit(0L).as("v2"))))
     val removed = st(0)._1
     val (rpd, rls) = st(1)
-    model = Some(InvertedIndexNode.Index(ps.live, newTerms, m.nDocs - removed,
-      ds.live, m.postDocs - rpd, m.lenSum - rls))
+    model = Some(m.copy(terms = newTerms, nDocs = m.nDocs - removed,
+      postDocs = m.postDocs - rpd, lenSum = m.lenSum - rls))
     m.terms.unpersist()
-    foldStores()
-    generation += 1
-    if (compactEvery > 0 && generation % compactEvery == 0) compactIndex()
+    endWave()
   }
 
-  @volatile private var generation: Long = 0L
-  @volatile private var compactGen: Long = 0L
-
-  /** Truncate the union-chain lineage to a parquet scan (double-buffered
-    * gen-0/gen-1 under `compactPath` — same contract as MinHashIndexNode). */
-  def compactIndex(): Unit = {
-    import org.apache.spark.storage.StorageLevel
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
-    val path = compactPath match {
-      case Some(root) =>
-        compactGen += 1
-        s"$root/gen-${compactGen % 2}"
-      case None =>
-        val d = java.nio.file.Files.createTempDirectory("graft_inv_compact_")
-        d.toFile.deleteOnExit()
-        d.toString
-    }
-    val session = m.terms.sparkSession
-    saveFitted(path) // writes the RESOLVED live frames
-    val postings = session.read.parquet(s"$path/postings")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val docs = session.read.parquet(s"$path/docs")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the durable fold doubles as the store folds
-    postStore.foreach { st => st.unpersistAll(); st.reset(postings) }
-    docStore.foreach { st => st.unpersistAll(); st.reset(docs) }
-    model = Some(InvertedIndexNode.Index(
-      postings,
-      session.read.parquet(s"$path/terms").persist(StorageLevel.MEMORY_AND_DISK),
-      m.nDocs,
-      docs,
-      m.postDocs, m.lenSum))
-    m.terms.unpersist()
-  }
-
-  /** Release the persisted index frames (fit again to rebuild). */
-  def unpersistIndex(): Unit = model.foreach { m =>
-    Seq(postStore, docStore).flatten.foreach(_.unpersistAll())
-    m.terms.unpersist()
-  }
-
-  override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+  override protected def releaseFrames(m: Model): Unit = m.terms.unpersist()
+  override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
+    m.postings.sparkSession
+  override protected def writeState(m: Model, path: String): Unit = {
     m.postings.write.mode("overwrite").parquet(s"$path/postings")
     m.terms.write.mode("overwrite").parquet(s"$path/terms")
     m.docs.write.mode("overwrite").parquet(s"$path/docs")
@@ -1476,51 +1349,50 @@ class InvertedIndexNode(
     import spark.implicits._
     Seq((m.nDocs, m.postDocs, m.lenSum)).toDF("n_docs", "post_docs", "len_sum")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
-    saveMaintenanceState(spark, path)
   }
-  override def loadFitted(path: String): Unit = loadFitted(path, None)
-  /** Session-explicit load (same rationale as MinHashIndexNode.loadFitted);
-    * loaded frames are persisted like fit/compact's (ADVICE r10). */
-  def loadFitted(path: String, session: Option[org.apache.spark.sql.SparkSession]): Unit = {
+  /** A compaction carries the corpus scalars over from the model it
+    * replaces; a load reads them from `stats` and upgrades older layouts. */
+  override protected def readState(spark: org.apache.spark.sql.SparkSession,
+      path: String, prior: Option[Model]): Model = {
     import org.apache.spark.storage.StorageLevel
-    val spark = session.getOrElse(org.apache.spark.sql.SparkSession.active)
-    val statsDf = spark.read.parquet(s"$path/stats")
-    val statsRow = statsDf.collect().head
-    val n = statsRow.getAs[Long]("n_docs")
-    // pre-BM25 saves carry neither the (post_docs, len_sum) scalars nor the
-    // per-posting __dl column: load with a -1 marker (tf serving and
-    // deletes keep working; bm25 refuses with a re-fit message)
-    val hasBm25 = statsDf.columns.contains("post_docs")
-    val (pd, ls) =
-      if (hasBm25) (statsRow.getAs[Long]("post_docs"), statsRow.getAs[Long]("len_sum"))
-      else (-1L, -1L)
-    // docs is absent in pre-delete-era saves: fall back to the posting-
-    // derived id set (exact unless a doc tokenized to nothing — re-save to
-    // upgrade); nDocs itself always comes from stats, so only delete
-    // MATCHING of empty-token docs is affected by the fallback
-    val docsPath = new org.apache.hadoop.fs.Path(s"$path/docs")
-    val fs = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val docs =
-      if (fs.exists(docsPath)) spark.read.parquet(docsPath.toString)
-      else spark.read.parquet(s"$path/postings").select("__id").distinct()
-    val postings0 = spark.read.parquet(s"$path/postings")
-    // pre-BM25 postings lack __dl: pad with nulls so the union/anti-join
-    // lifecycle keeps working (bm25 itself stays refused via the marker)
-    val postings =
-      if (postings0.columns.contains("__dl")) postings0
-      else postings0.withColumn("__dl", lit(null).cast("long"))
-    val postingsP = postings.persist(StorageLevel.MEMORY_AND_DISK)
-    val docsP = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    Seq(postStore, docStore).flatten.foreach(_.unpersistAll())
-    postStore = Some(new SegStore(s"${name}_post",
-      compactPath.map(_ + "/segs")).reset(postingsP))
-    docStore = Some(new SegStore(s"${name}_doc",
-      compactPath.map(_ + "/segs")).reset(docsP))
-    model = Some(InvertedIndexNode.Index(
-      postingsP,
-      spark.read.parquet(s"$path/terms").persist(StorageLevel.MEMORY_AND_DISK), n,
-      docsP, pd, ls))
-    loadMaintenanceState(spark, path)
+    val terms = spark.read.parquet(s"$path/terms").persist(StorageLevel.MEMORY_AND_DISK)
+    prior match {
+      case Some(m) =>
+        InvertedIndexNode.Index(
+          spark.read.parquet(s"$path/postings").persist(StorageLevel.MEMORY_AND_DISK),
+          terms, m.nDocs,
+          spark.read.parquet(s"$path/docs").persist(StorageLevel.MEMORY_AND_DISK),
+          m.postDocs, m.lenSum)
+      case None =>
+        val statsDf = spark.read.parquet(s"$path/stats")
+        val statsRow = statsDf.collect().head
+        // pre-BM25 saves carry neither the (post_docs, len_sum) scalars nor
+        // the per-posting __dl column: load with a -1 marker (tf serving
+        // and deletes keep working; bm25 refuses with a re-fit message)
+        val (pd, ls) =
+          if (statsDf.columns.contains("post_docs"))
+            (statsRow.getAs[Long]("post_docs"), statsRow.getAs[Long]("len_sum"))
+          else (-1L, -1L)
+        // docs is absent in pre-delete-era saves: fall back to the posting-
+        // derived id set (exact unless a doc tokenized to nothing — re-save
+        // to upgrade); nDocs itself always comes from stats, so only delete
+        // MATCHING of empty-token docs is affected by the fallback
+        val docsPath = new org.apache.hadoop.fs.Path(s"$path/docs")
+        val fs = docsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val docs =
+          if (fs.exists(docsPath)) spark.read.parquet(docsPath.toString)
+          else spark.read.parquet(s"$path/postings").select("__id").distinct()
+        val postings0 = spark.read.parquet(s"$path/postings")
+        // pre-BM25 postings lack __dl: pad with nulls so the union/anti-join
+        // lifecycle keeps working (bm25 itself stays refused via the marker)
+        val postings =
+          if (postings0.columns.contains("__dl")) postings0
+          else postings0.withColumn("__dl", lit(null).cast("long"))
+        InvertedIndexNode.Index(
+          postings.persist(StorageLevel.MEMORY_AND_DISK), terms,
+          statsRow.getAs[Long]("n_docs"),
+          docs.persist(StorageLevel.MEMORY_AND_DISK), pd, ls)
+    }
   }
 }
 

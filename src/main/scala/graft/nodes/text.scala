@@ -343,8 +343,7 @@ class BpeTokenizerNode(
     * Hadoop FS paths (hdfs:///s3a://) work like local ones.
     */
   def exportPublic(dir: String): Unit = {
-    val merges = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val merges = fitted
     BpeTokenizerNode.writePublic(dir, merges)
   }
 
@@ -969,8 +968,7 @@ class UnigramSurpriseNode(
   def unpersistModel(): Unit = model.foreach(_.counts.unpersist())
 
   override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new graft.dag.GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     m.counts.write.mode("overwrite").parquet(s"$path/counts")
     val spark = m.counts.sparkSession
     import spark.implicits._
@@ -1088,8 +1086,7 @@ class LmClassifierNode(
   def unpersistModel(): Unit = model.foreach(_.counts.unpersist())
 
   override def saveFitted(path: String): Unit = {
-    val m = model.getOrElse(
-      throw new GraftException(s"estimator node '$name' not fitted"))
+    val m = fitted
     m.counts.write.mode("overwrite").parquet(s"$path/counts")
     val spark = m.counts.sparkSession
     import spark.implicits._

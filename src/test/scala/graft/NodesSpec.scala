@@ -5255,6 +5255,87 @@ class NodesSpec extends AnyFunSuite {
     assert(err.getMessage.contains("waveCol"))
   }
 
+  test("maintainFromStream net-resolution: two NULL wave stamps for one key " +
+       "in one micro-batch are a duplicate and raise the contract error, as " +
+       "is a duplicate in an older wave; a key's single NULL-stamped row " +
+       "resolves normally") {
+    import spark.implicits._
+    val c = Ctx(spark)
+    val stage = java.nio.file.Files.createTempDirectory("graft_nullwave_spec").toString
+    val schema = "doc_id BIGINT, payload STRING, is_del BOOLEAN, wave BIGINT"
+    val probe = Seq("a", "b", "c", "d", "e", "f").toDF("payload")
+    // each drill drains ONE micro-batch (batch id 0) into a fresh index
+    def drain(dir: String, rows: Seq[(Long, String, Boolean, Option[Long])])
+        : (AggIndexNode, () => Set[(String, Long)]) = {
+      val agg = new AggIndexNode(groupCols = Seq("payload"), idCol = "doc_id")
+      agg.fit(c, In.single("corpus" -> Seq((0L, "a")).toDF("doc_id", "payload")))
+      def served(): Set[(String, Long)] =
+        agg.transform(c, In.single("probe" -> probe))("result")
+          .select("payload", "n_rows").as[(String, Long)].collect().toSet
+      rows.toDF("doc_id", "payload", "is_del", "wave")
+        .coalesce(1).write.parquet(s"$stage/$dir")
+      try IndexMaintenance.maintainFromStream(agg, c,
+        spark.readStream.schema(schema).parquet(s"$stage/$dir"),
+        checkpoint = Some(s"$stage/${dir}_ckpt"), deleteCol = Some("is_del"),
+        netResolveKeys = Seq("doc_id"), waveCol = Some("wave"))
+      catch { case e: Throwable =>
+        assert(served() == Set(("a", 1L)),
+          "a refused micro-batch must leave the index untouched")
+        agg.unpersistIndex()
+        throw e
+      }
+      (agg, () => served())
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ msgs(e.getCause))
+    def refused(dir: String, rows: Seq[(Long, String, Boolean, Option[Long])]): Unit = {
+      val err = intercept[Exception](drain(dir, rows))
+      assert(msgs(err).exists(_.contains("net-resolution contract")),
+        s"$dir: want the duplicate-key contract error, got: ${msgs(err).mkString(" | ")}")
+    }
+    // one row per key, one of them NULL-stamped: no duplicate
+    val (ok, served) = drain("ok", Seq((2L, "b", false, None), (3L, "c", false, Some(5L))))
+    assert(served() == Set(("a", 1L), ("b", 1L), ("c", 1L)))
+    ok.unpersistIndex()
+    // two NULL-stamped rows for key 1: NULL <=> NULL is one wave
+    refused("null_dup", Seq((1L, "d", false, None), (1L, "e", false, None)))
+    // a duplicate in an OLDER wave than the key's surviving version
+    refused("old_dup", Seq((1L, "d", false, Some(3L)), (1L, "e", false, Some(3L)),
+      (1L, "f", false, Some(4L))))
+  }
+
+  test("compactIndex without compactPath double-buffers in ONE per-node temp " +
+       "root: k > 2 compactions leave at most two generation directories") {
+    import spark.implicits._
+    val c = Ctx(spark)
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def compactDirs: Set[String] = tmp.listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("graft_") &&
+        f.getName.contains("_compact_"))
+      .map(_.getName).toSet
+    val before = compactDirs
+    val idx = new SketchIndexNode(groupCols = Seq("src"), cols = Seq("v"))
+      .named("leak_probe_sketch")
+    idx.fit(c, In.single("corpus" ->
+      Seq(("x", 1L), ("x", 2L), ("y", 3L)).toDF("src", "v")))
+    (1 to 4).foreach { i =>
+      idx.updateIndex(c, Seq(("x", 10L + i)).toDF("src", "v"))
+      idx.compactIndex()
+    }
+    val fresh = (compactDirs -- before).toSeq.map(new java.io.File(tmp, _))
+    // a generation is a gen-N subdir of a compaction root, or a whole
+    // root written by one compaction
+    val generations = fresh.map { d =>
+      d.listFiles().count(f => f.isDirectory && f.getName.startsWith("gen-")) max 1
+    }.sum
+    assert(generations <= 2,
+      s"4 compactions left $generations index copies in ${fresh.mkString(", ")}")
+    val got = idx.transform(c, In.single("probe" -> Seq("x", "y").toDF("src")))("result")
+      .select("src", "n_rows", "nd_v").as[(String, Long, Long)].collect().toSet
+    assert(got == Set(("x", 6L, 6L), ("y", 1L, 1L)))
+    idx.unpersistIndex()
+  }
+
   test("maintainFromStream CDC mode: upserts replace, tombstones delete; " +
        "checkpoint-less re-maintenance refused after applied batches") {
     import spark.implicits._
