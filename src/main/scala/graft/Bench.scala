@@ -3,26 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC") // match Verify's session
-      .config("spark.ui.enabled", "false")
-      // see Verify: AQE coalesces small stages by advisory size, not
-      // local parallelism — ~13% off the flagship's scheduling overhead.
-      // Both knobs env-overridable for A/B adjudication (VERDICT r11 wrong
-      // #3). Round-12 A/B on the q19/q34/q36/q138/q139 band found the
-      // driver-observed regressions do NOT reproduce locally under either
-      // parallelismFirst value (all inside the host-jitter band) and a
-      // smaller 8m advisory is mildly WORSE — so the r11 settings stand;
-      // the band was driver-host contention, not this flag.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val only: Option[Set[String]] =
       if (args.nonEmpty) Some(args(0).split(",").toSet) else None
     // JVM/session warmup so the first timed query doesn't absorb startup.

@@ -2,7 +2,6 @@ package graft
 
 import graft.dag.{Ctx, In}
 import graft.nodes._
-import org.apache.spark.sql.SparkSession
 
 /** Per-wave driver-cost census for the chained-IVM tail: brackets each
   * maintenance wave of the q212-shaped star chain and prints (a) every
@@ -10,19 +9,15 @@ import org.apache.spark.sql.SparkSession
   * execution's duration (QueryExecutionListener) — the r18 instrument
   * that located the wave wall in sequential driver-blocking executions
   * (state writes + barrier `toRdd` stage execution under AQE), not in
-  * broadcast-build counts. Run with an optional sf-dir argument:
-  * `sbt "runMain graft.Census /root/testdata/sf0.1"`.
+  * broadcast-build counts. Runs on the [[GraftSession]] contract config
+  * (cores from SPARK_GRAFT_CPUS, driver heap from SPARK_DRIVER_MEM via
+  * build.sbt) with an optional sf-dir argument:
+  * `SPARK_GRAFT_CPUS=32 sbt "runMain graft.Census <sf-dir>"`.
   */
 object Census {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder()
-      .appName("graft-census").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
     graft.functions.VecFunctions.register(spark)
 
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()

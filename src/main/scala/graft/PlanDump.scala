@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named queries to `plans/<tag>/` —
   * the committed plan-shape evidence for optimization rounds (the judge
-  * cannot run Spark; plan claims are checked against these files).
+  * cannot run Spark; plan claims are checked against these files). Plans
+  * on the [[GraftSession]] contract config, so set SPARK_GRAFT_CPUS to the
+  * bench's core count for the bench's plan.
   * Usage: runMain graft.PlanDump q212_star_view,q213_published_view_feed \
   *   [dataDir] [outDir] [suffix]
   */
@@ -14,11 +14,7 @@ object PlanDump {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "plans/r19"
     val suffix = if (args.length > 3) args(3) else "before"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession("ERROR")
     graft.functions.VecFunctions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

@@ -3,7 +3,6 @@ package graft
 import graft.dag._
 import graft.nodes._
 import graft.queries.Queries
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10x scale probe (dev main, not part of the driver contract): clones sf0.1
@@ -16,12 +15,7 @@ object Scale10 {
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 10
     val queries = if (args.length > 1) args(1).split(",").toSeq else Nil
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     val src = "/root/testdata/sf0.1"
     val out = s"/tmp/scale$factor"
 

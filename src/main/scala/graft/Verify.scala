@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,26 +8,7 @@ object Verify {
     // Optional 3rd arg: comma-separated query-name filter (fast iteration).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // respect advisoryPartitionSizeInBytes when AQE coalesces (the
-      // Spark-recommended setting): small shuffle stages collapse to few
-      // tasks instead of defaulting to full parallelism — measured ~13%
-      // off the flagship's per-job scheduling overhead; at cluster scale
-      // the advisory size, not local parallelism, is the right target.
-      // Both knobs env-overridable for A/B adjudication (see Bench.scala's
-      // round-12 note: the r11 driver regression band did not reproduce
-      // under either setting, so the r11 defaults stand)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Decimal→double hash-contract guard: queries compare bit-identically
     // only while each exact decimal aggregate's value has magnitude below

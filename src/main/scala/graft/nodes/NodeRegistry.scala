@@ -337,8 +337,7 @@ object NodeRegistry {
       p.intOr("compactEvery", 0), p.strOpt("compactPath")))
     register("bm25_topk")(p => new Bm25TopKNode(p.str("idCol"), p.str("textCol"),
       p.str("queryIdCol"), p.str("queryTextCol"), p.int("k"), p.dbl("maxDfFrac"),
-      p.int("k1Tenths"), p.int("bHundredths"), p.m("scale").toString.toLong,
-      p.boolOr("broadcastTerms", true), p.boolOr("broadcastQueries", true)))
+      p.int("k1Tenths"), p.int("bHundredths"), p.m("scale").toString.toLong))
     register("compact_files")(p => new CompactFilesNode(p.str("path"),
       p.m("targetFileBytes").toString.toLong, p.str("format"),
       p.boolOr("shuffle", true), p.boolOr("skipIfCompact", false),

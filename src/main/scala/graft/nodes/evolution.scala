@@ -1039,10 +1039,7 @@ private[nodes] final class SegStore(
   private lazy val dir: String = root match {
     case Some(r) =>
       s"$r/store-${java.util.UUID.randomUUID().toString.take(8)}"
-    case None =>
-      val d = java.nio.file.Files.createTempDirectory(s"graft_seg_${label}_")
-      SegStore.cleanAtExit(d.toString)
-      d.toString
+    case None => WorkDir(s"graft_seg_${label}_").toString
   }
   /** Seed (or re-seed after an external fold/load) from a cached base.
     * Rotates the file-retirement ledger: the PREVIOUS generation's files
@@ -1249,6 +1246,16 @@ private[nodes] object SegStore {
     }
   })
   def cleanAtExit(dir: String): Unit = { hook; exitDirs.add(dir); () }
+}
+
+/** A fresh temp work directory under `java.io.tmpdir`, removed with its
+  * contents at JVM exit by [[SegStore.cleanAtExit]]'s sweep. */
+object WorkDir {
+  def apply(prefix: String): java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    SegStore.cleanAtExit(d.toString)
+    d
+  }
 }
 
 /** Shared IVM-node plumbing. */

@@ -196,11 +196,7 @@ trait StoredIndex extends graft.dag.EstimatorNode with IncrementalIndex {
   @volatile private var compactGen: Long = 0L
   /** Compaction root when `compactPath` is unset: ONE temp dir per node,
     * swept at JVM exit (File.deleteOnExit cannot remove a non-empty dir). */
-  private lazy val compactTempRoot: String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_${name}_compact_").toString
-    SegStore.cleanAtExit(d)
-    d
-  }
+  private lazy val compactTempRoot: String = WorkDir(s"graft_${name}_compact_").toString
 
   /** Truncate the index lineage to parquet scans: write the resolved
     * frames, read them back on the same session and re-seed the stores on

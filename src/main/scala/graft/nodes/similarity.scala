@@ -25,6 +25,154 @@ object VecExprs {
     graft.functions.VecFunctions.register(spark)
 }
 
+/** The retrieval kernels, each defined once for both lifecycles: the
+  * one-shot nodes (BruteForceKnn, LshKnn, IvfKnn, IvfQuantizedKnn,
+  * InvertedIndexTopK, Bm25TopK, QuantizeEmbedding) and the stored index
+  * families (IvfIndexNode, InvertedIndexNode). Every kernel returns a lazy
+  * frame — no action, no persist — so a caller builds the same plan either
+  * way. Column conventions: corpus vectors `__cv`/`__cnorm`, query vectors
+  * `__qv`/`__qnorm`, cluster id `__cluster`, postings `tok`/`tf`/`__dl`,
+  * query term frequencies `qtf`.
+  */
+private[nodes] object Retrieval {
+  /** (key, `__<side>v`, `__<side>norm`): the vector column and its L2 norm,
+    * `side` "c" for the corpus, "q" for the queries. */
+  def vecs(df: DataFrame, key: String, vecCol: String, side: String): DataFrame =
+    df.select(col(key), col(vecCol).as(s"__${side}v"))
+      .withColumn(s"__${side}norm", expr(VecExprs.norm(s"__${side}v")))
+
+  /** A quantizer's centroids in cluster-id order. */
+  def centroids(m: org.apache.spark.ml.clustering.KMeansModel): Seq[(Int, Seq[Double])] =
+    m.clusterCenters.zipWithIndex.map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
+
+  /** The broadcast-able centroid table (`__cluster`, `__centroid`). */
+  def centroidTable(spark: org.apache.spark.sql.SparkSession,
+                    cents: Seq[(Int, Seq[Double])]): DataFrame = {
+    import spark.implicits._
+    cents.toDF("__cluster", "__centroid")
+  }
+
+  /** Each query row (qid, `__qv`, `__qnorm`) against its `nProbe` nearest
+    * centroids: exact float squared distance on the broadcast centroid
+    * table, ties to the smaller cluster id. Adds `__cluster`. */
+  def probe(queries: DataFrame, centroids: DataFrame, queryIdCol: String,
+            nProbe: Int): DataFrame =
+    queries.join(broadcast(centroids))
+      .withColumn("__cdist", expr(
+        "aggregate(zip_with(__qv, __centroid, (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), 0D, (s, v) -> s + v)"))
+      .withColumn("__pr", row_number().over(
+        Window.partitionBy(queryIdCol).orderBy(col("__cdist").asc, col("__cluster").asc)))
+      .filter(col("__pr") <= nProbe)
+      .select(col(queryIdCol), col("__qv"), col("__qnorm"), col("__cluster"))
+
+  /** Symmetric per-vector int8 codes of `vec`: `scale` = max|x| / 127
+    * (floored at 1e-30 so zero vectors stay finite), `codes` =
+    * floor(x / scale + 0.5) — exact floor arithmetic, so any engine
+    * reproduces the integers regardless of its rounding-mode convention. */
+  def quantize(df: DataFrame, vec: String, codes: String, scale: String): DataFrame = df
+    .withColumn(scale, expr(
+      s"greatest(array_max(transform($vec, x -> abs(cast(x as double)))), 1e-30D) / 127.0D"))
+    .withColumn(codes, expr(
+      s"transform($vec, x -> cast(floor(cast(x as double) / $scale + 0.5D) as int))"))
+
+  /** Per-query top-k by `score` descending, ties to the smaller `docCol`:
+    * adds `rank`. */
+  def rankTopK(scored: DataFrame, queryIdCol: String, docCol: String, k: Int): DataFrame =
+    scored
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(docCol).asc)))
+      .filter(col("rank") <= k)
+
+  /** Exact cosine top-k over (corpus vector, query vector) pairs:
+    * (qid, id, score, rank). */
+  def cosineTopK(pairs: DataFrame, idCol: String, queryIdCol: String, k: Int): DataFrame =
+    rankTopK(pairs.withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm"))),
+      queryIdCol, idCol, k)
+      .select(col(queryIdCol), col(idCol), col("score"), col("rank"))
+
+  /** Float IVF serving: each query scores only the corpus rows (id,
+    * `__cluster`, `__cv`, `__cnorm`) of its `nProbe` nearest clusters. */
+  def ivfTopK(corpus: DataFrame, centroids: DataFrame, queries: DataFrame,
+              idCol: String, queryIdCol: String, nProbe: Int, k: Int): DataFrame =
+    cosineTopK(corpus.join(broadcast(probe(queries, centroids, queryIdCol, nProbe)), Seq("__cluster")),
+      idCol, queryIdCol, k)
+
+  /** Int8 IVF serving: the coarse pass scores the probed clusters on the
+    * CODE frame (id, `__cluster`, `__cq`, `__cscale`) only — exact integer
+    * dot × two scales, so candidate order is deterministic, ties by id —
+    * and keeps the `rerank` best per query; only those candidates pull the
+    * float frame (id, `__cv`, `__cnorm`) back in for the exact cosine top-k.
+    * At nProbe >= nClusters and rerank >= corpus size nothing is truncated
+    * and the result equals [[ivfTopK]]. */
+  def ivfQuantizedTopK(codes: DataFrame, floats: DataFrame, centroids: DataFrame,
+                       queries: DataFrame, idCol: String, queryIdCol: String,
+                       nProbe: Int, rerank: Int, k: Int): DataFrame = {
+    val queriesQ = quantize(queries, "__qv", "__qq", "__qscale")
+      .select(col(queryIdCol), col("__qq"), col("__qscale"))
+    val probedQ = probe(queries, centroids, queryIdCol, nProbe)
+      .select(col(queryIdCol), col("__cluster"))
+      .join(broadcast(queriesQ), Seq(queryIdCol))
+    val wCoarse = Window.partitionBy(queryIdCol)
+      .orderBy(col("__qscore").desc, col(idCol).asc)
+    val candidates = codes.join(broadcast(probedQ), Seq("__cluster"))
+      .withColumn("__qscore",
+        expr("vec_dot_int(__cq, __qq)") * col("__cscale") * col("__qscale"))
+      .withColumn("__cr", row_number().over(wCoarse))
+      .filter(col("__cr") <= rerank)
+      .select(col(queryIdCol), col(idCol))
+    cosineTopK(candidates.join(floats, Seq(idCol)).join(broadcast(queries), Seq(queryIdCol)),
+      idCol, queryIdCol, k)
+  }
+
+  /** Posting-list term frequencies (id, tok, tf) of the tokenized `text`;
+    * with `docLen`, each row also carries the doc's token count `__dl` (the
+    * BM25 length norm rides the posting, no extra join). */
+  def termFreqs(df: DataFrame, id: String, text: String, docLen: Boolean = false): DataFrame = {
+    val toks = TextExprs.tokensExpr(text)
+    if (!docLen)
+      df.select(col(id), expr(s"explode($toks)").as("tok"))
+        .groupBy(col(id), col("tok")).agg(count(lit(1)).as("tf"))
+    else
+      df.select(col(id), expr(toks).as("__toks"))
+        .select(col(id), expr("size(__toks)").as("__dl"), expr("explode(__toks)").as("tok"))
+        .groupBy(col(id), col("tok"))
+        .agg(count(lit(1)).as("tf"), org.apache.spark.sql.functions.max("__dl").as("__dl"))
+  }
+
+  /** Integer tf·qtf score per (query, doc) over postings joined to query
+    * term frequencies on `tok`. */
+  def tfScores(joined: DataFrame, queryIdCol: String, docCol: String): DataFrame =
+    joined.groupBy(col(queryIdCol), col(docCol)).agg(sum(expr("tf * qtf")).as("score"))
+
+  /** The rational BM25 idf surrogate idfF = (N·S) div df, as `__idf`. */
+  def bm25Idf(n: String, df: String, scale: Long): org.apache.spark.sql.Column =
+    expr(s"($n * ${scale}L) div $df").as("__idf")
+
+  /** Fixed-point BM25 score per (query, doc) — the formula and its
+    * overflow bounds are in [[Bm25TopKNode]]'s class doc. Postings (tok,
+    * doc, tf, `__dl`) join the broadcast terms (tok, `__idf`, …) and the
+    * broadcast query term frequencies (qid, tok, qtf); `avgdlc` is the SQL
+    * for avgdl in hundredths, a column or a literal. */
+  def bm25Scores(postings: DataFrame, terms: DataFrame, queryTf: DataFrame, avgdlc: String,
+                 k1Tenths: Int, bHundredths: Int, scale: Long,
+                 queryIdCol: String, docCol: String): DataFrame =
+    postings
+      .join(broadcast(terms), Seq("tok"))
+      .join(broadcast(queryTf), Seq("tok"))
+      // numerator in decimal(38,0): tf·2200·avgdlC·S wraps int64 once
+      // tf·avgdl exceeds ~4.2e7 (a long repetitive web doc) — the same
+      // 128-bit path the __contrib product already uses; the quotient is
+      // <= (k1T+10)·100·S/1000, far inside int64 (ADVICE r5)
+      .withColumn("__tfsat", expr(
+        s"cast((cast(tf as decimal(38,0)) * ${(k1Tenths + 10) * 100}L * $avgdlc * ${scale}L) div " +
+          s"(1000L * tf * $avgdlc + ${k1Tenths.toLong * (100 - bHundredths)}L * $avgdlc + " +
+          s"${100L * k1Tenths * bHundredths}L * __dl) as bigint)"))
+      .withColumn("__contrib", expr(
+        s"cast((cast(__idf as decimal(38,0)) * __tfsat) div ${scale}L as bigint)"))
+      .groupBy(col(queryIdCol), col(docCol))
+      .agg(sum(expr("qtf * __contrib")).as("score"))
+}
+
 /** Brute-force cosine top-k: every query row against every corpus row.
   * The queries side is broadcast (it must be small — that is the contract of
   * brute-force kNN); the corpus streams through in one narrow pass, then one
@@ -45,19 +193,9 @@ class BruteForceKnnNode(
   override def jsonParams: Map[String, Any] = Map("k" -> k, "idCol" -> idCol, "vecCol" -> vecCol, "queryIdCol" -> queryIdCol)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     VecExprs.ensure(ctx.spark)
-    val corpus = in("corpus")
-      .select(col(idCol), col(vecCol).as("__cv"))
-      .withColumn("__cnorm", expr(VecExprs.norm("__cv")))
-    val queries = in("queries")
-      .select(col(queryIdCol), col(vecCol).as("__qv"))
-      .withColumn("__qnorm", expr(VecExprs.norm("__qv")))
-    val scored = corpus.join(broadcast(queries))
-      .withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm")))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol).asc)
-    Map("result" -> scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("score"), col("rank")))
+    val corpus = Retrieval.vecs(in("corpus"), idCol, vecCol, "c")
+    val queries = Retrieval.vecs(in("queries"), queryIdCol, vecCol, "q")
+    Map("result" -> Retrieval.cosineTopK(corpus.join(broadcast(queries)), idCol, queryIdCol, k))
   }
 }
 
@@ -95,24 +233,15 @@ class LshKnnNode(
 
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     VecExprs.ensure(ctx.spark)
-    val corpus = in("corpus")
-      .select(col(idCol), col(vecCol).as("__cv"))
-      .withColumn("__cnorm", expr(VecExprs.norm("__cv")))
+    val corpus = Retrieval.vecs(in("corpus"), idCol, vecCol, "c")
       .withColumn("__sigs", expr(sigExpr("__cv")))
       .selectExpr(idCol, "__cv", "__cnorm", "posexplode(__sigs) as (tbl, sig)")
-    val queries = in("queries")
-      .select(col(queryIdCol), col(vecCol).as("__qv"))
-      .withColumn("__qnorm", expr(VecExprs.norm("__qv")))
+    val queries = Retrieval.vecs(in("queries"), queryIdCol, vecCol, "q")
       .withColumn("__sigs", expr(sigExpr("__qv")))
       .selectExpr(queryIdCol, "__qv", "__qnorm", "posexplode(__sigs) as (tbl, sig)")
     val candidates = corpus.join(broadcast(queries), Seq("tbl", "sig"))
       .dropDuplicates(queryIdCol, idCol)
-      .withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm")))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol).asc)
-    Map("result" -> candidates
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("score"), col("rank")))
+    Map("result" -> Retrieval.cosineTopK(candidates, idCol, queryIdCol, k))
   }
 }
 
@@ -131,6 +260,13 @@ private[nodes] object QuantizerFit {
     import org.apache.spark.ml.functions.array_to_vector
     df.withColumn("__features", array_to_vector(col(in)))
   }
+  /** Each corpus row assigned to its nearest centroid by the fitted
+    * quantizer: (id, `__cv`, `__cluster`). */
+  def assign(m: org.apache.spark.ml.clustering.KMeansModel, df: DataFrame,
+             idCol: String, vecCol: String): DataFrame =
+    m.transform(withVec(df, vecCol))
+      .withColumnRenamed(m.getPredictionCol, "__cluster")
+      .select(col(idCol), col(vecCol).as("__cv"), col("__cluster"))
   /** Returns (model, rows actually handed to the fit). */
   def sampled(ctx: Ctx, corpus: DataFrame, idCol: String, vecCol: String,
               nClusters: Int, maxFitRows: Long): (org.apache.spark.ml.clustering.KMeansModel, Long) = {
@@ -183,11 +319,6 @@ class IvfKnnNode(
     * spec assert the `maxFitRows` bound without re-running the sample). */
   @volatile var lastFitRows: Long = -1L
 
-  private def withVec(df: DataFrame, in: String): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    df.withColumn("__features", array_to_vector(col(in)))
-  }
-
   def fitModel(ctx: Ctx, in: In): Model = {
     val (m, rows) = QuantizerFit.sampled(ctx, in("corpus"), idCol, vecCol, nClusters, maxFitRows)
     lastFitRows = rows
@@ -196,34 +327,11 @@ class IvfKnnNode(
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     VecExprs.ensure(ctx.spark)
-    val spark = ctx.spark
-    // broadcast-able centroid table: (cluster id, centroid array)
-    import spark.implicits._
-    val centroids = m.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq.toDF("__cluster", "__centroid")
-    val corpus = m.transform(withVec(in("corpus"), vecCol))
-      .withColumnRenamed(m.getPredictionCol, "__cluster")
-      .select(col(idCol), col(vecCol).as("__cv"), col("__cluster"))
+    val corpus = QuantizerFit.assign(m, in("corpus"), idCol, vecCol)
       .withColumn("__cnorm", expr(VecExprs.norm("__cv")))
-    // each query → its nProbe nearest centroids (tiny cross join, broadcast)
-    val queries = in("queries")
-      .select(col(queryIdCol), col(vecCol).as("__qv"))
-      .withColumn("__qnorm", expr(VecExprs.norm("__qv")))
-    val probed = queries.join(broadcast(centroids))
-      .withColumn("__cdist", expr(
-        "aggregate(zip_with(__qv, __centroid, (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), 0D, (s, v) -> s + v)"))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(queryIdCol).orderBy(col("__cdist").asc, col("__cluster").asc)))
-      .filter(col("__pr") <= nProbe)
-      .select(col(queryIdCol), col("__qv"), col("__qnorm"), col("__cluster"))
-    // score only within probed clusters
-    val scored = corpus.join(broadcast(probed), Seq("__cluster"))
-      .withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm")))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol).asc)
-    Map("result" -> scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("score"), col("rank")))
+    Map("result" -> Retrieval.ivfTopK(corpus,
+      Retrieval.centroidTable(ctx.spark, Retrieval.centroids(m)),
+      Retrieval.vecs(in("queries"), queryIdCol, vecCol, "q"), idCol, queryIdCol, nProbe, k))
   }
 }
 
@@ -237,13 +345,15 @@ class IvfKnnNode(
   *      ([[QuantizerFit]], same as IvfKnnNode).
   *   2. corpus pass (narrow): assign cluster, quantize — the int8 frame
   *      (id, cluster, codes, scale) is the ONLY corpus-wide join input.
-  *   3. per query: `nProbe` nearest centroids (broadcast centroid table),
+  *   3. per query: `nProbe` nearest centroids ([[Retrieval.probe]]),
   *      int8 dot against probed clusters via the codegen'd `vec_dot_int`
   *      kernel (exact integer accumulation — candidate order is
   *      bit-reproducible, no float summation sensitivity), top `rerank`
   *      by quantized score.
   *   4. exact re-rank: the rerank-sized candidate set joins back to the
-  *      float embeddings for true cosine top-k.
+  *      float embeddings for true cosine top-k. Steps 3-4 are
+  *      [[Retrieval.ivfQuantizedTopK]], the kernel IvfIndexNode's
+  *      quantized serving runs too.
   *
   * Identity contract (the q50/q68 recipe): with nProbe >= nClusters and
   * rerank >= corpus size nothing is truncated, so the output EQUALS
@@ -280,61 +390,19 @@ class IvfQuantizedKnnNode(
     m
   }
 
-  private def quantized(df: DataFrame, vec: String): DataFrame = df
-    .withColumn("__scale", expr(
-      s"greatest(array_max(transform($vec, x -> abs(cast(x as double)))), 1e-30D) / 127.0D"))
-    .withColumn("__q", expr(
-      s"transform($vec, x -> cast(floor(cast(x as double) / __scale + 0.5D) as int))"))
-
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     VecExprs.ensure(ctx.spark)
-    val spark = ctx.spark
-    import spark.implicits._
-    val centroids = m.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray) }.toSeq.toDF("__cluster", "__centroid")
-    val assigned = m.transform(QuantizerFit.withVec(in("corpus"), vecCol))
-      .withColumnRenamed(m.getPredictionCol, "__cluster")
-      .select(col(idCol), col(vecCol).as("__cv"), col("__cluster"))
+    val assigned = QuantizerFit.assign(m, in("corpus"), idCol, vecCol)
     // int8 side: the corpus-wide pass (skinny codes, 4x less IO than float)
-    val corpusQ = quantized(assigned, "__cv")
-      .select(col(idCol), col("__cluster"), col("__q").as("__cq"), col("__scale").as("__cscale"))
+    val codes = Retrieval.quantize(assigned, "__cv", "__cq", "__cscale")
+      .select(col(idCol), col("__cluster"), col("__cq"), col("__cscale"))
     // float side: touched ONLY by the rerank-sized candidate join
-    val corpusF = assigned.select(col(idCol), col("__cv"))
+    val floats = assigned.select(col(idCol), col("__cv"))
       .withColumn("__cnorm", expr(VecExprs.norm("__cv")))
-    val queriesF = in("queries")
-      .select(col(queryIdCol), col(vecCol).as("__qv"))
-      .withColumn("__qnorm", expr(VecExprs.norm("__qv")))
-    val queriesQ = quantized(queriesF.select(col(queryIdCol), col("__qv")), "__qv")
-      .select(col(queryIdCol), col("__q").as("__qq"), col("__scale").as("__qscale"))
-    // nProbe nearest centroids per query (exact float distance on the tiny
-    // broadcast centroid table — same probe rule as IvfKnnNode)
-    val probed = queriesF.join(broadcast(centroids))
-      .withColumn("__cdist", expr(
-        "aggregate(zip_with(__qv, __centroid, (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), 0D, (s, v) -> s + v)"))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(queryIdCol).orderBy(col("__cdist").asc, col("__cluster").asc)))
-      .filter(col("__pr") <= nProbe)
-      .select(col(queryIdCol), col("__cluster"))
-      .join(broadcast(queriesQ), Seq(queryIdCol))
-    // coarse int8 scoring inside probed clusters; candidate order is exact
-    // integer dot x two scales — deterministic, ties break by id
-    val wCoarse = Window.partitionBy(queryIdCol)
-      .orderBy(col("__qscore").desc, col(idCol).asc)
-    val candidates = corpusQ.join(broadcast(probed), Seq("__cluster"))
-      .withColumn("__qscore",
-        expr("vec_dot_int(__cq, __qq)") * col("__cscale") * col("__qscale"))
-      .withColumn("__cr", row_number().over(wCoarse))
-      .filter(col("__cr") <= rerank)
-      .select(col(queryIdCol), col(idCol))
-    // exact re-rank: skinny candidates pull their float vectors back in
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol).asc)
-    Map("result" -> candidates
-      .join(corpusF, Seq(idCol))
-      .join(broadcast(queriesF), Seq(queryIdCol))
-      .withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("score"), col("rank")))
+    Map("result" -> Retrieval.ivfQuantizedTopK(codes, floats,
+      Retrieval.centroidTable(ctx.spark, Retrieval.centroids(m)),
+      Retrieval.vecs(in("queries"), queryIdCol, vecCol, "q"),
+      idCol, queryIdCol, nProbe, rerank, k))
   }
 }
 
@@ -351,8 +419,10 @@ class IvfQuantizedKnnNode(
   *     reads them).
   *   - transform(queries): retrieval only — probe `nProbe` nearest
   *     centroids per query (broadcast against the tiny centroid table),
-  *     score inside probed clusters, exact cosine top-k. ZERO corpus-sized
-  *     work: the corpus pass happened at fit.
+  *     score inside probed clusters, exact cosine top-k: the same
+  *     [[Retrieval.ivfTopK]] / [[Retrieval.ivfQuantizedTopK]] kernels the
+  *     one-shot IVF nodes run. ZERO corpus-sized work: the corpus pass
+  *     happened at fit.
   *   - updateIndex(delta): assign ONLY the delta against the FROZEN
   *     centroids and union it into the inverted file — delta-sized work,
   *     one materializing count, superseded generation released. Centroids
@@ -434,16 +504,9 @@ class IvfIndexNode(
       (if (quantized) Seq("__cq", "__cscale") else Nil)
 
   /** Project an assigned frame to the inverted-file schema, deriving the
-    * int8 codes when `quantized` (same max-abs scaling as
-    * IvfQuantizedKnnNode — exact floor arithmetic, engine-reproducible). */
+    * int8 codes when `quantized` (the shared [[Retrieval.quantize]]). */
   private def idxSelect(df: DataFrame): DataFrame = {
-    val withCodes =
-      if (!quantized) df
-      else df
-        .withColumn("__cscale", expr(
-          "greatest(array_max(transform(__cv, x -> abs(cast(x as double)))), 1e-30D) / 127.0D"))
-        .withColumn("__cq", expr(
-          "transform(__cv, x -> cast(floor(cast(x as double) / __cscale + 0.5D) as int))"))
+    val withCodes = if (!quantized) df else Retrieval.quantize(df, "__cv", "__cq", "__cscale")
     withCodes.select(idxColNames.map(col): _*)
   }
 
@@ -492,10 +555,6 @@ class IvfIndexNode(
     if (nClusters <= maxLiteralCentroids) assignLiteral(df, literal)
     else assignByJoin(df, centroids)
 
-  private def withVecNorm(df: DataFrame, id: String): DataFrame = df
-    .select(col(id), col(vecCol).as("__cv"))
-    .withColumn("__cnorm", expr(VecExprs.norm("__cv")))
-
   private def collectCentroids(m: Model): Seq[(Int, Seq[Double])] =
     m.centroids.collect() // nClusters rows — model-sized by definition
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
@@ -503,15 +562,12 @@ class IvfIndexNode(
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
     VecExprs.ensure(ctx.spark)
-    val spark = ctx.spark
-    import spark.implicits._
     val (km, rows) = QuantizerFit.sampled(ctx, in("corpus"), idCol, vecCol, nClusters, maxFitRows)
     lastFitRows = rows
-    val cents = km.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-    val centroids = cents.toDF("__cluster", "__centroid")
+    val cents = Retrieval.centroids(km)
+    val centroids = Retrieval.centroidTable(ctx.spark, cents)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val assignments = idxSelect(assign(withVecNorm(in("corpus"), idCol), centroids, cents))
+    val assignments = idxSelect(assign(Retrieval.vecs(in("corpus"), idCol, vecCol, "c"), centroids, cents))
       .persist(StorageLevel.MEMORY_AND_DISK)
     seedStores(Seq(assignments))
     IvfIndexNode.Index(centroids, assignments)
@@ -529,55 +585,17 @@ class IvfIndexNode(
     VecExprs.ensure(ctx.spark)
     val qin = in("queries")
     if (qin.isStreaming) return applyStreaming(m, ctx, qin)
-    val queries = qin
-      .select(col(queryIdCol), col(vecCol).as("__qv"))
-      .withColumn("__qnorm", expr(VecExprs.norm("__qv")))
-    // nProbe nearest centroids per query: exact float distance on the tiny
-    // broadcast centroid table (same probe rule as IvfKnnNode)
-    val probed = queries.join(broadcast(m.centroids))
-      .withColumn("__cdist", expr(
-        "aggregate(zip_with(__qv, __centroid, (a, b) -> (cast(a as double) - b) * (cast(a as double) - b)), 0D, (s, v) -> s + v)"))
-      .withColumn("__pr", row_number().over(
-        Window.partitionBy(queryIdCol).orderBy(col("__cdist").asc, col("__cluster").asc)))
-      .filter(col("__pr") <= nProbe)
-      .select(col(queryIdCol), col("__qv"), col("__qnorm"), col("__cluster"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol).asc)
-    if (quantized) {
-      // coarse pass on the CODE columns only (columnar pruning keeps the
-      // probed-cluster scan at the int8 width), exact integer dot x two
-      // scales, deterministic candidate order; float vectors re-enter via
-      // the rerank-sized id join for the exact cosine top-k
-      val queriesQ = queries
-        .withColumn("__qscale", expr(
-          "greatest(array_max(transform(__qv, x -> abs(cast(x as double)))), 1e-30D) / 127.0D"))
-        .withColumn("__qq", expr(
-          "transform(__qv, x -> cast(floor(cast(x as double) / __qscale + 0.5D) as int))"))
-        .select(col(queryIdCol), col("__qq"), col("__qscale"))
-      val probedQ = probed.select(col(queryIdCol), col("__cluster"))
-        .join(broadcast(queriesQ), Seq(queryIdCol))
-      val wCoarse = Window.partitionBy(queryIdCol)
-        .orderBy(col("__qscore").desc, col(idCol).asc)
-      val candidates = m.assignments
-        .select(col(idCol), col("__cluster"), col("__cq"), col("__cscale"))
-        .join(broadcast(probedQ), Seq("__cluster"))
-        .withColumn("__qscore",
-          expr("vec_dot_int(__cq, __qq)") * col("__cscale") * col("__qscale"))
-        .withColumn("__cr", row_number().over(wCoarse))
-        .filter(col("__cr") <= rerank)
-        .select(col(queryIdCol), col(idCol))
-      return Map("result" -> candidates
-        .join(m.assignments.select(col(idCol), col("__cv"), col("__cnorm")), Seq(idCol))
-        .join(broadcast(queries), Seq(queryIdCol))
-        .withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm")))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col(queryIdCol), col(idCol), col("score"), col("rank")))
-    }
-    Map("result" -> m.assignments.join(broadcast(probed), Seq("__cluster"))
-      .withColumn("score", expr(VecExprs.cosine("__cv", "__qv", "__cnorm", "__qnorm")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("score"), col("rank")))
+    val queries = Retrieval.vecs(qin, queryIdCol, vecCol, "q")
+    // coarse pass on the CODE columns only (columnar pruning keeps the
+    // probed-cluster scan at the int8 width); float vectors re-enter via
+    // the rerank-sized id join for the exact cosine top-k
+    val result =
+      if (quantized) Retrieval.ivfQuantizedTopK(
+        m.assignments.select(col(idCol), col("__cluster"), col("__cq"), col("__cscale")),
+        m.assignments.select(col(idCol), col("__cv"), col("__cnorm")),
+        m.centroids, queries, idCol, queryIdCol, nProbe, rerank, k)
+      else Retrieval.ivfTopK(m.assignments, m.centroids, queries, idCol, queryIdCol, nProbe, k)
+    Map("result" -> result)
   }
 
   /** STREAMING serving (live-crawl admission / retrieval — the q106-style
@@ -605,9 +623,7 @@ class IvfIndexNode(
     import org.apache.spark.sql.functions.{array, array_sort, call_function,
       explode, sequence, slice, struct, typedlit, transform => tfm}
     graft.functions.VecFunctions.register(qin.sparkSession)
-    val queries = qin
-      .select(col(queryIdCol), col(vecCol).as("__qv"))
-      .withColumn("__qnorm", expr(VecExprs.norm("__qv")))
+    val queries = Retrieval.vecs(qin, queryIdCol, vecCol, "q")
     val probeCol =
       if (nProbe >= nClusters) explode(sequence(lit(0), lit(nClusters - 1)))
       else if (nClusters <= maxLiteralCentroids) {
@@ -642,7 +658,7 @@ class IvfIndexNode(
     // action: the segment is already durable (the append wrote it) and the
     // read-back cache fills on first use
     stores.head.appendSegment(idxSelect(
-      assign(withVecNorm(delta, idCol), m.centroids, collectCentroids(m))))
+      assign(Retrieval.vecs(delta, idCol, vecCol, "c"), m.centroids, collectCentroids(m))))
     endWave()
   }
 
@@ -668,7 +684,6 @@ class IvfIndexNode(
     val m = fitted
     VecExprs.ensure(ctx.spark)
     val spark = ctx.spark
-    import spark.implicits._
     // DETERMINISTIC layout before the k-means re-fit: seeded k-means||
     // init is partition-layout-sensitive, and the live index expression's
     // layout depends on its state representation (consolidated cache vs
@@ -680,11 +695,10 @@ class IvfIndexNode(
       .sortWithinPartitions(idCol)
     val (km, rows) = QuantizerFit.sampled(ctx, corpus, idCol, vecCol, nClusters, maxFitRows)
     lastFitRows = rows
-    val cents = km.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.toSeq) }.toSeq
-    val centroids = cents.toDF("__cluster", "__centroid")
+    val cents = Retrieval.centroids(km)
+    val centroids = Retrieval.centroidTable(spark, cents)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val assignments = idxSelect(assign(withVecNorm(corpus, idCol), centroids, cents))
+    val assignments = idxSelect(assign(Retrieval.vecs(corpus, idCol, vecCol, "c"), centroids, cents))
       .persist(StorageLevel.MEMORY_AND_DISK)
     assignments.count() // materialize before releasing the superseded generation
     stores.head.reseed(assignments)
@@ -798,12 +812,7 @@ class QuantizeEmbeddingNode(
   override def jsonKind: Option[String] = Some("quantize_embedding")
   override def jsonParams: Map[String, Any] = Map("vecCol" -> vecCol, "outCol" -> outCol, "scaleCol" -> scaleCol)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    val out = in("df")
-      .withColumn(scaleCol, expr(
-        s"greatest(array_max(transform($vecCol, x -> abs(cast(x as double)))), 1e-30D) / 127.0D"))
-      .withColumn(outCol, expr(
-        s"transform($vecCol, x -> cast(floor(cast(x as double) / $scaleCol + 0.5D) as int))"))
-    Map("result" -> out)
+    Map("result" -> Retrieval.quantize(in("df"), vecCol, outCol, scaleCol))
   }
 }
 
@@ -1003,28 +1012,19 @@ class InvertedIndexTopKNode(
     "queryTextCol" -> queryTextCol, "k" -> k, "maxDfFrac" -> maxDfFrac,
     "corpusSizeHint" -> corpusSizeHint.map(_.asInstanceOf[Any]).orNull)
 
-  private def termFreqs(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id), expr(s"explode(${TextExprs.tokensExpr(text)})").as("tok"))
-      .groupBy(col(id), col("tok")).agg(count(lit(1)).as("tf"))
-
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     // corpus term frequencies feed both the DF pruning and the join
-    val corpusTf = ctx.track(termFreqs(in("corpus"), idCol, textCol))
+    val corpusTf = ctx.track(Retrieval.termFreqs(in("corpus"), idCol, textCol))
     val corpusSize = corpusSizeHint.getOrElse(in("corpus").count())
     val dfCap = math.max(1L, (maxDfFrac * corpusSize).toLong)
     // posting-list length cap: df counts DOCUMENTS (not occurrences)
     val okTerms = corpusTf.groupBy("tok").agg(count(lit(1)).as("df"))
       .filter(col("df") <= dfCap).select("tok")
     val postings = corpusTf.join(okTerms, Seq("tok"))
-    val queryTf = termFreqs(in("queries"), queryIdCol, queryTextCol)
+    val queryTf = Retrieval.termFreqs(in("queries"), queryIdCol, queryTextCol)
       .withColumnRenamed("tf", "qtf")
-    val scored = postings.join(queryTf, Seq("tok"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum(expr("tf * qtf")).as("score"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol))
-    Map("result" -> scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k))
+    val scored = Retrieval.tfScores(postings.join(queryTf, Seq("tok")), queryIdCol, idCol)
+    Map("result" -> Retrieval.rankTopK(scored, queryIdCol, idCol, k))
   }
 }
 
@@ -1102,16 +1102,12 @@ class InvertedIndexNode(
     "scoring" -> scoring, "k1Tenths" -> k1Tenths,
     "bHundredths" -> bHundredths, "scale" -> scale)
 
-  /** (id, tok, tf, __dl) — per-doc length rides each posting row (the
-    * Bm25TopKNode layout) so BM25 length-norm needs no extra join. */
-  private def termFreqs(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(col(id), expr(TextExprs.tokensExpr(text)).as("__toks"))
-      .select(col(id), expr("size(__toks)").as("__dl"), expr("explode(__toks)").as("tok"))
-      .groupBy(col(id), col("tok"))
-      .agg(count(lit(1)).as("tf"), org.apache.spark.sql.functions.max("__dl").as("__dl"))
+  /** Postings (tok, __id, tf, __dl) — per-doc length rides each posting
+    * row (the Bm25TopKNode layout) so BM25 length-norm needs no extra join. */
+  private def postingsOf(df: DataFrame): DataFrame =
+    Retrieval.termFreqs(df, idCol, textCol, docLen = true)
+      .select(col("tok"), col(idCol).as("__id"), col("tf"), col("__dl"))
 
-  /** Exact (docs-with-postings, total token length) of a postings frame —
-    * the BM25 corpus statistics, one skinny rollup. */
   /** Single-row (v1 = doc count, v2 = length sum) rollup of a postings
     * frame — one leg of a wave's fused stats action. */
   private def postStatsAgg(postings: DataFrame): DataFrame =
@@ -1147,8 +1143,7 @@ class InvertedIndexNode(
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
     val corpus = in("corpus")
-    val postings = termFreqs(corpus, idCol, textCol)
-      .select(col("tok"), col(idCol).as("__id"), col("tf"), col("__dl"))
+    val postings = postingsOf(corpus)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val terms = postings.groupBy("tok").agg(count(lit(1)).as("df"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -1196,20 +1191,18 @@ class InvertedIndexNode(
             "t -> struct(t as tok, size(filter(__toks, x -> x = t)) as qtf)))").as("__e"))
         .select(col(queryIdCol), col("__e.tok").as("tok"),
           col("__e.qtf").cast("long").as("qtf"))
-      return Map("result" -> qtf.join(okPostings, Seq("tok"))
-        .groupBy(col(queryIdCol), col("__id"))
-        .agg(sum(expr("tf * qtf")).as("score"))
+      return Map("result" -> Retrieval.tfScores(qtf.join(okPostings, Seq("tok")), queryIdCol, "__id")
         .select(col(queryIdCol), col("__id").as(idCol), col("score")))
     }
-    val queryTf = termFreqs(qin, queryIdCol, queryTextCol)
+    val queryTf = Retrieval.termFreqs(qin, queryIdCol, queryTextCol, docLen = true)
       .withColumnRenamed("tf", "qtf").drop("__dl")
     if (scoring == "bm25") {
-      // Bm25TopKNode's fixed-point formula served from the INCREMENTAL
-      // statistics: n/avgdl come from the exactly-maintained scalars
-      // (docs-with-postings, total length) and fold into the terms frame
-      // and the per-posting saturation expression as integer literals —
-      // identical arithmetic to the one-shot node, so the day-2 index is
-      // bit-identical to a from-scratch BM25 build over the live corpus.
+      // the shared fixed-point BM25 kernel (Retrieval.bm25Scores) served
+      // from the INCREMENTAL statistics: n/avgdl come from the exactly-
+      // maintained scalars (docs-with-postings, total length) and enter the
+      // terms frame and the saturation expression as integer literals, so
+      // the day-2 index is bit-identical to a from-scratch Bm25TopKNode
+      // build over the live corpus.
       if (m.postDocs < 0)
         throw new graft.dag.GraftException(
           s"inverted_index '$name': this index was saved before BM25 " +
@@ -1221,31 +1214,14 @@ class InvertedIndexNode(
       val avgdlc = (100L * m.lenSum) / n
       val dfCapB = math.max(1L, math.floor(maxDfFrac * n).toLong)
       val termsB = m.terms.filter(col("df") <= dfCapB)
-        .select(col("tok"), expr(s"(${n}L * ${scale}L) div df").as("__idf"))
-      val scoredB = m.postings
-        .join(broadcast(termsB), Seq("tok"))
-        .join(broadcast(queryTf), Seq("tok"))
-        .withColumn("__tfsat", expr(
-          s"cast((cast(tf as decimal(38,0)) * ${(k1Tenths + 10) * 100}L * ${avgdlc}L * ${scale}L) div " +
-            s"(1000L * tf * ${avgdlc}L + ${k1Tenths.toLong * (100 - bHundredths)}L * ${avgdlc}L + " +
-            s"${100L * k1Tenths * bHundredths}L * __dl) as bigint)"))
-        .withColumn("__contrib", expr(
-          s"cast((cast(__idf as decimal(38,0)) * __tfsat) div ${scale}L as bigint)"))
-        .groupBy(col(queryIdCol), col("__id"))
-        .agg(sum(expr("qtf * __contrib")).as("score"))
-      val wB = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col("__id"))
-      return Map("result" -> scoredB
-        .withColumn("rank", row_number().over(wB))
-        .filter(col("rank") <= k)
+        .select(col("tok"), Retrieval.bm25Idf(s"${n}L", "df", scale))
+      val scoredB = Retrieval.bm25Scores(m.postings, termsB, queryTf, s"${avgdlc}L",
+        k1Tenths, bHundredths, scale, queryIdCol, "__id")
+      return Map("result" -> Retrieval.rankTopK(scoredB, queryIdCol, "__id", k)
         .select(col(queryIdCol), col("__id").as(idCol), col("score"), col("rank")))
     }
-    val scored = okPostings.join(queryTf, Seq("tok"))
-      .groupBy(col(queryIdCol), col("__id"))
-      .agg(sum(expr("tf * qtf")).as("score"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col("__id"))
-    Map("result" -> scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val scored = Retrieval.tfScores(okPostings.join(queryTf, Seq("tok")), queryIdCol, "__id")
+    Map("result" -> Retrieval.rankTopK(scored, queryIdCol, "__id", k)
       .select(col(queryIdCol), col("__id").as(idCol), col("score"), col("rank")))
   }
 
@@ -1257,8 +1233,7 @@ class InvertedIndexNode(
     val Seq(ps, ds) = stores
     // O(delta) state writes: the batch's postings and doc ids land once as
     // parquet segments (cached, columnar) — no corpus-sized union copy
-    val postSeg = ps.appendSegment(termFreqs(delta, idCol, textCol)
-      .select(col("tok"), col(idCol).as("__id"), col("tf"), col("__dl")))
+    val postSeg = ps.appendSegment(postingsOf(delta))
     val docSeg = ds.appendSegment(delta.select(col(idCol).as("__id")))
     // union + re-aggregate, not a full-outer merge join: one exchange
     // over the vocab-sized sides instead of two plus a join
@@ -1447,9 +1422,7 @@ class Bm25TopKNode(
     val maxDfFrac: Double = 0.5,
     val k1Tenths: Int = 12,
     val bHundredths: Int = 75,
-    val scale: Long = 1000000L,
-    val broadcastTerms: Boolean = true,
-    val broadcastQueries: Boolean = true)
+    val scale: Long = 1000000L)
   extends Node {
   require(k > 0, "k must be positive")
   require(maxDfFrac > 0 && maxDfFrac <= 1, "maxDfFrac must be in (0, 1]")
@@ -1463,27 +1436,20 @@ class Bm25TopKNode(
   override def jsonParams: Map[String, Any] = Map(
     "idCol" -> idCol, "textCol" -> textCol, "queryIdCol" -> queryIdCol,
     "queryTextCol" -> queryTextCol, "k" -> k, "maxDfFrac" -> maxDfFrac,
-    "k1Tenths" -> k1Tenths, "bHundredths" -> bHundredths, "scale" -> scale,
-    "broadcastTerms" -> broadcastTerms, "broadcastQueries" -> broadcastQueries)
+    "k1Tenths" -> k1Tenths, "bHundredths" -> bHundredths, "scale" -> scale)
 
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    val toks = TextExprs.tokensExpr(textCol)
     // The ONLY cached/shuffled corpus artifact is the posting frame
     // (id, tok, tf, dl) — corpus stats and term weights derive from it.
     // Two plan hazards measured and designed out at sf0.1 (19 s -> ~q98
     // parity): (a) a 1-row stats nested-loop join over every posting — idf
     // and avgdlc are folded into the vocabulary-sized terms frame instead;
     // (b) Catalyst electing to broadcast the POSTING side of the terms
-    // join (misestimated cached-frame stats) — broadcastTerms/
-    // broadcastQueries pin the small build sides (disable for web-scale
-    // vocabularies / huge query batches and let AQE shuffle them).
-    val ctf = ctx.track(in("corpus")
-      .select(col(idCol), expr(toks).as("__toks"))
-      .select(col(idCol), expr("size(__toks)").as("__dl"),
-        expr("explode(__toks)").as("tok"))
-      .groupBy(col(idCol), col("tok"))
-      .agg(count(lit(1)).as("tf"),
-        org.apache.spark.sql.functions.max("__dl").as("__dl")))
+    // join (misestimated cached-frame stats) — the shared scoring kernel
+    // (Retrieval.bm25Scores, as in InvertedIndexNode's bm25 serving)
+    // always pins the terms and the query term frequencies as the
+    // broadcast build sides.
+    val ctf = ctx.track(Retrieval.termFreqs(in("corpus"), idCol, textCol, docLen = true))
     // 1-row corpus stats from a per-doc rollup of the cached postings — an
     // AGGREGATION (fine at any scale), never a broadcastable frame
     val stats = ctf.groupBy(idCol).agg(
@@ -1495,34 +1461,12 @@ class Bm25TopKNode(
     val terms = ctf.groupBy("tok").agg(count(lit(1)).as("__df"))
       .crossJoin(broadcast(stats))
       .filter(expr(s"__df <= greatest(1L, cast(floor($maxDfFrac * __n) as bigint))"))
-      .select(col("tok"),
-        expr(s"(__n * ${scale}L) div __df").as("__idf"),
-        col("__avgdlc"))
-    val qtoks = TextExprs.tokensExpr(queryTextCol)
-    val qtf = in("queries")
-      .select(col(queryIdCol), expr(s"explode($qtoks)").as("tok"))
-      .groupBy(col(queryIdCol), col("tok"))
-      .agg(count(lit(1)).as("qtf"))
-    val k1T = k1Tenths; val bH = bHundredths
-    def pin(df: DataFrame, b: Boolean) = if (b) broadcast(df) else df
-    val scored = ctf
-      .join(pin(terms, broadcastTerms), Seq("tok"))
-      .join(pin(qtf, broadcastQueries), Seq("tok"))
-      // numerator in decimal(38,0): tf·2200·avgdlC·S wraps int64 once
-      // tf·avgdl exceeds ~4.2e7 (a long repetitive web doc) — the same
-      // 128-bit path the __contrib product already uses; the quotient is
-      // <= (k1T+10)·100·S/1000, far inside int64 (ADVICE r5)
-      .withColumn("__tfsat", expr(
-        s"cast((cast(tf as decimal(38,0)) * ${(k1T + 10) * 100}L * __avgdlc * ${scale}L) div " +
-          s"(1000L * tf * __avgdlc + ${k1T * (100 - bH)}L * __avgdlc + ${100 * k1T * bH}L * __dl) as bigint)"))
-      .withColumn("__contrib", expr(
-        s"cast((cast(__idf as decimal(38,0)) * __tfsat) div ${scale}L as bigint)"))
-      .groupBy(col(queryIdCol), col(idCol))
-      .agg(sum(expr("qtf * __contrib")).as("score"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol))
-    Map("result" -> scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k))
+      .select(col("tok"), Retrieval.bm25Idf("__n", "__df", scale), col("__avgdlc"))
+    val qtf = Retrieval.termFreqs(in("queries"), queryIdCol, queryTextCol)
+      .withColumnRenamed("tf", "qtf")
+    val scored = Retrieval.bm25Scores(ctf, terms, qtf, "__avgdlc",
+      k1Tenths, bHundredths, scale, queryIdCol, idCol)
+    Map("result" -> Retrieval.rankTopK(scored, queryIdCol, idCol, k))
   }
 }
 

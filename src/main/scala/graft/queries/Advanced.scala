@@ -1753,8 +1753,7 @@ object Advanced {
   // reader sees the refreshed data. Any partial-read leak (reader touching
   // the uncommitted generation) changes counts and breaks the hash. ----
   def q146_atomic_publish(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_q146_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q146_")
     val pub = s"$work/nation_pub"
     def publishRun(filter: String): Unit = { Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "nation")) >> FilterNode(filter) >>
@@ -1804,8 +1803,7 @@ object Advanced {
     val ctx = Ctx(spark)
     val idx = new InvertedIndexNode(k = 5, maxDfFrac = 0.79)
     idx.fit(ctx, In.single("corpus" -> docs.filter("doc_id % 5 != 0")))
-    val stage = java.nio.file.Files.createTempDirectory("graft_q147_")
-    stage.toFile.deleteOnExit()
+    val stage = WorkDir("graft_q147_")
     docs.filter("doc_id % 5 = 0").repartition(4)
       .write.mode("overwrite").parquet(s"$stage/delta")
     val deltaStream = Queries.run(spark) { d =>
@@ -1836,8 +1834,7 @@ object Advanced {
     val idx = new IvfIndexNode(k = 10, nClusters = 8, nProbe = 8,
       maxLiteralCentroids = 0)
     idx.fit(ctx, In.single("corpus" -> emb.filter("vec_id % 5 != 0")))
-    val stage = java.nio.file.Files.createTempDirectory("graft_q148_")
-    stage.toFile.deleteOnExit()
+    val stage = WorkDir("graft_q148_")
     emb.filter("vec_id % 5 = 0").repartition(3)
       .write.mode("overwrite").parquet(s"$stage/delta")
     val deltaStream = Queries.run(spark) { d =>
@@ -1867,7 +1864,7 @@ object Advanced {
     val docs = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >> d.output("result")
     }
-    val root = java.nio.file.Files.createTempDirectory("graft_q149_").toString + "/docs"
+    val root = WorkDir("graft_q149_").toString + "/docs"
     docs.filter("doc_id % 3 = 0").repartition(32)
       .write.mode("overwrite").parquet(root)
     Queries.run(spark) { d =>
@@ -1945,8 +1942,7 @@ object Advanced {
         new ProjectNode(cols) >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q151_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q151_")
     val root = s"$work/orders_pub"
     Queries.run(spark) { d => // generation 1: the base goes live atomically
       d.add(SourceNode.table(dir, "orders")) >> new ProjectNode(cols) >>
@@ -2006,8 +2002,7 @@ object Advanced {
       maxLiteralCentroids = 0)
     idx.fit(ctx, In.single("corpus" -> emb.filter("vec_id % 5 != 0")))
     idx.updateIndex(ctx, emb.filter("vec_id % 5 = 0"))
-    val work = java.nio.file.Files.createTempDirectory("graft_q152_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q152_")
     emb.filter("vec_id % 5 = 0")
       .selectExpr("vec_id as query_id", "embedding").repartition(2)
       .write.mode("overwrite").parquet(s"$work/queries")
@@ -2034,8 +2029,7 @@ object Advanced {
   // read returning the old gen, or the pinned read following the manifest)
   // swaps the two row sets and breaks the hash. ----
   def q153_time_travel(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_q153_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q153_")
     val pub = s"$work/nation_pub"
     def publishRun(filter: String): Unit = { Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "nation")) >> FilterNode(filter) >>
@@ -2086,8 +2080,7 @@ object Advanced {
         .select(expr("doc_id + 3000000").as("doc_id"), c("text")))
     val m1 = idx.transform(ctx, In.single("delta" -> gen1))("result")
       .select("delta_id", "base_id")
-    val stage = java.nio.file.Files.createTempDirectory("graft_q154_")
-    stage.toFile.deleteOnExit()
+    val stage = WorkDir("graft_q154_")
     gen1.repartition(2).write.mode("overwrite").parquet(s"$stage/gen1")
     val stream = Queries.run(spark) { d =>
       d.add(new StreamSourceNode(s"$stage/gen1", "parquet",
@@ -2111,8 +2104,7 @@ object Advanced {
   // replayed exactly by DuckDB. A missing/unmerged profile or a reader leak
   // into data files breaks counts or the boolean. ----
   def q155_publish_profiles(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_q155_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q155_")
     val pub = s"$work/docs_pub"
     def publishRun(filter: String): Unit = { Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >> FilterNode(filter) >>
@@ -2210,8 +2202,7 @@ object Advanced {
     val ctx = Ctx(spark)
     val idx = new ClusterIndexNode()
     idx.fit(ctx, In.single("pairs" -> edges.filter("id_a % 5 != 0 and id_b % 5 != 0")))
-    val stage = java.nio.file.Files.createTempDirectory("graft_q157_")
-    stage.toFile.deleteOnExit()
+    val stage = WorkDir("graft_q157_")
     edges.filter("id_a % 5 = 0 or id_b % 5 = 0").repartition(2)
       .write.mode("overwrite").parquet(s"$stage/delta")
     val stream = Queries.run(spark) { d =>
@@ -2504,8 +2495,7 @@ object Advanced {
         .selectExpr("doc_id", "text", "false as is_delete"))
       .union(docs.filter("doc_id % 7 = 0")
         .selectExpr("doc_id", "'' as text", "true as is_delete"))
-    val stage = java.nio.file.Files.createTempDirectory("graft_q164_")
-    stage.toFile.deleteOnExit()
+    val stage = WorkDir("graft_q164_")
     cdc.coalesce(1).write.mode("overwrite").parquet(s"$stage/cdc")
     val stream = Queries.run(spark) { d =>
       d.add(new StreamSourceNode(s"$stage/cdc", "parquet")) >> d.output("result")
@@ -2529,8 +2519,7 @@ object Advanced {
   // (integer bucket merge over a partition of the corpus), without ever
   // re-reading the data. ----
   def q166_publish_numeric_profiles(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_q166_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q166_")
     val pub = s"$work/docs_pub"
     def publishRun(filter: String): Unit = { Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >> FilterNode(filter) >>
@@ -2675,8 +2664,7 @@ object Advanced {
         ProjectNode("doc_id", "text") >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q168_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q168_")
     val root = s"$work/corpus_pub"
     // publish the base corpus as generation 1
     Queries.run(spark) { d =>
@@ -2741,8 +2729,7 @@ object Advanced {
   // documents table. ----
   def q169_cdc_drift_gate(spark: SparkSession, dir: String): DataFrame = {
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q169_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q169_")
     val root = s"$work/corpus_pub"
     val spec = Seq(q159Spec) // n_chars on the shared [0, 640) x 64 grid
     // generation 1: the full corpus, profiled at publish
@@ -2874,8 +2861,7 @@ object Advanced {
         new ProjectNode(cols) >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q173_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q173_")
     val root = s"$work/orders_pub"
     Queries.run(spark) { d => // generation 1: the base goes live atomically
       d.add(SourceNode.table(dir, "orders")) >> new ProjectNode(cols) >>
@@ -2921,8 +2907,7 @@ object Advanced {
   // NodesSpec separately pins that pruning actually skips files. ----
   def q174_stats_pruned_scan(spark: SparkSession, dir: String): DataFrame = {
     val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority")
-    val work = java.nio.file.Files.createTempDirectory("graft_q174_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q174_")
     val root = s"$work/orders_pub"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >> new ProjectNode(cols) >>
@@ -2959,8 +2944,7 @@ object Advanced {
         ProjectNode("doc_id", "text") >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q175_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q175_")
     val root = s"$work/corpus_pub"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >>
@@ -3020,8 +3004,7 @@ object Advanced {
   // NodesSpec pin asserts base files are actually skipped under
   // outstanding overlays. ----
   def q185_mor_stats_pruned(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_q185_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q185_")
     val root = s"$work/orders_mor"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >>
@@ -3083,8 +3066,7 @@ object Advanced {
   // on a range layout. ----
   def q186_bloom_point_lookup(spark: SparkSession, dir: String): DataFrame = {
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q186_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q186_")
     val root = s"$work/docs_pub"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >>
@@ -3128,8 +3110,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "documents")) >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q187_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q187_")
     val root = s"$work/docs_mor"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >>
@@ -3177,8 +3158,7 @@ object Advanced {
   // truncates in Spark), keeping selectivity stable across scale factors.
   // NodesSpec pins the actual file-skipping payoff on a 16x16x16 grid. ----
   def q188_zorder3_box(spark: SparkSession, dir: String): DataFrame = {
-    val work = java.nio.file.Files.createTempDirectory("graft_q188_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q188_")
     val root = s"$work/lineitem_z3"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "lineitem")) >>
@@ -3239,8 +3219,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "documents")) >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q189_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q189_")
     val root = s"$work/docs_mor"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >>
@@ -3288,8 +3267,7 @@ object Advanced {
   // upsert that lost a base field would all change the hash. ----
   def q190_mor_schema_evolution(spark: SparkSession, dir: String): DataFrame = {
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q190_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q190_")
     val root = s"$work/orders_mor"
     val orders = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >> d.output("result")
@@ -3373,8 +3351,7 @@ object Advanced {
   // floor-then-cast arithmetic for Spark/DuckDB parity. ----
   def q191_compaction_keeps_skipping(spark: SparkSession, dir: String): DataFrame = {
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q191_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q191_")
     val root = s"$work/orders_mor"
     val orders = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >> d.output("result")
@@ -3453,8 +3430,7 @@ object Advanced {
   // vice versa) changes the hash. ----
   def q192_mor_time_travel(spark: SparkSession, dir: String): DataFrame = {
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q192_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q192_")
     val root = s"$work/orders_mor"
     val orders = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >> d.output("result")
@@ -3832,8 +3808,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "customer")) >>
         ProjectNode("c_custkey", "c_name", "c_nationkey") >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q205_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q205_")
     val fRoot = s"$work/facts_mor"; val dRoot = s"$work/dims_mor"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >>
@@ -3926,8 +3901,7 @@ object Advanced {
     val docs = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q206_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q206_")
     val waves = docs.select("doc_id", "source", "lang")
     waves.filter("doc_id % 3 = 1").coalesce(1)
       .write.parquet(s"$work/feed/wave-1")
@@ -4001,8 +3975,7 @@ object Advanced {
     idx.fit(ctx, In.single("corpus" -> docs.filter("doc_id % 5 != 0")))
     idx.updateIndex(ctx, docs.filter("doc_id % 5 = 0"))
     idx.deleteFromIndex(ctx, docs.filter("doc_id % 7 = 0").select("doc_id"))
-    val work = java.nio.file.Files.createTempDirectory("graft_q208_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q208_")
     val keys = docs.select("source").distinct()
     keys.filter("cast(substr(source, 4) as int) % 2 = 0")
       .coalesce(1).write.parquet(s"$work/probes/wave-1")
@@ -4079,8 +4052,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "customer")) >>
         ProjectNode("c_custkey", "c_name", "c_nationkey") >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q198_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q198_")
     val root = s"$work/facts_mor"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >>
@@ -4153,8 +4125,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "customer")) >>
         ProjectNode("c_custkey", "c_mktsegment", "c_nationkey") >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q209_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q209_")
     val root = s"$work/facts_mor"
     new SinkNode(root, atomicPublish = true).transform(ctx,
       In.single("df" -> facts.filter("o_orderkey % 5 != 0")))
@@ -4412,8 +4383,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "customer")) >>
         ProjectNode("c_custkey", "c_mktsegment", "c_nationkey") >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q213_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q213_")
     val factsRoot = s"$work/facts_mor"
     val viewRoot = s"$work/view_mor"
     new SinkNode(factsRoot, atomicPublish = true).transform(ctx,
@@ -4495,8 +4465,7 @@ object Advanced {
       d.add(SourceNode.table(dir, "customer")) >>
         ProjectNode("c_custkey", "c_mktsegment", "c_nationkey") >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q215_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q215_")
     val factsRoot = s"$work/facts_mor"
     val viewRoot = s"$work/view_mor"
     new SinkNode(factsRoot, atomicPublish = true).transform(ctx,
@@ -4634,8 +4603,7 @@ object Advanced {
     val docs = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >> d.output("result")
     }
-    val work = java.nio.file.Files.createTempDirectory("graft_q194_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q194_")
     val root = s"$work/docs_mor"
     Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "documents")) >>
@@ -4680,8 +4648,7 @@ object Advanced {
   // hash. ----
   def q176_vacuum(spark: SparkSession, dir: String): DataFrame = {
     val ctx = Ctx(spark)
-    val work = java.nio.file.Files.createTempDirectory("graft_q176_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q176_")
     val root = s"$work/orders_pub"
     def publishOnce(): Unit = Queries.run(spark) { d =>
       d.add(SourceNode.table(dir, "orders")) >>
@@ -4806,8 +4773,7 @@ object Advanced {
     idx.fit(ctx, In.single("corpus" -> hashed.filter("doc_id % 5 != 0")))
     // CDC wave: the day-2 delta as upserts, the takedown as tombstones,
     // staged as two files = two micro-batches
-    val work = java.nio.file.Files.createTempDirectory("graft_q179_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q179_")
     val upserts = hashed.filter("doc_id % 5 = 0")
       .selectExpr("doc_id", "dhash", "false as is_delete")
     val deletes = hashed.filter("doc_id % 7 = 0")
@@ -4933,8 +4899,7 @@ object Advanced {
     val idx = new DHashIndexNode(maxHamming = 3)
     idx.fit(ctx, In.single("corpus" -> hashed.filter("doc_id % 5 != 0")))
     idx.updateIndex(ctx, hashed.filter("doc_id % 5 = 0"))
-    val work = java.nio.file.Files.createTempDirectory("graft_q183_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q183_")
     q178Probes(spark).select("doc_id", "dhash").repartition(2)
       .write.mode("overwrite").parquet(s"$work/probes")
     val stream = Queries.run(spark) { d =>

@@ -458,8 +458,7 @@ object Extra {
   def q69_stream_restart(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.{Files, StandardCopyOption}
     import org.apache.spark.sql.functions.expr
-    val work = Files.createTempDirectory("graft_q69_")
-    work.toFile.deleteOnExit()
+    val work = WorkDir("graft_q69_")
     val inDir = Files.createDirectory(work.resolve("in"))
     val outDir = work.resolve("out").toString
     val ckpt = work.resolve("ckpt").toString

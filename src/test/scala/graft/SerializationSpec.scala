@@ -624,6 +624,22 @@ class SerializationSpec extends AnyFunSuite {
       ge2.outCol == "decay")
   }
 
+  test("bm25_topk JSON that still carries broadcastTerms/broadcastQueries loads; " +
+       "the two keys are ignored") {
+    val d = new Dag("bm25legacy")
+    val bm = d.add(new Bm25TopKNode("did", "body", "qid", "qbody", 7, 0.33, 15, 50, 2000000L))
+    val json = DagJson.toJson(d)
+    val legacy = json.replace("\"scale\":2000000",
+      "\"scale\":2000000,\"broadcastTerms\":false,\"broadcastQueries\":false")
+    assert(legacy != json)
+    val bm2 = DagJson.fromJson(legacy).node(bm.name).asInstanceOf[Bm25TopKNode]
+    assert(bm2.idCol == "did" && bm2.textCol == "body" && bm2.queryIdCol == "qid" &&
+      bm2.queryTextCol == "qbody" && bm2.k == 7 && bm2.maxDfFrac == 0.33 &&
+      bm2.k1Tenths == 15 && bm2.bHundredths == 50 && bm2.scale == 2000000L)
+    assert(!bm2.jsonParams.contains("broadcastTerms") && !bm2.jsonParams.contains("broadcastQueries"))
+    assert(DagJson.toJson(DagJson.fromJson(legacy)) == json)
+  }
+
   test("nested dag JSON round-trip (reference MLDagNode through to_dict)") {
     nodes.NodeRegistry.ensure
     val inner = new Dag("cleaner")
