@@ -127,15 +127,15 @@ object MinHashDedupNode {
   * is tiny in practice (boilerplate families), so this converges in a
   * handful of rounds.
   *
-  * Cost shape per round = ONE materializing action (the eager
-  * localCheckpoint, which also truncates lineage — otherwise the plan
-  * doubles every iteration). Convergence detection rides inside the
-  * checkpointed frame as a `__changed` flag, so the follow-up count() only
-  * reads already-cached blocks instead of re-running a join (the per-round
-  * compare-join was the dominant cost at local[32]). Edges are hash-
-  * partitioned on the join key `b` ONCE and persisted, so every round's
-  * propagate-join reuses that layout and only the (small) labels side
-  * shuffles.
+  * Cost shape per round = ONE materializing job: the round's labels are
+  * cut by a LAZY localCheckpoint (lineage truncation — otherwise the plan
+  * doubles every iteration) that the round's convergence count() stores.
+  * Convergence rides inside the cut frame as a `__changed` flag, so that
+  * count needs no compare-join (the per-round compare-join was the
+  * dominant cost at local[32]); under AQE the cut call itself runs the
+  * round's shuffle-map stages. Edges are hash-partitioned on the join key
+  * `b` ONCE and persisted, so every round's propagate-join reuses that
+  * layout and only the (small) labels side shuffles.
   */
 class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIter: Int = 15,
                               halving: Boolean = false, failOnNonConverged: Boolean = true,
@@ -160,12 +160,12 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
     "halving" -> halving, "failOnNonConverged" -> failOnNonConverged,
     "reliableCheckpoint" -> reliableCheckpoint, "hopsPerRound" -> hopsPerRound)
 
-  /** Per-round lineage cut. `localCheckpoint` (default) stores blocks on
-    * executors — fast, but a lost executor loses them and the truncated
-    * lineage cannot recompute; on preemptible 100 TB clusters set
-    * `reliableCheckpoint = true` to write rounds to the SparkContext
-    * checkpoint dir (durable shared storage) so a mid-iteration executor
-    * death replays from the checkpoint instead of killing the job.
+  /** Per-round lineage cut. The lazy `localCheckpoint` (default; stored by
+    * the round's count) keeps blocks on executors — fast, but a lost
+    * executor loses them and the truncated lineage cannot recompute; on
+    * preemptible 100 TB clusters set `reliableCheckpoint = true` to write
+    * rounds to the SparkContext checkpoint dir (durable shared storage) so
+    * a mid-iteration executor death replays from the checkpoint instead.
     */
   private def cut(df: DataFrame): DataFrame =
     if (reliableCheckpoint) {
@@ -188,7 +188,7 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
       // rounds accumulate one skinny labels copy each under the checkpoint
       // dir (bounded by maxIter); clean the dir between jobs if that matters
       df.checkpoint()
-    } else df.localCheckpoint()
+    } else IvmUtil.barrier(df)
 
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     import org.apache.spark.sql.functions.{coalesce, least, min}
@@ -243,7 +243,7 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
           .join(labels.select(col("id"), col("label").as("__old")), Seq("id"))
           .select(col("id"), col("label"), (col("label") < col("__old")).as("__changed"))
       }).transform(cut)
-      val changes = updated.filter(col("__changed")).count() // cached-read only
+      val changes = updated.filter(col("__changed")).count() // materializes the cut
       labels = updated.drop("__changed")
       converged = changes == 0
       iter += 1
@@ -269,17 +269,20 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
   *     the model is the persisted BASE mapping (id, cluster_id), laid out
   *     once, hash-partitioned on id;
   *   - updateIndex(delta pairs): map each delta endpoint to its current
-  *     representative (keyed lookup joins — the base never shuffles), run
-  *     CC over the CONTRACTED delta graph only (delta-sized — base
-  *     components appear as single rep nodes), then COMPOSE the resulting
-  *     rep-remap into a broadcast-sized OVERLAY applied lazily at every
-  *     read — per-batch work is delta-sized, the corpus-sized base is
-  *     never rewritten (the overlay folds into the base only at
-  *     `foldOverlay`, triggered by `maxOverlayRows`, or `compactIndex`);
+  *     representative (keyed lookup joins — the base never shuffles), label
+  *     the CONTRACTED delta graph (delta-sized: base components are single
+  *     rep nodes) by a one-task union-find, then COMPOSE the rep-remap into
+  *     a broadcast-sized OVERLAY applied lazily at every read — the corpus-
+  *     sized base is never rewritten (the overlay folds into the base only
+  *     at `foldOverlay`, triggered by `maxOverlayRows`, or `compactIndex`);
   *   - deleteFromIndex(ids): tombstone overlay masking base rows (same
   *     lazy-read pattern; historical labels retained — see method doc);
   *   - transform(queries): left join ids to clusters; unpaired ids are
   *     their own singleton cluster.
+  *
+  * Each overlay generation is a lineage barrier (one plan leaf), so a wave
+  * costs a constant plan and a handful of jobs (a persisted frame keeps its
+  * whole logical plan, so persisted overlays would nest their predecessors).
   *
   * Label contract: representatives are component-MIN ids at every step,
   * and min(min(A), min(B)) = min(A ∪ B), so the incremental labels equal
@@ -309,10 +312,6 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     "compactEvery" -> compactEvery, "compactPath" -> compactPath.orNull,
     "maxOverlayRows" -> maxOverlayRows)
 
-  private def cc(ctx: Ctx, pairs: DataFrame): DataFrame =
-    new ConnectedComponentsNode(idA, idB, maxIter = maxIter)
-      .transform(ctx, graft.dag.In.single("pairs" -> pairs))("result")
-
   /** Persist the base mapping HASH-PARTITIONED on id: InMemoryRelation
     * preserves the child's outputPartitioning, so every subsequent delta-
     * contraction join and query lookup on `id` shuffles only its delta/
@@ -325,17 +324,6 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     laid.count()
     laid
   }
-
-  private def persistSmall(df: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    df.persist(StorageLevel.MEMORY_AND_DISK)
-  }
-
-  // typed empty overlays derived from the base frame (ids may be any type)
-  private def emptyFresh(base: DataFrame) = base.select("id", "cluster_id").limit(0)
-  private def emptyRemap(base: DataFrame) =
-    base.select(col("cluster_id").as("__rep"), col("cluster_id").as("__new")).limit(0)
-  private def emptyTomb(base: DataFrame) = base.select("id").limit(0)
 
   /** Base rows with the tombstone mask and the rep-remap applied — the
     * lazily-rebased view every read path uses. The base side keeps its
@@ -360,14 +348,22 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
   private def effectiveMapping(m: Model): DataFrame =
     baseEffective(m).union(m.fresh.select("id", "cluster_id"))
 
-  /** A model whose overlays are empty: all state in the laid-out base. */
+  /** A model whose overlays are empty: all state in the laid-out base. The
+    * empties are typed from the base and are plan leaves, like every later
+    * overlay, so the served plan keeps one size; the optimizer prunes them. */
   private def baseOnly(base: DataFrame): Model = {
     tombstoneRows = 0L; remapRows = 0L
-    ClusterIndexNode.Index(base, emptyFresh(base), emptyRemap(base), emptyTomb(base))
+    def empty(cols: org.apache.spark.sql.Column*) = base.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), base.select(cols: _*).schema)
+    ClusterIndexNode.Index(base, empty(col("id"), col("cluster_id")),
+      empty(col("cluster_id").as("__rep"), col("cluster_id").as("__new")), empty(col("id")))
   }
 
-  def fitModel(ctx: Ctx, in: In): Model =
-    baseOnly(persistMapping(cc(ctx, in("pairs")).select(col("id"), col("cluster_id"))))
+  def fitModel(ctx: Ctx, in: In): Model = {
+    val cc = new ConnectedComponentsNode(idA, idB, maxIter = maxIter)
+      .transform(ctx, graft.dag.In.single("pairs" -> in("pairs")))("result")
+    baseOnly(persistMapping(cc.select(col("id"), col("cluster_id"))))
+  }
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     val q = in("queries")
@@ -385,15 +381,23 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
 
   /** Fold a delta edge batch in with DELTA-SIZED work only: contract the
     * delta endpoints through the effective mapping (keyed lookups — the
-    * base never shuffles), run CC over the contracted delta graph, then
-    * COMPOSE the resulting rep-remap into the broadcast overlay instead of
+    * base never shuffles), label the contracted delta graph, then COMPOSE
+    * the resulting rep-remap into the broadcast overlay instead of
     * rewriting the corpus-sized mapping (the pre-overlay design paid a full
     * O(corpus) repartition+persist per batch — fatal for per-micro-batch
     * streamed maintenance at 100 TB). The base mapping is touched only by
     * `foldOverlay`/`compactIndex`.
     *
+    * Labels come from one min-label union-find in ONE task
+    * (`componentsInOneTask`), not CC rounds of tiny jobs. Its memory bound
+    * (the contracted delta's labels in one JVM) is the one the `remapDelta`
+    * broadcast below already sets; an oversized delta fails the wave before
+    * the model swap, leaving the index unchanged. Barriered overlays live on
+    * executor blocks, as the CC labels they were built on did; the durable
+    * root stays `compactPath`/`saveFitted`.
+    *
     * Overlay-composition correctness: base rows carry their FIT-time labels
-    * forever; `remap` maps fit labels to current labels. A batch's CC remap
+    * forever; `remap` maps fit labels to current labels. A batch's remap
     * is keyed on CURRENT labels, so the new overlay is (a) every existing
     * entry with its value pushed through the batch remap, plus (b) the
     * batch remap's own non-identity entries — (b) keys are current labels,
@@ -406,7 +410,6 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     * (it is a lookup miss, hence treated as new); pair producers should
     * filter delta edges against the deletion set if that is not intended. */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
-    import org.apache.spark.storage.StorageLevel
     val m = fitted
     val d = delta.select(col(idA).as("__a"), col(idB).as("__b"))
     val baseEff = baseEffective(m)
@@ -422,23 +425,16 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
       .join(m.fresh.select(col("id").as("__b"), col("cluster_id").as("__fb")),
         Seq("__b"), "left")
       .select(
-        coalesce(col("__ba"), col("__fa"), col("__a")).as(idA),
-        coalesce(col("__bb"), col("__fb"), col("__b")).as(idB),
+        coalesce(col("__ba"), col("__fa"), col("__a")).as("__ra"),
+        coalesce(col("__bb"), col("__fb"), col("__b")).as("__rb"),
         (col("__ba").isNull && col("__fa").isNull).as("__newA"),
         (col("__bb").isNull && col("__fb").isNull).as("__newB"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // NO eager count here: the CC below materializes `contracted` on its
-    // first round anyway — an extra per-batch driver action was a third of
-    // q157's 2.5x driver regression (VERDICT r12 wrong #2)
-    // delta-sized CC over the contracted graph (reps + new ids only)
-    val remapFull = cc(ctx, contracted.select(col(idA), col(idB)))
-      .select(col("id"), col("cluster_id"))
-    val newIds = contracted.filter(col("__newA")).select(col(idA).as("id"))
-      .union(contracted.filter(col("__newB")).select(col(idB).as("id")))
-      .distinct()
+    // (id, cluster_id, __isNew) over the contracted graph (reps + new ids);
+    // barriered: the three consumers below share one union-find run
+    val remapFull = IvmUtil.barrier(ClusterIndexNode.componentsInOneTask(contracted))
     // labels for this batch's new members (identity rows included — the
     // mapping stores every known id, matching the pre-overlay contents)
-    val freshNew = newIds.join(remapFull, Seq("id"))
+    val freshNew = remapFull.filter(col("__isNew")).select(col("id"), col("cluster_id"))
     val remapDelta = remapFull.filter(col("id") =!= col("cluster_id"))
       .select(col("id").as("__rep"), col("cluster_id").as("__new"))
     // (a) push existing overlay values through the batch remap
@@ -447,27 +443,21 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
         col("__new") === col("__k"), "left")
       .select(col("__rep"), coalesce(col("__v"), col("__new")).as("__new"))
     // (b) the batch remap itself (disjoint keys — doc above)
-    val newRemap = persistSmall(composed.union(remapDelta))
+    val newRemap = IvmUtil.barrier(composed.union(remapDelta))
     // rebase accumulated fresh rows (delta-volume-sized) + append new ones
-    val newFresh = persistSmall(m.fresh
+    val newFresh = IvmUtil.barrier(m.fresh
       .join(broadcast(remapDelta), col("cluster_id") === col("__rep"), "left")
       .select(col("id"), coalesce(col("__new"), col("cluster_id")).as("cluster_id"))
-      .union(freshNew.select(col("id"), col("cluster_id"))))
-    // ONE action sizes and materializes both overlay persists: counting the
-    // union scans each persisted child exactly once (two separate counts =
-    // two driver-side jobs per micro-batch — half of q157's regression);
-    // the tagged sum splits out the remap's own count for the broadcast gate
-    val sized = newRemap.select(lit(1L).as("__t"))
-      .union(newFresh.select(lit(0L).as("__t")))
-      .agg(org.apache.spark.sql.functions.sum(col("__t")),
-        org.apache.spark.sql.functions.count(lit(1))).collect().head
-    remapRows = Option(sized.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val overlayRows = sized.getLong(1)
+      .union(freshNew))
+    // ONE action materializes the three barriers and sizes both overlays
+    // (the remap's count feeds the broadcast gate)
+    val Seq(remapN, freshN, _) =
+      IvmUtil.materializeAllCounts(Seq(newRemap, newFresh, remapFull))
+    remapRows = remapN
     model = Some(ClusterIndexNode.Index(m.base, newFresh, newRemap, m.tombstones))
-    m.fresh.unpersist(); m.remap.unpersist(); contracted.unpersist()
     // the overlay must stay broadcast-sized: amortize a corpus relayout
     // over many batches once the accumulated overlay crosses the bound
-    if (overlayRows + tombstoneRows > maxOverlayRows) foldOverlay()
+    if (remapN + freshN + tombstoneRows > maxOverlayRows) foldOverlay()
     endWave()
   }
 
@@ -487,18 +477,13 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit = {
     val m = fitted
     val del = deletes.select(col(deletes.columns.head).as("id")).distinct()
-    val newTomb = persistSmall(m.tombstones.union(del).distinct())
-    val newFresh = persistSmall(m.fresh.join(del, Seq("id"), "left_anti"))
-    // one action materializes + sizes both persists (the updateIndex shape)
-    val sized = newTomb.select(lit(1L).as("__t"))
-      .union(newFresh.select(lit(0L).as("__t")))
-      .agg(org.apache.spark.sql.functions.sum(col("__t")),
-        org.apache.spark.sql.functions.count(lit(1))).collect().head
-    tombstoneRows = Option(sized.get(0)).fold(0L)(_.asInstanceOf[Long])
-    val freshRows = sized.getLong(1) - tombstoneRows
+    val newTomb = IvmUtil.barrier(m.tombstones.union(del).distinct())
+    val newFresh = IvmUtil.barrier(m.fresh.join(del, Seq("id"), "left_anti"))
+    // one action materializes + sizes both barriers (the updateIndex shape)
+    val Seq(tombN, freshN) = IvmUtil.materializeAllCounts(Seq(newTomb, newFresh))
+    tombstoneRows = tombN
     model = Some(ClusterIndexNode.Index(m.base, newFresh, m.remap, newTomb))
-    m.fresh.unpersist(); m.tombstones.unpersist()
-    if (tombstoneRows + freshRows > maxOverlayRows) foldOverlay()
+    if (tombN + freshN > maxOverlayRows) foldOverlay()
     endWave()
   }
 
@@ -513,9 +498,9 @@ class ClusterIndexNode(val idA: String = "id_a", val idB: String = "id_b",
     releaseFrames(m)
   }
 
-  override protected def releaseFrames(m: Model): Unit = {
-    m.base.unpersist(); m.fresh.unpersist(); m.remap.unpersist(); m.tombstones.unpersist()
-  }
+  // superseded overlay barriers are left to the ContextCleaner, like every
+  // IVM barrier (an earlier served frame may still read them)
+  override protected def releaseFrames(m: Model): Unit = m.base.unpersist()
   override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
     m.base.sparkSession
   /** Writes the EFFECTIVE mapping, so a compaction also folds the overlays
@@ -548,6 +533,52 @@ object ClusterIndexNode {
     * fresh. */
   case class Index(base: DataFrame, fresh: DataFrame,
                    remap: DataFrame, tombstones: DataFrame)
+
+  /** Min-label components of a contracted edge frame (`__ra`, `__rb`,
+    * `__newA`, `__newB`) by one union-find in the single task of
+    * `repartition(1)`: one (id, cluster_id, __isNew) row per non-null
+    * endpoint. Vertices are keyed and ranked by Spark's ordering of the id
+    * type (the order CC's `min` uses); null endpoints join nothing, as in CC. */
+  private def componentsInOneTask(edges: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, encoders, types}
+    import org.apache.spark.sql.types.{ArrayType, BooleanType, StructType}
+    import scala.collection.mutable.ArrayBuffer
+    // array() coerces both endpoints to one common type, as CC's union does
+    val e = edges.select(org.apache.spark.sql.functions.array(col("__ra"), col("__rb")),
+      col("__newA"), col("__newB"))
+    val idType = e.schema.head.dataType.asInstanceOf[ArrayType].elementType
+    val out = new StructType().add("id", idType).add("cluster_id", idType)
+      .add("__isNew", BooleanType, nullable = false)
+    e.repartition(1).mapPartitions { rows =>
+      val ord = types.PhysicalDataType.ordering(idType)
+      val toKey = CatalystTypeConverters.createToCatalystConverter(idType)
+      val index = new java.util.TreeMap[Any, Integer](ord) // key -> vertex
+      val (ids, keys, parent, isNew) =
+        (ArrayBuffer[Any](), ArrayBuffer[Any](), ArrayBuffer[Int](), ArrayBuffer[Boolean]())
+      def vertex(v: Any, fresh: Boolean): Int = if (v == null) -1 else {
+        val k = toKey(v)
+        val i: Int = index.computeIfAbsent(k, _ => {
+          ids += v; keys += k; parent += ids.size - 1; isNew += false; ids.size - 1 })
+        isNew(i) ||= fresh
+        i
+      }
+      def find(x0: Int): Int = { // path halving
+        var x = x0
+        while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+        x
+      }
+      rows.foreach { row =>
+        val ends = row.getSeq[Any](0)
+        val (a, b) = (vertex(ends(0), row.getBoolean(1)), vertex(ends(1), row.getBoolean(2)))
+        if (a >= 0 && b >= 0) {
+          // each root is its set's minimum; the smaller one stays root
+          val (ra, rb) = (find(a), find(b))
+          if (ord.lt(keys(ra), keys(rb))) parent(rb) = ra else parent(ra) = rb
+        }
+      }
+      ids.indices.iterator.map(i => org.apache.spark.sql.Row(ids(i), ids(find(i)), isNew(i)))
+    }(encoders.RowEncoder.encoderFor(out))
+  }
 }
 
 /** Survivor selection over near-dup PAIRS: keep every doc that never appears

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, sum, wh
   * high-authority domains get priority in the training mix, low-authority
   * link farms get down-weighted (the reference has no graph operators; this
   * is north-star surface alongside dedup/quality, same family as
-  * `ConnectedComponentsNode` — iterative, one materializing action per
-  * round).
+  * `ConnectedComponentsNode` — iterative, per-round lineage cuts).
   *
   * PageRank in FIXED-POINT INTEGER arithmetic: ranks are bigint micro-units
   * of a total mass `scale`, every step is integer multiply/divide. Two
@@ -33,8 +32,10 @@ import org.apache.spark.sql.functions.{broadcast, col, count, expr, lit, sum, wh
   * persisted, so each round's contribution join reshuffles only the skinny
   * (id, rank) side; the dangling mass is a one-row aggregate broadcast into
   * the update (no driver round-trip inside the loop). Lineage is cut per
-  * round exactly like `ConnectedComponentsNode` (localCheckpoint — eager,
-  * truncates the otherwise-doubling plan).
+  * round with an EAGER localCheckpoint, which truncates the otherwise-
+  * doubling plan (`ConnectedComponentsNode` cuts lazily instead: its
+  * per-round convergence count is the action that stores the cut, and the
+  * fixed-iteration rounds here have no such count).
   */
 class PageRankNode(
     val srcCol: String = "src",

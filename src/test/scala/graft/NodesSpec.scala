@@ -2449,6 +2449,50 @@ class NodesSpec extends AnyFunSuite {
     Seq(idx, idx2, streamed).foreach(_.unpersistIndex())
   }
 
+  test("ClusterIndexNode: String ids and null delta endpoints label exactly like " +
+       "one-shot ConnectedComponentsNode over the union graph") {
+    val c = Ctx(spark)
+    def labels(df: DataFrame): Map[Any, Any] = df.collect().map(r => r.get(0) -> r.get(1)).toMap
+    // fit -> update -> optional delete, against one-shot CC over base ∪
+    // delta with unknown and deleted ids answering as themselves
+    def check(base: DataFrame, delta: DataFrame, queries: DataFrame,
+              dels: Option[DataFrame]): Map[Any, Any] = {
+      val idx = new ClusterIndexNode()
+      idx.fit(c, In.single("pairs" -> base))
+      idx.updateIndex(c, delta)
+      dels.foreach(idx.deleteFromIndex(c, _))
+      val got = labels(idx.transform(c, In.single("queries" -> queries))("result"))
+      idx.unpersistIndex()
+      val cc = labels(new ConnectedComponentsNode()
+        .transform(c, In.single("pairs" -> base.union(delta)))("result"))
+      val deleted = dels.fold(Set.empty[Any])(_.collect().map(_.get(0)).toSet)
+      val want = queries.collect().map(_.get(0))
+        .map(q => q -> (if (deleted(q)) q else cc.getOrElse(q, q))).toMap
+      assert(got == want)
+      got
+    }
+    // String ids: a bridge merging two base components, a new component,
+    // a new node attaching to a base component, then a delete. "\uFF61x"
+    // sorts before the emoji id in Spark's UTF-8 byte order but after it in
+    // Java's UTF-16 order: the label must follow Spark's order, as CC's min
+    val (hw, emoji) = ("\uFF61x", "\uD83D\uDE00x")
+    val strs = check(
+      Seq(("a1", "a2"), ("b1", "b2"), (hw, "\uFF62y")).toDF("id_a", "id_b"),
+      Seq(("a2", "b1"), ("c1", "c2"), ("b2", "d1"), (emoji, "\uFF62y")).toDF("id_a", "id_b"),
+      Seq("a1", "a2", "b1", "b2", "c1", "c2", "d1", hw, "\uFF62y", emoji, "zz").toDF("doc_id"),
+      Some(Seq("b2").toDF("doc_id")))
+    assert(strs("d1") == "a1" && strs("b2") == "b2" && strs("c2") == "c1" && strs(emoji) == hw)
+    // null endpoints in the delta join nothing; their other endpoint stays
+    // (or becomes) a singleton unless another edge connects it
+    def opt(ps: (Option[Long], Option[Long])*): DataFrame = ps.toDF("id_a", "id_b")
+    val nulls = check(
+      opt((Some(1L), Some(2L)), (Some(3L), Some(4L))),
+      opt((Some(2L), Some(3L)), (Some(5L), None), (None, Some(6L)), (None, None),
+        (Some(4L), None)),
+      (1L to 7L).toDF("doc_id"), None)
+    assert(nulls == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 5L, 6L -> 6L, 7L -> 7L))
+  }
+
   test("CompactFilesNode partitionBy: re-layout into hive partitions, content-neutral; " +
        "SourceNode generation pin reads superseded history") {
     import spark.implicits._

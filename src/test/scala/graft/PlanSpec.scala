@@ -418,6 +418,40 @@ class PlanSpec extends AnyFunSuite {
     cidx.unpersistIndex()
   }
 
+  test("ClusterIndexNode waves keep the served plan at a constant size") {
+    // every overlay generation is a lineage barrier (one plan leaf), so the
+    // analyzed plan of the served frame must not grow with the wave count —
+    // a persisted overlay would embed the previous overlays' plans instead
+    val c = Ctx(spark)
+    val idx = new ClusterIndexNode()
+    idx.fit(c, In.single("pairs" ->
+      spark.range(4).selectExpr("id * 2 as id_a", "id * 2 + 1 as id_b")))
+    val queries = spark.range(60).toDF("doc_id")
+    def planNodes(): Int = {
+      var n = 0
+      idx.transform(c, In.single("queries" -> queries))("result")
+        .queryExecution.analyzed.foreach(_ => n += 1)
+      n
+    }
+    // each wave bridges base components and adds new ids
+    def edges(w: Int) =
+      spark.range(3).selectExpr(s"id * 2 + $w as id_a", s"id + ${10 * w + 10} as id_b")
+    idx.updateIndex(c, edges(1))
+    val first = planNodes()
+    Seq[(String, () => Unit)](
+      "update 2" -> (() => idx.updateIndex(c, edges(2))),
+      "update 3" -> (() => idx.updateIndex(c, edges(3))),
+      "delete" -> (() => idx.deleteFromIndex(c, spark.range(2).selectExpr("id + 1 as doc_id"))),
+      "cdc wave" -> (() => idx.applyCdcWave(c, edges(4),
+        spark.range(1).selectExpr("id + 3 as doc_id")))
+    ).foreach { case (step, run) =>
+      run()
+      val n = planNodes()
+      assert(n == first, s"served plan after $step has $n nodes, $first after the first wave")
+    }
+    idx.unpersistIndex()
+  }
+
   test("round-10 nodes keep their scale shapes: url-canon narrow, span-dedup keyed, index serving corpus-shuffle-free") {
     import graft.dag._
     import graft.nodes._
