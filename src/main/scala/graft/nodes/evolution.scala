@@ -620,9 +620,6 @@ class AggIndexNode(
       .filter(col("__hc") > 0)
   }
 
-  private def materializeAll(frames: Seq[DataFrame]): Unit =
-    IvmUtil.materializeAll(frames)
-
   /** totals ⊕ sign·delta — full-outer on the group key, both sides
     * group-count-sized; groups whose n_rows reaches 0 drop (GROUP BY
     * semantics: an empty group does not exist). Extrema fold with
@@ -787,31 +784,27 @@ class AggIndexNode(
   }
 
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
-    IvmUtil.runWave(prepareWave(ctx, None, Some(delta)))
+    prepareWave(ctx, None, Some(delta)).commit()
 
-  /** Build ONE maintenance wave (optional delete step, then optional
-    * insert step — the Δview-feed contract: the two key sets are disjoint
-    * within a wave) WITHOUT materializing it: state segments/tombstones
-    * land on the stores, the new group frames are built lazily, and the
-    * returned [[IvmUtil.Prepared]] carries them plus the commit. A chained
-    * caller (MaterializedJoinNode's Δview feed) folds these frames into
-    * ITS OWN single materializing action, so a whole join→dashboard chain
-    * pays one action per wave instead of one per node. */
+  /** Run ONE maintenance wave (optional delete step, then optional insert
+    * step — the Δview-feed contract: the two key sets are disjoint within
+    * a wave) up to its commit: each step writes its ledger segment or
+    * tombstone FIRST (the parquet read-back cuts the lineage of whatever
+    * plan fed it, e.g. a MaterializedJoinNode's Δview feed) and then cuts
+    * its group frames eagerly, so the returned [[IvmUtil.Prepared]] holds
+    * only the commit that swaps the new model in. A chained caller commits
+    * it together with its own. */
   private[nodes] def prepareWave(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared = {
     var cur = fitted
     val store = stores.head
-    var frames = Vector.empty[DataFrame]
     var superseded = Vector.empty[Model]
-    def step(run: Model => (Model, Seq[DataFrame])): Unit = {
-      val (nm, fs) = run(cur)
-      frames ++= fs; superseded :+= cur; cur = nm
-    }
+    def step(run: Model => Model): Unit = { superseded :+= cur; cur = run(cur) }
     deletes.foreach(d =>
       step(m => deleteCore(m, store, d.select(col(idCol)).distinct())))
     inserts.foreach(i => step(m => insertCore(m, store, i)))
     val fin = cur; val rel = superseded
-    IvmUtil.Prepared(frames, _ => {
+    IvmUtil.Prepared(() => {
       model = Some(fin)
       rel.foreach(releaseFrames)
       rel.foreach(_ => endWave())
@@ -826,8 +819,21 @@ class AggIndexNode(
     m.hists.values.foreach(_.unpersist())
   }
 
-  private def insertCore(m: Model, store: SegStore, delta: DataFrame)
-      : (Model, Seq[DataFrame]) = {
+  /** Cut a wave's new group-state plans into the model on `ledger`. The
+    * cuts are eager — each is its own action, run CONCURRENTLY: each
+    * executes its plan's stages under AQE, and the per-frame merges share
+    * no data dependency, so serializing them summed their walls (r17 job
+    * census). */
+  private def cutState(ledger: DataFrame, totals: DataFrame,
+      vcs: Seq[(String, DataFrame)], hists: Seq[(String, DataFrame)]): Model = {
+    val cut = IvmUtil.inParallel((totals +: vcs.map(_._2)) ++ hists.map(_._2)
+      map (df => () => IvmUtil.barrier(df, eager = true)))
+    AggIndexNode.Index(ledger, cut.head,
+      vcs.map(_._1).zip(cut.slice(1, 1 + vcs.size)).toMap,
+      hists.map(_._1).zip(cut.drop(1 + vcs.size)).toMap)
+  }
+
+  private def insertCore(m: Model, store: SegStore, delta: DataFrame): Model = {
     import org.apache.spark.sql.functions.{coalesce, count, lit}
     // O(delta) state write: the batch's ledger rows land once as a parquet
     // segment (cached, columnar, lineage cut at a leaf — see SegStore);
@@ -863,27 +869,16 @@ class AggIndexNode(
       }
     val histPlans = histSpecs.map(s =>
       s.column -> histMerged(m.hists(s.column), binLift(fresh, s), +1))
-    // independent group-state cuts run CONCURRENTLY: each barrier executes
-    // its plan's stages under AQE, and the per-frame merges share no data
-    // dependency — serializing them summed their walls (r17 job census)
-    val cut = IvmUtil.inParallel(
-      (merged(m.totals, deltaTotals, +1) +: vcPlans.map(_._2)) ++
-        histPlans.map(_._2) map (df => () => IvmUtil.barrier(df)))
-    val newTotals = cut.head
-    val newVC = vcPlans.map(_._1).zip(cut.slice(1, 1 + vcPlans.size)).toMap
-    val newHists = histPlans.map(_._1).zip(cut.drop(1 + vcPlans.size)).toMap
-    // the delta-sized pieces to materialize before old group state is
-    // released; the ledger itself is NOT copied (its old base/segments
-    // stay live inside the store)
-    (AggIndexNode.Index(newLedger, newTotals, newVC, newHists),
-      Seq(fresh, newTotals) ++ newVC.values ++ newHists.values)
+    // the ledger itself is NOT copied (its old base/segments stay live
+    // inside the store)
+    cutState(newLedger, merged(m.totals, deltaTotals, +1), vcPlans, histPlans)
   }
 
   /** Exact decrement: the semi-join recovers precisely what each deleted
     * row contributed; unknown ids no-op; groups reaching zero drop.
     * Bit-identical to re-aggregating the post-delete corpus. */
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit =
-    IvmUtil.runWave(prepareWave(ctx, Some(deletes), None))
+    prepareWave(ctx, Some(deletes), None).commit()
 
   /** RETENTION deletes: remove every ledger row matching `condition` — a
     * Spark SQL boolean expression over the LEDGER columns (idCol, the
@@ -903,12 +898,11 @@ class AggIndexNode(
     // victims resolve to ROW IDS (idCol is the row handle — the ledger
     // keys every contribution by it), so predicate retention rides the
     // same O(delta) tombstone channel as deleteFromIndex
-    IvmUtil.runWave(prepareWave(ctx,
-      Some(m.ledger.filter(cond).select(col(idCol))), None))
+    prepareWave(ctx, Some(m.ledger.filter(cond).select(col(idCol))), None)
+      .commit()
   }
 
-  private def deleteCore(m: Model, store: SegStore, del: DataFrame)
-      : (Model, Seq[DataFrame]) = {
+  private def deleteCore(m: Model, store: SegStore, del: DataFrame): Model = {
     val preLive = m.ledger
     // O(delta) state write: the victim ids land once as a generation-
     // stamped tombstone segment, applied at read — a later re-insert of
@@ -933,15 +927,7 @@ class AggIndexNode(
     // touched-group recompute needed (contrast extrema/distinct above)
     val histPlans = histSpecs.map(s =>
       s.column -> histMerged(m.hists(s.column), binLift(victims, s), -1))
-    // independent per-frame cuts overlap (see insertCore)
-    val cut = IvmUtil.inParallel(
-      (totalsPlan +: vcPlans.map(_._2)) ++ histPlans.map(_._2)
-        map (df => () => IvmUtil.barrier(df)))
-    val newTotals = cut.head
-    val newVC = vcPlans.map(_._1).zip(cut.slice(1, 1 + vcPlans.size)).toMap
-    val newHists = histPlans.map(_._1).zip(cut.drop(1 + vcPlans.size)).toMap
-    (AggIndexNode.Index(newLedger, newTotals, newVC, newHists),
-      Seq(tombSeg, newTotals) ++ newVC.values ++ newHists.values)
+    cutState(newLedger, totalsPlan, vcPlans, histPlans)
   }
 
   /** Re-derive totals from the ledger — the exact re-derivation every
@@ -949,13 +935,9 @@ class AggIndexNode(
     * tests rather than needed for a cap). */
   def rebuildIndex(): Unit = {
     val m = fitted
-    val newTotals = IvmUtil.barrier(totalsOf(m.ledger))
-    val newVC = distinctCols.map(c => c ->
-      IvmUtil.barrier(valueCountsOf(m.ledger, c))).toMap
-    val newHists = histSpecs.map(s => s.column ->
-      IvmUtil.barrier(binnedOf(m.ledger, s))).toMap
-    materializeAll(Seq(newTotals) ++ newVC.values ++ newHists.values)
-    model = Some(AggIndexNode.Index(m.ledger, newTotals, newVC, newHists))
+    model = Some(cutState(m.ledger, totalsOf(m.ledger),
+      distinctCols.map(c => c -> valueCountsOf(m.ledger, c)),
+      histSpecs.map(s => s.column -> binnedOf(m.ledger, s))))
     releaseFrames(m)
     endWave()
   }
@@ -1106,8 +1088,7 @@ private[nodes] final class SegStore(
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
   /** Append an insert wave: ONE delta-sized parquet write, returns the
-    * cached read-back (the caller's single materializing action fills the
-    * cache). */
+    * persisted read-back (its cache fills on first use). */
   def appendSegment(rows: DataFrame): DataFrame = synchronized {
     nextGen += 1
     val f = writeBack(rows)
@@ -1260,38 +1241,29 @@ object WorkDir {
 
 /** Shared IVM-node plumbing. */
 private[nodes] object IvmUtil {
-  /** A maintenance wave built LAZILY and not yet materialized: `frames`
-    * are the wave's new cached/barriered state frames; `commit(counts)`
-    * swaps them in and releases the superseded generation, and must be
-    * called ONLY after one driver action has materialized every frame
-    * (`counts` = per-frame row counts out of that action, positionally).
-    * `++` concatenates two prepared waves (frames appended, commits run
-    * in order with the counts vector split at the boundary) — this is
-    * what lets a whole chained-IVM wave (join → join → dashboard) share
-    * ONE materializing action instead of one per node (VERDICT r16 next
-    * #1: per-wave fixed driver cost dominated the bench tail). */
-  final case class Prepared(frames: Seq[DataFrame],
-                            commit: Seq[Long] => Unit,
-                            wantCounts: Boolean = false) {
-    def ++(o: Prepared): Prepared = {
-      val n = frames.length
-      Prepared(frames ++ o.frames,
-        cs => { commit(cs.take(n)); o.commit(cs.drop(n)) },
-        wantCounts || o.wantCounts)
-    }
+  /** A maintenance wave whose work has already run: each node step wrote
+    * its state (segments, tombstones, eager group-state cuts) while it was
+    * prepared, so no frame is left to materialize — every frame a wave
+    * leaves is an eager cut or a parquet read-back whose cache fills on
+    * first use. What remains is `commit`, which swaps the new state in and
+    * releases the superseded generation. `++` runs two commits in order —
+    * this is how a chained wave (join → join → dashboard) commits as one
+    * unit. */
+  final case class Prepared(commit: () => Unit) {
+    def ++(o: Prepared): Prepared = Prepared(() => { commit(); o.commit() })
   }
-  val PreparedEmpty: Prepared = Prepared(Nil, _ => ())
+  val PreparedEmpty: Prepared = Prepared(() => ())
 
   /** Run INDEPENDENT driver-blocking wave steps concurrently. A
     * maintenance wave is a chain of small sequential executions — state
-    * writes and [[barrier]] calls — and under AQE each one executes its
-    * plan's intermediate stages before returning, so the wall cost is the
-    * SUM of steps even though the driver and 32 local cores sit mostly
-    * idle within each (the r17 job census: 8-10 such steps of 0.2-2 s
-    * each per chained wave). Steps with no data dependency (the fact and
-    * view segments of one wave; a wave's per-frame group-state cuts; the
-    * Δview feed's delete and insert legs) overlap here instead. Spark
-    * actions are thread-safe; each thunk's jobs run under its own thread.
+    * writes and eager cuts — and under AQE each one executes its plan's
+    * intermediate stages before returning, so the wall cost is the SUM of
+    * steps even though the driver and 32 local cores sit mostly idle
+    * within each (the r17 job census: 8-10 such steps of 0.2-2 s each per
+    * chained wave). Steps with no data dependency (the fact and view
+    * segments of one wave, a wave's per-frame group-state cuts, the
+    * subscribers of one Δview feed) overlap here instead. Spark actions
+    * are thread-safe; each thunk's jobs run under its own thread.
     * Exceptions propagate unwrapped, first-failing-step first. */
   def inParallel[A](thunks: Seq[() => A]): Seq[A] =
     if (thunks.lengthCompare(1) <= 0) thunks.map(_())
@@ -1323,30 +1295,10 @@ private[nodes] object IvmUtil {
       } finally pool.shutdown()
     }
 
-  /** Materialize a prepared wave with ONE driver action, then commit.
-    * The per-frame counts (a groupBy exchange instead of a plain union
-    * count) are computed only when some commit actually consumes them
-    * (`wantCounts` — the dim-cardinality refresh paths); every other wave
-    * materializes with the cheaper single-stage count. */
-  def runWave(p: Prepared): Unit =
-    if (p.frames.isEmpty) p.commit(Nil)
-    else if (p.wantCounts) p.commit(materializeAllCounts(p.frames))
-    else { materializeAll(p.frames); p.commit(Vector.fill(p.frames.length)(0L)) }
-
-  /** ONE driver action materializes every just-persisted frame: counting
-    * the union scans each persisted child exactly once (the q157 lesson —
-    * per-frame counts multiply per-micro-batch driver actions when an
-    * index maintains itself from a stream). */
-  def materializeAll(frames: Seq[DataFrame]): Unit = {
-    import org.apache.spark.sql.functions.lit
-    frames.map(_.select(lit(1L).as("__m"))).reduce(_ union _).count()
-  }
-
-  /** Same single-action materialization, but returns each frame's row
-    * count (tag + groupBy over the union — the groups are ≤ #frames, so
-    * the extra exchange is metadata-sized). Lets a caller that needs a
-    * state cardinality (the broadcast-guard fence) get it without a
-    * second driver action per batch. */
+  /** ONE driver action materializes every frame (lazy barriers included)
+    * and returns each frame's row count (tag + groupBy over the union —
+    * the groups are ≤ #frames, so the extra exchange is metadata-sized;
+    * the union scans each persisted child once, the q157 lesson). */
   def materializeAllCounts(frames: Seq[DataFrame]): Seq[Long] = {
     import org.apache.spark.sql.functions.lit
     val counts = frames.zipWithIndex
@@ -1358,20 +1310,24 @@ private[nodes] object IvmUtil {
   }
 
   /** Lineage BARRIER for chained IVM state: truncate the frame's logical
-    * plan to its computed blocks (lazy `localCheckpoint`, materialized by
-    * the caller's single `materializeAll` action alongside the batch's
-    * other frames). Persisting is NOT enough here — a persisted frame
-    * still carries its full logical plan, so k chained maintenance ops
-    * (state referencing state referencing Δview derivations) build
-    * super-linear Catalyst trees that the driver re-analyzes per op:
-    * the chained-dashboard flagship measured ~180 s of pure driver plan
-    * work (data-size-FLAT from sf0.001 to sf0.1) and an eventual
-    * driver-heap OOM from the accumulated trees before barriering. The
+    * plan to its computed blocks (`localCheckpoint`). Lazy by default: the
+    * caller's next action over the frame fills it (ClusterIndexNode's
+    * sizing count, a CC round's convergence count); `eager = true` makes
+    * the cut its own action, for state whose wave runs no other action
+    * (AggIndexNode's group frames). Persisting is NOT enough here — a
+    * persisted frame still carries its full logical plan, so k chained
+    * maintenance ops (state referencing state referencing Δview
+    * derivations) build super-linear Catalyst trees that the driver
+    * re-analyzes per op: the chained-dashboard flagship measured ~180 s
+    * of pure driver plan work (data-size-FLAT from sf0.001 to sf0.1) and
+    * an eventual driver-heap OOM from the accumulated trees before
+    * barriering. The
     * stated price: checkpoint blocks are not lineage-recoverable on
     * executor loss — each family's `compactEvery`/`compactPath` parquet
     * fold is the durable root at cluster scale, exactly as for the CC /
     * PageRank iteration cuts (`dedup.scala:163`). */
-  def barrier(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
+  def barrier(df: DataFrame, eager: Boolean = false): DataFrame =
+    df.localCheckpoint(eager)
 
   /** USING-style join with NULL-SAFE key equality. SQL `GROUP BY` treats
     * NULL as one real group, but a plain equi-join never matches NULL keys
@@ -1870,11 +1826,13 @@ class MaterializedJoinNode(
     viewSubscribers ::= s
   private def hasSubs: Boolean = viewSubscribers.nonEmpty
   /** Collect every subscriber's handling of this wave's Δview feed as ONE
-    * prepared unit. Chained indexes (agg/join) prepare LAZILY — their
-    * frames fold into the caller's single materializing action; a
-    * subscriber without a prepare path (the published-feed overlay writer,
-    * inherently its own write) runs eagerly inside commit, i.e. after the
-    * caller's action — the pre-r17 ordering. */
+    * prepared unit. The feed frames are plain (uncut) plans over this
+    * wave's segment/tombstone read-backs and the pre-wave state: a chained
+    * index (agg/join) writes them into its own segment or tombstone before
+    * it derives anything else, so its state plans start at that read-back
+    * and stay flat across waves; only its commit is deferred. A subscriber
+    * without a prepare path (the published-feed overlay writer, inherently
+    * its own write) runs inside commit, before the wave's epilogue. */
   private def prepareSubs(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared =
     if ((deletes.isEmpty && inserts.isEmpty) || !hasSubs) IvmUtil.PreparedEmpty
@@ -1882,7 +1840,7 @@ class MaterializedJoinNode(
       // independent subscribers prepare CONCURRENTLY (each runs its own
       // state writes/cuts against its own stores); commits stay ordered
       s.prepareViewDelta(ctx, deletes, inserts).getOrElse(
-        IvmUtil.Prepared(Nil, _ => s.onViewDelta(ctx, deletes, inserts)))
+        IvmUtil.Prepared(() => s.onViewDelta(ctx, deletes, inserts)))
     }).foldLeft(IvmUtil.PreparedEmpty)(_ ++ _)
 
   /** Chain a maintained GROUPED DASHBOARD onto the maintained view — the
@@ -2236,22 +2194,20 @@ class MaterializedJoinNode(
     * re-sent fact rows must be deleted first (maintainFromStream's CDC
     * mode does exactly that). */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
-    IvmUtil.runWave(prepareFactWave(ctx, None, Some(delta)))
+    prepareFactWave(ctx, None, Some(delta)).commit()
 
-  /** Build a fact-side wave (optional takedown step, then optional insert
-    * step — disjoint fact ids within a wave, the Δview-feed contract)
-    * WITHOUT materializing it. State lands on the SegStores at prepare
-    * time; the new live frames, the Δview feed, and every CHAINED
-    * subscriber's own prepared wave are all returned in one
-    * [[IvmUtil.Prepared]] — so a join → join → dashboard chain pays ONE
-    * driver action per wave, not one per node (VERDICT r16 next #1; the
-    * feed frames are barriered, which is what makes the downstream plans
-    * safe to build before anything has materialized). */
+  /** Run a fact-side wave (optional takedown step, then optional insert
+    * step — disjoint fact ids within a wave, the Δview-feed contract) up
+    * to its commit. State lands on the SegStores at prepare time, and the
+    * Δview feed goes to every CHAINED subscriber, which writes it into its
+    * own state; the commits of this node and of the whole chain below it
+    * come back as one [[IvmUtil.Prepared]]. Each node step of a chained
+    * wave thus costs its state writes (plus the dashboard's group cuts),
+    * and no action materializes the chain afterwards. */
   private[nodes] def prepareFactWave(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared = {
     var cur = fitted
     val Seq(ls, _, vs) = stores
-    var frames = Vector.empty[DataFrame]
     var feedDels: Option[DataFrame] = None
     var feedIns: Option[DataFrame] = None
     var waves = 0
@@ -2262,26 +2218,23 @@ class MaterializedJoinNode(
       vs.adoptTombstones(leftId, tombL) // view rows carry leftId — one write
       // Δview feed: every view row the facts owned, plus (outer) their
       // dangler rows — both sides of "a deleted fact leaves the view";
-      // derived from the PRE-delete frames and the cached tombstone segment
+      // derived from the PRE-delete frames and the tombstone read-back.
+      // The stored frames stay on the streamed side of each semi-join;
+      // only the tombstone (delta-sized) is built, by stats + AQE — no
+      // forced broadcast on any wave-sized frame (see the insert path)
       feedDels = if (!hasSubs) None else {
-        val matchedDel =
-          m.view.join(tombL, Seq(leftId), "left_semi")
-        val delMatched = withVid(matchedDel)
-          .select(MaterializedJoinNode.ViewIdCol)
-        // dangler detection from WAVE-LOCAL data: a deleted fact owned a
-        // dangler row iff it owned NO matched view row — anti-join the
-        // deleted facts against the wave's own matched set instead of
-        // rebuilding the dim-key broadcast per takedown wave; no
-        // forced broadcast on any wave-sized frame (see the insert
-        // path's note — stats + AQE decide).
-        Some(IvmUtil.barrier(if (joinType == "inner") delMatched
-          else delMatched.union(
-            leftData(m).join(tombL, Seq(leftId), "left_semi")
-              .join(matchedDel.select(col(leftId)).distinct(),
-                Seq(leftId), "left_anti")
-              .select(danglerVid(col(leftId)).as(MaterializedJoinNode.ViewIdCol)))))
+        val gone = m.view.join(tombL, Seq(leftId), "left_semi")
+        Some(if (joinType == "inner")
+          withVid(gone).select(MaterializedJoinNode.ViewIdCol)
+        // one pass (outer): the deleted live facts LEFT JOIN their view
+        // rows, both delta-sized; a fact that owned no view row comes out
+        // with a null rightId, i.e. as its dangler vid
+        else leftData(m).join(tombL, Seq(leftId), "left_semi")
+          .select(col(leftId))
+          .join(gone.select(col(leftId), col(rightId)), Seq(leftId), "left")
+          .select(vidOf(col(leftId), col(rightId))
+            .as(MaterializedJoinNode.ViewIdCol)))
       }
-      frames ++= Seq(tombL) ++ feedDels
       cur = m.copy(left = ls.live, view = vs.live)
       waves += 1
     }
@@ -2301,9 +2254,9 @@ class MaterializedJoinNode(
       val Seq(leftSeg, viewSeg) = IvmUtil.inParallel(Seq(
         () => ls.appendSegment(withBucket(dRows, m.nBuckets)),
         () => vs.appendSegment(viewOf(dRows, m.right, broadcastLeft = true))))
-      // Δview feed (delta-sized), barriered so a chained index's state
-      // plans stay flat across batches; danglers derive from the CACHED
-      // fact segment, not the incoming batch plan
+      // Δview feed (delta-sized) over the two segment read-backs, so a
+      // chained index's write of it reads two parquet leaves, never the
+      // incoming batch plan
       feedIns = if (!hasSubs) None else {
         val ins0 = withVid(viewSeg)
         // dangler detection from WAVE-LOCAL data: a delta fact is a
@@ -2314,30 +2267,25 @@ class MaterializedJoinNode(
         // wave-sized frame here: a wave can be backfill-huge (the 100×
         // q212 probe OOM'd the driver building force-hinted wave
         // broadcasts — ~10M-id tombstone sets — concurrently across the
-        // chain's single action). The segment read-backs carry REAL
+        // chain's wave). The segment read-backs carry REAL
         // parquet stats, so the planner broadcasts small waves and
         // shuffles big ones, and AQE refines from runtime sizes.
-        Some(IvmUtil.barrier(if (joinType == "inner") ins0
+        Some(if (joinType == "inner") ins0
           else ins0.unionByName(withVid(nullExtend(
             leftSeg.drop(BucketCol)
-              .join(viewSeg.select(col(leftId)).distinct(),
-                Seq(leftId), "left_anti"),
-            m.right)))))
+              .join(viewSeg.select(col(leftId)), Seq(leftId), "left_anti"),
+            m.right))))
       }
-      frames ++= Seq(leftSeg, viewSeg) ++ feedIns
       cur = m.copy(left = ls.live, view = vs.live)
       waves += 1
     }
     val downstream = prepareSubs(ctx, feedDels, feedIns)
-    val fin = cur; val own = frames.length; val n = waves
-    // propagate wantCounts (ADVICE r17): a chained subscriber's prepared
-    // wave that asks for real per-frame counts must not silently receive
-    // the all-zero placeholder vector from the cheap union-count path
-    IvmUtil.Prepared(frames ++ downstream.frames, cs => {
+    val fin = cur; val n = waves
+    IvmUtil.Prepared(() => {
       model = Some(fin)
-      downstream.commit(cs.drop(own))
+      downstream.commit()
       (1 to n).foreach(_ => endWave())
-    }, downstream.wantCounts)
+    })
   }
 
   /** Retention ledger: the fact ledger's full row (leftId, join keys,
@@ -2350,7 +2298,7 @@ class MaterializedJoinNode(
   /** Fact takedown: generation-stamped tombstones on the fact row id —
     * O(delta) state write; the ledger and view resolve them at read. */
   def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit =
-    IvmUtil.runWave(prepareFactWave(ctx, Some(deletes), None))
+    prepareFactWave(ctx, Some(deletes), None).commit()
 
   /** L ⋈ ΔR appended; the dim ledger grows by the delta. Re-keyed or
     * re-valued dim rows are upserts: `deleteFromRight` first. */
@@ -2370,34 +2318,26 @@ class MaterializedJoinNode(
     // Δview feed: the retro-matched rows insert; (outer) a fact whose
     // FIRST match just arrived retracts its dangler row. Dangler-vid
     // retractions and pair-vid inserts are key-disjoint, so they ride as
-    // ONE downstream wave.
-    val feed = if (!hasSubs) None else {
-      val delPlan = if (joinType == "inner") None
-        else Some(
-          viewSeg.join(guardedDimKeys(m.right, m.rightCount), leftOn, "left_anti")
-            .select(danglerVid(col(leftId)).as(MaterializedJoinNode.ViewIdCol))
-            .distinct())
-      // the feed's retract and insert legs are independent — overlap them
-      val cut = IvmUtil.inParallel(
-        (delPlan.toSeq :+ withVid(viewSeg)).map(df => () => IvmUtil.barrier(df)))
-      Some((delPlan.map(_ => cut.head), cut.last))
-    }
-    val own = Seq(rightSeg, viewSeg) ++
-      feed.toSeq.flatMap { case (d, i) => d.toSeq :+ i }
+    // ONE downstream wave. Both are plain plans over the view segment's
+    // read-back, like the fact-side feeds.
+    val feed = if (!hasSubs) None else Some((
+      if (joinType == "inner") None
+      else Some(
+        viewSeg.join(guardedDimKeys(m.right, m.rightCount), leftOn, "left_anti")
+          .select(danglerVid(col(leftId)).as(MaterializedJoinNode.ViewIdCol))
+          .distinct()),
+      withVid(viewSeg)))
     val downstream = prepareSubs(ctx,
       feed.flatMap(_._1), feed.map(_._2))
-    // the single materializing action (shared with every chained
-    // subscriber's wave) doubles as the dim-count refresh — the dim
-    // ledger grows by exactly the segment's row count
-    IvmUtil.runWave(IvmUtil.Prepared(own ++ downstream.frames, cs => {
-      val newCount =
-        if (m.rightCount == Long.MaxValue) Long.MaxValue
-        else m.rightCount + cs.head
-      model = Some(m.copy(right = rs.live, view = vs.live,
-        rightCount = newCount))
-      downstream.commit(cs.drop(own.length))
-      endWave()
-    }, wantCounts = true))
+    // the dim-count refresh: the dim ledger grows by exactly the
+    // segment's row count
+    val newCount =
+      if (m.rightCount == Long.MaxValue) Long.MaxValue
+      else m.rightCount + rightSeg.count()
+    model = Some(m.copy(right = rs.live, view = vs.live,
+      rightCount = newCount))
+    downstream.commit()
+    endWave()
   }
 
   /** Dim takedown: generation-stamped tombstones on the dim row id —
@@ -2409,15 +2349,15 @@ class MaterializedJoinNode(
     val tombR = rs.appendTombstones(rightId, del)
     vs.adoptTombstones(rightId, tombR) // view rows carry rightId — one write
     val newRight = rs.live
-    // the removed dim rows, counted once in the shared action below, keep
-    // the cached dim cardinality exact without a full re-count
+    // the removed dim rows, counted below, keep the cached dim
+    // cardinality exact without a full re-count
     val removedDims = m.right.join(tombR, Seq(rightId), "left_semi")
     // Δview feed: every view row the dims owned retracts; (outer) a fact
     // whose LAST match just left re-inserts as a dangler
     val feed = if (!hasSubs) None else {
       val removed = m.view.join(tombR, Seq(rightId), "left_semi")
-      val delPlan = withVid(removed).select(MaterializedJoinNode.ViewIdCol)
-      val insPlan = if (joinType == "inner") None
+      Some((withVid(removed).select(MaterializedJoinNode.ViewIdCol),
+        if (joinType == "inner") None
         else Some(withVid(nullExtend(
           leftData(m)
             .join(removed.select(leftOn.map(col): _*).distinct(),
@@ -2425,24 +2365,16 @@ class MaterializedJoinNode(
             // the post-delete dim can only be SMALLER, so the pre-delete
             // cached count is a sound (conservative) fence here
             .join(guardedDimKeys(newRight, m.rightCount), leftOn, "left_anti"),
-          m.right)))
-      // the feed's retract and re-insert legs are independent — overlap
-      val cut = IvmUtil.inParallel(
-        (delPlan +: insPlan.toSeq).map(df => () => IvmUtil.barrier(df)))
-      Some((cut.head, insPlan.map(_ => cut.last)))
+          m.right)))))
     }
-    val own = Seq(tombR, removedDims) ++
-      feed.toSeq.flatMap { case (d, i) => d +: i.toSeq }
     val downstream = prepareSubs(ctx, feed.map(_._1), feed.flatMap(_._2))
-    IvmUtil.runWave(IvmUtil.Prepared(own ++ downstream.frames, cs => {
-      val newCount =
-        if (m.rightCount == Long.MaxValue) Long.MaxValue
-        else math.max(0L, m.rightCount - cs(1)) // removedDims is own frame #1
-      model = Some(m.copy(right = newRight, view = vs.live,
-        rightCount = newCount))
-      downstream.commit(cs.drop(own.length))
-      endWave()
-    }, wantCounts = true))
+    val newCount =
+      if (m.rightCount == Long.MaxValue) Long.MaxValue
+      else math.max(0L, m.rightCount - removedDims.count())
+    model = Some(m.copy(right = newRight, view = vs.live,
+      rightCount = newCount))
+    downstream.commit()
+    endWave()
   }
 
   /** The DIM side as an [[IncrementalIndex]] — `updateIndex` delegates
@@ -2553,12 +2485,13 @@ object MaterializedJoinNode {
   trait ViewSubscriber {
     def onViewDelta(ctx: graft.dag.Ctx, deletes: Option[DataFrame],
         inserts: Option[DataFrame]): Unit
-    /** Deferred variant: build the wave's maintenance frames lazily and
-      * return them with a commit, so the NOTIFYING node folds them into
-      * its own single materializing action (one driver action per wave
-      * across a whole chain). `None` (the default) falls back to one
-      * eager [[onViewDelta]] call inside the notifier's commit. Within a
-      * wave the delete and insert key sets are disjoint (the Δview-feed
+    /** Deferred-commit variant: run the wave's state work now and return
+      * its commit, which the NOTIFYING node runs inside its own. The feed
+      * frames are plain plans over the notifier's wave (no lineage cut):
+      * write them into this subscriber's own state before deriving
+      * anything else from them. `None` (the default) falls back to one
+      * [[onViewDelta]] call inside the notifier's commit. Within a wave
+      * the delete and insert key sets are disjoint (the Δview-feed
       * contract), so delete-then-insert threading inside one prepared
       * unit is exact. */
     private[nodes] def prepareViewDelta(ctx: graft.dag.Ctx,

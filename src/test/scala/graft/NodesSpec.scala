@@ -4033,16 +4033,30 @@ class NodesSpec extends AnyFunSuite {
     val agg = new AggIndexNode(groupCols = Seq("seg"), sumCols = Seq("amt"),
       idCol = MaterializedJoinNode.ViewIdCol)
     mj.chainAggregate(c, agg)
+    // the published feed keys its merge-on-read overlays on the same vids
+    val root = java.nio.file.Files.createTempDirectory("graft_vid_")
+      .toString + "/view_mor"
+    mj.publishViewDelta(c, root)
     var liveL = facts0; var liveR = dims0
     def check(stage: String): Unit = {
       val probe = dims0.select("seg").distinct()
         .unionByName(Seq(Option.empty[String]).toDF("seg"))
       val got = agg.transform(c, In.single("probe" -> probe))("result")
         .as[(Option[String], Long, Long)].collect().toSet
-      val want = liveL.join(liveR, liveL("cust") === liveR("cid"), "left_outer")
+      val outer = liveL.join(liveR, liveL("cust") === liveR("cid"), "left_outer")
+      val want = outer
         .groupBy("seg").agg(count(lit(1)).as("n_rows"), sum("amt").as("sum_amt"))
         .as[(Option[String], Long, Long)].collect().toSet
       assert(got == want, s"[vid/$stage] diverged: got $got want $want")
+      val cols = Seq("oid", "did", "seg", "amt")
+      val published = new MorSourceNode(root,
+        keys = Seq(MaterializedJoinNode.ViewIdCol))
+        .transform(c, In.empty)("result").select(cols.map(col): _*)
+        .collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      val view = outer.select(cols.map(col): _*)
+        .collect().map(_.toSeq).toSeq.sortBy(_.toString)
+      assert(published == view, s"[vid/$stage] published feed diverged: " +
+        s"got $published want $view")
     }
     check("seed")
     // vid-keyed deletes: removing ONE colliding-shape row must not drag
@@ -4053,7 +4067,13 @@ class NodesSpec extends AnyFunSuite {
     check("delete-rd")
     mj.deleteFromIndex(c, Seq("qm:r").toDF("oid"))
     liveL = liveL.filter("oid != 'qm:r'"); check("delete-dangler")
+    // ONE takedown call mixing a fact that owns two matched view rows
+    // ('am:b': dims 'bm:c' and 'c' share cid 1), a dangler ('q' lost its
+    // only dim 'rd' above) and an id the index never held
+    mj.deleteFromIndex(c, Seq("am:b", "q", "never-held").toDF("oid"))
+    liveL = liveL.filter("oid NOT IN ('am:b', 'q')"); check("delete-mixed")
     agg.unpersistIndex(); mj.unpersistIndex()
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root).getParentFile)
     // NULL fact id: refused loudly at feed materialization, not silently
     // dropped downstream (ADVICE r14)
     val withNull = Seq((Option.empty[String], 1L, 5L), (Some("k"), 1L, 6L))

@@ -734,6 +734,69 @@ class PlanSpec extends AnyFunSuite {
     agg.unpersistIndex(); mj.unpersistIndex()
   }
 
+  test("chained CDC wave shape: Δview feeds reach subscribers as uncut plans " +
+       "(no RDD leaf) and a left_outer MJ → MJ → Agg applyCdcWave runs one " +
+       "SQL execution per state write or group cut — 14 in all") {
+    val spark0 = spark
+    import spark0.implicits._
+    val ctx = Ctx(spark)
+    val facts = (1L to 120L).map(i => (i, i % 13, i * 3)).toDF("oid", "cust", "amt")
+    val custs = (0L to 10L).map(i => (i, i % 4)).toDF("cid", "nat")
+    val nats = (0L to 2L).map(i => (i, s"n$i")).toDF("nid", "nname")
+    val mj1 = new MaterializedJoinNode(leftOn = Seq("cust"), rightOn = Seq("cid"),
+      leftId = "oid", rightId = "cid", joinType = "left_outer")
+    val mj2 = new MaterializedJoinNode(leftOn = Seq("nat"), rightOn = Seq("nid"),
+      leftId = "v1", rightId = "nid", joinType = "left_outer")
+    val agg = new AggIndexNode(groupCols = Seq("nname"), sumCols = Seq("amt"),
+      idCol = MaterializedJoinNode.ViewIdCol)
+    mj1.fit(ctx, In.single("left" -> facts.filter("oid <= 100"), "right" -> custs))
+    mj1.chainJoin(ctx, mj2, nats)
+    mj2.chainAggregate(ctx, agg)
+    val probes = Seq(new FeedProbe, new FeedProbe)
+    mj1.subscribeView(probes(0)); mj2.subscribeView(probes(1))
+    // upserts: 10 re-valued facts (matched and dangling) plus 20 new ones;
+    // deletes: matched facts, dangling facts and an id never held
+    val upserts = facts.filter("oid > 100 OR oid % 10 = 0")
+      .withColumn("amt", $"amt" + 1)
+    val deletes = Seq(3L, 5L, 11L, 12L, 24L, 999L).toDF("oid")
+    var executions = 0
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = synchronized { executions += 1 }
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = synchronized { executions += 1 }
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      mj1.applyCdcWave(ctx, upserts, deletes)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // three calls (delete upserts, insert upserts, delete deletes), each
+    // handing both joins' subscribers one feed frame
+    probes.foreach(p => assert(p.frames.size == 3, s"feed frames: ${p.frames.size}"))
+    probes.flatMap(_.frames).foreach(f => assert(!FeedProbe.hasRddLeaf(f),
+      "a Δview feed must reach its subscriber uncut (its own state write " +
+        s"cuts the lineage):\n${f.queryExecution.analyzed}"))
+    // per call: each join's tombstone (or fact + view segment) writes, the
+    // dashboard's ledger write and its totals cut — 4 + 6 + 4
+    assert(executions == 14, s"chained CDC wave ran $executions SQL executions")
+    // and the dashboard still equals the declarative chain
+    val liveL = facts.filter("oid <= 100 AND oid % 10 != 0")
+      .unionByName(upserts).join(deletes, Seq("oid"), "left_anti")
+    val want = liveL.join(custs, liveL("cust") === custs("cid"), "left_outer")
+      .join(nats, $"nat" === $"nid", "left_outer")
+      .groupBy("nname").agg(org.apache.spark.sql.functions.count("*").as("n_rows"),
+        org.apache.spark.sql.functions.sum("amt").as("sum_amt"))
+      .as[(Option[String], Long, Long)].collect().toSet
+    val probe = nats.select("nname").unionByName(Seq(Option.empty[String]).toDF("nname"))
+    val got = agg.transform(ctx, In.single("probe" -> probe))("result")
+      .select("nname", "n_rows", "sum_amt")
+      .as[(Option[String], Long, Long)].collect().toSet
+    assert(got == want, s"dashboard diverged: got $got want $want")
+    agg.unpersistIndex(); mj2.unpersistIndex(); mj1.unpersistIndex()
+  }
+
   test("SegStore-backed index state stays COLUMNAR: the lexical serve plan " +
        "after insert and delete waves reads cached segments as " +
        "InMemoryTableScan, never row-block RDD scans (the r14 delta-tail " +
