@@ -16,7 +16,7 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     try {
       graft.functions.VecFunctions.register(spark)
-      val wdir = java.nio.file.Files.createTempDirectory("graft_bench_warm_sql")
+      val wdir = graft.nodes.WorkDir("graft_bench_warm_sql")
       spark.range(1000)
         .selectExpr("id", "id % 7 as k", "concat('tok', id % 13, ' tok', id % 5) as text")
         .write.mode("overwrite").parquet(wdir.toString)
@@ -186,7 +186,7 @@ object Bench {
     val willRunStream = SparkEntry.queryOrder
       .filter(n => only.forall(_.contains(n))).exists(_.contains("stream"))
     if (willRunStream) try {
-      val wdir = java.nio.file.Files.createTempDirectory("graft_bench_warm")
+      val wdir = graft.nodes.WorkDir("graft_bench_warm")
       spark.range(8).selectExpr("id", "id % 2 as k").write.mode("overwrite").parquet(wdir.toString)
       val q = spark.readStream.schema("id BIGINT, k BIGINT").parquet(wdir.toString)
         .groupBy("k").count()

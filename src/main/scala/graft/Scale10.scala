@@ -221,8 +221,7 @@ object Scale10 {
             "cast(floor(o_totalprice) as bigint) as price_i")
         val dims = spark.read.parquet(s"$out/customer.parquet")
           .select("c_custkey", "c_mktsegment", "c_nationkey")
-        val work = java.nio.file.Files.createTempDirectory("graft_s213_")
-        org.apache.commons.io.FileUtils.forceDeleteOnExit(work.toFile)
+        val work = WorkDir("graft_s213_")
         val factsRoot = s"$work/facts_mor"; val viewRoot = s"$work/view_mor"
         new SinkNode(factsRoot, atomicPublish = true).transform(ctx,
           In.single("df" -> facts.filter("o_orderkey % 5 != 0")))

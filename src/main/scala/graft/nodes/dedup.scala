@@ -182,8 +182,7 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
               "sparkContext.setCheckpointDir on SHARED storage (HDFS/S3) when " +
               "running on a cluster — a driver-local default would not survive " +
               "executor loss")
-        sc.setCheckpointDir(
-          java.nio.file.Files.createTempDirectory("graft_cc_ckpt_").toString)
+        sc.setCheckpointDir(WorkDir("graft_cc_ckpt_").toString)
       }
       // rounds accumulate one skinny labels copy each under the checkpoint
       // dir (bounded by maxIter); clean the dir between jobs if that matters
@@ -219,7 +218,9 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
       val updated = (if (!halving) {
         // chain hopsPerRound propagation steps LAZILY, cut/count once: the
         // extra hops reuse the same persisted edge layout and cost joins,
-        // not jobs — per-round actions are the local-scale bottleneck
+        // not jobs — per-round actions are the local-scale bottleneck.
+        // `__changed` is the LAST hop's: if it moved no label, its input
+        // labels already were the fixpoint, so the round converged
         var cur = labels.join(neighborMin, Seq("id"), "left")
           .select(col("id"), least(col("label"), col("nlabel")).as("label"),
             (col("nlabel") < col("label")).as("__changed"))
@@ -229,7 +230,7 @@ class ConnectedComponentsNode(idA: String = "id_a", idB: String = "id_b", maxIte
             .groupBy(edges("a").as("id")).agg(min("label").as("nlabel"))
           cur = cur.join(nm, Seq("id"), "left")
             .select(col("id"), least(col("label"), col("nlabel")).as("label"),
-              (col("__changed") || (col("nlabel") < col("label"))).as("__changed"))
+              (col("nlabel") < col("label")).as("__changed"))
           h += 1
         }
         cur

@@ -556,8 +556,7 @@ object CdcApply {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (batchId > last) {
-          val base = spark.read.format(format)
-            .load(AtomicPublish.resolve(spark, root))
+          val base = DatasetResolver.load(spark, format, AtomicPublish.resolve(spark, root))
           val merged = merge.transform(ctx,
             In.single("base" -> base, "updates" -> batch))("result")
           AtomicPublish.publish(spark, root, { target =>
@@ -731,7 +730,7 @@ object MorCdc {
             "via SourceNode time travel, or compact less eagerly")
     }
     resolveOver(spark, root,
-      spark.read.format(format).load(AtomicPublish.resolve(spark, root)),
+      DatasetResolver.load(spark, format, AtomicPublish.resolve(spark, root)),
       keys, format, maxDeltas, asOfBatch)
   }
 
@@ -768,7 +767,7 @@ object MorCdc {
     if (deltas.isEmpty) base
     else {
       val overlay = deltas.map { case (id, path) =>
-        val d = spark.read.format(format).load(path)
+        val d = DatasetResolver.load(spark, format, path)
         // read side tolerates committed ADDITIVE evolution (extra columns
         // surface on the resolved view, base rows null-fill); partial or
         // retyped overlays are refused — see checkOverlaySchema
@@ -873,11 +872,11 @@ object MorCdc {
           val g = AtomicPublish.currentGen(spark, root).getOrElse(-1L)
           if (g != schemaGen) {
             baseSchema =
-              if (g >= 0) Some(spark.read.format(format)
-                .load(AtomicPublish.resolve(spark, root)).schema)
+              if (g >= 0) Some(DatasetResolver.load(spark, format,
+                AtomicPublish.resolve(spark, root)).schema)
               else // unpublished root: a plain dir's loose files still gate;
                    // a bare CDC-bootstrapped root has no base schema yet
-                scala.util.Try(spark.read.format(format).load(root).schema)
+                scala.util.Try(DatasetResolver.load(spark, format, root).schema)
                   .toOption
             schemaGen = g
           }
@@ -1069,9 +1068,9 @@ class MorTailNode(val path: String, val format: String = "parquet",
     // evolution — pre-evolution overlay files null-fill by parquet by-name
     // resolution). A column that first appears in a FUTURE wave needs a
     // tail restart: a running file stream's schema is fixed.
-    val baseSchema = spark.read.format(format).load(gen).schema
+    val baseSchema = DatasetResolver.load(spark, format, gen).schema
     val extras = AtomicPublish.listDeltas(spark, path)
-      .flatMap { case (_, p) => spark.read.format(format).load(p).schema.fields }
+      .flatMap { case (_, p) => DatasetResolver.load(spark, format, p).schema.fields }
       .filterNot(f => f.name == MorCdc.DeletedCol ||
         baseSchema.fieldNames.contains(f.name))
       .distinctBy(_.name)

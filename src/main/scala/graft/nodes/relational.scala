@@ -115,6 +115,12 @@ private[graft] object TsNorm {
 /** Scan: data enters the DAG (reference has none — payloads arrive as
   * in-memory arguments, /root/reference/mldag/mldag.py:523-599). Columns may
   * be pruned at the source for scan efficiency.
+  *
+  * Each transform lists the files afresh, so a re-run sees every file
+  * written since; the schema is inferred only when that listing (or a
+  * reader option, or an inference conf) changed since the last read of the
+  * same path ([[DatasetResolver]]). An unchanged source costs no Spark job
+  * before the DAG's own action. `schemaDdl` reads skip inference entirely.
   */
 class SourceNode(val path: String, val format: String = "parquet", val columns: Seq[String] = Nil,
                  val nanosTsCols: Seq[String] = Nil,
@@ -144,8 +150,6 @@ class SourceNode(val path: String, val format: String = "parquet", val columns: 
     val readSession =
       if (nanosTsCols.isEmpty) ctx.spark
       else SessionIsolation.cloneWith(ctx.spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
-    val reader0 = readSession.read.format(format).options(options)
-    val reader = schemaDdl.fold(reader0)(reader0.schema)
     // published datasets (SinkNode atomicPublish) resolve through their
     // manifest to the committed generation — a half-written next generation
     // is invisible until its atomic pointer swap; an explicit `generation`
@@ -154,7 +158,10 @@ class SourceNode(val path: String, val format: String = "parquet", val columns: 
       case Some(g) => s"$path/gen-$g"
       case None    => AtomicPublish.resolve(readSession, path)
     }
-    val df0 = reader.load(resolved)
+    val df0 = schemaDdl match {
+      case Some(ddl) => readSession.read.format(format).options(options).schema(ddl).load(resolved)
+      case None      => DatasetResolver.load(readSession, format, Seq(resolved), options)
+    }
     val df = nanosTsCols.foldLeft(df0)(TsNorm.normalize)
     Map("result" -> (if (columns.nonEmpty) df.select(columns.map(col): _*) else df))
   }
@@ -693,11 +700,10 @@ class StatsPrunedSourceNode(val path: String,
         Seq(pruneLos(i).map(lo => col(c) >= lit(lo).cast(t)),
             pruneHis(i).map(hi => col(c) <= lit(hi).cast(t))).flatten.reduce(_ && _)
       }.reduce(_ && _)
-    val reader = spark.read.format(format).option("basePath", gen)
     val prunedBase =
-      if (files.isEmpty) { // nothing can match: empty frame, full schema
-        val d = spark.read.format(format).load(gen); d.filter(lit(false))
-      } else reader.load(files: _*)
+      if (files.isEmpty) // nothing can match: empty frame, full schema
+        DatasetResolver.load(spark, format, gen).filter(lit(false))
+      else DatasetResolver.load(spark, format, files, Map("basePath" -> gen))
     // resolve outstanding overlays over the PRUNED base (delta-sized, never
     // worth pruning), then re-apply the row predicate to the resolved view —
     // overlay winners whose values moved outside the range drop out here
@@ -829,7 +835,7 @@ class BloomPrunedSourceNode(val path: String,
     // probe ids to the base column's type before hashing (ADVICE r13);
     // values the cast nulls out can't equal any base row anyway and are
     // dropped from the hash set.
-    val baseType = spark.read.format(format).load(gen).schema
+    val baseType = DatasetResolver.load(spark, format, gen).schema
       .find(_.name == inCol).getOrElse(throw new graft.dag.GraftException(
         s"bloom_pruned_source '$name': column '$inCol' not in the published " +
           s"schema at $gen")).dataType
@@ -855,9 +861,8 @@ class BloomPrunedSourceNode(val path: String,
     val files = stats.filter(hit(col(s"bloom_$inCol"))).select("file")
       .collect().map(_.getString(0)).toSeq
     val prunedBase =
-      if (files.isEmpty) {
-        val d = spark.read.format(format).load(gen); d.filter(lit(false))
-      } else spark.read.format(format).option("basePath", gen).load(files: _*)
+      if (files.isEmpty) DatasetResolver.load(spark, format, gen).filter(lit(false))
+      else DatasetResolver.load(spark, format, files, Map("basePath" -> gen))
     val resolved =
       if (outstanding.isEmpty) prunedBase
       else MorCdc.resolveOver(spark, path, prunedBase, morKeys, format, morMaxDeltas)
@@ -941,7 +946,7 @@ class CompactFilesNode(val path: String,
     val live = AtomicPublish.resolve(ctx.spark, path)
     val (nFiles, totalBytes) = listing(ctx.spark, live)
     val nOut = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    def read(dir: String) = ctx.spark.read.format(format).load(dir)
+    def read(dir: String) = DatasetResolver.load(ctx.spark, format, dir)
     if (skipIfCompact && partitionBy.isEmpty && nFiles <= nOut)
       return Map("result" -> read(live))
     val df = read(live)
@@ -1744,8 +1749,7 @@ class CheckpointNode(val reliable: Boolean = false,
                 "setCheckpointDir on SHARED storage (HDFS/S3) when running " +
                 "on a cluster — a driver-local default would not survive " +
                 "executor loss")
-          sc.setCheckpointDir(
-            java.nio.file.Files.createTempDirectory("graft_ckpt_").toString)
+          sc.setCheckpointDir(WorkDir("graft_ckpt_").toString)
         }
         df.checkpoint(eager)
       } else df.localCheckpoint(eager)

@@ -45,7 +45,7 @@ class StreamSourceNode(val path: String, val format: String = "parquet",
     val readSession =
       if (overrides.isEmpty) ctx.spark
       else SessionIsolation.cloneWith(ctx.spark, overrides: _*)
-    val schema = readSession.read.format(format).load(path).schema
+    val schema = DatasetResolver.load(readSession, format, path).schema
     // File-stream sources require a DIRECTORY; stage single files behind a
     // temp dir with a symlink (no data copy). Staged dirs are cached per
     // target file — repeat transforms in a long-lived session reuse one dir

@@ -5922,6 +5922,124 @@ class NodesSpec extends AnyFunSuite {
     resolvedEqualsLive("third-generation")
     mj.unpersistIndex()
   }
+
+  private def jobsDuring[A](f: => A): (A, Int) =
+    org.apache.spark.TestBus.jobsDuring(spark.sparkContext)(f)
+
+  test("DatasetResolver: a rewritten directory re-infers — an added column, a " +
+       "retyped column and a new file each surface on the next SourceNode read") {
+    import org.apache.spark.sql.types.{IntegerType, StringType}
+    val dir = WorkDir("graft_resolve_rewrite").toString + "/t"
+    def read(opts: Map[String, String] = Map.empty): DataFrame =
+      new SourceNode(dir, options = opts).transform(ctx, In.empty)("result")
+    def write(sel: String*): Unit =
+      spark.range(4).selectExpr(sel: _*).coalesce(1).write.mode("overwrite").parquet(dir)
+    write("id", "cast(id as int) as v")
+    assert(read().schema("v").dataType == IntegerType)
+    assert(jobsDuring(read())._2 == 0, "an unchanged directory must not re-infer")
+    write("id", "cast(id as int) as v", "'x' as w")
+    val (added, j1) = jobsDuring(read())
+    assert(j1 >= 1 && added.columns.toSeq == Seq("id", "v", "w"),
+      s"added column: ${added.columns.toSeq} after $j1 jobs")
+    write("id", "cast(id as string) as v")
+    val retyped = read()
+    assert(retyped.columns.toSeq == Seq("id", "v") && retyped.schema("v").dataType == StringType,
+      s"retyped column: ${retyped.schema}")
+    assert(retyped.as[(Long, String)].collect().toSet == (0L to 3L).map(i => (i, i.toString)).toSet)
+    // a new file beside the old one: merged under mergeSchema, and its rows read
+    val merged = Map("mergeSchema" -> "true")
+    assert(read(merged).columns.toSeq == Seq("id", "v"))
+    spark.range(4, 6).selectExpr("id", "cast(id as string) as v", "id * 2 as z")
+      .coalesce(1).write.mode("append").parquet(dir)
+    val (grown, j2) = jobsDuring(read(merged))
+    assert(j2 >= 1 && grown.columns.toSeq == Seq("id", "v", "z"), s"new file: ${grown.schema}")
+    assert(grown.count() == 6L)
+    assert(jobsDuring(read(merged))._2 == 0)
+  }
+
+  test("DatasetResolver: a new AtomicPublish generation, a changed mergeSchema " +
+       "option and a changed parquet conf each re-infer") {
+    import org.apache.spark.sql.types.{BinaryType, StringType}
+    val root = WorkDir("graft_resolve_pub").toString + "/ds"
+    def read(opts: Map[String, String] = Map.empty): DataFrame =
+      new SourceNode(root, options = opts).transform(ctx, In.empty)("result")
+    def publish(df: DataFrame): Unit =
+      new SinkNode(root, atomicPublish = true).transform(ctx, In.single("df" -> df))
+    publish(Seq((1L, "a")).toDF("id", "v"))
+    assert(read().columns.toSeq == Seq("id", "v"))
+    assert(jobsDuring(read())._2 == 0)
+    publish(Seq((2L, "b", 7)).toDF("id", "v", "n"))
+    val (next, j1) = jobsDuring(read())
+    assert(j1 >= 1 && next.columns.toSeq == Seq("id", "v", "n"),
+      s"a new generation must re-infer: ${next.schema} after $j1 jobs")
+    assert(jobsDuring(read(Map("mergeSchema" -> "true")))._2 >= 1,
+      "a changed reader option is a different inference")
+    // binaryAsString is read by inference only: the BinaryType cached for one
+    // session must not answer a session whose inference yields StringType
+    val dir = WorkDir("graft_resolve_conf").toString
+    writeParquetMr(s"$dir/b.parquet", "message b { required int64 id; required binary bin; }") {
+      (f, w) => w.write(f.newGroup().append("id", 1L).append("bin", "hi"))
+    }
+    assert(DatasetResolver.load(spark, "parquet", dir).schema("bin").dataType == BinaryType)
+    val asString = SessionIsolation.freshClone(spark, "spark.sql.parquet.binaryAsString" -> "true")
+    val s = DatasetResolver.load(asString, "parquet", dir)
+    assert(s.schema("bin").dataType == StringType)
+    assert(s.select("bin").head().getString(0) == "hi")
+    assert(DatasetResolver.load(spark, "parquet", dir).schema("bin").dataType == BinaryType)
+  }
+
+  /** Writes one parquet file with parquet-mr's example writer — physical
+    * types Spark's own writer never produces (no Spark schema in the footer). */
+  private def writeParquetMr(path: String, schema: String)(
+      rows: (org.apache.parquet.example.data.simple.SimpleGroupFactory,
+             org.apache.parquet.hadoop.ParquetWriter[org.apache.parquet.example.data.Group]) => Unit): Unit = {
+    val t = org.apache.parquet.schema.MessageTypeParser.parseMessageType(schema)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path)).withType(t).build()
+    try rows(new org.apache.parquet.example.data.simple.SimpleGroupFactory(t), w) finally w.close()
+  }
+
+  test("DatasetResolver: a nanosTsCols source still yields micros timestamps on a " +
+       "cached read, and the plain session still refuses the TIMESTAMP(NANOS) column") {
+    import org.apache.spark.sql.types.TimestampType
+    val dir = WorkDir("graft_resolve_nanos").toString
+    val t0 = 1700000000123456789L
+    writeParquetMr(s"$dir/e.parquet",
+        "message e { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }") {
+      (f, w) => (0 until 5).foreach(i =>
+        w.write(f.newGroup().append("event_id", i.toLong).append("ts", t0 + i * 1000001L)))
+    }
+    def events(): DataFrame =
+      new SourceNode(dir, nanosTsCols = Seq("ts")).transform(ctx, In.empty)("result")
+    val first = events()
+    val (second, jobs) = jobsDuring(events())
+    assert(jobs == 0, s"a repeat nanos read ran $jobs jobs")
+    val want = (0 until 5).map(i => java.time.Instant.ofEpochSecond(0L, (t0 + i * 1000001L) / 1000 * 1000))
+    Seq(first, second).foreach { d =>
+      assert(d.schema("ts").dataType == TimestampType)
+      assert(d.orderBy("event_id").select("ts").collect().map(_.getTimestamp(0).toInstant).toSeq == want)
+    }
+    // the epoch-nanos LongType the isolated session inferred stays keyed to
+    // its nanosAsLong conf
+    intercept[Exception](DatasetResolver.load(spark, "parquet", dir))
+  }
+
+  test("DatasetResolver: a repeat MorCdc.read over k overlays runs no schema job") {
+    val root = WorkDir("graft_resolve_mor").toString + "/ds"
+    new SinkNode(root, atomicPublish = true).transform(ctx,
+      In.single("df" -> Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v")))
+    Seq(Seq((2L, "b1", false)), Seq((3L, "", true)), Seq((4L, "d", false)))
+      .zipWithIndex.foreach { case (rows, i) =>
+        AtomicPublish.publishDelta(spark, root, i.toLong, { t =>
+          rows.toDF("id", "v", MorCdc.DeletedCol).coalesce(1).write.parquet(t)
+        })
+      }
+    val want = Set((1L, "a"), (2L, "b1"), (4L, "d"))
+    assert(MorCdc.read(spark, root, Seq("id")).as[(Long, String)].collect().toSet == want)
+    val (again, jobs) = jobsDuring(MorCdc.read(spark, root, Seq("id")))
+    assert(jobs == 0, s"a repeat read over 3 overlays ran $jobs jobs before its action")
+    assert(again.as[(Long, String)].collect().toSet == want)
+  }
 }
 
 object NodesSpec {

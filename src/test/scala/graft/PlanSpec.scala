@@ -820,4 +820,26 @@ class PlanSpec extends AnyFunSuite {
       s"post-wave state must never degrade to row-block RDD scans:\n$p")
     inv.unpersistIndex()
   }
+
+  private def jobsDuring[A](f: => A): (A, Int) =
+    org.apache.spark.TestBus.jobsDuring(spark.sparkContext)(f)
+
+  test("SourceNode: a second build of the same DAG runs no Spark job before " +
+       "its action — the schema is inferred once per unchanged file set") {
+    val path = WorkDir("graft_resolve_plan").toString + "/t"
+    spark.range(60).selectExpr("id", "id % 3 as k").coalesce(2).write.parquet(path)
+    def build(): org.apache.spark.sql.DataFrame = {
+      val d = new Dag()
+      d.add(new SourceNode(path)) >> FilterNode("k = 1") >> d.output("result")
+      d.transform(Ctx(spark)).outputs("result")
+    }
+    val (first, j1) = jobsDuring(build())
+    assert(j1 >= 1, "the first read of a file set infers its schema")
+    val (second, j2) = jobsDuring(build())
+    assert(j2 == 0, s"a repeat build ran $j2 Spark jobs before its action")
+    assert(second.schema == first.schema)
+    assert(planOf(second).replaceAll("#\\d+", "#") == planOf(first).replaceAll("#\\d+", "#"),
+      "a cached-schema read must plan exactly like an inferring one")
+    assert(second.count() == 20L)
+  }
 }
