@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the driver programs (Bench, Verify, PlanDump,
-  * Census, Scale10), so every program plans and runs on the contract
+  * Scale10), so every program plans and runs on the contract
   * config: `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
   * partitions as cores, UTC session time, no UI, and AQE coalescing by
   * advisory size.

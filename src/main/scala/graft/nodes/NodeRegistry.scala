@@ -52,7 +52,7 @@ object NodeRegistry {
     register("mor_tail")(p => new MorTailNode(p.str("path"), p.str("format"),
       p.m.get("maxFilesPerTrigger").collect {
         case n if n != null => n.toString.toDouble.toInt },
-      p.boolOr("followCompactions", false)))
+      p.boolOr("followCompactions", false), p.strOpt("waveIdCol")))
     register("bloom_pruned_source")(p => new BloomPrunedSourceNode(
       p.str("path"), p.str("inCol"), p.str("format"), p.strs("morKeys"),
       p.intOr("morMaxDeltas", 64),

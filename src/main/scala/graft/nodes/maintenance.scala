@@ -385,41 +385,6 @@ trait BandedBucketIndex extends StoredIndex {
   }
 }
 
-/** Streaming index MAINTENANCE — the live-crawl shape the streaming
-  * SERVING twins (q144/q145) deliberately leave out: there the index is
-  * refreshed batch-side and the QUERIES stream; here the DELTA streams and
-  * the index itself is refreshed per micro-batch via foreachBatch.
-  *
-  * Why foreachBatch and not a stateful streaming plan: `updateIndex` is
-  * already the exact delta-sized merge (bit-identical statistics for the
-  * lexical index, frozen-centroid append for ANN, capped bucket union for
-  * near-dup), and foreachBatch hands each micro-batch over as a plain
-  * batch DataFrame — so the SAME code path serves batch and streaming
-  * refresh, with no state store at all. Index state lives in the node
-  * (persisted frames + parquet save/compact), not in Spark streaming
-  * state, which is what makes it queryable BETWEEN micro-batches.
-  *
-  * Delivery contract: foreachBatch is at-least-once on restart; the
-  * `lastAppliedBatch` guard (see IncrementalIndex) skips redelivered
-  * batch ids, and `saveFitted`/`loadFitted` carry the watermark, giving
-  * exactly-once maintenance across restarts when the caller checkpoints
-  * (`checkpoint`) and saves the index at or after stream commit points.
-  *
-  * Ordering contract: micro-batches apply in batch-id order on one driver
-  * thread (Structured Streaming serializes foreachBatch invocations), so
-  * order-sensitive guards (MinHashIndexNode's bucket cap) behave exactly
-  * as the same sequence of batch updateIndex calls would. For the
-  * order-INSENSITIVE families (InvertedIndexNode's exact stats,
-  * IvfIndexNode's frozen-centroid append) the final index is provably
-  * independent of how the stream was split into micro-batches — which is
-  * what lets q147/q148 pin streamed maintenance against the one-shot
-  * batch oracles.
-  *
-  * Scale: each micro-batch does delta-sized work (sketch/tokenize/assign
-  * the batch, one merge against the persisted index); `compactEvery` on
-  * the node bounds lineage growth across a long-running stream exactly as
-  * it does across batch generations.
-  */
 /** Streaming serving through a node's BATCH plan, one micro-batch at a
   * time — the foreachBatch pattern the in-stream serving plans point at
   * when they refuse: per-query rank windows, broadcast probe selection at
@@ -448,15 +413,57 @@ object StreamServing {
       transform: DataFrame => DataFrame,
       checkpoint: Option[String] = None,
       trigger: Trigger = Trigger.AvailableNow(),
-      await: Boolean = true): StreamingQuery = {
-    if (!queries.isStreaming)
-      throw new GraftException(
-        "StreamServing.serveStream needs a streaming query frame — run the batch plan directly otherwise")
-    val writer = queries.writeStream
-      .queryName(s"serve_${System.nanoTime()}")
+      await: Boolean = true): StreamingQuery =
+    StreamDriver.run("StreamServing.serveStream", queries,
+      "a streaming query frame — run the batch plan directly otherwise",
+      "serve", checkpoint, trigger, await) { (batch, batchId) =>
+      transform(batch).write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+    }
+}
+
+/** The one foreachBatch driver every streaming entry point runs on
+  * (serving, copy-on-write and merge-on-read CDC apply, index maintenance):
+  * the streaming-frame check, a unique query name, trigger, checkpoint,
+  * start and await.
+  *
+  * The optional [[StreamDriver.ReplayGuard]] adds the replay rule the three
+  * durable appliers share. Structured Streaming redelivers the last
+  * uncommitted batch after a restart under the SAME id, so a batch at or
+  * below the durable watermark is skipped, not re-applied. Batch ids are
+  * only stable when the source offsets are checkpointed: a checkpoint-less
+  * re-invocation renumbers every file from batch 0, and the skip would then
+  * drop NEW waves by position. Such a call is refused once the watermark
+  * shows applied batches, unless the caller acknowledges positional
+  * skipping. */
+private[nodes] object StreamDriver {
+  /** `holder` names the state that carries the applied batches; `watermark`
+    * is re-read for every batch (the apply step advances it). */
+  final case class ReplayGuard(holder: String, watermark: () => Long,
+                               positionalReplaySkipOk: Boolean)
+
+  /** `who` names the entry point in its refusals; `needs` completes the
+    * not-streaming one ("`who` needs `needs`"). */
+  def run(who: String, frame: DataFrame, needs: String, queryName: String,
+          checkpoint: Option[String], trigger: Trigger, await: Boolean,
+          guard: Option[ReplayGuard] = None)(
+      apply: (DataFrame, Long) => Unit): StreamingQuery = {
+    if (!frame.isStreaming) throw new GraftException(s"$who needs $needs")
+    guard.foreach { g =>
+      val last = g.watermark()
+      if (checkpoint.isEmpty && last >= 0 && !g.positionalReplaySkipOk)
+        throw new GraftException(
+          s"$who: ${g.holder} already carries applied batches up to id " +
+            s"$last but no checkpoint was given — a fresh source renumbers " +
+            "batches from 0 and the replay guard would skip new waves by " +
+            "POSITION (data loss unless file ordering is stable). Pass the " +
+            "original checkpointLocation (exactly-once), or " +
+            "acknowledge positional skipping with positionalReplaySkipOk = true")
+    }
+    val writer = frame.writeStream
+      .queryName(s"${queryName}_${System.nanoTime()}")
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        transform(batch).write.mode("overwrite").parquet(s"$outPath/batch-$batchId")
+        if (guard.forall(batchId > _.watermark())) apply(batch, batchId)
       }
       .trigger(trigger)
     checkpoint.foreach(writer.option("checkpointLocation", _))
@@ -493,18 +500,6 @@ object StreamServing {
   * long-running apply loop.
   */
 object CdcApply {
-  import org.apache.spark.sql.SparkSession
-
-  private def appliedBatch(spark: SparkSession, root: String): Long =
-    AtomicPublish.currentGen(spark, root) match {
-      case None => -1L
-      case Some(g) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$root/gen-$g/_cdc")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) -1L
-        else spark.read.parquet(marker.toString).collect().head.getLong(0)
-    }
-
   /** Apply a streaming CDC frame to the published dataset at `root`.
     * `merge` supplies the upsert/tombstone semantics (keys, deleteCol,
     * duplicate policy); `format` is the published dataset's storage format
@@ -519,14 +514,9 @@ object CdcApply {
     * generations' profile tables is the daily "did this CDC wave shift the
     * corpus?" gate, answered without re-reading any generation.
     *
-    * Checkpoint contract (the maintainFromStream rule): the applied-batch
-    * marker is durable, but batch IDS are only stable when the source
-    * offsets are checkpointed — a checkpoint-less re-invocation renumbers
-    * every file from batch 0, and the replay guard would then skip NEW CDC
-    * waves by POSITION (silent data loss). A checkpoint-less call against a
-    * root that already carries applied batches is therefore REFUSED unless
-    * the caller acknowledges positional skipping via
-    * `positionalReplaySkipOk = true`. */
+    * Checkpoint contract: the [[StreamDriver]] replay guard over the `_cdc`
+    * marker — a checkpoint-less call against a root that already carries
+    * applied batches is refused unless `positionalReplaySkipOk = true`. */
   def applyStream(
       ctx: Ctx,
       root: String,
@@ -538,48 +528,27 @@ object CdcApply {
       format: String = "parquet",
       numericProfiles: Seq[NumericProfileNode.Spec] = Nil,
       positionalReplaySkipOk: Boolean = false): StreamingQuery = {
-    if (!updates.isStreaming)
-      throw new GraftException(
-        "CdcApply.applyStream needs a streaming updates frame — for a batch delta run MergeNode directly")
     val spark = ctx.spark
-    import spark.implicits._
-    var last = appliedBatch(spark, root)
-    if (checkpoint.isEmpty && last >= 0 && !positionalReplaySkipOk)
-      throw new GraftException(
-        s"CdcApply.applyStream: $root already carries applied CDC batches up " +
-          s"to id $last but no checkpoint was given — a fresh source renumbers " +
-          "batches from 0 and the replay guard would skip new waves by " +
-          "POSITION (data loss). Pass the original checkpointLocation, or " +
-          "acknowledge positional skipping with positionalReplaySkipOk = true")
-    val writer = updates.writeStream
-      .queryName(s"cdc_apply_${System.nanoTime()}")
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > last) {
-          val base = DatasetResolver.load(spark, format, AtomicPublish.resolve(spark, root))
-          val merged = merge.transform(ctx,
-            In.single("base" -> base, "updates" -> batch))("result")
-          AtomicPublish.publish(spark, root, { target =>
-            merged.write.format(format).save(target)
-            // marker inside the generation -> commits with the manifest swap
-            Seq(batchId).toDF("batch_id").coalesce(1)
-              .write.parquet(s"$target/_cdc")
-            // profile the just-written files (one scan) rather than
-            // re-executing the merge plan a second time
-            if (numericProfiles.nonEmpty)
-              new NumericProfileNode(numericProfiles)
-                .transform(ctx, In.single("df" ->
-                  spark.read.format(format).load(target)))("result")
-                .coalesce(1).write.mode("overwrite").parquet(s"$target/_numprofile")
-          })
-          last = batchId
-        }
-      }
-      .trigger(trigger)
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    if (await) q.awaitTermination()
-    q
+    var last = AtomicPublish.foldedThrough(spark, root)
+    StreamDriver.run("CdcApply.applyStream", updates,
+      "a streaming updates frame — for a batch delta run MergeNode directly",
+      "cdc_apply", checkpoint, trigger, await,
+      Some(StreamDriver.ReplayGuard(root, () => last, positionalReplaySkipOk))) {
+      (batch, batchId) =>
+        val base = DatasetResolver.load(spark, format, AtomicPublish.resolve(spark, root))
+        val merged = merge.transform(ctx,
+          In.single("base" -> base, "updates" -> batch))("result")
+        AtomicPublish.publish(spark, root, { target =>
+          merged.write.format(format).save(target)
+          // marker inside the generation -> commits with the manifest swap
+          AtomicPublish.writeCdcWatermark(spark, target, batchId)
+          // profile the just-written files (one scan) rather than
+          // re-executing the merge plan a second time
+          AtomicPublish.writeNumericProfile(ctx, target, numericProfiles,
+            spark.read.format(format).load(target))
+        })
+        last = batchId
+    }
   }
 }
 
@@ -721,7 +690,7 @@ object MorCdc {
     // pre-state here — refuse toward generation time travel (the rollback
     // generation keeps one fold of history).
     asOfBatch.foreach { n =>
-      val folded = foldedThrough(spark, root)
+      val folded = AtomicPublish.foldedThrough(spark, root)
       if (n < folded)
         throw new GraftException(
           s"MorCdc.read: asOfBatch = $n predates the last compaction " +
@@ -733,18 +702,6 @@ object MorCdc {
       DatasetResolver.load(spark, format, AtomicPublish.resolve(spark, root)),
       keys, format, maxDeltas, asOfBatch)
   }
-
-  /** Highest batch id folded into the current generation's base, -1 if none
-    * (the generation's `_cdc` marker). */
-  private def foldedThrough(spark: SparkSession, root: String): Long =
-    AtomicPublish.currentGen(spark, root) match {
-      case None => -1L
-      case Some(g) =>
-        val marker = new org.apache.hadoop.fs.Path(s"$root/gen-$g/_cdc")
-        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(marker)) -1L
-        else spark.read.parquet(marker.toString).collect().head.getLong(0)
-    }
 
   /** Overlay resolution over a CALLER-SUPPLIED base frame — the composition
     * point for data skipping (StatsPrunedSourceNode prunes base FILES, then
@@ -792,7 +749,7 @@ object MorCdc {
   /** Highest batch id already durable at `root` — committed overlays or a
     * compacted generation's `_cdc` marker. */
   private def appliedBatch(spark: SparkSession, root: String): Long =
-    (foldedThrough(spark, root) +:
+    (AtomicPublish.foldedThrough(spark, root) +:
       AtomicPublish.listDeltas(spark, root).map(_._1)).max
 
   /** Apply a streaming CDC frame merge-on-read. Same signature family as
@@ -804,12 +761,8 @@ object MorCdc {
     * just-written fold (overlay commits stay O(delta) — profiling every
     * overlay would re-read the base per wave, exactly what MoR avoids).
     *
-    * Checkpoint contract: same as [[CdcApply.applyStream]] — the durable
-    * applied-batch watermark (committed `delta-N` dirs / `_cdc` marker)
-    * only composes with STABLE batch ids; a checkpoint-less re-invocation
-    * renumbers from 0 and would silently skip new waves by position, so it
-    * is refused on a root with applied batches unless the caller passes
-    * `positionalReplaySkipOk = true`.
+    * Checkpoint contract: [[CdcApply.applyStream]]'s, over the watermark of
+    * committed `delta-N` dirs and the `_cdc` marker.
     *
     * Schema evolution (`allowEvolution`): a wave whose schema ADDS columns
     * the base lacks is refused by default and committed when the flag is
@@ -839,18 +792,8 @@ object MorCdc {
       layoutBy: Seq[String] = Nil,
       layoutPartitions: Option[Int] = None,
       layoutZOrder: Boolean = false): StreamingQuery = {
-    if (!updates.isStreaming)
-      throw new GraftException(
-        "MorCdc.applyStream needs a streaming updates frame — for a batch delta commit one overlay via AtomicPublish.publishDelta")
     val spark = ctx.spark
     var last = appliedBatch(spark, root)
-    if (checkpoint.isEmpty && last >= 0 && !positionalReplaySkipOk)
-      throw new GraftException(
-        s"MorCdc.applyStream: $root already carries applied CDC batches up " +
-          s"to id $last but no checkpoint was given — a fresh source renumbers " +
-          "batches from 0 and the replay guard would skip new waves by " +
-          "POSITION (data loss). Pass the original checkpointLocation, or " +
-          "acknowledge positional skipping with positionalReplaySkipOk = true")
     // write-side evolution gate state: the base schema is fixed per
     // generation, so cache it and re-read only after a fold (one footer
     // read per generation, not a per-batch listing). The sentinel must not
@@ -861,44 +804,38 @@ object MorCdc {
     // compaction establishes it, and the read side validates per overlay.
     var schemaGen = Long.MinValue
     var baseSchema: Option[org.apache.spark.sql.types.StructType] = None
-    val writer = updates.writeStream
-      .queryName(s"mor_cdc_${System.nanoTime()}")
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > last) {
-          val delta = normalizeBatch(batch, merge)
-          // compare against the LIVE base schema (a mid-stream compaction
-          // may have folded earlier evolution in)
-          val g = AtomicPublish.currentGen(spark, root).getOrElse(-1L)
-          if (g != schemaGen) {
-            baseSchema =
-              if (g >= 0) Some(DatasetResolver.load(spark, format,
-                AtomicPublish.resolve(spark, root)).schema)
-              else // unpublished root: a plain dir's loose files still gate;
-                   // a bare CDC-bootstrapped root has no base schema yet
-                scala.util.Try(DatasetResolver.load(spark, format, root).schema)
-                  .toOption
-            schemaGen = g
-          }
-          baseSchema.foreach(checkOverlaySchema(_, delta.schema,
-            s"MorCdc.applyStream($root, batch $batchId)",
-            allowNew = allowEvolution))
-          AtomicPublish.publishDelta(spark, root, batchId, { target =>
-            delta.write.format(format).save(target)
-          })
-          if (compactEvery > 0 &&
-              AtomicPublish.listDeltas(spark, root).size >= compactEvery)
-            compact(ctx, root, merge.keys, batchId, format, numericProfiles,
-              statsColumns, bloomColumns, layoutBy = layoutBy,
-              layoutPartitions = layoutPartitions, layoutZOrder = layoutZOrder)
-          last = batchId
+    StreamDriver.run("MorCdc.applyStream", updates,
+      "a streaming updates frame — for a batch delta commit one overlay via AtomicPublish.publishDelta",
+      "mor_cdc", checkpoint, trigger, await,
+      Some(StreamDriver.ReplayGuard(root, () => last, positionalReplaySkipOk))) {
+      (batch, batchId) =>
+        val delta = normalizeBatch(batch, merge)
+        // compare against the LIVE base schema (a mid-stream compaction
+        // may have folded earlier evolution in)
+        val g = AtomicPublish.currentGen(spark, root).getOrElse(-1L)
+        if (g != schemaGen) {
+          baseSchema =
+            if (g >= 0) Some(DatasetResolver.load(spark, format,
+              AtomicPublish.resolve(spark, root)).schema)
+            else // unpublished root: a plain dir's loose files still gate;
+                 // a bare CDC-bootstrapped root has no base schema yet
+              scala.util.Try(DatasetResolver.load(spark, format, root).schema)
+                .toOption
+          schemaGen = g
         }
-      }
-      .trigger(trigger)
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    if (await) q.awaitTermination()
-    q
+        baseSchema.foreach(checkOverlaySchema(_, delta.schema,
+          s"MorCdc.applyStream($root, batch $batchId)",
+          allowNew = allowEvolution))
+        AtomicPublish.publishDelta(spark, root, batchId, { target =>
+          delta.write.format(format).save(target)
+        })
+        if (compactEvery > 0 &&
+            AtomicPublish.listDeltas(spark, root).size >= compactEvery)
+          compact(ctx, root, merge.keys, batchId, format, numericProfiles,
+            statsColumns, bloomColumns, layoutBy = layoutBy,
+            layoutPartitions = layoutPartitions, layoutZOrder = layoutZOrder)
+        last = batchId
+    }
   }
 
   /** Fold the resolved view into a full next generation (the amortized
@@ -929,7 +866,6 @@ object MorCdc {
               // stay selective, not just the leading column's
               layoutZOrder: Boolean = false): Long = {
     val spark = ctx.spark
-    import spark.implicits._
     if (layoutZOrder && layoutBy.size != 2 && layoutBy.size != 3)
       throw new GraftException(
         s"MorCdc.compact: layoutZOrder needs 2 or 3 layoutBy columns " +
@@ -955,15 +891,11 @@ object MorCdc {
       if (statsColumns.nonEmpty || bloomColumns.nonEmpty)
         FileStatsWriter.write(spark, target, format, Map.empty,
           statsColumns, bloomColumns, bloomExpectedItems, bloomFpp)
-      Seq(throughBatch).toDF("batch_id").coalesce(1)
-        .write.parquet(s"$target/_cdc")
+      AtomicPublish.writeCdcWatermark(spark, target, throughBatch)
       // profile the just-written fold (one scan of the new generation),
       // the CdcApply convention — commits with the manifest swap
-      if (numericProfiles.nonEmpty)
-        new NumericProfileNode(numericProfiles)
-          .transform(ctx, In.single("df" ->
-            spark.read.format(format).load(target)))("result")
-          .coalesce(1).write.mode("overwrite").parquet(s"$target/_numprofile")
+      AtomicPublish.writeNumericProfile(ctx, target, numericProfiles,
+        spark.read.format(format).load(target))
     })
   }
 }
@@ -1112,6 +1044,41 @@ class MorTailNode(val path: String, val format: String = "parquet",
   }
 }
 
+/** Streaming index MAINTENANCE — the live-crawl shape the streaming
+  * SERVING twins (q144/q145) deliberately leave out: there the index is
+  * refreshed batch-side and the QUERIES stream; here the DELTA streams and
+  * the index itself is refreshed per micro-batch via foreachBatch.
+  *
+  * Why foreachBatch and not a stateful streaming plan: `updateIndex` is
+  * already the exact delta-sized merge (bit-identical statistics for the
+  * lexical index, frozen-centroid append for ANN, capped bucket union for
+  * near-dup), and foreachBatch hands each micro-batch over as a plain
+  * batch DataFrame — so the SAME code path serves batch and streaming
+  * refresh, with no state store at all. Index state lives in the node
+  * (persisted frames + parquet save/compact), not in Spark streaming
+  * state, which is what makes it queryable BETWEEN micro-batches.
+  *
+  * Delivery contract: the [[StreamDriver]] replay guard over
+  * `lastAppliedBatch` (see IncrementalIndex), which `saveFitted`/`loadFitted`
+  * carry — exactly-once maintenance across restarts when the caller
+  * checkpoints (`checkpoint`) and saves the index at or after stream commit
+  * points.
+  *
+  * Ordering contract: micro-batches apply in batch-id order on one driver
+  * thread (Structured Streaming serializes foreachBatch invocations), so
+  * order-sensitive guards (MinHashIndexNode's bucket cap) behave exactly
+  * as the same sequence of batch updateIndex calls would. For the
+  * order-INSENSITIVE families (InvertedIndexNode's exact stats,
+  * IvfIndexNode's frozen-centroid append) the final index is provably
+  * independent of how the stream was split into micro-batches — which is
+  * what lets q147/q148 pin streamed maintenance against the one-shot
+  * batch oracles.
+  *
+  * Scale: each micro-batch does delta-sized work (sketch/tokenize/assign
+  * the batch, one merge against the persisted index); `compactEvery` on
+  * the node bounds lineage growth across a long-running stream exactly as
+  * it does across batch generations.
+  */
 object IndexMaintenance {
   /** Drive `idx.updateIndex` (and, with `deleteCol`, `idx.deleteFromIndex`)
     * from a streaming delta, one micro-batch at a time. Returns the started
@@ -1129,15 +1096,9 @@ object IndexMaintenance {
     *
     * Pass a `checkpoint` for any maintenance that may re-drain the same
     * source (restarts, periodic AvailableNow re-runs over a growing
-    * directory): the checkpoint makes batch ids a stable property of the
-    * SOURCE OFFSETS. Without one, a re-invocation renumbers all files from
-    * batch 0 and the replay guard then skips the first `lastAppliedBatch+1`
-    * batches by POSITION — correct only while file ordering (mod time) is
-    * stable. Because that positional skip is easy to misuse, a
-    * checkpoint-less call on an index that has ALREADY folded in streamed
-    * batches (`lastAppliedBatch >= 0`) is REFUSED unless the caller
-    * explicitly acknowledges positional skipping via
-    * `positionalReplaySkipOk = true`.
+    * directory). The [[StreamDriver]] replay guard refuses a checkpoint-less
+    * call on an index that has already folded in streamed batches
+    * (`lastAppliedBatch >= 0`) unless `positionalReplaySkipOk = true`.
     */
   def maintainFromStream(
       idx: IncrementalIndex,
@@ -1162,84 +1123,67 @@ object IndexMaintenance {
       // given WITHOUT netResolveKeys is simply dropped before applying.
       netResolveKeys: Seq[String] = Nil,
       waveCol: Option[String] = None): StreamingQuery = {
-    if (!delta.isStreaming)
-      throw new GraftException(
-        "maintainFromStream needs a streaming delta — for a batch delta call updateIndex directly")
     if (netResolveKeys.nonEmpty && (waveCol.isEmpty || deleteCol.isEmpty))
       throw new GraftException(
         "maintainFromStream: netResolveKeys needs BOTH waveCol (the " +
           "within-batch wave order — MorTailNode's waveIdCol) and deleteCol " +
           "(net-resolution only makes sense for CDC feeds, where a later " +
           "wave supersedes a key's earlier versions)")
-    if (checkpoint.isEmpty && idx.lastAppliedBatch >= 0 && !positionalReplaySkipOk)
-      throw new GraftException(
-        s"maintainFromStream: index already applied streamed batches up to " +
-          s"id ${idx.lastAppliedBatch} but no checkpoint was given — a fresh " +
-          "source renumbers batches from 0 and the replay guard would skip " +
-          "them by POSITION, which is only correct while file ordering is " +
-          "stable. Pass the original checkpointLocation (exactly-once), or " +
-          "acknowledge positional skipping with positionalReplaySkipOk = true")
-    val writer = delta.writeStream
-      .queryName(s"maintain_${System.nanoTime()}")
-      .outputMode("append")
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        if (batchId > idx.lastAppliedBatch) {
-          import org.apache.spark.sql.functions.{assert_true, col, coalesce,
-            concat_ws, lag, lit, max, row_number, when}
-          // net-resolve a multi-overlay batch to each key's latest version
-          // (wave order), then drop the wave stamp either way
-          val batch = (netResolveKeys, waveCol) match {
-            case (ks, Some(wc)) if ks.nonEmpty =>
-              val byKey = org.apache.spark.sql.expressions.Window
-                .partitionBy(ks.map(col): _*)
-              val w = byKey.orderBy(col(wc).desc)
-              // within-wave duplicate detector (ADVICE r18/r19/r20):
-              // net-resolution is only unambiguous while keys are unique
-              // WITHIN a wave (the feed contract) — a producer violation
-              // would otherwise pick a nondeterministic survivor SILENTLY.
-              // In wc-desc order two rows of one (key, wave) are adjacent,
-              // so `lag(wc) <=> wc` flags a duplicate in ANY wave, NULL
-              // stamps included (the row_number guard keeps a key's first
-              // row, whose lag is NULL, from matching a NULL stamp). The
-              // flag is spread over the key's partition and asserted on
-              // the SURVIVING row: a guard on the discarded rows is dead
-              // code — the optimizer propagates `rn = 1` into it and drops
-              // it. Both windows share the key partitioning: no exchange.
-              batch0.withColumn("__mor_rn", row_number().over(w))
-                .withColumn("__mor_dup", when(col("__mor_rn") > 1 &&
-                  (lag(col(wc), 1).over(w) <=> col(wc)),
-                  coalesce(col(wc).cast("string"), lit("NULL"))))
-                .withColumn("__mor_dup", max(col("__mor_dup")).over(byKey))
-                .filter(col("__mor_rn") === 1)
-                .filter(col("__mor_dup").isNull || assert_true(lit(false),
-                  concat_ws("", lit("maintainFromStream: duplicate key " +
-                    "within one wave violates the net-resolution contract " +
-                    "(keys must be unique per overlay) — offending key: "),
-                    concat_ws(",", ks.map(k => col(k).cast("string")): _*),
-                    lit(" wave: "), col("__mor_dup"))).isNotNull)
-                .drop("__mor_rn", "__mor_dup", wc)
-            case (_, Some(wc)) => batch0.drop(wc)
-            case _ => batch0
-          }
-          deleteCol match {
-            case None => idx.updateIndex(ctx, batch)
-            case Some(c) =>
-              val flag = coalesce(col(c).cast("boolean"), lit(false))
-              val upserts = batch.filter(!flag).drop(c)
-              val deletes = batch.filter(flag).drop(c)
-              // upsert = replace (drop any superseded version, then
-              // append), tombstones last — as ONE index wave where the
-              // family supports it (applyCdcWave doc), the three-call
-              // sequence otherwise
-              idx.applyCdcWave(ctx, upserts, deletes)
-          }
-          idx.lastAppliedBatch = batchId
+    StreamDriver.run("maintainFromStream", delta,
+      "a streaming delta — for a batch delta call updateIndex directly",
+      "maintain", checkpoint, trigger, await, Some(StreamDriver.ReplayGuard(
+        "the index", () => idx.lastAppliedBatch, positionalReplaySkipOk))) {
+      (batch0, batchId) =>
+        import org.apache.spark.sql.functions.{assert_true, col, coalesce,
+          concat_ws, lag, lit, max, row_number, when}
+        // net-resolve a multi-overlay batch to each key's latest version
+        // (wave order), then drop the wave stamp either way
+        val batch = (netResolveKeys, waveCol) match {
+          case (ks, Some(wc)) if ks.nonEmpty =>
+            val byKey = org.apache.spark.sql.expressions.Window
+              .partitionBy(ks.map(col): _*)
+            val w = byKey.orderBy(col(wc).desc)
+            // within-wave duplicate detector (ADVICE r18/r19/r20):
+            // net-resolution is only unambiguous while keys are unique
+            // WITHIN a wave (the feed contract) — a producer violation
+            // would otherwise pick a nondeterministic survivor SILENTLY.
+            // In wc-desc order two rows of one (key, wave) are adjacent,
+            // so `lag(wc) <=> wc` flags a duplicate in ANY wave, NULL
+            // stamps included (the row_number guard keeps a key's first
+            // row, whose lag is NULL, from matching a NULL stamp). The
+            // flag is spread over the key's partition and asserted on
+            // the SURVIVING row: a guard on the discarded rows is dead
+            // code — the optimizer propagates `rn = 1` into it and drops
+            // it. Both windows share the key partitioning: no exchange.
+            batch0.withColumn("__mor_rn", row_number().over(w))
+              .withColumn("__mor_dup", when(col("__mor_rn") > 1 &&
+                (lag(col(wc), 1).over(w) <=> col(wc)),
+                coalesce(col(wc).cast("string"), lit("NULL"))))
+              .withColumn("__mor_dup", max(col("__mor_dup")).over(byKey))
+              .filter(col("__mor_rn") === 1)
+              .filter(col("__mor_dup").isNull || assert_true(lit(false),
+                concat_ws("", lit("maintainFromStream: duplicate key " +
+                  "within one wave violates the net-resolution contract " +
+                  "(keys must be unique per overlay) — offending key: "),
+                  concat_ws(",", ks.map(k => col(k).cast("string")): _*),
+                  lit(" wave: "), col("__mor_dup"))).isNotNull)
+              .drop("__mor_rn", "__mor_dup", wc)
+          case (_, Some(wc)) => batch0.drop(wc)
+          case _ => batch0
         }
-      }
-      .trigger(trigger)
-    checkpoint.foreach(writer.option("checkpointLocation", _))
-    val q = writer.start()
-    if (await) q.awaitTermination()
-    q
+        deleteCol match {
+          case None => idx.updateIndex(ctx, batch)
+          case Some(c) =>
+            val flag = coalesce(col(c).cast("boolean"), lit(false))
+            val upserts = batch.filter(!flag).drop(c)
+            val deletes = batch.filter(flag).drop(c)
+            // upsert = replace (drop any superseded version, then
+            // append), tombstones last — as ONE index wave where the
+            // family supports it (applyCdcWave doc), the three-call
+            // sequence otherwise
+            idx.applyCdcWave(ctx, upserts, deletes)
+        }
+        idx.lastAppliedBatch = batchId
+    }
   }
 }

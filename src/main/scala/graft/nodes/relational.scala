@@ -170,7 +170,9 @@ object SourceNode {
   def parquet(path: String, columns: String*): SourceNode =
     new SourceNode(path, "parquet", columns)
   /** Convenience for the testdata layout: table name under an sf dir.
-    * `events.ts` is written as TIMESTAMP(NANOS) by the generator.
+    * `events.ts` is read through the nanos-as-long session and normalized
+    * by `TsNorm`, so either file vintage yields micros timestamps: parquet
+    * TIMESTAMP(NANOS) or timestamp[us] (the sf0.001–sf0.1 testdata).
     */
   def table(sfDir: String, table: String, columns: String*): SourceNode =
     new SourceNode(s"$sfDir/$table.parquet", "parquet", columns,
@@ -332,6 +334,40 @@ private[graft] object AtomicPublish {
     next
   }
 
+  // ---- side tables written into a claimed generation before its manifest
+  // swap (so they commit with its data; scans skip underscore dirs) -------
+
+  /** The CDC fold watermark of generation dir `genDir`: the highest stream
+    * batch id its data already absorbed (its `_cdc` marker), -1 without one. */
+  private[graft] def cdcWatermark(spark: org.apache.spark.sql.SparkSession,
+                                  genDir: String): Long = {
+    val marker = new Path(s"$genDir/_cdc")
+    if (!marker.getFileSystem(conf(spark)).exists(marker)) -1L
+    else spark.read.parquet(marker.toString).collect().head.getLong(0)
+  }
+
+  /** [[cdcWatermark]] of the CURRENT generation; -1 on an unpublished root. */
+  private[graft] def foldedThrough(spark: org.apache.spark.sql.SparkSession,
+                                   root: String): Long =
+    currentGen(spark, root).fold(-1L)(g => cdcWatermark(spark, s"$root/gen-$g"))
+
+  /** Stamp the claimed generation dir `target` with fold watermark `batchId`. */
+  private[graft] def writeCdcWatermark(spark: org.apache.spark.sql.SparkSession,
+                                       target: String, batchId: Long): Unit = {
+    import spark.implicits._
+    Seq(batchId).toDF("batch_id").coalesce(1).write.parquet(s"$target/_cdc")
+  }
+
+  /** Stamp the claimed generation dir `target` with the NumericProfileNode
+    * histogram table of `profiled` (`_numprofile/`); a no-op without specs,
+    * and `profiled` is only built when there are some. */
+  private[graft] def writeNumericProfile(ctx: graft.dag.Ctx, target: String,
+                                         specs: Seq[NumericProfileNode.Spec],
+                                         profiled: => DataFrame): Unit =
+    if (specs.nonEmpty)
+      new NumericProfileNode(specs).transform(ctx, In.single("df" -> profiled))("result")
+        .coalesce(1).write.mode("overwrite").parquet(s"$target/_numprofile")
+
   // ---- MERGE-ON-READ delta overlays (MorCdc) ----------------------------
   // A delta overlay is an O(delta)-sized directory committed INSIDE the
   // live generation at `<gen>/_deltas/delta-<id>` (underscore-prefixed, so
@@ -377,9 +413,7 @@ private[graft] object AtomicPublish {
     val fs = deltas.getFileSystem(conf(spark))
     val target = new Path(deltas, s"delta-$id")
     if (fs.exists(target)) return // replayed batch: already committed
-    val marker = new Path(s"$genDir/_cdc")
-    if (fs.exists(marker) &&
-        spark.read.parquet(marker.toString).collect().head.getLong(0) >= id)
+    if (cdcWatermark(spark, genDir) >= id)
       return // replayed batch: already folded into this generation's base
     // a fold takes the gen-(cur+1) claim BEFORE listing deltas (compact →
     // acquireClaim), so "claim outstanding" means an in-flight publisher
@@ -502,10 +536,7 @@ class SinkNode(val path: String, val format: String = "parquet", val mode: Strin
           new SketchProfileNode(profileColumns)
             .transform(ctx, In.single("df" -> df))("result")
             .coalesce(1).write.mode("overwrite").parquet(s"$target/_profile")
-        if (numericProfiles.nonEmpty)
-          new NumericProfileNode(numericProfiles)
-            .transform(ctx, In.single("df" -> df))("result")
-            .coalesce(1).write.mode("overwrite").parquet(s"$target/_numprofile")
+        AtomicPublish.writeNumericProfile(ctx, target, numericProfiles, df)
         if (statsColumns.nonEmpty || bloomColumns.nonEmpty)
           FileStatsWriter.write(df.sparkSession, target, format, options,
             statsColumns, bloomColumns, bloomExpectedItems, bloomFpp)
@@ -651,66 +682,73 @@ class StatsPrunedSourceNode(val path: String,
     "pruneCols" -> pruneCols, "pruneLos" -> pruneLos.map(_.orNull),
     "pruneHis" -> pruneHis.map(_.orNull), "format" -> format,
     "morKeys" -> morKeys, "morMaxDeltas" -> morMaxDeltas)
-  override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    val spark = ctx.spark
+  override def transform(ctx: Ctx, in: In): Map[String, DataFrame] =
+    Map("result" -> PrunedPublishedRead(ctx.spark, "stats", name, path, format,
+      morKeys, morMaxDeltas) { (_, stats) =>
+      // every declared range: its lo/hi tests per column, then across columns
+      def ranges(ge: (String, String) => Column, le: (String, String) => Column): Column =
+        pruneCols.indices.map { i =>
+          val c = pruneCols(i)
+          require(stats.columns.contains(s"min_$c"),
+            s"stats_pruned_source '$name': no committed stats for column '$c'")
+          (pruneLos(i).map(ge(c, _)) ++ pruneHis(i).map(le(c, _))).reduce(_ && _)
+        }.reduce(_ && _)
+      // a file survives iff every declared range can intersect its [min, max]
+      val keep = ranges(
+        (c, lo) => col(s"max_$c") >= lit(lo).cast(stats.schema(s"max_$c").dataType),
+        (c, hi) => col(s"min_$c") <= lit(hi).cast(stats.schema(s"min_$c").dataType))
+      val files = stats.filter(keep).select("file").collect().map(_.getString(0)).toSeq
+      // the SAME predicates as a row filter on the RESOLVED view — correctness
+      // never depends on how aggressively the stats pruned, and overlay
+      // winners whose values moved outside the range drop out here
+      (files, df => df.filter(ranges(
+        (c, lo) => col(c) >= lit(lo).cast(df.schema(c).dataType),
+        (c, hi) => col(c) <= lit(hi).cast(df.schema(c).dataType))))
+    })
+}
+
+/** The published-read skeleton both data-skipping sources share: resolve the
+  * committed generation, require its `_filestats` manifest, refuse a
+  * merge-on-read root with outstanding overlays unless `morKeys` resolve
+  * them, scan only the files `select(gen, stats)` keeps (an empty selection
+  * is an empty frame with the full schema), resolve the overlays over that
+  * pruned base (delta-sized, never worth pruning), and finish with the
+  * selection's exact row step — both skipping rules only ever drop files
+  * that provably hold no qualifying row, and the row step makes the answer
+  * pruning-independent. `kind` names the node (`<kind>_pruned_source`) and
+  * its publish option (`<kind>Columns`). */
+private[nodes] object PrunedPublishedRead {
+  def apply(spark: org.apache.spark.sql.SparkSession, kind: String, name: String,
+            path: String, format: String, morKeys: Seq[String], morMaxDeltas: Int)(
+      select: (String, DataFrame) => (Seq[String], DataFrame => DataFrame)): DataFrame = {
+    val who = s"${kind}_pruned_source '$name'"
     val gen = AtomicPublish.resolve(spark, path)
     val statsPath = new org.apache.hadoop.fs.Path(s"$gen/_filestats")
     val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(statsPath))
       throw new graft.dag.GraftException(
-        s"stats_pruned_source '$name': no _filestats under $gen — publish with " +
-          "SinkNode(atomicPublish = true, statsColumns = ...) first")
+        s"$who: no _filestats under $gen — publish with " +
+          s"SinkNode(atomicPublish = true, ${kind}Columns = ...) first")
     // a merge-on-read root with OUTSTANDING overlays cannot be served from
     // base stats alone — the overlays carry newer/deleted rows the stats
     // know nothing about; silently reading the stale base would be a
     // correctness trap. With `morKeys` the overlays are resolved on top of
-    // the pruned base (exact — class doc); without them, refuse loudly.
+    // the pruned base (exact); without them, refuse loudly.
     val outstanding = AtomicPublish.listDeltas(spark, path)
     if (outstanding.nonEmpty && morKeys.isEmpty)
       throw new graft.dag.GraftException(
-        s"stats_pruned_source '$name': ${outstanding.size} outstanding " +
-          s"merge-on-read overlays at $path — a stats-pruned read would serve " +
-          "the STALE base. Pass morKeys to resolve the overlays on top of " +
-          "the pruned base, compact (MorCdc.compact) and re-publish with " +
-          "statsColumns, or read the live view via MorSourceNode")
-    val stats = spark.read.parquet(statsPath.toString)
-    def bound(c: String, side: String): org.apache.spark.sql.Column = {
-      val sc = s"${side}_$c"
-      require(stats.columns.contains(sc),
-        s"stats_pruned_source '$name': no committed stats for column '$c'")
-      col(sc)
-    }
-    // a file survives iff every declared range can intersect its [min, max]
-    val keepCond = pruneCols.indices.map { i =>
-      val c = pruneCols(i)
-      val parts = Seq(
-        pruneLos(i).map(lo => bound(c, "max") >= lit(lo).cast(stats.schema(s"max_$c").dataType)),
-        pruneHis(i).map(hi => bound(c, "min") <= lit(hi).cast(stats.schema(s"min_$c").dataType))
-      ).flatten
-      parts.reduce(_ && _)
-    }.reduce(_ && _)
-    val files = stats.filter(keepCond).select("file")
-      .collect().map(_.getString(0)).toSeq
-    // the SAME predicates as a row filter — correctness never depends on
-    // how aggressively the stats pruned
-    def rowCond(df: DataFrame): org.apache.spark.sql.Column =
-      pruneCols.indices.map { i =>
-        val c = pruneCols(i)
-        val t = df.schema(c).dataType
-        Seq(pruneLos(i).map(lo => col(c) >= lit(lo).cast(t)),
-            pruneHis(i).map(hi => col(c) <= lit(hi).cast(t))).flatten.reduce(_ && _)
-      }.reduce(_ && _)
+        s"$who: ${outstanding.size} outstanding merge-on-read overlays at " +
+          s"$path — a $kind-pruned read would serve the STALE base. Pass " +
+          "morKeys to resolve the overlays on top of the pruned base, compact " +
+          s"(MorCdc.compact) and re-publish with ${kind}Columns, or read the " +
+          "live view via MorSourceNode")
+    val (files, exact) = select(gen, spark.read.parquet(statsPath.toString))
     val prunedBase =
       if (files.isEmpty) // nothing can match: empty frame, full schema
         DatasetResolver.load(spark, format, gen).filter(lit(false))
       else DatasetResolver.load(spark, format, files, Map("basePath" -> gen))
-    // resolve outstanding overlays over the PRUNED base (delta-sized, never
-    // worth pruning), then re-apply the row predicate to the resolved view —
-    // overlay winners whose values moved outside the range drop out here
-    val df =
-      if (outstanding.isEmpty) prunedBase
-      else MorCdc.resolveOver(spark, path, prunedBase, morKeys, format, morMaxDeltas)
-    Map("result" -> df.filter(rowCond(df)))
+    exact(if (outstanding.isEmpty) prunedBase
+      else MorCdc.resolveOver(spark, path, prunedBase, morKeys, format, morMaxDeltas))
   }
 }
 
@@ -808,66 +846,48 @@ class BloomPrunedSourceNode(val path: String,
     "morMaxDeltas" -> morMaxDeltas, "maxIds" -> maxIds)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     val spark = ctx.spark
-    val gen = AtomicPublish.resolve(spark, path)
-    val statsPath = new org.apache.hadoop.fs.Path(s"$gen/_filestats")
-    val fs = statsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(statsPath))
-      throw new graft.dag.GraftException(
-        s"bloom_pruned_source '$name': no _filestats under $gen — publish with " +
-          "SinkNode(atomicPublish = true, bloomColumns = ...) first")
-    val outstanding = AtomicPublish.listDeltas(spark, path)
-    if (outstanding.nonEmpty && morKeys.isEmpty)
-      throw new graft.dag.GraftException(
-        s"bloom_pruned_source '$name': ${outstanding.size} outstanding " +
-          s"merge-on-read overlays at $path — a bloom-pruned read would serve " +
-          "the STALE base. Pass morKeys to resolve the overlays on top of " +
-          "the pruned base, or read the live view via MorSourceNode")
-    val stats = spark.read.parquet(statsPath.toString)
-    require(stats.columns.contains(s"bloom_$inCol"),
-      s"bloom_pruned_source '$name': no committed bloom for column '$inCol' — " +
-        s"publish with bloomColumns = Seq(\"$inCol\")")
     val ids = in("ids")
-    // the per-file blooms hold xxhash64 of the PUBLISHED column's native
-    // type, and Spark's xxhash64 is type-sensitive (int, bigint and string
-    // hash differently) — a probe frame with a differently-typed id column
-    // would silently produce bloom FALSE NEGATIVES (every file skipped,
-    // rows lost, masked by the type-coercing semi-join below). Cast the
-    // probe ids to the base column's type before hashing (ADVICE r13);
-    // values the cast nulls out can't equal any base row anyway and are
-    // dropped from the hash set.
-    val baseType = DatasetResolver.load(spark, format, gen).schema
-      .find(_.name == inCol).getOrElse(throw new graft.dag.GraftException(
-        s"bloom_pruned_source '$name': column '$inCol' not in the published " +
-          s"schema at $gen")).dataType
-    val idsNorm = ids
-      .select(col(ids.columns.head).cast(baseType).as(inCol))
-      .filter(col(inCol).isNotNull).distinct()
-    // the driver-side id hashes: bounded, loud beyond maxIds — a takedown
-    // set is 10k-1M ids; an unbounded probe set belongs in a plain join
-    val idHashes = idsNorm.select(expr(s"xxhash64($inCol)").as("__h"))
-      .limit(math.min(maxIds, Int.MaxValue - 2L).toInt + 1)
-      .collect().map(_.getLong(0))
-    if (idHashes.length > maxIds)
-      throw new graft.dag.GraftException(
-        s"bloom_pruned_source '$name': probe set exceeds maxIds = $maxIds — " +
-          "per-file bloom probing is for bounded point sets (takedown/audit); " +
-          "use a plain semi-join for corpus-sized probes")
-    val bcHashes = spark.sparkContext.broadcast(idHashes)
-    val hit = org.apache.spark.sql.functions.udf { (bytes: Array[Byte]) =>
-      val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
-        new java.io.ByteArrayInputStream(bytes))
-      bcHashes.value.exists(bf.mightContainLong)
-    }
-    val files = stats.filter(hit(col(s"bloom_$inCol"))).select("file")
-      .collect().map(_.getString(0)).toSeq
-    val prunedBase =
-      if (files.isEmpty) DatasetResolver.load(spark, format, gen).filter(lit(false))
-      else DatasetResolver.load(spark, format, files, Map("basePath" -> gen))
-    val resolved =
-      if (outstanding.isEmpty) prunedBase
-      else MorCdc.resolveOver(spark, path, prunedBase, morKeys, format, morMaxDeltas)
-    // the exact membership filter — bloom false positives vanish here
-    Map("result" -> resolved.join(broadcast(idsNorm), Seq(inCol), "left_semi"))
+    Map("result" -> PrunedPublishedRead(spark, "bloom", name, path, format,
+      morKeys, morMaxDeltas) { (gen, stats) =>
+      require(stats.columns.contains(s"bloom_$inCol"),
+        s"bloom_pruned_source '$name': no committed bloom for column '$inCol' — " +
+          s"publish with bloomColumns = Seq(\"$inCol\")")
+      // the per-file blooms hold xxhash64 of the PUBLISHED column's native
+      // type, and Spark's xxhash64 is type-sensitive (int, bigint and string
+      // hash differently) — a probe frame with a differently-typed id column
+      // would silently produce bloom FALSE NEGATIVES (every file skipped,
+      // rows lost, masked by the type-coercing semi-join below). Cast the
+      // probe ids to the base column's type before hashing (ADVICE r13);
+      // values the cast nulls out can't equal any base row anyway and are
+      // dropped from the hash set.
+      val baseType = DatasetResolver.load(spark, format, gen).schema
+        .find(_.name == inCol).getOrElse(throw new graft.dag.GraftException(
+          s"bloom_pruned_source '$name': column '$inCol' not in the published " +
+            s"schema at $gen")).dataType
+      val idsNorm = ids
+        .select(col(ids.columns.head).cast(baseType).as(inCol))
+        .filter(col(inCol).isNotNull).distinct()
+      // the driver-side id hashes: bounded, loud beyond maxIds — a takedown
+      // set is 10k-1M ids; an unbounded probe set belongs in a plain join
+      val idHashes = idsNorm.select(expr(s"xxhash64($inCol)").as("__h"))
+        .limit(math.min(maxIds, Int.MaxValue - 2L).toInt + 1)
+        .collect().map(_.getLong(0))
+      if (idHashes.length > maxIds)
+        throw new graft.dag.GraftException(
+          s"bloom_pruned_source '$name': probe set exceeds maxIds = $maxIds — " +
+            "per-file bloom probing is for bounded point sets (takedown/audit); " +
+            "use a plain semi-join for corpus-sized probes")
+      val bcHashes = spark.sparkContext.broadcast(idHashes)
+      val hit = org.apache.spark.sql.functions.udf { (bytes: Array[Byte]) =>
+        val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(
+          new java.io.ByteArrayInputStream(bytes))
+        bcHashes.value.exists(bf.mightContainLong)
+      }
+      val files = stats.filter(hit(col(s"bloom_$inCol"))).select("file")
+        .collect().map(_.getString(0)).toSeq
+      // the exact membership filter — bloom false positives vanish here
+      (files, _.join(broadcast(idsNorm), Seq(inCol), "left_semi"))
+    })
   }
 }
 

@@ -3018,27 +3018,66 @@ class NodesSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$work/cdc")
     def cdcStream = spark.readStream
       .schema("id BIGINT, v STRING, is_delete BOOLEAN").parquet(s"$work/cdc")
+    // every driver refuses with the same key words
+    def refused(e: GraftException): Unit = {
+      assert(e.getMessage.contains("POSITION"))
+      assert(e.getMessage.contains("positionalReplaySkipOk"))
+    }
     // --- copy-on-write root
     val cowRoot = s"$work/cow"
     new SinkNode(cowRoot, atomicPublish = true).transform(c, In.single("df" -> rows))
     // first drain (fresh root, no applied batches yet): checkpoint-less OK
     CdcApply.applyStream(c, cowRoot, cdcStream, merge)
-    val e1 = intercept[GraftException] {
+    refused(intercept[GraftException] {
       CdcApply.applyStream(c, cowRoot, cdcStream, merge)
-    }
-    assert(e1.getMessage.contains("POSITION"))
-    // explicit acknowledgment (or a checkpoint) unblocks
+    })
+    // explicit acknowledgment (or a checkpoint) unblocks; the renumbered
+    // batch 0 is at the watermark, so the re-drain commits no generation
+    val cowGen = AtomicPublish.currentGen(spark, cowRoot)
     CdcApply.applyStream(c, cowRoot, cdcStream, merge, positionalReplaySkipOk = true)
+    assert(AtomicPublish.currentGen(spark, cowRoot) == cowGen)
     // --- merge-on-read root
     val morRoot = s"$work/mor"
     new SinkNode(morRoot, atomicPublish = true).transform(c, In.single("df" -> rows))
     MorCdc.applyStream(c, morRoot, cdcStream, merge, compactEvery = 0)
-    val e2 = intercept[GraftException] {
+    refused(intercept[GraftException] {
       MorCdc.applyStream(c, morRoot, cdcStream, merge, compactEvery = 0)
-    }
-    assert(e2.getMessage.contains("POSITION"))
+    })
+    val morDeltas = AtomicPublish.listDeltas(spark, morRoot)
+    MorCdc.applyStream(c, morRoot, cdcStream, merge, compactEvery = 0,
+      positionalReplaySkipOk = true)
+    assert(AtomicPublish.listDeltas(spark, morRoot) == morDeltas)
     MorCdc.applyStream(c, morRoot, cdcStream, merge, compactEvery = 0,
       checkpoint = Some(s"$work/ckpt_mor"))
+    assert(AtomicPublish.listDeltas(spark, morRoot) == morDeltas)
+    // --- a maintainFromStream index
+    val idx = new InvertedIndexNode(idCol = "id", textCol = "v", k = 5,
+      maxDfFrac = 1.0)
+    idx.fit(c, In.single("corpus" -> rows))
+    IndexMaintenance.maintainFromStream(idx, c, cdcStream,
+      deleteCol = Some("is_delete"))
+    refused(intercept[GraftException] {
+      IndexMaintenance.maintainFromStream(idx, c, cdcStream,
+        deleteCol = Some("is_delete"))
+    })
+    val queries = Seq((100L, "upd"), (101L, "v2")).toDF("query_id", "text")
+    def served: Set[(Long, Long, Long)] =
+      idx.transform(c, In.single("queries" -> queries))("result")
+        .select("query_id", "id", "score").as[(Long, Long, Long)].collect().toSet
+    val (idxMark, idxRows) = (idx.lastAppliedBatch, served)
+    assert(idxMark >= 0 && idxRows.exists(_._2 == 1L))
+    IndexMaintenance.maintainFromStream(idx, c, cdcStream,
+      deleteCol = Some("is_delete"), positionalReplaySkipOk = true)
+    assert(idx.lastAppliedBatch == idxMark && served == idxRows)
+    // a batch frame is refused by every stream driver before anything runs
+    Seq[() => Any](
+      () => StreamServing.serveStream(c, rows, s"$work/serve", identity),
+      () => CdcApply.applyStream(c, cowRoot, rows, merge),
+      () => MorCdc.applyStream(c, morRoot, rows, merge),
+      () => IndexMaintenance.maintainFromStream(idx, c, rows)).foreach { f =>
+      assert(intercept[GraftException](f()).getMessage.contains("needs a streaming"))
+    }
+    idx.unpersistIndex()
   }
 
   test("StatsPrunedSourceNode: file-stats pruning skips non-qualifying files, " +

@@ -352,7 +352,8 @@ class SerializationSpec extends AnyFunSuite {
        "checkpoint barrier/mor-source asOfBatch/merge allowEvolution") {
     val d = new Dag("r13kinds")
     val mt = d.add(new MorTailNode("/tmp/morpub", format = "orc",
-      maxFilesPerTrigger = Some(3), followCompactions = true))
+      maxFilesPerTrigger = Some(3), followCompactions = true,
+      waveIdCol = Some("__wave")))
     val cp = d.add(new CheckpointNode(eager = false))
     val ms = d.add(new MorSourceNode("/tmp/morpub", keys = Seq("id"),
       asOfBatch = Some(7L)))
@@ -360,7 +361,8 @@ class SerializationSpec extends AnyFunSuite {
     val d2 = DagJson.fromJson(DagJson.toJson(d))
     val mt2 = d2.node(mt.name).asInstanceOf[MorTailNode]
     assert(mt2.path == "/tmp/morpub" && mt2.format == "orc" &&
-      mt2.maxFilesPerTrigger.contains(3) && mt2.followCompactions)
+      mt2.maxFilesPerTrigger.contains(3) && mt2.followCompactions &&
+      mt2.waveIdCol.contains("__wave"))
     val cp2 = d2.node(cp.name).asInstanceOf[CheckpointNode]
     assert(!cp2.eager && !cp2.reliable)
     assert(d2.node(ms.name).asInstanceOf[MorSourceNode].asOfBatch.contains(7L))
