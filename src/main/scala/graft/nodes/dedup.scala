@@ -1,7 +1,7 @@
 package graft.nodes
 
 import graft.dag._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
 
 /** Deduplication node family for LLM-data pipelines (north-star scope).
@@ -10,6 +10,124 @@ import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, lit}
   * key, (3) per-bucket candidate verification. No driver-side state, no
   * collect, no UDFs.
   */
+
+/** The near-duplicate core: each signature, bucket-cap, pair and verify
+  * kernel of the one-shot near-dup nodes (MinHash, SimHash, Hamming, n-gram
+  * Jaccard, embedding LSH, SemDeDup) and the banded index families
+  * (MinHashIndexNode, DHashIndexNode), defined once. A caller chooses its
+  * signature and projects its output; every decision in between lives here,
+  * so e.g. MinHashDedupNode and MinHashIndexNode sign identical text
+  * identically by construction (the q101 identity oracle).
+  */
+private[nodes] object NearDup {
+  /** One representative (min id) per content key — the exact-duplicate
+    * collapse before pairing: a k-way duplicated family would otherwise
+    * yield k^2/2 near-dup pairs. */
+  def collapseExact(df: DataFrame, idCol: String, key: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.row_number
+    val w = Window.partitionBy(key).orderBy(col(idCol).asc)
+    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** The byte-identical normalized-text key (md5) the text nodes collapse on. */
+  def textKey(textCol: String): Column =
+    expr(s"md5(cast(regexp_replace(lower(trim($textCol)), '\\\\s+', ' ') as binary))")
+
+  /** (outId, outSh, extraCols...): hashed word-`shingleN`-gram sets
+    * (`shingle_hashes` longs, not strings) of the tokenized text; documents
+    * with an empty set are dropped. */
+  def shingleSketch(df: DataFrame, idCol: String, textCol: String, shingleN: Int,
+                    outId: String, outSh: String, extraCols: Seq[String] = Nil): DataFrame =
+    df.withColumn("__toks", expr(TextExprs.tokensExpr(textCol)))
+      .withColumn(outSh, expr(s"shingle_hashes(__toks, $shingleN)"))
+      .filter(s"size($outSh) > 0")
+      .select((col(idCol).as(outId) +: col(outSh) +: extraCols.map(col)): _*)
+
+  /** (keep..., band, band_hash): the `minhash_bands` LSH keys of a shingle
+    * set column, one row per band. */
+  def bandKeys(sh: DataFrame, shCol: String, numHashes: Int, bands: Int,
+               keep: Seq[String]): DataFrame =
+    sh.select(keep.map(col) :+ expr(s"minhash_bands($shCol, $numHashes, $bands)").as("__bands"): _*)
+      .selectExpr(keep :+ "posexplode(__bands) as (band, band_hash)": _*)
+
+  /** Explode a 64-bit column `__h` into pigeonhole chunk keys (__c, __v):
+    * nChunks FLOOR-width bit chunks via unsigned shifts (sign bit never
+    * smears); a full-width chunk (nChunks = 1) is the hash itself. Two
+    * hashes within `nChunks - 1` bit flips MUST agree on at least one whole
+    * chunk: flips in the ≤ 63 - nChunks*w uncovered top bits never break a
+    * chunk agreement, and the covered flips are ≤ nChunks - 1 across
+    * nChunks chunks. The width must be the FLOOR of 64/nChunks: a ceil
+    * width shifts the last chunk past bit 63 for non-divisors of 64, long
+    * shifts wrap mod 64, and that chunk silently DUPLICATED chunk 0's bits —
+    * pairs at distance nChunks - 1 were missed (PropertySpec random oracle,
+    * maxHamming = 8, round 16). */
+  def chunkKeys(df: DataFrame, nChunks: Int): DataFrame = {
+    import org.apache.spark.sql.functions.{array, explode, struct}
+    val w = 64 / nChunks
+    def chunkVal(c: Int): String =
+      if (w >= 64) "__h"
+      else s"shiftrightunsigned(__h, ${c * w}) & ${(1L << w) - 1}L"
+    df.withColumn("__ck", explode(array((0 until nChunks).map { c =>
+        struct(lit(c).as("c"), expr(chunkVal(c)).as("v"))
+      }: _*)))
+      .withColumn("__c", col("__ck.c")).withColumn("__v", col("__ck.v"))
+      .drop("__ck")
+  }
+
+  /** `rows` restricted to buckets (rows sharing `key`) of at most `cap`
+    * rows: a bucket of B rows yields B^2/2 pairs, so an over-cap bucket (a
+    * boilerplate family, a stopword shingle) is dropped WHOLE — its pairs
+    * add cost, not signal, and other buckets usually still surface them.
+    * groupBy + semi-join, never a count over a window (which materializes
+    * every bucket). */
+  def capBuckets(rows: DataFrame, key: Seq[String], cap: Long): DataFrame = {
+    val ok = rows.groupBy(key.map(col): _*).count()
+      .filter(col("count") <= cap).select(key.map(col): _*)
+    rows.join(ok, key)
+  }
+
+  /** Candidate pairs of one blocked frame: its self-join on `key`, each
+    * unordered pair as (outA < outB), the `carry` columns riding along as
+    * (source, name on the A side, name on the B side); the key is dropped.
+    * `dedupe` keeps one row per pair when pairs can share several blocks
+    * (bands, chunks, shingles, LSH tables); a partition (one block per row)
+    * needs none. */
+  def blockedPairs(blocked: DataFrame, key: Seq[String], idCol: String,
+                   carry: Seq[(String, String, String)] = Nil, dedupe: Boolean,
+                   outA: String = "id_a", outB: String = "id_b"): DataFrame = {
+    def side(out: String, name: ((String, String, String)) => String) =
+      blocked.select(key.map(col) ++
+        (col(idCol).as(out) +: carry.map(c => col(c._1).as(name(c)))): _*)
+    val pairs = side(outA, _._2).join(side(outB, _._3), key)
+      .filter(col(outA) < col(outB))
+      .drop(key: _*)
+    if (dedupe) pairs.dropDuplicates(outA, outB) else pairs
+  }
+
+  /** (idA, idB, jaccard) of candidates whose hashed shingle sets `shA`,
+    * `shB` reach `threshold`. */
+  def jaccardAtLeast(cand: DataFrame, shA: String, shB: String, threshold: Double,
+                     idA: String, idB: String): DataFrame =
+    cand.withColumn("jaccard",
+        expr(s"cast(size(array_intersect($shA, $shB)) as double) / size(array_union($shA, $shB))"))
+      .filter(col("jaccard") >= threshold)
+      .select(idA, idB, "jaccard")
+
+  /** (id_a, id_b, jaccard) of deduped candidate pairs reaching `threshold`:
+    * each pair's sets are joined back from `sets` (idCol, shCol) only after
+    * the pair dedupe, so the pair join stays skinny and each Jaccard is
+    * computed once. */
+  def pairJaccardAtLeast(pairs: DataFrame, sets: DataFrame, idCol: String, shCol: String,
+                         threshold: Double): DataFrame =
+    jaccardAtLeast(pairs
+      .join(sets.select(col(idCol).as("id_a"), col(shCol).as("sh_a")), Seq("id_a"))
+      .join(sets.select(col(idCol).as("id_b"), col(shCol).as("sh_b")), Seq("id_b")),
+      "sh_a", "sh_b", threshold, "id_a", "id_b")
+
+  /** Hamming distance of two 64-bit hash columns (an int). */
+  def hamming(a: String, b: String): Column = expr(s"bit_count($a ^ $b)")
+}
 
 /** Exact dedup keyed on arbitrary expressions. Deterministic survivor: the
   * min `idCol` row per key (plain `dropDuplicates` keeps an arbitrary first
@@ -56,7 +174,6 @@ class MinHashDedupNode(
     val collapseExact: Boolean = true) // collapse byte-identical texts first (see below)
   extends Node {
   require(numHashes % bands == 0, "numHashes must divide into bands")
-  private val rowsPerBand = numHashes / bands
   override protected def defaultName: String = "minhash_dedup"
   val inputs = Seq(Port("df"))
   val outputs = Seq(Port("result"))
@@ -64,7 +181,6 @@ class MinHashDedupNode(
   override def jsonParams: Map[String, Any] = Map("idCol" -> idCol, "textCol" -> textCol, "numHashes" -> numHashes, "bands" -> bands, "shingleN" -> shingleN, "jaccardThreshold" -> jaccardThreshold, "maxBucket" -> maxBucket, "collapseExact" -> collapseExact)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     graft.functions.VecFunctions.register(ctx.spark)
-    val toks = TextExprs.tokensExpr(textCol)
     // Exact-duplicate collapse FIRST: a k-way duplicated document family
     // yields k^2/2 near-dup pairs — quadratic OUTPUT no pipeline can afford
     // (the 100x probe hit 27M pairs / 522 s without this). Collapsing
@@ -72,52 +188,22 @@ class MinHashDedupNode(
     // near-dup cost a function of DISTINCT content; exact duplicates are
     // ExactDedupNode's (cheap, linear) job.
     val base =
-      if (collapseExact) MinHashDedupNode.collapse(in("df"), idCol, textCol)
+      if (collapseExact) NearDup.collapseExact(in("df"), idCol, NearDup.textKey(textCol))
       else in("df")
     // Shingles are HASHED longs, not strings (`shingle_hashes` mixes word
     // hashes — no concat_ws/slice interpreted per element, ~10x cheaper, and
     // the verify-join payload shrinks from ~300 strings to ~300 longs per
     // doc). Materialized behind a cache boundary so CollapseProject cannot
     // inline split() into downstream consumers (re-tokenizing per element).
-    val sh = ctx.track(base
-      .select(col(idCol), expr(s"shingle_hashes($toks, $shingleN)").as("__shingles"))
-      .filter("size(__shingles) > 0"))
+    val sh = ctx.track(NearDup.shingleSketch(base, idCol, textCol, shingleN, idCol, "__shingles"))
     // Candidate generation is SKINNY — ids and band key only. Shingle arrays
     // never enter the self-join shuffle; they are joined back per unique pair.
-    val signed = sh.select(col(idCol),
-      expr(s"minhash_bands(__shingles, $numHashes, $bands)").as("__bands"))
-    val buckets0 = signed.selectExpr(idCol, "posexplode(__bands) as (band, band_hash)")
-    // bucket-size guard: a bucket of B docs yields B^2/2 pairs; buckets past
-    // maxBucket are boilerplate families whose pairs add cost, not signal
-    val okBuckets = buckets0.groupBy("band", "band_hash").count()
-      .filter(col("count") <= maxBucket).select("band", "band_hash")
-    val buckets = ctx.track(buckets0.join(okBuckets, Seq("band", "band_hash")))
-    val a = buckets.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val b = buckets.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
-    val candidates = a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val verified = candidates
-      .join(sh.select(col(idCol).as("id_a"), col("__shingles").as("sh_a")), Seq("id_a"))
-      .join(sh.select(col(idCol).as("id_b"), col("__shingles").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        expr("cast(size(array_intersect(sh_a, sh_b)) as double) / size(array_union(sh_a, sh_b))"))
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select("id_a", "id_b", "jaccard")
-    Map("result" -> verified)
-  }
-}
-
-object MinHashDedupNode {
-  /** One representative (min id) per byte-identical normalized text. */
-  private[nodes] def collapse(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions.row_number
-    val w = Window
-      .partitionBy(expr(s"md5(cast(regexp_replace(lower(trim($textCol)), '\\\\s+', ' ') as binary))"))
-      .orderBy(col(idCol).asc)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    val key = Seq("band", "band_hash")
+    val buckets = ctx.track(NearDup.capBuckets(
+      NearDup.bandKeys(sh, "__shingles", numHashes, bands, Seq(idCol)), key, maxBucket))
+    val candidates = NearDup.blockedPairs(buckets, key, idCol, dedupe = true)
+    Map("result" ->
+      NearDup.pairJaccardAtLeast(candidates, sh, idCol, "__shingles", jaccardThreshold))
   }
 }
 
@@ -603,8 +689,9 @@ class DedupSurvivorsNode(idCol: String = "doc_id") extends Node {
 /** SimHash near-duplicate pairs: 64-bit simhash from token xxhash64s (each
   * bit = sign of the token-vote sum), candidate pairs share at least one of
   * `chunks` bit-chunks (pigeonhole: hamming <= chunks-1 guarantees a shared
-  * chunk), verified with `bit_count(xor) <= maxHamming`. Same shuffle shape
-  * as MinHash; signature is one narrow map.
+  * chunk), verified by Hamming distance <= maxHamming. Chunking, bucket cap,
+  * pairs and verify are the NearDup kernels HammingNearDupNode and
+  * DHashIndexNode also run; the signature is one narrow map.
   *
   * Recall contract: full recall for pairs at hamming <= maxHamming REQUIRES
   * chunks >= maxHamming + 1. `chunks = 0` (default) auto-derives exactly
@@ -619,7 +706,7 @@ class SimHashDedupNode(
     val maxHamming: Int = 3,
     val chunks: Int = 0, // 0 = auto (maxHamming + 1, exact-recall pigeonhole)
     val maxBucket: Int = 1000, // drop pathological chunk buckets (quadratic pair guard)
-    val collapseExact: Boolean = true, // collapse byte-identical texts first (see MinHashDedupNode)
+    val collapseExact: Boolean = true, // collapse byte-identical texts first (NearDup.collapseExact)
     val partialRecall: Boolean = false) // required opt-in for chunks <= maxHamming
   extends Node {
   private val effChunks = if (chunks == 0) maxHamming + 1 else chunks
@@ -635,38 +722,25 @@ class SimHashDedupNode(
   override def jsonKind: Option[String] = Some("simhash_dedup")
   override def jsonParams: Map[String, Any] = Map("idCol" -> idCol, "textCol" -> textCol, "maxHamming" -> maxHamming, "chunks" -> chunks, "maxBucket" -> maxBucket, "collapseExact" -> collapseExact, "partialRecall" -> partialRecall)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    val toks = TextExprs.tokensExpr(textCol)
-    val chunks = effChunks
-    // uneven split is fine: chunks * chunkBits may cover < 64 bits; bits past
-    // the covered range never force a mismatch, so recall is preserved
-    val chunkBits = 64 / chunks
-    val chunkArr =
-      s"transform(sequence(0, ${chunks - 1}), c -> (__simhash >> (c * $chunkBits)) & ${(1L << chunkBits) - 1}L)"
-    // Same shape as MinHash but the signature is one compiled kernel call
-    // (`simhash64` hashes each token once, then votes bits); the simhash long
-    // is cheap to carry, so no verify-side join is needed.
+    // the signature is one compiled kernel call (`simhash64` hashes each
+    // token once, then votes bits); the simhash long is cheap to carry
+    // through the pair join, so no verify-side join is needed
     graft.functions.VecFunctions.register(ctx.spark)
     val base =
-      if (collapseExact) MinHashDedupNode.collapse(in("df"), idCol, textCol)
+      if (collapseExact) NearDup.collapseExact(in("df"), idCol, NearDup.textKey(textCol))
       else in("df")
     val signed = ctx.track(base
-      .withColumn("__toks", expr(toks))
+      .withColumn("__toks", expr(TextExprs.tokensExpr(textCol)))
       .filter("size(__toks) > 0")
-      .select(col(idCol), expr("simhash64(__toks)").as("__simhash"))
-      .withColumn("__chunks", expr(chunkArr)))
-    val buckets0 = signed.selectExpr(idCol, "__simhash", "posexplode(__chunks) as (chunk_idx, chunk_val)")
-    val okBuckets = buckets0.groupBy("chunk_idx", "chunk_val").count()
-      .filter(col("count") <= maxBucket).select("chunk_idx", "chunk_val")
-    val buckets = ctx.track(buckets0.join(okBuckets, Seq("chunk_idx", "chunk_val")))
-    val a = buckets.select(col(idCol).as("id_a"), col("__simhash").as("sh_a"), col("chunk_idx"), col("chunk_val"))
-    val b = buckets.select(col(idCol).as("id_b"), col("__simhash").as("sh_b"), col("chunk_idx"), col("chunk_val"))
-    val verified = a.join(b, Seq("chunk_idx", "chunk_val"))
-      .filter(col("id_a") < col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", expr("bit_count(sh_a ^ sh_b)"))
+      .select(col(idCol), expr("simhash64(__toks)").as("__h")))
+    val key = Seq("__c", "__v")
+    val buckets = ctx.track(
+      NearDup.capBuckets(NearDup.chunkKeys(signed, effChunks), key, maxBucket))
+    Map("result" -> NearDup.blockedPairs(buckets, key, idCol, Seq(("__h", "sh_a", "sh_b")),
+        dedupe = true)
+      .withColumn("hamming", NearDup.hamming("sh_a", "sh_b"))
       .filter(col("hamming") <= maxHamming)
-      .select("id_a", "id_b", "hamming")
-    Map("result" -> verified)
+      .select("id_a", "id_b", "hamming"))
   }
 }
 
@@ -690,16 +764,12 @@ class NgramJaccardNode(
   override def jsonKind: Option[String] = Some("ngram_jaccard")
   override def jsonParams: Map[String, Any] = Map("idCol" -> idCol, "textCol" -> textCol, "shingleN" -> shingleN, "threshold" -> threshold, "maxDocFreq" -> maxDocFreq, "maxDocFreqFraction" -> maxDocFreqFraction, "corpusSizeHint" -> corpusSizeHint.map(_.toString).orNull)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    val toks = TextExprs.tokensExpr(textCol)
     // persist: consumed three times (inverted index + both verify joins);
     // also a cache boundary so collapsed projections don't re-tokenize per
-    // shingle element. Shingles are hashed longs (see MinHashDedupNode).
+    // shingle element. Shingles are hashed longs (NearDup.shingleSketch).
     graft.functions.VecFunctions.register(ctx.spark)
-    val docs = ctx.track(in("df")
-      .withColumn("__toks", expr(toks))
-      .withColumn("__shingles", expr(s"shingle_hashes(__toks, $shingleN)"))
-      .filter("size(__shingles) > 0")
-      .select(col(idCol), col("__shingles")))
+    val docs = ctx.track(
+      NearDup.shingleSketch(in("df"), idCol, textCol, shingleN, idCol, "__shingles"))
     val inverted = docs.select(col(idCol), expr("explode(__shingles) as shingle"))
     // document-frequency filter: frequent shingles create quadratic hot
     // buckets and carry no signal — the standard prefix/df filter
@@ -721,20 +791,9 @@ class NgramJaccardNode(
       counted
     }
     val dfCap = math.max(maxDocFreq.toLong, math.ceil(maxDocFreqFraction * n).toLong)
-    val rare = inverted.groupBy("shingle").count().filter(col("count") <= dfCap).select("shingle")
-    val blocked = inverted.join(rare, Seq("shingle"))
-    val pairs = blocked.as("a").join(blocked.as("b"), Seq("shingle"))
-      .filter(col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as("id_a"), col(s"b.$idCol").as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val withSets = pairs
-      .join(docs.select(col(idCol).as("id_a"), col("__shingles").as("sh_a")), Seq("id_a"))
-      .join(docs.select(col(idCol).as("id_b"), col("__shingles").as("sh_b")), Seq("id_b"))
-    val verified = withSets.withColumn("jaccard",
-        expr("cast(size(array_intersect(sh_a, sh_b)) as double) / size(array_union(sh_a, sh_b))"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-    Map("result" -> verified)
+    val blocked = NearDup.capBuckets(inverted, Seq("shingle"), dfCap)
+    val pairs = NearDup.blockedPairs(blocked, Seq("shingle"), idCol, dedupe = true)
+    Map("result" -> NearDup.pairJaccardAtLeast(pairs, docs, idCol, "__shingles", threshold))
   }
 }
 
@@ -928,10 +987,10 @@ class SpanDedupNode(
   * a watermark-less one is refused unless `unboundedStreamStateOk = true`
   * acknowledges a bounded AvailableNow backfill.
   *
-  * Same seeds as MinHashDedupNode (both use `shingle_hashes` /
-  * `minhash_bands`), so identical text produces identical signatures in
-  * both — an exact-duplicate delta row is caught with probability 1, which
-  * is what the q101 identity oracle pins.
+  * MinHashDedupNode signs through the same kernels (NearDup.shingleSketch
+  * and NearDup.bandKeys), so identical text produces identical signatures
+  * in both by construction — an exact-duplicate delta row is caught with
+  * probability 1, which is what the q101 identity oracle pins.
   */
 class MinHashIndexNode(
     val idCol: String = "doc_id",
@@ -968,18 +1027,11 @@ class MinHashIndexNode(
     "compactEvery" -> compactEvery, "compactPath" -> compactPath.orNull)
 
   private def sketch(df: DataFrame, outId: String, outSh: String,
-                     extraCols: Seq[String] = Nil): DataFrame = {
-    val toks = TextExprs.tokensExpr(textCol)
-    df.withColumn("__toks", expr(toks))
-      .withColumn(outSh, expr(s"shingle_hashes(__toks, $shingleN)"))
-      .filter(s"size($outSh) > 0")
-      .select((col(idCol).as(outId) +: col(outSh) +: extraCols.map(col)): _*)
-  }
+                     extraCols: Seq[String] = Nil): DataFrame =
+    NearDup.shingleSketch(df, idCol, textCol, shingleN, outId, outSh, extraCols)
 
-  private def bandKeys(sh: DataFrame, id: String, shCol: String): DataFrame =
-    sh.select(col(id),
-        expr(s"minhash_bands($shCol, $numHashes, $bands)").as("__bands"))
-      .selectExpr(id, "posexplode(__bands) as (band, band_hash)")
+  private def bandKeys(sh: DataFrame, shCol: String, keep: String*): DataFrame =
+    NearDup.bandKeys(sh, shCol, numHashes, bands, keep)
 
   // ---- columnar MoR state (BandedBucketIndex, VERDICT r16 next #2): the
   // shingle ledger and the capped (band, band_hash) buckets are SegStores;
@@ -988,7 +1040,7 @@ class MinHashIndexNode(
   protected def bucketKey: Seq[String] = Seq("band", "band_hash")
   protected def bucketRows(ledger: DataFrame): DataFrame = {
     graft.functions.VecFunctions.register(ledger.sparkSession)
-    bandKeys(ledger, "base_id", "__sh_b").select("band", "band_hash", "base_id")
+    bandKeys(ledger, "__sh_b", "base_id").select("band", "band_hash", "base_id")
   }
   protected def ledgerFrame(m: Model): DataFrame = m.shingles
   protected def bucketFrame(m: Model): DataFrame = m.buckets
@@ -996,20 +1048,12 @@ class MinHashIndexNode(
     MinHashIndexNode.Index(ledger, buckets)
 
   def fitModel(ctx: Ctx, in: In): Model = {
-    import org.apache.spark.storage.StorageLevel
     graft.functions.VecFunctions.register(ctx.spark)
-    val sh = sketch(in("corpus"), "base_id", "__sh_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val buckets = cappedBuckets(sh).persist(StorageLevel.MEMORY_AND_DISK)
-    seedStores(Seq(sh, buckets))
-    MinHashIndexNode.Index(sh, buckets)
+    fitLedger(sketch(in("corpus"), "base_id", "__sh_b"))
   }
 
-  private def jaccardVerify(cand: DataFrame): DataFrame = cand
-    .withColumn("jaccard",
-      expr("cast(size(array_intersect(__sh_d, __sh_b)) as double) / size(array_union(__sh_d, __sh_b))"))
-    .filter(col("jaccard") >= jaccardThreshold)
-    .select("delta_id", "base_id", "jaccard")
+  private def jaccardVerify(cand: DataFrame): DataFrame =
+    NearDup.jaccardAtLeast(cand, "__sh_d", "__sh_b", jaccardThreshold, "delta_id", "base_id")
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     graft.functions.VecFunctions.register(ctx.spark)
@@ -1045,10 +1089,7 @@ class MinHashIndexNode(
             "stream is refused here)")
       val extras = wmCol.toSeq
       val dsh = sketch(delta, "delta_id", "__sh_d", extras)
-      val cand0 = dsh
-        .withColumn("__bands", expr(s"minhash_bands(__sh_d, $numHashes, $bands)"))
-        .selectExpr(("delta_id" +: "__sh_d" +: extras) :+
-          "posexplode(__bands) as (band, band_hash)": _*)
+      val cand0 = bandKeys(dsh, "__sh_d", ("delta_id" +: "__sh_d" +: extras): _*)
         .join(m.buckets, Seq("band", "band_hash"))
         .select(("delta_id" +: "base_id" +: "__sh_d" +: extras).map(col): _*)
       val cand = wmCol match {
@@ -1058,7 +1099,7 @@ class MinHashIndexNode(
       Map("result" -> jaccardVerify(cand.join(m.shingles, Seq("base_id"))))
     } else {
       val dsh = ctx.track(sketch(delta, "delta_id", "__sh_d"))
-      val cand = bandKeys(dsh, "delta_id", "__sh_d")
+      val cand = bandKeys(dsh, "__sh_d", "delta_id")
         .join(m.buckets, Seq("band", "band_hash"))
         .select("delta_id", "base_id")
         .dropDuplicates("delta_id", "base_id")

@@ -295,13 +295,20 @@ trait BandedBucketIndex extends StoredIndex {
   override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
     ledgerFrame(m).sparkSession
 
+  /** The fitted model of a corpus ledger: the ledger and its capped bucket
+    * table, both persisted, seed the two stores. */
+  protected final def fitLedger(ledger: DataFrame): Model = {
+    import org.apache.spark.storage.StorageLevel
+    val led = ledger.persist(StorageLevel.MEMORY_AND_DISK)
+    val buckets = cappedBuckets(led).persist(StorageLevel.MEMORY_AND_DISK)
+    seedStores(Seq(led, buckets))
+    banded(led, buckets)
+  }
+
   /** The bucket table of a ledger with the cap applied (fit, rebuild). */
   protected final def cappedBuckets(ledger: DataFrame): DataFrame = {
     val rows = bucketRows(ledger)
-    val key = bucketKey.map(col)
-    val ok = rows.groupBy(key: _*).count()
-      .filter(col("count") <= maxBucket).select(key: _*)
-    rows.join(ok, bucketKey).select(rows.columns.map(col): _*)
+    NearDup.capBuckets(rows, bucketKey, maxBucket).select(rows.columns.map(col): _*)
   }
 
   /** Fold ledger rows in with O(delta) state writes: the rows land once as

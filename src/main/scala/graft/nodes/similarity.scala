@@ -864,10 +864,8 @@ class EmbeddingNearDupNode(
         val sigExprStr = s"lsh_signs(__v, $tables, $numPlanes)"
         val sigs = base.withColumn("__sigs", expr(sigExprStr))
           .selectExpr(idCol, "__v", "__norm", "posexplode(__sigs) as (tbl, sig)")
-        val a = sigs.select(col(idCol).as("id_a"), col("__v").as("va"), col("__norm").as("na"), col("tbl"), col("sig"))
-        val b = sigs.select(col(idCol).as("id_b"), col("__v").as("vb"), col("__norm").as("nb"), col("tbl"), col("sig"))
-        a.join(b, Seq("tbl", "sig")).filter(col("id_a") < col("id_b"))
-          .dropDuplicates("id_a", "id_b")
+        NearDup.blockedPairs(sigs, Seq("tbl", "sig"), idCol,
+          Seq(("__v", "va", "vb"), ("__norm", "na", "nb")), dedupe = true)
       }
     Map("result" -> pairs
       .withColumn("score", expr(VecExprs.cosine("va", "vb", "na", "nb")))
@@ -935,7 +933,7 @@ class SemDedupNode(
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
     VecExprs.ensure(ctx.spark)
-    import org.apache.spark.sql.functions.{broadcast, ceil, count, lit, row_number, xxhash64}
+    import org.apache.spark.sql.functions.{broadcast, ceil, count, lit, xxhash64}
     // Exact-duplicate collapse FIRST (the MinHash collapseExact guard on the
     // embedding side): a k-way family of bit-identical vectors is k^2/2
     // cosine-1.0 OUTPUT pairs — quadratic in duplication, measured 90k pairs
@@ -943,12 +941,9 @@ class SemDedupNode(
     // distinct vector makes pair output a function of DISTINCT content;
     // exact duplicates are ExactDedupNode's linear job. Keyed on xxhash64 of
     // the vector (same collision tradeoff as hashed shingles).
-    val base0 = in("df")
-    val base = if (!collapseExact) base0 else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(xxhash64(col(vecCol))).orderBy(col(idCol).asc)
-      base0.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-    }
+    val base =
+      if (collapseExact) NearDup.collapseExact(in("df"), idCol, xxhash64(col(vecCol)))
+      else in("df")
     val clustered = m match {
       case Some(km) => km.transform(QuantizerFit.withVec(base, vecCol))
         .withColumnRenamed(km.getPredictionCol, "__cluster")
@@ -964,12 +959,9 @@ class SemDedupNode(
       .select("__cluster", "__nsub")
     val keyed = assigned.join(broadcast(sizes), Seq("__cluster"))
       .withColumn("__sub", expr(s"${DetHash.expr(idCol)} % __nsub"))
-    val a = keyed.select(col(idCol).as("id_a"), col("__v").as("va"),
-      col("__norm").as("na"), col("__cluster"), col("__sub"))
-    val b = keyed.select(col(idCol).as("id_b"), col("__v").as("vb"),
-      col("__norm").as("nb"), col("__cluster"), col("__sub"))
-    Map("result" -> a.join(b, Seq("__cluster", "__sub"))
-      .filter(col("id_a") < col("id_b"))
+    // each pair lies in exactly one (cluster, sub) block: no pair dedupe
+    Map("result" -> NearDup.blockedPairs(keyed, Seq("__cluster", "__sub"), idCol,
+        Seq(("__v", "va", "vb"), ("__norm", "na", "nb")), dedupe = false)
       .withColumn("score", expr(VecExprs.cosine("va", "vb", "na", "nb")))
       .filter(col("score") >= threshold)
       .select(col("id_a"), col("id_b"), col("score")))

@@ -98,20 +98,25 @@ class NodesSpec extends AnyFunSuite {
       val fam = if (i % 2 == 0) base else (50 to 80).map(j => s"alt$j").mkString(" ")
       (i, fam + " " + s"extra${i / 6}") // small per-group perturbation
     }.toDF("doc_id", "text")
-    val h = 6
-    val node = new SimHashDedupNode(maxHamming = h, collapseExact = false, maxBucket = 10000)
-    val got = runOne { d =>
-      d.add(srcNode(corpus)) >> node >> d.output("result")
-    }.select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val toks = TextExprs.tokensExpr("text")
     val signed = corpus.withColumn("__toks", expr(toks))
       .select(col("doc_id"), expr("simhash64(__toks)").as("sh"))
-    val want = signed.as("a").join(signed.as("b"),
-        col("a.doc_id") < col("b.doc_id") &&
-          expr("bit_count(a.sh ^ b.sh)") <= h)
-      .select(col("a.doc_id"), col("b.doc_id")).as[(Long, Long)].collect().toSet
-    assert(want.nonEmpty, "crafted corpus must contain sub-threshold pairs")
-    assert(got == want)
+    // h = 0 auto-derives ONE full-width chunk (the hash itself); with
+    // maxBucket = 20 every bucket must hold only equal hashes — a chunker
+    // that masked a full-width chunk to 0 put all 30 rows in one bucket,
+    // which the cap then dropped whole
+    for ((h, maxBucket) <- Seq((6, 10000), (0, 20))) {
+      val node = new SimHashDedupNode(maxHamming = h, collapseExact = false, maxBucket = maxBucket)
+      val got = runOne { d =>
+        d.add(srcNode(corpus)) >> node >> d.output("result")
+      }.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      val want = signed.as("a").join(signed.as("b"),
+          col("a.doc_id") < col("b.doc_id") &&
+            expr("bit_count(a.sh ^ b.sh)") <= h)
+        .select(col("a.doc_id"), col("b.doc_id")).as[(Long, Long)].collect().toSet
+      assert(want.nonEmpty, s"crafted corpus must contain pairs within hamming $h")
+      assert(got == want, s"maxHamming = $h, maxBucket = $maxBucket")
+    }
   }
 
   test("NgramJaccardNode: lossless blocking finds pairs; DF cap drops frequent-shingle pairs") {

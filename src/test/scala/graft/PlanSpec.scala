@@ -582,20 +582,62 @@ class PlanSpec extends AnyFunSuite {
     val spark0 = spark
     import spark0.implicits._
     val ctx = Ctx(spark)
+    import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+    def unwrap(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case other => other
+    }
+    // the plan outside every cache: an InMemoryTableScan is a leaf here
+    def outer(df: org.apache.spark.sql.DataFrame): SparkPlan =
+      unwrap(df.queryExecution.executedPlan)
+    def generates(p: SparkPlan) =
+      p.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+    def leaf(p: SparkPlan): SparkPlan = p match {
+      case u: UnaryExecNode => leaf(u.child)
+      case other => other
+    }
     val rows = (1L to 500L).map(i => (i, i * 37L)).toDF("id", "h")
-    val p = planOf(new HammingNearDupNode("id", "h", maxHamming = 3)
-      .transform(ctx, In.single("df" -> rows))("result"))
-    // the cap is groupBy + semi-join, not a full bucket materialization
-    assert(!p.contains("Window"),
-      s"bucket cap must not materialize every bucket through a window:\n$p")
-    // both self-join sides read the SAME cached chunk frame — the explode +
-    // cap pipeline runs once (it lives inside the InMemoryRelation), so the
-    // outer plan carries two scans of one cache and no Generate of its own
+    val hamming = new HammingNearDupNode("id", "h", maxHamming = 3)
+      .transform(ctx, In.single("df" -> rows))("result")
+    // the same chunk/cap/pair kernels behind SimHashDedupNode, which also
+    // caches its signed (id, simhash) frame beneath the chunk table
+    val texts = (1L to 200L).map(i => (i, s"w${i % 13} w${i % 7} w${i % 5} x$i"))
+      .toDF("doc_id", "text")
+    val simhash = new SimHashDedupNode(maxHamming = 3, collapseExact = false)
+      .transform(ctx, In.single("df" -> texts))("result")
+    for (df <- Seq(hamming, simhash)) {
+      val p = planOf(df)
+      // the cap is groupBy + semi-join, not a full bucket materialization
+      assert(!p.contains("Window"),
+        s"bucket cap must not materialize every bucket through a window:\n$p")
+      // both self-join sides read the SAME cached chunk frame — the explode +
+      // cap pipeline runs once (it lives inside the InMemoryRelation), so the
+      // outer plan's one join reads two scans of one cache and no Generate
+      // runs outside it
+      val sides = outer(df).collect {
+        case j: SortMergeJoinExec => (leaf(j.left), leaf(j.right))
+        case j: BroadcastHashJoinExec => (leaf(j.left), leaf(j.right))
+      }
+      assert(sides.size == 1, s"expected one pair join outside the cache:\n$p")
+      sides.head match {
+        case (a: InMemoryTableScanExec, b: InMemoryTableScanExec) =>
+          assert(a.relation.cacheBuilder eq b.relation.cacheBuilder,
+            s"both pair-join sides must scan one cached table:\n$p")
+          assert(generates(unwrap(a.relation.cacheBuilder.cachedPlan)).nonEmpty,
+            s"the shared cache must hold the chunk explode:\n$p")
+        case other => fail(s"pair-join sides must be cache scans, got $other:\n$p")
+      }
+      assert(generates(outer(df)).isEmpty,
+        s"chunk explode must not be recomputed outside the cache:\n$p")
+    }
+    // the Hamming node caches nothing else: exactly the two join-side scans
     // (formatted mode numbers each distinct physical op once)
-    assert("""\(\d+\) InMemoryTableScan""".r.findAllIn(p).size == 2,
-      s"expected both pair-join sides to scan one cached chunk table:\n$p")
-    assert(!p.replaceAll("(?s)InMemoryRelation.*", "").contains("Generate"),
-      s"chunk explode must not be recomputed outside the cache:\n$p")
+    val hp = planOf(hamming)
+    assert("""\(\d+\) InMemoryTableScan""".r.findAllIn(hp).size == 2,
+      s"expected both pair-join sides to scan one cached chunk table:\n$hp")
     spark.catalog.clearCache()
   }
 
