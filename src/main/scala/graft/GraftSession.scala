@@ -16,21 +16,13 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // respect advisoryPartitionSizeInBytes when AQE coalesces (the
-      // Spark-recommended setting): small shuffle stages collapse to few
-      // tasks instead of defaulting to full parallelism — measured ~13%
-      // off the flagship's per-job scheduling overhead; at cluster scale
-      // the advisory size, not local parallelism, is the right target.
-      // Both knobs env-overridable for A/B adjudication (VERDICT r11 wrong
-      // #3). Round-12 A/B on the q19/q34/q36/q138/q139 band found the
-      // driver-observed regressions do NOT reproduce locally under either
-      // parallelismFirst value (all inside the host-jitter band) and a
-      // smaller 8m advisory is mildly WORSE — so the r11 settings stand;
-      // the band was driver-host contention, not this flag.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_BYTES", "64m"))
+      // AQE coalesces small shuffle stages by advisory size, not to full
+      // parallelism: ~13% off the flagship's per-job scheduling overhead,
+      // and at cluster scale the advisory size is the right target. An A/B
+      // over both parallelismFirst values and a smaller 8m advisory found
+      // nothing better.
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
     spark

@@ -429,7 +429,7 @@ class AggIndexNode(
     val idCol: String = "doc_id",
     val compactEvery: Int = 0,
     val compactPath: Option[String] = None)
-  extends StoredIndex {
+  extends ChainTarget {
   require(groupCols.nonEmpty, "agg_index: groupCols must be non-empty")
   require(sumSqCols.distinct.size == sumSqCols.size &&
     sumSqCols.forall(c => c != idCol && !groupCols.contains(c)),
@@ -783,9 +783,6 @@ class AggIndexNode(
         col("q"), expr(spec.hiEdge("__bin")).as("value"))): _*)
   }
 
-  def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
-    prepareWave(ctx, None, Some(delta)).commit()
-
   /** Run ONE maintenance wave (optional delete step, then optional insert
     * step — the Δview-feed contract: the two key sets are disjoint within
     * a wave) up to its commit: each step writes its ledger segment or
@@ -793,7 +790,10 @@ class AggIndexNode(
     * plan fed it, e.g. a MaterializedJoinNode's Δview feed) and then cuts
     * its group frames eagerly, so the returned [[IvmUtil.Prepared]] holds
     * only the commit that swaps the new model in. A chained caller commits
-    * it together with its own. */
+    * it together with its own. The delete is an exact decrement: the
+    * semi-join recovers precisely what each deleted row contributed;
+    * unknown ids no-op; groups reaching zero drop — bit-identical to
+    * re-aggregating the post-delete corpus. */
   private[nodes] def prepareWave(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared = {
     var cur = fitted
@@ -803,12 +803,7 @@ class AggIndexNode(
     deletes.foreach(d =>
       step(m => deleteCore(m, store, d.select(col(idCol)).distinct())))
     inserts.foreach(i => step(m => insertCore(m, store, i)))
-    val fin = cur; val rel = superseded
-    IvmUtil.Prepared(() => {
-      model = Some(fin)
-      rel.foreach(releaseFrames)
-      rel.foreach(_ => endWave())
-    })
+    commitWave(cur, superseded)
   }
 
   /** Release a superseded generation's group-state frames (the ledger's
@@ -874,33 +869,13 @@ class AggIndexNode(
     cutState(newLedger, merged(m.totals, deltaTotals, +1), vcPlans, histPlans)
   }
 
-  /** Exact decrement: the semi-join recovers precisely what each deleted
-    * row contributed; unknown ids no-op; groups reaching zero drop.
-    * Bit-identical to re-aggregating the post-delete corpus. */
-  def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit =
-    prepareWave(ctx, Some(deletes), None).commit()
-
-  /** RETENTION deletes: remove every ledger row matching `condition` — a
-    * Spark SQL boolean expression over the LEDGER columns (idCol, the
-    * group columns, and the declared measure columns; other corpus
-    * columns are not in the ledger and must route through
-    * `deleteFromIndex` by id). The "drop everything older than X / from
-    * source Y" path: at 100 TB the victim set must not round-trip
-    * through the driver as an id list — the predicate IS the victim set.
-    * NULL-safe by construction (victims = rows where the condition is
-    * TRUE; kept = everything else, including NULL evaluations), so
-    * victims and survivors always partition the ledger exactly. Same
-    * decrement/splice machinery as deleteFromIndex. */
-  override def deleteWhere(ctx: Ctx, condition: String): Unit = {
-    import org.apache.spark.sql.functions.coalesce
-    val m = fitted
-    val cond = coalesce(expr(condition).cast("boolean"), lit(false))
-    // victims resolve to ROW IDS (idCol is the row handle — the ledger
-    // keys every contribution by it), so predicate retention rides the
-    // same O(delta) tombstone channel as deleteFromIndex
-    prepareWave(ctx, Some(m.ledger.filter(cond).select(col(idCol))), None)
-      .commit()
-  }
+  /** Retention ledger: the contribution ledger itself (idCol, the group
+    * columns and the declared measure columns; other corpus columns are
+    * not in it and must route through `deleteFromIndex` by id). Predicate
+    * victims resolve to row ids, so `deleteWhere` rides the same O(delta)
+    * tombstone channel and decrement/splice machinery as deleteFromIndex. */
+  override protected def retentionLedger: Option[(DataFrame, String)] =
+    Some((fitted.ledger, idCol))
 
   private def deleteCore(m: Model, store: SegStore, del: DataFrame): Model = {
     val preLive = m.ledger
@@ -942,10 +917,16 @@ class AggIndexNode(
     endWave()
   }
 
-  /** One ledger id, for the chain vid-scheme guard (None if empty). */
-  private[nodes] def sampleLedgerId(): Option[String] =
-    model.flatMap(_.ledger.select(col(idCol)).limit(1)
-      .collect().headOption.map(_.get(0).toString))
+  // ---- chain target: a chained dashboard seeds its ledger from the
+  // source view and keys it on the view-row id itself ----
+  private[nodes] def seedPort: String = "corpus"
+  private[nodes] def chainIdCol: String = idCol
+  private[nodes] def checkChain(source: String): Unit =
+    if (idCol != MaterializedJoinNode.ViewIdCol)
+      throw new GraftException(
+        s"materialized_join '$source': a chained aggregate must use idCol = " +
+          s"'${MaterializedJoinNode.ViewIdCol}' (the synthesized view-row " +
+          s"id), got '$idCol'")
 
   override protected def stateSession(m: Model): org.apache.spark.sql.SparkSession =
     m.ledger.sparkSession
@@ -1368,6 +1349,52 @@ private[nodes] object IvmUtil {
   }
 }
 
+/** The downstream end of an IVM chain: a node that a
+  * [[MaterializedJoinNode]]'s Δview feed maintains — a chained dashboard
+  * ([[AggIndexNode]]) or the next join of a star. The source attaches,
+  * re-attaches and subscribes every target through this one contract,
+  * and every wave of the chain, both sides of a join included, commits
+  * through `commitWave`. */
+private[nodes] trait ChainTarget extends StoredIndex {
+  /** The fit port the source's current view seeds at attach. */
+  private[nodes] def seedPort: String
+  /** The column the feed's [[MaterializedJoinNode.ViewIdCol]] lands in:
+    * this node's row id, which a source view row becomes. */
+  private[nodes] def chainIdCol: String
+  /** Throws when this node cannot key its rows on the feed of `source`. */
+  private[nodes] def checkChain(source: String): Unit
+  /** Write one wave (delete step, then insert step; the two key sets are
+    * disjoint) into this node's state and return its commit, which a
+    * source runs inside its own. */
+  private[nodes] def prepareWave(ctx: Ctx, deletes: Option[DataFrame],
+      inserts: Option[DataFrame]): IvmUtil.Prepared
+
+  def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
+    prepareWave(ctx, None, Some(delta)).commit()
+  def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit =
+    prepareWave(ctx, Some(deletes), None).commit()
+
+  /** One fitted row id (None if the state is empty), for the source's
+    * vid-scheme guard on re-attach. */
+  private[nodes] final def sampleStateId(): Option[String] =
+    retentionLedger.flatMap { case (ledger, id) =>
+      ledger.select(col(id)).limit(1).collect().headOption.map(_.get(0).toString)
+    }
+
+  /** The commit of a wave prepared from `superseded` (one model per step,
+    * oldest first) up to `fin`: swap the model, release the superseded
+    * frames, commit the `downstream` chain, then close each step with
+    * `endWave`. */
+  protected final def commitWave(fin: Model, superseded: Seq[Model],
+      downstream: IvmUtil.Prepared = IvmUtil.PreparedEmpty): IvmUtil.Prepared =
+    IvmUtil.Prepared(() => {
+      model = Some(fin)
+      superseded.foreach(releaseFrames)
+      downstream.commit()
+      superseded.foreach(_ => endWave())
+    })
+}
+
 object AggIndexNode {
   /** The fitted state: keyed contribution ledger + group totals + one
     * value-count support frame per COUNT DISTINCT measure + one binned
@@ -1664,7 +1691,7 @@ class MaterializedJoinNode(
     // driver-mediated broadcasts (a degenerate large "dimension" must not
     // OOM the driver at serve time — VERDICT r13 wrong #4)
     val maxBroadcastDim: Long = 5000000L)
-  extends StoredIndex with graft.dag.ChainSource {
+  extends ChainTarget with graft.dag.ChainSource {
   require(leftOn.nonEmpty && leftOn.size == rightOn.size,
     "materialized_join: leftOn/rightOn must be non-empty and same-length")
   require(Seq("inner", "left_outer").contains(joinType),
@@ -1800,14 +1827,17 @@ class MaterializedJoinNode(
     val k = rKeysAsLeft(r)
     if (rCount <= maxBroadcastDim) broadcast(k) else k
   }
+  /** The dim payload columns a view row carries: every non-join dim
+    * column, plus `rightId` when it is a join column (the dim's delete
+    * handle). */
+  private def dimPayload(right: DataFrame): Seq[String] =
+    (right.columns.filterNot(rightOn.contains) ++
+      (if (rightOn.contains(rightId)) Seq(rightId) else Nil)).distinct
   /** Null-extend bucket-free fact rows to the view schema (dim columns
     * null with their exact types). */
-  private def nullExtend(facts: DataFrame, right: DataFrame): DataFrame = {
-    val rKeep = (right.columns.filterNot(rightOn.contains) ++
-      (if (rightOn.contains(rightId)) Seq(rightId) else Nil)).distinct
+  private def nullExtend(facts: DataFrame, right: DataFrame): DataFrame =
     facts.select(facts.columns.map(col) ++
-      rKeep.map(c => lit(null).cast(right.schema(c).dataType).as(c)): _*)
-  }
+      dimPayload(right).map(c => lit(null).cast(right.schema(c).dataType).as(c)): _*)
   /** The current (outer-resolved when `left_outer`) view WITH the row id —
     * what a chained index seeds from. */
   private def viewWithVid(m: Model): DataFrame = {
@@ -1819,11 +1849,18 @@ class MaterializedJoinNode(
       leftData(m).join(guardedDimKeys(m.right, m.rightCount), leftOn, "left_anti"),
       m.right)))
   }
-  @volatile private var viewSubscribers: List[MaterializedJoinNode.ViewSubscriber] = Nil
-  /** Subscribe to the per-batch Δview. Subscribers run AFTER the view's own
-    * state commits (old frames still cached), in subscription order. */
+  /** Every Δview consumer, newest first, as the function that prepares its
+    * handling of one wave's (deletes, inserts) feed. */
+  @volatile private var viewSubscribers: List[MaterializedJoinNode.FeedPrepare] = Nil
+  /** Subscribe a public consumer to the per-batch Δview (see
+    * [[MaterializedJoinNode.ViewSubscriber]]): its `onViewDelta` runs inside
+    * the notifying wave's commit, after the view's own state swap (old
+    * frames still cached), in subscription order. Chained indexes do not
+    * come through here: `chainAggregate`/`chainJoin` subscribe them on the
+    * prepared path, where each writes the feed into its own state before
+    * the wave commits. */
   def subscribeView(s: MaterializedJoinNode.ViewSubscriber): Unit =
-    viewSubscribers ::= s
+    viewSubscribers ::= MaterializedJoinNode.feedOf(s)
   private def hasSubs: Boolean = viewSubscribers.nonEmpty
   /** Collect every subscriber's handling of this wave's Δview feed as ONE
     * prepared unit. The feed frames are plain (uncut) plans over this
@@ -1836,12 +1873,10 @@ class MaterializedJoinNode(
   private def prepareSubs(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared =
     if ((deletes.isEmpty && inserts.isEmpty) || !hasSubs) IvmUtil.PreparedEmpty
-    else IvmUtil.inParallel(viewSubscribers.reverse.map { s => () =>
-      // independent subscribers prepare CONCURRENTLY (each runs its own
-      // state writes/cuts against its own stores); commits stay ordered
-      s.prepareViewDelta(ctx, deletes, inserts).getOrElse(
-        IvmUtil.Prepared(() => s.onViewDelta(ctx, deletes, inserts)))
-    }).foldLeft(IvmUtil.PreparedEmpty)(_ ++ _)
+    // independent subscribers prepare CONCURRENTLY (each runs its own
+    // state writes/cuts against its own stores); commits stay ordered
+    else IvmUtil.inParallel(viewSubscribers.reverse.map(p =>
+      () => p(ctx, deletes, inserts))).foldLeft(IvmUtil.PreparedEmpty)(_ ++ _)
 
   /** Chain a maintained GROUPED DASHBOARD onto the maintained view — the
     * star-schema materialized-view classic (facts ⋈ dims, GROUP BY dim
@@ -1853,12 +1888,7 @@ class MaterializedJoinNode(
     * row (unmatched facts) stays exact throughout. The aggregate must be
     * keyed on [[MaterializedJoinNode.ViewIdCol]]; its group/measure columns
     * are view columns. */
-  def chainAggregate(ctx: Ctx, agg: AggIndexNode): Unit = {
-    checkAggChain(agg)
-    val m = fitted
-    agg.fit(ctx, In.single("corpus" -> viewWithVid(m)))
-    subscribeAgg(agg)
-  }
+  def chainAggregate(ctx: Ctx, agg: AggIndexNode): Unit = attach(ctx, agg)
 
   /** RE-ATTACH a chained aggregate after a restart — the downstream's own
     * `loadFitted` state IS the seed, so NO refit happens (an O(corpus)
@@ -1869,69 +1899,7 @@ class MaterializedJoinNode(
     * re-attach. Declared chains serialize via [[graft.dag.Dag.addChain]] /
     * DagJson and re-attach in one call through
     * [[graft.dag.Dag.reattachChains]]. */
-  def reattachAggregate(ctx: Ctx, agg: AggIndexNode): Unit = {
-    checkAggChain(agg)
-    if (model.isEmpty)
-      throw new GraftException(s"estimator node '$name' not fitted/loaded")
-    if (!agg.isFitted)
-      throw new GraftException(
-        s"materialized_join '$name': reattachAggregate needs the chained " +
-          s"aggregate '${agg.name}' already fitted or loaded — re-attachment " +
-          "never refits (call chainAggregate for a fresh seed)")
-    checkVidScheme(agg.sampleLedgerId(), agg.name)
-    subscribeAgg(agg)
-  }
-
-  /** Vid-scheme guard (ADVICE r15): chained state saved before the
-    * length-prefixed encoding keys its ledger on separator-based vids —
-    * re-attaching it under the new scheme would silently yield unmatched
-    * deletes and duplicate inserts. One sampled id (reattach is the rare
-    * restart path) catches it loudly instead. */
-  private def checkVidScheme(sample: Option[String], target: String): Unit =
-    sample.foreach { vid =>
-      if (!vid.matches("\\d+:.*"))
-        throw new GraftException(
-          s"materialized_join '$name': chained state of '$target' keys on a " +
-            s"PRE-length-prefix view-row id ('$vid') — saves from before the " +
-            "vid-scheme change cannot re-attach; re-seed with " +
-            "chainAggregate/chainJoin (one refit), then save fresh state")
-    }
-
-  private def checkAggChain(agg: AggIndexNode): Unit =
-    if (agg.idCol != MaterializedJoinNode.ViewIdCol)
-      throw new GraftException(
-        s"materialized_join '$name': a chained aggregate must use idCol = " +
-          s"'${MaterializedJoinNode.ViewIdCol}' (the synthesized view-row " +
-          s"id), got '${agg.idCol}'")
-
-  /** Chain-target registry: one subscription per downstream node, ever.
-    * Without this, a reattachChains RETRY after a partial failure (first
-    * declaration subscribed, a later one threw 'not fitted') — or a
-    * careless double chainAggregate — double-subscribes the target, and
-    * every subsequent wave applies TWICE to the chained ledger: silent
-    * double counting with no error (ADVICE r15). Identity-keyed
-    * (IdentityHashMap semantics): two distinct node objects with equal
-    * names are still two targets. */
-  private val chainedTargets =
-    java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[graft.dag.Node, java.lang.Boolean]())
-  private def subscribeOnce(target: graft.dag.Node)(
-      mk: => MaterializedJoinNode.ViewSubscriber): Unit = synchronized {
-    if (chainedTargets.add(target)) subscribeView(mk)
-  }
-
-  private def subscribeAgg(agg: AggIndexNode): Unit =
-    subscribeOnce(agg)(new MaterializedJoinNode.ViewSubscriber {
-      def onViewDelta(ctx: Ctx, deletes: Option[DataFrame],
-          inserts: Option[DataFrame]): Unit = {
-        deletes.foreach(d => agg.deleteFromIndex(ctx, d))
-        inserts.foreach(i => agg.updateIndex(ctx, i))
-      }
-      override private[nodes] def prepareViewDelta(ctx: Ctx,
-          deletes: Option[DataFrame],
-          inserts: Option[DataFrame]): Option[IvmUtil.Prepared] =
-        Some(agg.prepareWave(ctx, deletes, inserts))
-    })
+  def reattachAggregate(ctx: Ctx, agg: AggIndexNode): Unit = reattach(agg)
 
   /** Chain ANOTHER materialized join onto the maintained view — the
     * THREE-TABLE STAR (fact ⋈ dim1 ⋈ dim2, live under CDC on all three
@@ -1944,59 +1912,68 @@ class MaterializedJoinNode(
     * chains the semantics compose exactly like SQL's LEFT JOIN chain: a
     * dim1 dangler carries NULL dim1 attributes, so it null-joins into
     * `next` and lands in ITS dangler (NULL-group) bucket. */
-  def chainJoin(ctx: Ctx, next: MaterializedJoinNode, right: DataFrame): Unit = {
-    checkJoinChain(next)
-    val m = fitted
-    next.fit(ctx, In.single(
-      "left" -> viewWithVid(m)
-        .withColumnRenamed(MaterializedJoinNode.ViewIdCol, next.leftId),
-      "right" -> right))
-    subscribeJoin(next)
-  }
+  def chainJoin(ctx: Ctx, next: MaterializedJoinNode, right: DataFrame): Unit =
+    attach(ctx, next, "right" -> right)
 
   /** RE-ATTACH a chained join after a restart — same contract as
     * [[reattachAggregate]]: both nodes already loaded, no refit. */
-  def reattachJoin(ctx: Ctx, next: MaterializedJoinNode): Unit = {
-    checkJoinChain(next)
-    if (model.isEmpty)
-      throw new GraftException(s"estimator node '$name' not fitted/loaded")
-    if (!next.isFitted)
-      throw new GraftException(
-        s"materialized_join '$name': reattachJoin needs the chained join " +
-          s"'${next.name}' already fitted or loaded — re-attachment never " +
-          "refits (call chainJoin for a fresh seed)")
-    checkVidScheme(next.sampleLeftId(), next.name)
-    subscribeJoin(next)
+  def reattachJoin(ctx: Ctx, next: MaterializedJoinNode): Unit = reattach(next)
+
+  /** A Δview feed frame with its view-row id under `t`'s row-id column (a
+    * dashboard keys on the view-row id itself: no rename, no `Project`). */
+  private def feedAs(t: ChainTarget)(df: DataFrame): DataFrame =
+    if (t.chainIdCol == MaterializedJoinNode.ViewIdCol) df
+    else df.withColumnRenamed(MaterializedJoinNode.ViewIdCol, t.chainIdCol)
+
+  /** Fresh attach: fit `t` on the current view (its `seedPort`) plus the
+    * caller's other ports, then subscribe it. */
+  private def attach(ctx: Ctx, t: ChainTarget, ports: (String, DataFrame)*): Unit = {
+    t.checkChain(name)
+    t.fit(ctx, In.single((t.seedPort -> feedAs(t)(viewWithVid(fitted))) +: ports: _*))
+    subscribeOnce(t)
   }
 
-  /** One fact-ledger id, for the chain vid-scheme guard (None if empty). */
-  private[nodes] def sampleLeftId(): Option[String] =
-    model.flatMap(m => leftData(m).select(col(leftId)).limit(1)
-      .collect().headOption.map(_.get(0).toString))
-
-  private def checkJoinChain(next: MaterializedJoinNode): Unit =
-    if (next.leftId == MaterializedJoinNode.ViewIdCol)
+  /** Re-attach on both nodes' loaded state: nothing is refit. */
+  private def reattach(t: ChainTarget): Unit = {
+    t.checkChain(name)
+    fitted // this node's own state must be loaded too
+    if (!t.isFitted)
       throw new GraftException(
-        s"materialized_join '$name': a chained join must rename the view-row " +
-          s"id — pick a leftId other than '${MaterializedJoinNode.ViewIdCol}'")
+        s"materialized_join '$name': re-attaching '${t.name}' needs it " +
+          "already fitted or loaded — re-attachment never refits (call " +
+          "chainAggregate/chainJoin for a fresh seed)")
+    // vid-scheme guard (ADVICE r15): chained state saved before the
+    // length-prefixed encoding keys its ledger on separator-based vids —
+    // re-attaching it under the new scheme would silently yield unmatched
+    // deletes and duplicate inserts. One sampled id (reattach is the rare
+    // restart path) catches it loudly instead.
+    t.sampleStateId().filterNot(_.matches("\\d+:.*")).foreach { vid =>
+      throw new GraftException(
+        s"materialized_join '$name': chained state of '${t.name}' keys on a " +
+          s"PRE-length-prefix view-row id ('$vid') — saves from before the " +
+          "vid-scheme change cannot re-attach; re-seed with " +
+          "chainAggregate/chainJoin (one refit), then save fresh state")
+    }
+    subscribeOnce(t)
+  }
 
-  private def subscribeJoin(next: MaterializedJoinNode): Unit = {
-    val idAs = next.leftId
-    subscribeOnce(next)(new MaterializedJoinNode.ViewSubscriber {
-      def onViewDelta(ctx: Ctx, deletes: Option[DataFrame],
-          inserts: Option[DataFrame]): Unit = {
-        deletes.foreach(d => next.deleteFromIndex(ctx,
-          d.withColumnRenamed(MaterializedJoinNode.ViewIdCol, idAs)))
-        inserts.foreach(i => next.updateIndex(ctx,
-          i.withColumnRenamed(MaterializedJoinNode.ViewIdCol, idAs)))
-      }
-      override private[nodes] def prepareViewDelta(ctx: Ctx,
-          deletes: Option[DataFrame],
-          inserts: Option[DataFrame]): Option[IvmUtil.Prepared] =
-        Some(next.prepareFactWave(ctx,
-          deletes.map(_.withColumnRenamed(MaterializedJoinNode.ViewIdCol, idAs)),
-          inserts.map(_.withColumnRenamed(MaterializedJoinNode.ViewIdCol, idAs))))
-    })
+  /** Chain-target registry: one subscription per downstream node, ever.
+    * Without this, a reattachChains RETRY after a partial failure (first
+    * declaration subscribed, a later one threw 'not fitted') — or a
+    * careless double chainAggregate — double-subscribes the target, and
+    * every subsequent wave applies TWICE to the chained ledger: silent
+    * double counting with no error (ADVICE r15). Identity-keyed
+    * (IdentityHashMap semantics): two distinct node objects with equal
+    * names are still two targets. */
+  private val chainedTargets =
+    java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[graft.dag.Node, java.lang.Boolean]())
+  /** Subscribe `t` on the prepared path, at most once: each wave's feed,
+    * renamed to `t`'s row id, becomes `t`'s own prepared wave. */
+  private def subscribeOnce(t: ChainTarget): Unit = synchronized {
+    if (chainedTargets.add(t))
+      viewSubscribers ::= ((ctx, deletes, inserts) =>
+        t.prepareWave(ctx, deletes.map(feedAs(t)), inserts.map(feedAs(t))))
   }
 
   /** Publish the maintained view's CHANGE FEED to a merge-on-read root, so
@@ -2047,7 +2024,7 @@ class MaterializedJoinNode(
     publishedRoots.get(root).foreach { old =>
       synchronized { viewSubscribers = viewSubscribers.filterNot(_ eq old) }
     }
-    val sub = new MaterializedJoinNode.ViewSubscriber {
+    val feed = MaterializedJoinNode.feedOf(new MaterializedJoinNode.ViewSubscriber {
       private var waveId = startId
       private var lastStamp = 0L
       def onViewDelta(ctx: Ctx, deletes: Option[DataFrame],
@@ -2088,21 +2065,21 @@ class MaterializedJoinNode(
             if (st.isFile) fs.setTimes(st.getPath, stamp, -1))
         })
       }
-    }
-    publishedRoots += root -> sub
-    subscribeView(sub)
+    })
+    publishedRoots += root -> feed
+    viewSubscribers ::= feed
   }
   /** root → its live feed subscriber (see re-publish contract above). */
   @volatile private var publishedRoots
-      : Map[String, MaterializedJoinNode.ViewSubscriber] = Map.empty
+      : Map[String, MaterializedJoinNode.FeedPrepare] = Map.empty
 
   /** [[graft.dag.ChainSource]]: the registry hook `Dag.reattachChains`
     * drives after a topology+state reload. Kinds match the attach methods:
     * "aggregate" → [[reattachAggregate]], "join" → [[reattachJoin]]. */
   override def reattachChain(ctx: Ctx, kind: String,
       target: graft.dag.Node): Unit = (kind, target) match {
-    case ("aggregate", a: AggIndexNode) => reattachAggregate(ctx, a)
-    case ("join", j: MaterializedJoinNode) => reattachJoin(ctx, j)
+    case ("aggregate", a: AggIndexNode) => reattach(a)
+    case ("join", j: MaterializedJoinNode) => reattach(j)
     case _ => throw new GraftException(
       s"materialized_join '$name': unknown chain kind '$kind' for target " +
         s"'${target.name}' (${target.getClass.getSimpleName}) — expected " +
@@ -2118,11 +2095,8 @@ class MaterializedJoinNode(
     val ra = if (broadcastRight) broadcast(r.alias("__r")) else r.alias("__r")
     val cond = leftOn.zip(rightOn).map { case (a, b) =>
       col(s"__l.$a") === col(s"__r.$b") }.reduce(_ && _)
-    val joined = la.join(ra, cond, "inner")
-    val rKeep = (r.columns.filterNot(rightOn.contains) ++
-      (if (rightOn.contains(rightId)) Seq(rightId) else Nil)).distinct
-    joined.select(l.columns.map(c => col(s"__l.$c")) ++
-      rKeep.map(c => col(s"__r.$c")): _*)
+    la.join(ra, cond, "inner").select(l.columns.map(c => col(s"__l.$c")) ++
+      dimPayload(r).map(c => col(s"__r.$c")): _*)
   }
 
   // ---- columnar MoR stores (see SegStore): per-wave state writes are
@@ -2182,35 +2156,39 @@ class MaterializedJoinNode(
       val ld = leftData(m)
       val dang = ld.join(broadcast(keys), leftOn, "left_semi")
         .join(rKeysSized, leftOn, "left_anti")
-      val rKeep = (m.right.columns.filterNot(rightOn.contains) ++
-        (if (rightOn.contains(rightId)) Seq(rightId) else Nil)).distinct
-      val extended = dang.select(ld.columns.map(col) ++
-        rKeep.map(c => lit(null).cast(m.right.schema(c).dataType).as(c)): _*)
-      Map("result" -> inner.unionByName(extended))
+      Map("result" -> inner.unionByName(nullExtend(dang, m.right)))
     }
   }
 
-  /** ΔL ⋈ R appended; the fact ledger grows by the delta. Append-only —
-    * re-sent fact rows must be deleted first (maintainFromStream's CDC
-    * mode does exactly that). */
-  def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
-    prepareFactWave(ctx, None, Some(delta)).commit()
+  // ---- chain target: a chained join's fact side seeds from the source
+  // view, each view row a fact keyed by the renamed view-row id ----
+  private[nodes] def seedPort: String = "left"
+  private[nodes] def chainIdCol: String = leftId
+  private[nodes] def checkChain(source: String): Unit =
+    if (leftId == MaterializedJoinNode.ViewIdCol)
+      throw new GraftException(
+        s"materialized_join '$source': a chained join must rename the view-row " +
+          s"id — pick a leftId other than '${MaterializedJoinNode.ViewIdCol}'")
 
   /** Run a fact-side wave (optional takedown step, then optional insert
     * step — disjoint fact ids within a wave, the Δview-feed contract) up
-    * to its commit. State lands on the SegStores at prepare time, and the
+    * to its commit. A takedown writes generation-stamped tombstones on the
+    * fact row id, which the ledger and view resolve at read; an insert
+    * appends ΔL ⋈ R. Inserts are append-only: re-sent fact rows must be
+    * deleted first (maintainFromStream's CDC mode does exactly that).
+    * State lands on the SegStores at prepare time, and the
     * Δview feed goes to every CHAINED subscriber, which writes it into its
     * own state; the commits of this node and of the whole chain below it
     * come back as one [[IvmUtil.Prepared]]. Each node step of a chained
     * wave thus costs its state writes (plus the dashboard's group cuts),
     * and no action materializes the chain afterwards. */
-  private[nodes] def prepareFactWave(ctx: Ctx, deletes: Option[DataFrame],
+  private[nodes] def prepareWave(ctx: Ctx, deletes: Option[DataFrame],
       inserts: Option[DataFrame]): IvmUtil.Prepared = {
     var cur = fitted
     val Seq(ls, _, vs) = stores
     var feedDels: Option[DataFrame] = None
     var feedIns: Option[DataFrame] = None
-    var waves = 0
+    var superseded = Vector.empty[Model]
     deletes.foreach { d0 =>
       val m = cur
       val del = d0.select(col(leftId)).distinct()
@@ -2235,8 +2213,8 @@ class MaterializedJoinNode(
           .select(vidOf(col(leftId), col(rightId))
             .as(MaterializedJoinNode.ViewIdCol)))
       }
+      superseded :+= m
       cur = m.copy(left = ls.live, view = vs.live)
-      waves += 1
     }
     inserts.foreach { d0 =>
       val m = cur
@@ -2276,16 +2254,10 @@ class MaterializedJoinNode(
               .join(viewSeg.select(col(leftId)), Seq(leftId), "left_anti"),
             m.right))))
       }
+      superseded :+= m
       cur = m.copy(left = ls.live, view = vs.live)
-      waves += 1
     }
-    val downstream = prepareSubs(ctx, feedDels, feedIns)
-    val fin = cur; val n = waves
-    IvmUtil.Prepared(() => {
-      model = Some(fin)
-      downstream.commit()
-      (1 to n).foreach(_ => endWave())
-    })
+    commitWave(cur, superseded, prepareSubs(ctx, feedDels, feedIns))
   }
 
   /** Retention ledger: the fact ledger's full row (leftId, join keys,
@@ -2295,14 +2267,29 @@ class MaterializedJoinNode(
   override protected def retentionLedger: Option[(DataFrame, String)] =
     Some((leftData(fitted), leftId))
 
-  /** Fact takedown: generation-stamped tombstones on the fact row id —
-    * O(delta) state write; the ledger and view resolve them at read. */
-  def deleteFromIndex(ctx: Ctx, deletes: DataFrame): Unit =
-    prepareFactWave(ctx, Some(deletes), None).commit()
-
   /** L ⋈ ΔR appended; the dim ledger grows by the delta. Re-keyed or
     * re-valued dim rows are upserts: `deleteFromRight` first. */
-  def updateRight(ctx: Ctx, delta: DataFrame): Unit = {
+  def updateRight(ctx: Ctx, delta: DataFrame): Unit =
+    prepareDimInsert(ctx, delta).commit()
+
+  /** Dim takedown: generation-stamped tombstones on the dim row id —
+    * every pair the dim row participated in leaves the view at read. */
+  def deleteFromRight(ctx: Ctx, deletes: DataFrame): Unit =
+    prepareDimDelete(ctx, deletes).commit()
+
+  /** The cached dim cardinality after a dim wave that moved it by `change`
+    * rows. Unknown (Long.MaxValue) stays unknown, and `change`, a count
+    * job, is then never run. */
+  private def dimCount(m: Model, change: => Long): Long =
+    if (m.rightCount == Long.MaxValue) Long.MaxValue
+    else math.max(0L, m.rightCount + change)
+
+  /** Run a dim insert wave up to its commit, in the shape of the fact
+    * wave ([[prepareWave]]): the dim and view segments land at prepare
+    * time, every subscriber prepares its handling of the Δview feed, and
+    * the commits of this node and of the chain below it come back as one
+    * [[IvmUtil.Prepared]]. */
+  private def prepareDimInsert(ctx: Ctx, delta: DataFrame): IvmUtil.Prepared = {
     val m = fitted
     checkSides(leftData(m), delta)
     val Seq(_, rs, vs) = stores
@@ -2327,31 +2314,21 @@ class MaterializedJoinNode(
           .select(danglerVid(col(leftId)).as(MaterializedJoinNode.ViewIdCol))
           .distinct()),
       withVid(viewSeg)))
-    val downstream = prepareSubs(ctx,
-      feed.flatMap(_._1), feed.map(_._2))
-    // the dim-count refresh: the dim ledger grows by exactly the
-    // segment's row count
-    val newCount =
-      if (m.rightCount == Long.MaxValue) Long.MaxValue
-      else m.rightCount + rightSeg.count()
-    model = Some(m.copy(right = rs.live, view = vs.live,
-      rightCount = newCount))
-    downstream.commit()
-    endWave()
+    val downstream = prepareSubs(ctx, feed.flatMap(_._1), feed.map(_._2))
+    // the dim ledger grows by exactly the segment's row count
+    commitWave(m.copy(right = rs.live, view = vs.live,
+      rightCount = dimCount(m, rightSeg.count())), Seq(m), downstream)
   }
 
-  /** Dim takedown: generation-stamped tombstones on the dim row id —
-    * every pair the dim row participated in leaves the view at read. */
-  def deleteFromRight(ctx: Ctx, deletes: DataFrame): Unit = {
+  /** Run a dim takedown wave up to its commit, in the same shape as
+    * [[prepareDimInsert]]. */
+  private def prepareDimDelete(ctx: Ctx, deletes: DataFrame): IvmUtil.Prepared = {
     val m = fitted
     val Seq(_, rs, vs) = stores
     val del = deletes.select(col(rightId)).distinct()
     val tombR = rs.appendTombstones(rightId, del)
     vs.adoptTombstones(rightId, tombR) // view rows carry rightId — one write
     val newRight = rs.live
-    // the removed dim rows, counted below, keep the cached dim
-    // cardinality exact without a full re-count
-    val removedDims = m.right.join(tombR, Seq(rightId), "left_semi")
     // Δview feed: every view row the dims owned retracts; (outer) a fact
     // whose LAST match just left re-inserts as a dangler
     val feed = if (!hasSubs) None else {
@@ -2368,13 +2345,10 @@ class MaterializedJoinNode(
           m.right)))))
     }
     val downstream = prepareSubs(ctx, feed.map(_._1), feed.flatMap(_._2))
-    val newCount =
-      if (m.rightCount == Long.MaxValue) Long.MaxValue
-      else math.max(0L, m.rightCount - removedDims.count())
-    model = Some(m.copy(right = newRight, view = vs.live,
-      rightCount = newCount))
-    downstream.commit()
-    endWave()
+    // the removed dim rows keep the cached dim cardinality exact without a
+    // full re-count
+    commitWave(m.copy(right = newRight, view = vs.live, rightCount = dimCount(m,
+      -m.right.join(tombR, Seq(rightId), "left_semi").count())), Seq(m), downstream)
   }
 
   /** The DIM side as an [[IncrementalIndex]] — `updateIndex` delegates
@@ -2479,9 +2453,13 @@ object MaterializedJoinNode {
     * [[AggIndexNode]] keys its ledger on it. */
   val ViewIdCol = "__view_id"
 
-  /** Per-batch Δview consumer (see `subscribeView`): `deletes` carries
-    * [[ViewIdCol]] values to retract, `inserts` full view rows + id. Called
-    * delete-first, after the join's own state committed. */
+  /** Per-batch Δview consumer for PUBLIC subscribers (see
+    * `subscribeView`): `deletes` carries [[ViewIdCol]] values to retract,
+    * `inserts` full view rows + id. Called delete-first, inside the
+    * notifying wave's commit, after the join's own state swap. Chained
+    * indexes (`chainAggregate`/`chainJoin`) do not implement this trait:
+    * they subscribe on the prepared path, writing each feed into their own
+    * state before the wave commits. */
   trait ViewSubscriber {
     def onViewDelta(ctx: graft.dag.Ctx, deletes: Option[DataFrame],
         inserts: Option[DataFrame]): Unit
@@ -2498,4 +2476,15 @@ object MaterializedJoinNode {
         deletes: Option[DataFrame],
         inserts: Option[DataFrame]): Option[IvmUtil.Prepared] = None
   }
+
+  /** How a subscriber takes one wave's (deletes, inserts) Δview feed: its
+    * state work runs now, its commit comes back. */
+  private[nodes] type FeedPrepare =
+    (graft.dag.Ctx, Option[DataFrame], Option[DataFrame]) => IvmUtil.Prepared
+
+  /** A public subscriber on the prepared path: its own prepare when it has
+    * one, else its `onViewDelta` as the commit. */
+  private[nodes] def feedOf(s: ViewSubscriber): FeedPrepare =
+    (ctx, deletes, inserts) => s.prepareViewDelta(ctx, deletes, inserts)
+      .getOrElse(IvmUtil.Prepared(() => s.onViewDelta(ctx, deletes, inserts)))
 }

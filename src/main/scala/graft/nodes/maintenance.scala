@@ -95,8 +95,7 @@ trait IncrementalIndex { self: Node =>
     * into `deleteFromIndex` (so `deleteWhere(cond)` ==
     * `deleteFromIndex(ledger WHERE cond)` by construction, which is what
     * the per-family spec pins). NULL-safe: rows where the condition
-    * evaluates NULL are KEPT (victims are rows where it is TRUE). Families
-    * with a richer direct path (AggIndexNode's ledger filter) override. */
+    * evaluates NULL are KEPT (victims are rows where it is TRUE). */
   def deleteWhere(ctx: Ctx, condition: String): Unit = {
     import org.apache.spark.sql.functions.{coalesce, col, expr, lit}
     val (ledger, idc) = retentionLedger.getOrElse(throw new GraftException(

@@ -4013,6 +4013,78 @@ class NodesSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
   }
 
+  test("IVM chain re-attach RETRY: Dag.reattachChains after a partial " +
+       "failure (the join chain subscribed, the dashboard not loaded yet) " +
+       "and again on the whole loaded chain subscribes each target once — " +
+       "the next fact and dim waves reach the dashboard exactly once") {
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    import spark.implicits._
+    val c = Ctx(spark)
+    val facts0 = (1L to 50L).map(i => (i, i % 7, i)).toDF("oid", "cust", "amt")
+    val dims0 = (0L to 6L).map(i => (i, i % 3)).toDF("cid", "nat")
+    val nats0 = (0L to 2L).map(i => (i, s"n$i")).toDF("nid", "nname")
+    def star(): (Dag, MaterializedJoinNode, MaterializedJoinNode, AggIndexNode) = {
+      val d = new Dag("star_retry")
+      val j1 = d.add(new MaterializedJoinNode(leftOn = Seq("cust"),
+        rightOn = Seq("cid"), leftId = "oid", rightId = "cid",
+        joinType = "left_outer").named("mj1"))
+      val j2 = d.add(new MaterializedJoinNode(leftOn = Seq("nat"),
+        rightOn = Seq("nid"), leftId = "v1", rightId = "nid",
+        joinType = "left_outer").named("mj2"))
+      val a = d.add(new AggIndexNode(groupCols = Seq("nname"),
+        sumCols = Seq("amt"), idCol = MaterializedJoinNode.ViewIdCol).named("dash"))
+      d.addChain(j1, "join", j2); d.addChain(j2, "aggregate", a)
+      (d, j1, j2, a)
+    }
+    val (_, mj1, mj2, agg) = star()
+    mj1.fit(c, In.single("left" -> facts0.filter("oid <= 40"),
+      "right" -> dims0.filter("cid <= 4")))
+    mj1.chainJoin(c, mj2, nats0.filter("nid <= 1"))
+    mj2.chainAggregate(c, agg)
+    val root = java.nio.file.Files.createTempDirectory("graft_chain_retry_")
+    mj1.saveFitted(s"$root/mj1"); mj2.saveFitted(s"$root/mj2")
+    agg.saveFitted(s"$root/agg")
+    agg.unpersistIndex(); mj2.unpersistIndex(); mj1.unpersistIndex()
+    val (dag, mj1b, mj2b, aggB) = star()
+    mj1b.loadFitted(s"$root/mj1", Some(spark))
+    mj2b.loadFitted(s"$root/mj2", Some(spark))
+    // the first chain re-attaches, the second refuses: the dashboard is
+    // not loaded yet
+    val partial = intercept[GraftException] { dag.reattachChains(c) }
+    assert(partial.getMessage.contains("dash"), partial.getMessage)
+    aggB.loadFitted(s"$root/agg", Some(spark))
+    dag.reattachChains(c) // the retry
+    dag.reattachChains(c) // and a plain repeat
+    var liveL = facts0.filter("oid <= 40")
+    var liveD = dims0.filter("cid <= 4")
+    var liveN = nats0.filter("nid <= 1")
+    def check(stage: String): Unit = {
+      val probe = nats0.select("nname")
+        .unionByName(Seq(Option.empty[String]).toDF("nname"))
+      val got = aggB.transform(c, In.single("probe" -> probe))("result")
+        .select("nname", "n_rows", "sum_amt")
+        .as[(Option[String], Long, Long)].collect().toSet
+      val want = liveL
+        .join(liveD, liveL("cust") === liveD("cid"), "left_outer")
+        .join(liveN, liveD("nat") === liveN("nid"), "left_outer")
+        .groupBy("nname").agg(count(lit(1)).as("n_rows"), sum("amt").as("sum_amt"))
+        .as[(Option[String], Long, Long)].collect().toSet
+      assert(got == want, s"[retry/$stage] diverged: got $got want $want")
+    }
+    check("loaded")
+    mj1b.updateIndex(c, facts0.filter("oid > 40"))
+    mj1b.deleteFromIndex(c, Seq(3L, 14L).toDF("oid"))
+    liveL = facts0.filter("oid != 3 AND oid != 14"); check("fact")
+    mj1b.updateRight(c, dims0.filter("cid > 4")); liveD = dims0
+    mj1b.deleteFromRight(c, Seq(1L).toDF("cid"))
+    liveD = liveD.filter("cid != 1"); check("dim1")
+    mj2b.updateRight(c, nats0.filter("nid > 1")); liveN = nats0
+    mj2b.deleteFromRight(c, Seq(0L).toDF("nid"))
+    liveN = liveN.filter("nid != 0"); check("dim2")
+    aggB.unpersistIndex(); mj2b.unpersistIndex(); mj1b.unpersistIndex()
+    org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+  }
+
   test("MaterializedJoinNode Δview feed with maxBroadcastDim = 0: every feed " +
        "derivation (seed, fact insert/delete, dim insert/delete) rides the " +
        "shuffled anti-join fallback — chained dashboard identical to the " +

@@ -839,6 +839,56 @@ class PlanSpec extends AnyFunSuite {
     agg.unpersistIndex(); mj2.unpersistIndex(); mj1.unpersistIndex()
   }
 
+  test("chained dim-side wave shape: updateRight and deleteFromRight on a " +
+       "left_outer MJ → MJ → Agg chain hand uncut Δview feeds to the " +
+       "subscribers and run 20 SQL executions") {
+    val spark0 = spark
+    import spark0.implicits._
+    val ctx = Ctx(spark)
+    val facts = (1L to 120L).map(i => (i, i % 13, i * 3)).toDF("oid", "cust", "amt")
+    val custs = (0L to 12L).map(i => (i, i % 4)).toDF("cid", "nat")
+    val nats = (0L to 2L).map(i => (i, s"n$i")).toDF("nid", "nname")
+    val mj1 = new MaterializedJoinNode(leftOn = Seq("cust"), rightOn = Seq("cid"),
+      leftId = "oid", rightId = "cid", joinType = "left_outer")
+    val mj2 = new MaterializedJoinNode(leftOn = Seq("nat"), rightOn = Seq("nid"),
+      leftId = "v1", rightId = "nid", joinType = "left_outer")
+    val agg = new AggIndexNode(groupCols = Seq("nname"), sumCols = Seq("amt"),
+      idCol = MaterializedJoinNode.ViewIdCol)
+    mj1.fit(ctx, In.single("left" -> facts, "right" -> custs.filter("cid <= 10")))
+    mj1.chainJoin(ctx, mj2, nats)
+    mj2.chainAggregate(ctx, agg)
+    val probes = Seq(new FeedProbe, new FeedProbe)
+    mj1.subscribeView(probes(0)); mj2.subscribeView(probes(1))
+    val ((), executions) = sqlExecutionsDuring {
+      // the cust 11/12 facts were danglers: their first match arrives
+      mj1.updateRight(ctx, custs.filter("cid > 10"))
+      // the cust 2/5 facts lose their only match and dangle again
+      mj1.deleteFromRight(ctx, Seq(2L, 5L).toDF("cid"))
+    }
+    // each call hands both joins' subscribers a delete and an insert frame
+    probes.foreach(p => assert(p.frames.size == 4, s"feed frames: ${p.frames.size}"))
+    probes.flatMap(_.frames).foreach(f => assert(!FeedProbe.hasRddLeaf(f),
+      "a Δview feed must reach its subscriber uncut (its own state write " +
+        s"cuts the lineage):\n${f.queryExecution.analyzed}"))
+    // mj1's dim-side writes (the insert's dim segment, bucket lookup and
+    // view segment; the delete's tombstone), each call's dim-count job,
+    // mj2's three state writes per call and the dashboard's two ledger
+    // writes and two totals cuts per call: 4 + 2 + 6 + 8
+    assert(executions == 20, s"chained dim-side waves ran $executions SQL executions")
+    val liveD = custs.filter("cid != 2 AND cid != 5")
+    val want = facts.join(liveD, $"cust" === $"cid", "left_outer")
+      .join(nats, $"nat" === $"nid", "left_outer")
+      .groupBy("nname").agg(org.apache.spark.sql.functions.count("*").as("n_rows"),
+        org.apache.spark.sql.functions.sum("amt").as("sum_amt"))
+      .as[(Option[String], Long, Long)].collect().toSet
+    val probe = nats.select("nname").unionByName(Seq(Option.empty[String]).toDF("nname"))
+    val got = agg.transform(ctx, In.single("probe" -> probe))("result")
+      .select("nname", "n_rows", "sum_amt")
+      .as[(Option[String], Long, Long)].collect().toSet
+    assert(got == want, s"dashboard diverged: got $got want $want")
+    agg.unpersistIndex(); mj2.unpersistIndex(); mj1.unpersistIndex()
+  }
+
   test("SegStore-backed index state stays COLUMNAR: the lexical serve plan " +
        "after insert and delete waves reads cached segments as " +
        "InMemoryTableScan, never row-block RDD scans (the r14 delta-tail " +
@@ -865,6 +915,25 @@ class PlanSpec extends AnyFunSuite {
 
   private def jobsDuring[A](f: => A): (A, Int) =
     org.apache.spark.TestBus.jobsDuring(spark.sparkContext)(f)
+
+  /** `f`'s result and the number of SQL executions it ran, counted on a
+    * drained bus (failed executions included). */
+  private def sqlExecutionsDuring[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = n.incrementAndGet()
+      def onFailure(fn: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = n.incrementAndGet()
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      val a = f
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (a, n.get)
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("SourceNode: a second build of the same DAG runs no Spark job before " +
        "its action — the schema is inferred once per unchanged file set") {
