@@ -15,7 +15,6 @@ object Bench {
     // Warmup work is tiny (1k rows) and NOT timed.
     spark.range(1000).selectExpr("sum(id)").collect()
     try {
-      graft.functions.VecFunctions.register(spark)
       val wdir = graft.nodes.WorkDir("graft_bench_warm_sql")
       spark.range(1000)
         .selectExpr("id", "id % 7 as k", "concat('tok', id % 13, ' tok', id % 5) as text")
@@ -225,17 +224,17 @@ object Bench {
     // GC — 200+ queries of broadcasts otherwise wait for a full heap) and a
     // StateStore unload after each query (HDFSBackedStateStoreProvider
     // keeps per-provider version maps loaded for the rest of the run; the
-    // band was streaming/lakehouse-heavy). Both env-overridable for A/B.
+    // band was streaming/lakehouse-heavy).
     // Round-16 A/B on the shared q1-q55 set (totals + sidecar invariants):
     // gc=8 39.3 s / gc=32 37.7 / gc=0 36.6 / no-unload 39.1 — but gc=0
     // grows heap 1.9->3.1 GB and broadcast blocks 90->188 over just 55
     // queries (the accumulation recipe at 214), and no-unload leaves 60
     // state-store providers resident (the r14 band mechanism). Chosen:
     // gcEvery=32 (insurance at ~1 s / 55 queries) + unload only when
-    // providers are actually loaded (below).
-    val gcEvery = sys.env.getOrElse("SPARK_GRAFT_GC_EVERY", "32").toInt
-    val unloadStateStores =
-      sys.env.getOrElse("SPARK_GRAFT_UNLOAD_STATESTORES", "true").toBoolean
+    // providers are actually loaded (below). The A/B is closed; both are
+    // fixed and recorded in the metrics sidecar header.
+    val gcEvery = 32
+    val unloadStateStores = true
     var queriesTimed = 0
     def reflectStateStore(method: String): Unit = try {
       val cls = Class.forName(
@@ -278,13 +277,8 @@ object Bench {
       val t0 = System.nanoTime()
       // a failed query must NOT masquerade as a fast success: log the
       // error, record a sentinel -1 timing, and surface it in the JSON.
-      // benchGates queries aggregate their payload columns instead of a
-      // bare count() so Catalyst cannot elide the work being timed.
       val ok = try {
-        SparkEntry.benchGates.get(name) match {
-          case Some(g) => fn(spark, sfDir).selectExpr(g).collect()
-          case None    => fn(spark, sfDir).count()
-        }
+        graft.queries.Queries.materialize(name, fn(spark, sfDir))
         true
       } catch {
         case e: Throwable =>
@@ -309,13 +303,13 @@ object Bench {
       // != 0, not > 0: -1 means the reflection lookup failed (unknown) —
       // that must degrade to the old unconditional unload, not silently
       // disable it for the whole run (ADVICE r16)
-      if (unloadStateStores && loadedProviderCount() != 0)
+      if (loadedProviderCount() != 0)
         reflectStateStore("unloadAll")
       queriesTimed += 1
       // ContextCleaner reclaims broadcast/shuffle artifacts only when their
       // driver references are GC'd — force that on a cadence so a long run
       // cannot accumulate hundreds of queries' worth
-      if (gcEvery > 0 && queriesTimed % gcEvery == 0) System.gc()
+      if (queriesTimed % gcEvery == 0) System.gc()
       val rt = Runtime.getRuntime
       metrics += QMetric(name, sec,
         (rt.totalMemory - rt.freeMemory) / (1024 * 1024),

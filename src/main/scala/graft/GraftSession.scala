@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one session builder of the driver programs (Bench, Verify, PlanDump,
   * Scale10), so every program plans and runs on the contract
   * config: `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-  * partitions as cores, UTC session time, no UI, and AQE coalescing by
-  * advisory size.
+  * partitions as cores, UTC session time, no UI, AQE coalescing by
+  * advisory size, and graft's kernels registered.
   */
 object GraftSession {
   def apply(logLevel: String = "WARN"): SparkSession = {
@@ -25,6 +25,7 @@ object GraftSession {
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    graft.functions.VecFunctions.register(spark)
     spark
   }
 }

@@ -15,7 +15,6 @@ object PlanDump {
     val outDir = if (args.length > 2) args(2) else "plans/r19"
     val suffix = if (args.length > 3) args(3) else "before"
     val spark = GraftSession("ERROR")
-    graft.functions.VecFunctions.register(spark)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = graft.queries.Queries.all(n)(spark, dir)

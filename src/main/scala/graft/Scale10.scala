@@ -298,7 +298,7 @@ object Scale10 {
     val names = requested
       .filter(Queries.all.contains) // custom probes have their own gates
     names.foreach { n =>
-      try time(n)(Queries.all(n)(spark, out).count())
+      try time(n)(Queries.materialize(n, Queries.all(n)(spark, out)))
       catch { case e: Throwable => println(s"[scale10] $n FAILED: ${e.getMessage}") }
     }
     customProbes.foreach { case (label, run) =>

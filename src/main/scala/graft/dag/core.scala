@@ -23,8 +23,13 @@ final case class Port(name: String, variadic: Boolean = false, required: Boolean
   * so `DagRun.unpersist()` releases it along with the fan-out persists —
   * without it, library callers in long-lived sessions leak executor storage
   * one cached frame per invocation.
+  *
+  * Making a Ctx registers graft's kernels (`vec_dot`, `minhash_bands`, …)
+  * into `spark`, so no node registers them itself; see
+  * [[graft.functions.VecFunctions]] for which other sessions carry them.
   */
 final case class Ctx(spark: SparkSession, runId: String) {
+  graft.functions.VecFunctions.register(spark)
   private[dag] val internalPersists =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
   /** Persist `df` and register it for release at `DagRun.unpersist()`. */

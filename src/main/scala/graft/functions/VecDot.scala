@@ -1,8 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
@@ -127,132 +128,99 @@ case class VecDotInt(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** graft's compiled kernels as SQL functions, and the one place that says
+  * which sessions carry them.
+  *
+  * Session contract: graft registers the kernel table wherever a session
+  * enters it — every [[graft.dag.Ctx]] (so every node call), every
+  * `SessionIsolation.freshClone` (the one graft path that builds a session
+  * with a fresh function registry, `newSession()`), and `GraftSession`
+  * (the driver programs). Sessions derived by `cloneSession()` — among them
+  * Structured Streaming's micro-batch sessions — copy their parent's
+  * registry, kernels included. A session graft never saw, such as a
+  * caller's own `spark.newSession()`, does not carry the kernels, and a
+  * graft frame built on it fails analysis with `UNRESOLVED_ROUTINE`: call
+  * [[register]] on it, or build it with `spark.sql.extensions` set to
+  * [[GraftExtensions]].
+  */
 object VecFunctions {
-  private[functions] def intLit(e: Expression): Int =
+  private def intLit(e: Expression): Int =
     e.eval(null) match {
       case i: Int => i
       case other  => throw new IllegalArgumentException(s"expected int literal, got $other")
     }
-  private[functions] def boolLit(e: Expression): Boolean =
+  private def boolLit(e: Expression): Boolean =
     e.eval(null) match {
       case b: Boolean => b
       case other      => throw new IllegalArgumentException(s"expected boolean literal, got $other")
     }
-  /** Idempotently register graft's vector/sketch functions into a session.
-    * Register-once: re-registration is a no-op (the kernels are stateless
-    * singletons keyed by name), which keeps `SimpleFunctionRegistry` from
-    * logging a "replaced a previously registered function" warning per
-    * kernel per call — pure noise across a 214-query bench run. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // first graft registration into THIS function registry? Detected by a
-    // sentinel carried IN the registry itself (not a session-keyed map):
-    // cloned/derived sessions copy the registry contents, so the sentinel
-    // travels with the kernels and re-registration through a clone stays
-    // silent.
-    val sentinel =
-      org.apache.spark.sql.catalyst.FunctionIdentifier("__graft_kernels_v1")
-    val firstInSession = !reg.functionExists(sentinel)
-    if (firstInSession)
-      reg.createOrReplaceTempFunction(sentinel.funcName,
-        _ => org.apache.spark.sql.catalyst.expressions.Literal(true),
-        "scala_udf")
-    // check-and-register EACH kernel (ADVICE r17): a single guard keyed on
-    // one name silently skipped every OTHER kernel when a session already
-    // carried a same-named function from any other source — a user UDF
-    // named "morton3" made `vec_dot` an undefined function. Idempotence
-    // per name also keeps SimpleFunctionRegistry's "replaced a function"
-    // warning out of the logs; an existing same-named user function is
-    // deliberately left alone (we never clobber the user's registry) but
-    // the hijack is made DETECTABLE (ADVICE r18): on the session's FIRST
-    // graft registration an already-bound kernel name can only be a
-    // foreign function, so it logs a warning (later re-registrations stay
-    // silent — the existing names are graft's own).
-    def reg1(name: String, builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "scala_udf")
-      else if (firstInSession)
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"graft kernel '$name' not registered: the session already binds " +
-            "a function of that name — graft queries using this kernel " +
-            "will run the session's function, not graft's")
-    reg1("vec_dot", exprs => VecDot(exprs(0), exprs(1)))
-    reg1("vec_dot_int", exprs => VecDotInt(exprs(0), exprs(1)))
-    reg1("minhash_bands", exprs => MinHashBands(exprs(0), intLit(exprs(1)), intLit(exprs(2))))
-    reg1("shingle_hashes", exprs => ShingleHashes(exprs(0), intLit(exprs(1)),
-      if (exprs.length > 2) boolLit(exprs(2)) else true))
-    reg1("simhash64", exprs => SimHash64(exprs(0)))
-    reg1("lsh_signs", exprs => LshSigns(exprs(0), intLit(exprs(1)), intLit(exprs(2))))
-    reg1("winnow_fp", exprs => WinnowFingerprint(exprs(0), intLit(exprs(1)), intLit(exprs(2))))
-    reg1("unicode_norm", exprs => UnicodeNormalize.fromExprs(exprs))
-    reg1("bpe_encode", exprs => BpeEncode(exprs(0), strLit(exprs(1)).split('\n').toSeq))
-    reg1("morton2", exprs => MortonInterleave(exprs(0), exprs(1)))
-    reg1("morton3", exprs => Morton3Interleave(exprs(0), exprs(1), exprs(2)))
-  }
-  private[functions] def strLit(e: Expression): String =
+  private def strLit(e: Expression): String =
     e.eval(null) match {
       case s: org.apache.spark.unsafe.types.UTF8String => s.toString
       case other => throw new IllegalArgumentException(s"expected string literal, got $other")
     }
+
+  /** One kernel: its SQL name, the expression class it builds, and the
+    * builder over the call's argument expressions. */
+  private[functions] final case class Kernel(name: String, cls: Class[_ <: Expression],
+      build: Seq[Expression] => Expression) {
+    def id: FunctionIdentifier = FunctionIdentifier(name)
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
+  }
+
+  /** The kernel table: both [[register]] and [[GraftExtensions]] install
+    * exactly these entries, so the same SQL resolves however the session
+    * was built. */
+  private[functions] val kernels: Seq[Kernel] = Seq(
+    Kernel("vec_dot", classOf[VecDot], e => VecDot(e(0), e(1))),
+    Kernel("vec_dot_int", classOf[VecDotInt], e => VecDotInt(e(0), e(1))),
+    Kernel("minhash_bands", classOf[MinHashBands],
+      e => MinHashBands(e(0), intLit(e(1)), intLit(e(2)))),
+    Kernel("shingle_hashes", classOf[ShingleHashes],
+      e => ShingleHashes(e(0), intLit(e(1)), if (e.length > 2) boolLit(e(2)) else true)),
+    Kernel("simhash64", classOf[SimHash64], e => SimHash64(e(0))),
+    Kernel("lsh_signs", classOf[LshSigns], e => LshSigns(e(0), intLit(e(1)), intLit(e(2)))),
+    Kernel("winnow_fp", classOf[WinnowFingerprint],
+      e => WinnowFingerprint(e(0), intLit(e(1)), intLit(e(2)))),
+    Kernel("unicode_norm", classOf[UnicodeNormalize], UnicodeNormalize.fromExprs),
+    Kernel("bpe_encode", classOf[BpeEncode],
+      e => BpeEncode(e(0), strLit(e(1)).split('\n').toSeq)),
+    Kernel("morton2", classOf[MortonInterleave], e => MortonInterleave(e(0), e(1))),
+    Kernel("morton3", classOf[Morton3Interleave],
+      e => Morton3Interleave(e(0), e(1), e(2))))
+
+  private val warned = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Idempotently register the kernel table into a session. A name the
+    * session already binds to graft's own class (an earlier call, a copied
+    * registry, the extension) is left as it is, so re-registration never
+    * trips `SimpleFunctionRegistry`'s "replaced a function" warning. A name
+    * bound to any OTHER function is never clobbered (ADVICE r17: each
+    * kernel is checked on its own, so one foreign name cannot hide the
+    * rest), but the hijack is logged once per name (ADVICE r18): graft
+    * queries that use that kernel run the session's function instead. */
+  def register(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    kernels.foreach { k =>
+      reg.lookupFunction(k.id) match {
+        case None => reg.registerFunction(k.id, k.info, k.build)
+        case Some(bound) if bound.getClassName != k.cls.getName =>
+          if (warned.add(k.name))
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"graft kernel '${k.name}' not registered: the session already binds " +
+                "a function of that name — graft queries using this kernel " +
+                "will run the session's function, not graft's")
+        case _ =>
+      }
+    }
+  }
 }
 
-/** `spark.sql.extensions=graft.functions.GraftExtensions` wires the functions
-  * in at session build time (the deployment path for a shared cluster).
+/** `spark.sql.extensions=graft.functions.GraftExtensions` installs the
+  * kernel table at session build time (the deployment path for a shared
+  * cluster); every session built from that config carries the kernels.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    def lit(e: Expression): Int = e.eval(null).asInstanceOf[Int]
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot_int"),
-      new ExpressionInfo(classOf[VecDotInt].getName, "vec_dot_int"),
-      (exprs: Seq[Expression]) => VecDotInt(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "minhash_bands"),
-      (exprs: Seq[Expression]) => MinHashBands(exprs(0), lit(exprs(1)), lit(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (exprs: Seq[Expression]) => SimHash64(exprs(0))))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_signs"),
-      new ExpressionInfo(classOf[LshSigns].getName, "lsh_signs"),
-      (exprs: Seq[Expression]) => LshSigns(exprs(0), lit(exprs(1)), lit(exprs(2)))))
-    // keep this list in lockstep with VecFunctions.register — a function
-    // present in one path but not the other makes the same SQL work or fail
-    // depending on HOW the session was built
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashes].getName, "shingle_hashes"),
-      (exprs: Seq[Expression]) => ShingleHashes(exprs(0), lit(exprs(1)),
-        if (exprs.length > 2) VecFunctions.boolLit(exprs(2)) else true)))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_fp"),
-      new ExpressionInfo(classOf[WinnowFingerprint].getName, "winnow_fp"),
-      (exprs: Seq[Expression]) => WinnowFingerprint(exprs(0), lit(exprs(1)), lit(exprs(2)))))
-    ext.injectFunction((
-      FunctionIdentifier("unicode_norm"),
-      new ExpressionInfo(classOf[UnicodeNormalize].getName, "unicode_norm"),
-      (exprs: Seq[Expression]) => UnicodeNormalize.fromExprs(exprs)))
-    ext.injectFunction((
-      FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      (exprs: Seq[Expression]) => BpeEncode(exprs(0),
-        VecFunctions.strLit(exprs(1)).split('\n').toSeq)))
-    ext.injectFunction((
-      FunctionIdentifier("morton2"),
-      new ExpressionInfo(classOf[MortonInterleave].getName, "morton2"),
-      (exprs: Seq[Expression]) => MortonInterleave(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("morton3"),
-      new ExpressionInfo(classOf[Morton3Interleave].getName, "morton3"),
-      (exprs: Seq[Expression]) => Morton3Interleave(exprs(0), exprs(1), exprs(2))))
-  }
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+    VecFunctions.kernels.foreach(k => ext.injectFunction((k.id, k.info, k.build)))
 }

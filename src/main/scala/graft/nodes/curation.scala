@@ -266,7 +266,6 @@ class NormalizeTextNode(
   override def jsonParams: Map[String, Any] = Map("textCol" -> textCol, "outCol" -> outCol,
     "form" -> form, "stripControl" -> stripControl, "collapseWhitespace" -> collapseWhitespace)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
     var c = expr(s"unicode_norm($textCol, '$form')")
     if (stripControl)
       c = regexp_replace(c, "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F]", "")

@@ -180,7 +180,6 @@ class MinHashDedupNode(
   override def jsonKind: Option[String] = Some("minhash_dedup")
   override def jsonParams: Map[String, Any] = Map("idCol" -> idCol, "textCol" -> textCol, "numHashes" -> numHashes, "bands" -> bands, "shingleN" -> shingleN, "jaccardThreshold" -> jaccardThreshold, "maxBucket" -> maxBucket, "collapseExact" -> collapseExact)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
     // Exact-duplicate collapse FIRST: a k-way duplicated document family
     // yields k^2/2 near-dup pairs — quadratic OUTPUT no pipeline can afford
     // (the 100x probe hit 27M pairs / 522 s without this). Collapsing
@@ -725,7 +724,6 @@ class SimHashDedupNode(
     // the signature is one compiled kernel call (`simhash64` hashes each
     // token once, then votes bits); the simhash long is cheap to carry
     // through the pair join, so no verify-side join is needed
-    graft.functions.VecFunctions.register(ctx.spark)
     val base =
       if (collapseExact) NearDup.collapseExact(in("df"), idCol, NearDup.textKey(textCol))
       else in("df")
@@ -767,7 +765,6 @@ class NgramJaccardNode(
     // persist: consumed three times (inverted index + both verify joins);
     // also a cache boundary so collapsed projections don't re-tokenize per
     // shingle element. Shingles are hashed longs (NearDup.shingleSketch).
-    graft.functions.VecFunctions.register(ctx.spark)
     val docs = ctx.track(
       NearDup.shingleSketch(in("df"), idCol, textCol, shingleN, idCol, "__shingles"))
     val inverted = docs.select(col(idCol), expr("explode(__shingles) as shingle"))
@@ -830,7 +827,6 @@ class SpanDupScoreNode(
     "shingleN" -> shingleN, "dropAbove" -> dropAbove)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     import org.apache.spark.sql.functions.{count, lit, sum, when}
-    graft.functions.VecFunctions.register(ctx.spark)
     val toks = TextExprs.tokensExpr(textCol)
     val spans = ctx.track(in("df")
       .withColumn("__toks", expr(toks))
@@ -1038,30 +1034,21 @@ class MinHashIndexNode(
   // per-wave writes are O(delta) parquet segments, cap-drops composite-key
   // tombstones on the bucket key. ----
   protected def bucketKey: Seq[String] = Seq("band", "band_hash")
-  protected def bucketRows(ledger: DataFrame): DataFrame = {
-    graft.functions.VecFunctions.register(ledger.sparkSession)
+  protected def bucketRows(ledger: DataFrame): DataFrame =
     bandKeys(ledger, "__sh_b", "base_id").select("band", "band_hash", "base_id")
-  }
   protected def ledgerFrame(m: Model): DataFrame = m.shingles
   protected def bucketFrame(m: Model): DataFrame = m.buckets
   protected def banded(ledger: DataFrame, buckets: DataFrame): Model =
     MinHashIndexNode.Index(ledger, buckets)
 
-  def fitModel(ctx: Ctx, in: In): Model = {
-    graft.functions.VecFunctions.register(ctx.spark)
+  def fitModel(ctx: Ctx, in: In): Model =
     fitLedger(sketch(in("corpus"), "base_id", "__sh_b"))
-  }
 
   private def jaccardVerify(cand: DataFrame): DataFrame =
     NearDup.jaccardAtLeast(cand, "__sh_d", "__sh_b", jaccardThreshold, "delta_id", "base_id")
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
     val delta = in("delta")
-    // a streaming delta may live on a per-source CLONED session (see
-    // StreamSourceNode) whose function registry is separate — register the
-    // kernels where the frame will resolve them
-    graft.functions.VecFunctions.register(delta.sparkSession)
     if (delta.isStreaming) {
       // Streaming delta (live-crawl dedup): every join is STREAM-STATIC
       // against the persisted index — no stream-stream join. The shingle
@@ -1126,11 +1113,8 @@ class MinHashIndexNode(
     * crash-recovery cadence. saveFitted/loadFitted remains the manual
     * equivalent.
     */
-  def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
-    graft.functions.VecFunctions.register(ctx.spark)
-    graft.functions.VecFunctions.register(delta.sparkSession)
+  def updateIndex(ctx: Ctx, delta: DataFrame): Unit =
     insertLedgerRows(sketch(delta, "base_id", "__sh_b").select("base_id", "__sh_b"))
-  }
 
   /** Retention ledger: (idCol, n_shingles) — e.g. "drop every doc whose
     * shingle set is smaller than K" (too short to dedup meaningfully). */

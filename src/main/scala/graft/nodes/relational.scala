@@ -32,10 +32,13 @@ object SessionIsolation {
   }
 
   /** Uncached conf-copied clone: for callers that need PRIVATE session state
-    * (e.g. SqlNode's temp views) rather than a shared conf override. */
+    * (e.g. SqlNode's temp views) rather than a shared conf override.
+    * `newSession()` starts from a fresh function registry, so the clone
+    * registers graft's kernels itself. */
   def freshClone(parent: org.apache.spark.sql.SparkSession,
                  overrides: (String, String)*): org.apache.spark.sql.SparkSession = {
     val s = parent.newSession()
+    graft.functions.VecFunctions.register(s)
     parent.conf.getAll.foreach { case (k, v) =>
       if (s.conf.isModifiable(k) && s.conf.getOption(k) != Some(v)) s.conf.set(k, v)
     }
@@ -1809,8 +1812,6 @@ class ZOrderNode(
     "keepKey" -> keepKey, "colC" -> colC.orNull)
 
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
-    graft.functions.VecFunctions.register(in("df").sparkSession)
     val keyExpr = colC match {
       case Some(c) =>
         s"morton3(cast($colA as bigint), cast($colB as bigint), cast($c as bigint))"

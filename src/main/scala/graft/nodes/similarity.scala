@@ -14,15 +14,12 @@ object VecExprs {
   /** Dot product of two array columns, accumulated in double. Uses the
     * codegen'd `vec_dot` expression (graft.functions.VecDot) — the builtin
     * `aggregate(zip_with(...))` equivalent runs interpreted per element and
-    * dominates brute-force scoring cost. Nodes call [[ensure]] first.
+    * dominates brute-force scoring cost.
     */
   def dot(a: String, b: String): String = s"vec_dot($a, $b)"
   def norm(a: String): String = s"sqrt(${dot(a, a)})"
   def cosine(a: String, b: String, normA: String, normB: String): String =
     s"${dot(a, b)} / ($normA * $normB)"
-  /** Idempotent per-session registration of the vec functions. */
-  def ensure(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.VecFunctions.register(spark)
 }
 
 /** The retrieval kernels, each defined once for both lifecycles: the
@@ -192,7 +189,6 @@ class BruteForceKnnNode(
   override def jsonKind: Option[String] = Some("knn")
   override def jsonParams: Map[String, Any] = Map("k" -> k, "idCol" -> idCol, "vecCol" -> vecCol, "queryIdCol" -> queryIdCol)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     val corpus = Retrieval.vecs(in("corpus"), idCol, vecCol, "c")
     val queries = Retrieval.vecs(in("queries"), queryIdCol, vecCol, "q")
     Map("result" -> Retrieval.cosineTopK(corpus.join(broadcast(queries)), idCol, queryIdCol, k))
@@ -232,7 +228,6 @@ class LshKnnNode(
   private def sigExpr(vec: String): String = s"lsh_signs($vec, $tables, $numPlanes)"
 
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     val corpus = Retrieval.vecs(in("corpus"), idCol, vecCol, "c")
       .withColumn("__sigs", expr(sigExpr("__cv")))
       .selectExpr(idCol, "__cv", "__cnorm", "posexplode(__sigs) as (tbl, sig)")
@@ -326,7 +321,6 @@ class IvfKnnNode(
   }
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     val corpus = QuantizerFit.assign(m, in("corpus"), idCol, vecCol)
       .withColumn("__cnorm", expr(VecExprs.norm("__cv")))
     Map("result" -> Retrieval.ivfTopK(corpus,
@@ -391,7 +385,6 @@ class IvfQuantizedKnnNode(
   }
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     val assigned = QuantizerFit.assign(m, in("corpus"), idCol, vecCol)
     // int8 side: the corpus-wide pass (skinny codes, 4x less IO than float)
     val codes = Retrieval.quantize(assigned, "__cv", "__cq", "__cscale")
@@ -561,7 +554,6 @@ class IvfIndexNode(
 
   def fitModel(ctx: Ctx, in: In): Model = {
     import org.apache.spark.storage.StorageLevel
-    VecExprs.ensure(ctx.spark)
     val (km, rows) = QuantizerFit.sampled(ctx, in("corpus"), idCol, vecCol, nClusters, maxFitRows)
     lastFitRows = rows
     val cents = Retrieval.centroids(km)
@@ -582,7 +574,6 @@ class IvfIndexNode(
       folded: Seq[Option[Long]]): Model = m.copy(assignments = frames.head)
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     val qin = in("queries")
     if (qin.isStreaming) return applyStreaming(m, ctx, qin)
     val queries = Retrieval.vecs(qin, queryIdCol, vecCol, "q")
@@ -622,7 +613,6 @@ class IvfIndexNode(
   private def applyStreaming(m: Model, ctx: Ctx, qin: DataFrame): Map[String, DataFrame] = {
     import org.apache.spark.sql.functions.{array, array_sort, call_function,
       explode, sequence, slice, struct, typedlit, transform => tfm}
-    graft.functions.VecFunctions.register(qin.sparkSession)
     val queries = Retrieval.vecs(qin, queryIdCol, vecCol, "q")
     val probeCol =
       if (nProbe >= nClusters) explode(sequence(lit(0), lit(nClusters - 1)))
@@ -651,8 +641,6 @@ class IvfIndexNode(
     * delta-sized work only (class doc). */
   def updateIndex(ctx: Ctx, delta: DataFrame): Unit = {
     val m = fitted
-    VecExprs.ensure(ctx.spark)
-    graft.functions.VecFunctions.register(delta.sparkSession)
     // O(delta) state write: the delta's assignments land once as a parquet
     // segment — no corpus-sized union copy per wave. No materializing
     // action: the segment is already durable (the append wrote it) and the
@@ -682,7 +670,6 @@ class IvfIndexNode(
   def rebuildIndex(ctx: Ctx): Unit = {
     import org.apache.spark.storage.StorageLevel
     val m = fitted
-    VecExprs.ensure(ctx.spark)
     val spark = ctx.spark
     // DETERMINISTIC layout before the k-means re-fit: seeded k-means||
     // init is partition-layout-sensitive, and the live index expression's
@@ -840,7 +827,6 @@ class EmbeddingNearDupNode(
   override def jsonKind: Option[String] = Some("embedding_near_dup")
   override def jsonParams: Map[String, Any] = Map("threshold" -> threshold, "numPlanes" -> numPlanes, "tables" -> tables, "idCol" -> idCol, "vecCol" -> vecCol, "bruteForce" -> bruteForce, "maxBruteRows" -> maxBruteRows)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     val base0 = in("df")
       .select(col(idCol), col(vecCol).as("__v"))
       .withColumn("__norm", expr(VecExprs.norm("__v")))
@@ -932,7 +918,6 @@ class SemDedupNode(
   }
 
   def applyModel(m: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
-    VecExprs.ensure(ctx.spark)
     import org.apache.spark.sql.functions.{broadcast, ceil, count, lit, xxhash64}
     // Exact-duplicate collapse FIRST (the MinHash collapseExact guard on the
     // embedding side): a k-way family of bit-identical vectors is k^2/2

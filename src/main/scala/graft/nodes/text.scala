@@ -323,7 +323,6 @@ class BpeTokenizerNode(
   }
 
   def applyModel(merges: Model, ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
     // merge lines never contain whitespace beyond the single pair separator,
     // so a newline-joined SQL string literal carries the table losslessly
     val lit = merges.mkString("\n").replace("\\", "\\\\").replace("'", "\\'")
@@ -444,7 +443,6 @@ class RepetitionScoreNode(
   override def jsonKind: Option[String] = Some("repetition_score")
   override def jsonParams: Map[String, Any] = Map("textCol" -> textCol, "ns" -> ns)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
     val base = in("df").withColumn("__toks", expr(TextExprs.tokensExpr(textCol)))
     val out = ns.foldLeft(base) { (d, n) =>
       // dedup=false: the duplicate fraction needs the positional MULTISET
@@ -482,7 +480,6 @@ class ContaminationNode(
     "benchTextCol" -> benchTextCol, "shingleN" -> shingleN, "minOverlap" -> minOverlap)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
     import org.apache.spark.sql.functions.broadcast
-    graft.functions.VecFunctions.register(ctx.spark)
     // batched selects throughout (each Dataset creation re-analyzes the
     // whole upstream plan; this node sits inside the flagship chains)
     val bench = in("benchmark")
@@ -774,7 +771,6 @@ class FingerprintNode(val textCol: String = "text", val k: Int = 8, val window: 
   override def jsonKind: Option[String] = Some("fingerprint")
   override def jsonParams: Map[String, Any] = Map("textCol" -> textCol, "k" -> k, "window" -> window)
   override def transform(ctx: Ctx, in: In): Map[String, DataFrame] = {
-    graft.functions.VecFunctions.register(ctx.spark)
     val norm = s"regexp_replace(lower(trim($textCol)), '\\\\s+', ' ')"
     Map("result" -> in("df")
       .withColumn("doc_md5", expr(s"md5(cast($norm as binary))"))

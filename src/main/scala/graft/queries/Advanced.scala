@@ -4926,13 +4926,10 @@ object Advanced {
   // drive the SAME fit → day-2 update → takedown → fresh-probe lifecycle
   // against q178's key-arithmetic oracle. One incremental index, four
   // modalities, one contract. ----
-  private def simhashFamilies(spark: SparkSession, ids: DataFrame,
-                              famExpr: String): DataFrame = {
-    graft.functions.VecFunctions.register(spark)
+  private def simhashFamilies(ids: DataFrame, famExpr: String): DataFrame =
     ids.selectExpr("doc_id", s"${q167FamText(famExpr)} as text")
       .selectExpr("doc_id",
         "simhash64(split(lower(trim(text)), '\\\\s+')) as sh")
-  }
 
   def q184_simhash_index_day2(spark: SparkSession, dir: String): DataFrame = {
     val docs = Queries.run(spark) { d =>
@@ -4940,12 +4937,12 @@ object Advanced {
         FilterNode("doc_id < 300") >> ProjectNode("doc_id") >> d.output("result")
     }
     val ctx = Ctx(spark)
-    val hashed = simhashFamilies(spark, docs, "doc_id % 20")
+    val hashed = simhashFamilies(docs, "doc_id % 20")
     val idx = new DHashIndexNode(idCol = "doc_id", hashCol = "sh", maxHamming = 3)
     idx.fit(ctx, In.single("corpus" -> hashed.filter("doc_id % 5 != 0")))
     idx.updateIndex(ctx, hashed.filter("doc_id % 5 = 0"))
     idx.deleteFromIndex(ctx, docs.filter("doc_id % 7 = 0").select("doc_id"))
-    val probes = simhashFamilies(spark,
+    val probes = simhashFamilies(
       spark.range(20).selectExpr("100000 + id as doc_id"), "(doc_id - 100000)")
     idx.transform(ctx, In.single("delta" -> probes))("result")
       .select("delta_id", "base_id")

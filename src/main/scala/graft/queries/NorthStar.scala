@@ -169,7 +169,6 @@ object NorthStar {
     val cmp = d.add(new FnNode(Seq(Port("docs"), Port("pairs")), Seq(Port("result")),
       (ctx, in) => {
         import org.apache.spark.sql.functions._
-        graft.functions.VecFunctions.register(ctx.spark)
         val toks = TextExprs.tokensExpr("text")
         val signed = ctx.track(in("docs")
           .withColumn("__toks", expr(toks))

@@ -95,7 +95,6 @@ object Recall {
     val cmp = d.add(new FnNode(Seq(Port("docs"), Port("pairs")), Seq(Port("result")),
       (ctx, in) => {
         import org.apache.spark.sql.functions._
-        graft.functions.VecFunctions.register(ctx.spark)
         val toks = TextExprs.tokensExpr("text")
         // HASHED shingles (compiled kernel, one pass) — set-identical to the
         // oracle's string shingles absent xxhash64 collisions, the same
