@@ -3,215 +3,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val selected = Drivers.select(args.headOption).toSet
     val spark = GraftSession()
-    val only: Option[Set[String]] =
-      if (args.nonEmpty) Some(args(0).split(",").toSet) else None
-    // JVM/session warmup so the first timed query doesn't absorb startup.
-    // Deliberately exercises the machinery the corpus queries hit on their
-    // first pass — parquet read/write, shuffle + window + joins, whole-stage
-    // codegen JIT, and the custom graft kernels — because the driver's cold
-    // map showed the first heavy query absorbing tens of seconds of
-    // first-touch compilation that production JVMs never see per-query.
-    // Warmup work is tiny (1k rows) and NOT timed.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    try {
-      val wdir = graft.nodes.WorkDir("graft_bench_warm_sql")
-      spark.range(1000)
-        .selectExpr("id", "id % 7 as k", "concat('tok', id % 13, ' tok', id % 5) as text")
-        .write.mode("overwrite").parquet(wdir.toString)
-      val t = spark.read.parquet(wdir.toString)
-      t.groupBy("k").count().join(t, Seq("k")).count()
-      t.selectExpr("k", "id",
-          "row_number() over (partition by k order by id) as rn").count()
-      t.selectExpr("shingle_hashes(split(text, ' '), 2) as sh")
-        .selectExpr("minhash_bands(sh, 8, 4) as b").count()
-      t.limit(64).selectExpr("cast(array(1.0, 2.0) as array<double>) as v")
-        .selectExpr("vec_dot(v, v)").count()
-      // datasketches HLL first touch (sketch agg + union + estimate):
-      // q202/q206-class queries otherwise absorb it as a cold entry
-      t.limit(64).groupBy("k")
-        .agg(org.apache.spark.sql.functions.expr("hll_sketch_agg(id, 12)").as("s"))
-        .selectExpr("hll_sketch_estimate(hll_union(s, s))").count()
-      org.apache.commons.io.FileUtils.deleteQuietly(wdir.toFile)
-    } catch { case _: Throwable => } // warmup is best-effort
-    // iterative-CC warmup: q52/q156/q157-class queries pay a first-touch
-    // localCheckpoint + many-tiny-jobs storm (block-manager checkpoint
-    // blocks, per-round scheduling) that the driver's cold map showed
-    // landing on the first CC query (up to tens of seconds driver-side).
-    // One 3-component toy graph initializes all of it, untimed.
-    try {
-      val cc = spark.range(12)
-        .selectExpr("id as id_a", "id + (id % 4) + 1 as id_b")
-      new graft.nodes.ConnectedComponentsNode("id_a", "id_b")
-        .transform(graft.dag.Ctx(spark),
-          graft.dag.In.single("pairs" -> cc))("result").count()
-    } catch { case _: Throwable => } // warmup is best-effort
-    // IVF warmup: q143 was the driver's worst cold entry (79 s cold vs
-    // 3 s kept) — its first touch pays kmeans fit machinery, the
-    // broadcast-centroid probe dispatch, and vec-kernel codegen over a
-    // persisted inverted file. A 64-vector toy index initializes all of
-    // it, untimed.
-    try {
-      val ctx = graft.dag.Ctx(spark)
-      val emb = spark.range(64).selectExpr("id as vec_id",
-        "array(cast(id % 7 as float), cast(id % 5 as float)) as embedding")
-      val ivf = new graft.nodes.IvfIndexNode(k = 3, nClusters = 2, nProbe = 1,
-        maxLiteralCentroids = 0)
-      ivf.fit(ctx, graft.dag.In.single("corpus" -> emb))
-      ivf.transform(ctx, graft.dag.In.single("queries" ->
-        emb.limit(4).selectExpr("vec_id as query_id", "embedding")))("result").count()
-      ivf.unpersistIndex()
-    } catch { case _: Throwable => } // warmup is best-effort
-    // triangle warmup: q107's cold entry (27 s cold vs 1.4 kept on the r13
-    // driver — 19.7x, the one shape the CC/IVF/stream blocks never build)
-    // is the wedge SELF-join + closing equi-join over an oriented edge set:
-    // a large sort-merge-join first touch. A 48-edge toy graph initializes
-    // that join/shuffle codegen path, untimed.
-    try {
-      val edges = spark.range(48)
-        .selectExpr("id % 12 as src", "(id * 7 + 3) % 12 as dst")
-      new graft.nodes.TriangleCountNode("src", "dst")
-        .transform(graft.dag.Ctx(spark),
-          graft.dag.In.single("edges" -> edges))("result").count()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    } catch { case _: Throwable => } // warmup is best-effort
-    // index DELETE-maintenance warmup (VERDICT r14 wrong #3): the worst cold
-    // entries of the round (q163 cluster-delete 85 s, q161 inverted-delete
-    // 58 s, q140 62 s, q179 73 s) all share the delete-wave first touch —
-    // anti-join victim removal + touched-group recompute/splice + the
-    // served re-read — which the CC/IVF/triangle/stream warmups never
-    // build. Three toy 48-64-row indexes run the full
-    // fit → update → delete → serve lifecycle, untimed. Skipped (like the
-    // streaming warmup) when the filtered set has no index/dedup query —
-    // a targeted relational-only run must not pay three lifecycles for
-    // nothing (ADVICE r15).
-    val needsIndexWarm = SparkEntry.queryOrder
-      .filter(n => only.forall(_.contains(n)))
-      .exists(n => Seq("index", "dedup", "cluster", "maintenance", "neardup",
-        "survivor", "bm25", "ivf", "minhash", "simhash", "image", "flagship",
-        "retention", "rebuild", "refresh", "leakage").exists(n.contains))
-    if (needsIndexWarm) try {
-      val ctx = graft.dag.Ctx(spark)
-      val docs = spark.range(64).selectExpr("id as doc_id",
-        "concat('tok', id % 17, ' tok', id % 7, ' tok', id % 5, ' tok', id % 3) as text")
-      val inv = new graft.nodes.InvertedIndexNode(k = 3, maxDfFrac = 0.9)
-      inv.fit(ctx, graft.dag.In.single("corpus" -> docs.filter("doc_id < 48")))
-      inv.updateIndex(ctx, docs.filter("doc_id >= 48"))
-      // day-2 serve (update-then-serve, NO delete yet): q141's first-touch
-      // shape — BM25 over spliced-but-undeleted state — survived the r14
-      // delete-warmup because the old block only served after the delete
-      inv.transform(ctx, graft.dag.In.single("queries" ->
-        docs.limit(4).selectExpr("doc_id as query_id", "text")))("result").count()
-      inv.deleteFromIndex(ctx, docs.filter("doc_id % 4 = 0").select("doc_id"))
-      inv.transform(ctx, graft.dag.In.single("queries" ->
-        docs.limit(4).selectExpr("doc_id as query_id", "text")))("result").count()
-      inv.unpersistIndex()
-      // best-survivor dedup (q140's shape): MinHash pair production +
-      // window-ranked survivor pick — the one dedup first touch the
-      // CC/triangle blocks never build
-      new graft.nodes.MinHashDedupNode(numHashes = 8, bands = 4, shingleN = 2,
-        jaccardThreshold = 0.3, collapseExact = true)
-        .transform(ctx, graft.dag.In.single("df" ->
-          docs.selectExpr("doc_id", "text")))("result").count()
-      val edges = spark.range(48).selectExpr("id % 12 as id_a", "(id * 5 + 1) % 12 as id_b")
-      val cl = new graft.nodes.ClusterIndexNode()
-      cl.fit(ctx, graft.dag.In.single("pairs" -> edges.filter("id_a % 5 != 0")))
-      cl.updateIndex(ctx, edges.filter("id_a % 5 = 0"))
-      cl.deleteFromIndex(ctx, spark.range(4).selectExpr("id * 3 as doc_id"))
-      cl.transform(ctx, graft.dag.In.single("queries" ->
-        spark.range(12).selectExpr("id as doc_id")))("result").count()
-      cl.unpersistIndex()
-      // leakage-safe-split (q132's shape, the last cold-map residue >3x —
-      // VERDICT r16 next #5): window survivor pick feeding MinHash pair
-      // production, CC labels joined back through TWO FnNode joins, then
-      // the hash-split + count-distinct aggregate. The composition (not
-      // any one operator) is the first touch the other blocks never build.
-      locally {
-        val kdocs = docs.selectExpr("doc_id", "text",
-          "md5(cast(text as binary)) as norm_key")
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("norm_key").orderBy(org.apache.spark.sql.functions.col("doc_id"))
-        val reps = kdocs.withColumn("__rn",
-            org.apache.spark.sql.functions.row_number().over(w))
-          .filter("__rn = 1").drop("__rn")
-        val pairs = new graft.nodes.MinHashDedupNode(numHashes = 8, bands = 4,
-          shingleN = 2, jaccardThreshold = 0.3)
-          .transform(ctx, graft.dag.In.single("df" -> reps))("result")
-        val labels = new graft.nodes.ConnectedComponentsNode()
-          .transform(ctx, graft.dag.In.single("pairs" -> pairs))("result")
-        val withRep = kdocs.select("doc_id", "norm_key")
-          .join(reps.selectExpr("norm_key", "doc_id as rep_id"), Seq("norm_key"))
-        val clustered = withRep.join(labels,
-            withRep("rep_id") === labels("id"), "left")
-          .select(withRep("doc_id"),
-            org.apache.spark.sql.functions.coalesce(
-              org.apache.spark.sql.functions.col("cluster_id"),
-              withRep("rep_id")).as("cluster"))
-        new graft.nodes.SplitNode(idCol = "cluster")
-          .transform(ctx, graft.dag.In.single("df" -> clustered))("result")
-          .groupBy("split")
-          .agg(org.apache.spark.sql.functions.expr("count(distinct cluster) as nc"))
-          .count()
-        // q140's tail (VERDICT r17 #7, the one >3x cold entry left): the
-        // best-survivor pick is a DOUBLE window over the same cluster
-        // partition (row_number + count) AFTER the CC label joins — a
-        // first-touch composition the split-aggregate tail above misses
-        locally {
-          import org.apache.spark.sql.functions.{col, count, lit, row_number}
-          val wBest = org.apache.spark.sql.expressions.Window
-            .partitionBy("cluster").orderBy(col("doc_id"))
-          clustered.select(col("cluster"), col("doc_id"),
-              row_number().over(wBest).as("__rn"),
-              count(lit(1)).over(org.apache.spark.sql.expressions.Window
-                .partitionBy("cluster")).as("n_members"))
-            .filter("__rn = 1").count()
-        }
-      }
-      val imgs = spark.range(48).selectExpr("id as doc_id",
-        "cast(id * 2654435761 as bigint) as dhash")
-      val dh = new graft.nodes.DHashIndexNode(maxHamming = 2)
-      dh.fit(ctx, graft.dag.In.single("corpus" -> imgs.filter("doc_id < 40")))
-      dh.updateIndex(ctx, imgs.filter("doc_id >= 40"))
-      dh.deleteFromIndex(ctx, imgs.filter("doc_id % 4 = 0").select("doc_id"))
-      dh.transform(ctx, graft.dag.In.single("delta" -> imgs.limit(4)))("result").count()
-      dh.unpersistIndex()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
-    } catch { case _: Throwable => } // warmup is best-effort
-    // streaming warmup: state-store + micro-batch machinery init is ~1-2 s of
-    // one-time cost that otherwise lands on the first timed stream query;
-    // skipped when the filtered set times no streaming query, temp dir removed
-    val willRunStream = SparkEntry.queryOrder
-      .filter(n => only.forall(_.contains(n))).exists(_.contains("stream"))
-    if (willRunStream) try {
-      val wdir = graft.nodes.WorkDir("graft_bench_warm")
-      spark.range(8).selectExpr("id", "id % 2 as k").write.mode("overwrite").parquet(wdir.toString)
-      val q = spark.readStream.schema("id BIGINT, k BIGINT").parquet(wdir.toString)
-        .groupBy("k").count()
-        .writeStream.format("memory").queryName("warm_stream")
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(30000); if (q.isActive) q.stop()
-      // stream-STREAM join + watermark state warmup: q63/q144-class queries
-      // additionally pay symmetric-hash-join state store init (two keyed
-      // state stores + watermark bookkeeping) the aggregate warmup above
-      // does not touch — the driver cold map pinned q63 at 62 s cold vs
-      // 3.2 s kept. Tiny two-sided join over the same 8-row dir, untimed.
-      import org.apache.spark.sql.functions.{col, expr}
-      val ts = expr("timestamp_seconds(1700000000 + id)")
-      def side(tag: String) = spark.readStream.schema("id BIGINT, k BIGINT")
-        .parquet(wdir.toString)
-        .withColumn(s"t_$tag", ts).withWatermark(s"t_$tag", "1 minute")
-        .select(col("k").as(s"k_$tag"), col(s"t_$tag"))
-      val j = side("l").join(side("r"),
-        expr("k_l = k_r AND t_r BETWEEN t_l - INTERVAL 1 MINUTE AND t_l + INTERVAL 1 MINUTE"))
-      val q2 = j.writeStream.format("memory").queryName("warm_ssjoin")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q2.awaitTermination(30000); if (q2.isActive) q2.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(wdir.toFile)
-    } catch { case _: Throwable => } // warmup is best-effort
+    Drivers.warmUp(spark)
     val errors = scala.collection.mutable.ArrayBuffer[String]()
     // ---- between-query instrumentation + hygiene (VERDICT r14 wrong #1) ----
     // The r14 driver run regressed 13 untouched queries ≥2x at run positions
@@ -221,27 +15,21 @@ object Bench {
     // sidecar so a recurrence is adjudicable from the artifact alone, and
     // (b) applies the two candidate reclaimers between timings: a periodic
     // System.gc() (ContextCleaner only reclaims broadcast/shuffle files on
-    // GC — 200+ queries of broadcasts otherwise wait for a full heap) and a
-    // StateStore unload after each query (HDFSBackedStateStoreProvider
-    // keeps per-provider version maps loaded for the rest of the run; the
-    // band was streaming/lakehouse-heavy).
+    // GC — 200+ queries of broadcasts otherwise wait for a full heap) and
+    // the StateStore unload of `Drivers.sweep` after each query
+    // (HDFSBackedStateStoreProvider keeps per-provider version maps loaded
+    // for the rest of the run; the band was streaming/lakehouse-heavy).
     // Round-16 A/B on the shared q1-q55 set (totals + sidecar invariants):
     // gc=8 39.3 s / gc=32 37.7 / gc=0 36.6 / no-unload 39.1 — but gc=0
     // grows heap 1.9->3.1 GB and broadcast blocks 90->188 over just 55
     // queries (the accumulation recipe at 214), and no-unload leaves 60
     // state-store providers resident (the r14 band mechanism). Chosen:
     // gcEvery=32 (insurance at ~1 s / 55 queries) + unload only when
-    // providers are actually loaded (below). The A/B is closed; both are
-    // fixed and recorded in the metrics sidecar header.
+    // providers are actually loaded (`Drivers.sweep`). The A/B is closed;
+    // both are fixed and recorded in the metrics sidecar header.
     val gcEvery = 32
     val unloadStateStores = true
     var queriesTimed = 0
-    def reflectStateStore(method: String): Unit = try {
-      val cls = Class.forName(
-        "org.apache.spark.sql.execution.streaming.state.StateStore$")
-      val mod = cls.getField("MODULE$").get(null)
-      cls.getMethod(method).invoke(mod)
-    } catch { case _: Throwable => }
     def broadcastBlockCount(): Long = try {
       val env = org.apache.spark.SparkEnv.get
       val bm = env.getClass.getMethod("blockManager").invoke(env)
@@ -249,25 +37,6 @@ object Bench {
         (b: AnyRef) => Boolean.box(b.toString.startsWith("broadcast"))
       bm.getClass.getMethod("getMatchingBlockIds", classOf[scala.Function1[_, _]])
         .invoke(bm, fn).asInstanceOf[scala.collection.Seq[_]].size.toLong
-    } catch { case _: Throwable => -1L }
-    def loadedProviderCount(): Long = try {
-      val cls = Class.forName(
-        "org.apache.spark.sql.execution.streaming.state.StateStore$")
-      val mod = cls.getField("MODULE$").get(null)
-      // exact name first: getDeclaredFields order is unspecified and a
-      // contains() match can land on unloadedProvidersToClose (a queue),
-      // silently degrading the ssp metric to -1 (ADVICE r15)
-      val fields = cls.getDeclaredFields
-      val f = fields.find(_.getName == "loadedProviders")
-        .orElse(fields.find(f => f.getName.contains("loadedProviders") &&
-          !f.getName.contains("unloaded")))
-        .getOrElse(return -1L)
-      f.setAccessible(true)
-      f.get(mod) match {
-        case m: java.util.Map[_, _] => m.size.toLong
-        case m: scala.collection.Map[_, _] => m.size.toLong
-        case _ => -1L
-      }
     } catch { case _: Throwable => -1L }
     case class QMetric(q: String, sec: Double, heapMb: Long, rdds: Int,
         bcast: Long, ssp: Long)
@@ -287,24 +56,7 @@ object Bench {
           false
       }
       val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      spark.catalog.clearCache() // node-internal persists must not leak across queries
-      // localCheckpoint blocks (CC rounds, PageRank, CheckpointNode
-      // barriers) live OUTSIDE the SQL cache manager, so clearCache leaves
-      // them pinned for the rest of the run — an accumulation mechanism the
-      // r13 driver band (q132/q136/q140/q152, all AFTER the newly
-      // lazily-checkpointed q124 flagship in registry order) is consistent
-      // with. The queries are done; their truncated-lineage RDDs are dead
-      // weight — sweep them between timings.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // state-store providers loaded by streaming queries stay resident for
-      // the whole run otherwise; unload only when some are actually loaded
-      // (the blanket per-query unload taxed every NON-streaming query with
-      // provider re-init noise — VERDICT r15 wrong #2)
-      // != 0, not > 0: -1 means the reflection lookup failed (unknown) —
-      // that must degrade to the old unconditional unload, not silently
-      // disable it for the whole run (ADVICE r16)
-      if (loadedProviderCount() != 0)
-        reflectStateStore("unloadAll")
+      Drivers.sweep(spark)
       queriesTimed += 1
       // ContextCleaner reclaims broadcast/shuffle artifacts only when their
       // driver references are GC'd — force that on a cadence so a long run
@@ -314,7 +66,7 @@ object Bench {
       metrics += QMetric(name, sec,
         (rt.totalMemory - rt.freeMemory) / (1024 * 1024),
         spark.sparkContext.getPersistentRDDs.size,
-        broadcastBlockCount(), loadedProviderCount())
+        broadcastBlockCount(), Drivers.loadedProviderCount())
       System.err.println(f"[bench] $name%-22s $sec%8.2f s")
       sec
     }
@@ -330,8 +82,7 @@ object Bench {
         new scala.util.Random(seed).shuffle(SparkEntry.queryOrder)
       case _ => SparkEntry.queryOrder
     }
-    val firstPass = runOrder.map(n => n -> SparkEntry.queries(n))
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val firstPass = runOrder.filter(selected).map(n => n -> SparkEntry.queries(n))
       .map { case (name, fn) => (name, fn, timeOne(name, fn, recordError = true)) }
     // Host-noise hygiene (VERDICT r5 #9): single-pass timings on this host
     // jitter up to ~10x in contention bursts, producing false "regressions"

@@ -10,7 +10,7 @@ package graft
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
+    val names = Drivers.select(Some(args(0)))
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "plans/r19"
     val suffix = if (args.length > 3) args(3) else "before"
@@ -23,6 +23,7 @@ object PlanDump {
       val w = new java.io.PrintWriter(s"$outDir/${n}_$suffix.txt", "UTF-8")
       try w.println(plan) finally w.close()
       println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
+      Drivers.sweep(spark)
     }
     spark.stop()
   }

@@ -14,44 +14,32 @@ import org.apache.spark.sql.functions._
 object Scale10 {
   def main(args: Array[String]): Unit = {
     val factor = if (args.nonEmpty) args(0).toInt else 10
-    val queries = if (args.length > 1) args(1).split(",").toSeq else Nil
-    val spark = GraftSession()
+    val filter = args.lift(1)
+    // started on first use, after the selection below has been checked
+    lazy val spark = GraftSession()
     val src = "/root/testdata/sf0.1"
     val out = s"/tmp/scale$factor"
 
     def cloneK(table: String, idCols: Seq[String]): Unit = {
       val p = s"$out/$table.parquet"
       if (new java.io.File(p).exists()) return
-      if (table == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val base = spark.read.parquet(s"$src/$table.parquet")
+      // events is read as SourceNode reads it: nanos-as-long on an isolated
+      // session, so the session the queries run on keeps its own conf
+      val readSession =
+        if (table != "events") spark
+        else SessionIsolation.cloneWith(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+      val base = readSession.read.parquet(s"$src/$table.parquet")
       val copies = (0 until factor).map { i =>
         idCols.foldLeft(base)((d, c) => d.withColumn(c, col(c) + lit(i.toLong * 100000000L)))
       }
       copies.reduce(_ unionByName _).repartition(math.max(factor, 8))
         .write.mode("overwrite").parquet(p)
     }
-    cloneK("documents", Seq("doc_id"))
-    cloneK("embeddings", Seq("vec_id"))
-    cloneK("events", Seq("event_id")) // user_id NOT shifted: same user population
-    cloneK("orders", Seq("o_orderkey")) // o_custkey NOT shifted: per-key density
-    cloneK("lineitem", Seq("l_orderkey")) // q158's profile source
-    // dims stay CONSTANT while facts grow k-fold — the realistic star
-    // shape (q197/q198/q204's materialized views join k-fold orders
-    // against the fixed customer dimension); plain copy, NOT cloned
-    Seq("customer", "nation").foreach { t =>
-      val p = s"$out/$t.parquet"
-      if (!new java.io.File(p).exists())
-        spark.read.parquet(s"$src/$t.parquet")
-          .write.mode("overwrite").parquet(p)
-    }
-    // grows k-fold on BOTH as-of sides — the expand path's L*R blowup is k^2
-    // per key while the merge path stays (L+R)*k; q15 probes exactly this
-
     def time(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime()
       val n = f
       println(f"[scale10] $label%-22s ${(System.nanoTime() - t0) / 1e9}%8.2f s  rows=$n")
-      spark.catalog.clearCache()
+      Drivers.sweep(spark)
     }
 
     val defaults = Seq("q20_dedup_exact", "q21_token_count", "q22_quality", "q24_fingerprint",
@@ -182,7 +170,6 @@ object Scale10 {
       // decimal-exact dashboard (ledger-sized ingest cast, group-sized
       // decimal merges)
       "q213_published_view_feed", "q214_agg_index_decimal")
-    val requested = if (queries.nonEmpty) queries else defaults
 
     // Retrieval with a BOUNDED query batch — the production serving shape.
     // q98/q100 in the list above grow ~k^2 in this probe because their
@@ -276,9 +263,8 @@ object Scale10 {
       } catch { case e: Throwable =>
         println(s"[scale10] $label FAILED: ${e.getMessage}") }
 
-    // ONE registry drives both the unknown-name warning and the probe
-    // gates (ADVICE r18: a probe added below but not to the set would
-    // spuriously warn while actually running)
+    // ONE registry drives both the name check and the probe gates: a
+    // probe added here is a known name by construction
     val customProbes: Seq[(String, () => Unit)] = Seq(
       "q98_fixed_batch" -> (() => retrievalFixedBatch("q98_fixed_batch",
         () => new InvertedIndexTopKNode(
@@ -290,19 +276,31 @@ object Scale10 {
           queryTextCol = "text", k = 5, maxDfFrac = 0.79))),
       "q213_fixed_waves" -> (() => viewFeedProbe("q213_fixed_waves", batched = false)),
       "q215_fixed_waves" -> (() => viewFeedProbe("q215_fixed_waves", batched = true)))
-    val customNames = customProbes.map(_._1).toSet
-    // surface unknown names instead of silently dropping them (ADVICE r17):
-    // a typo'd probe list must not masquerade as a clean run
-    requested.filterNot(n => Queries.all.contains(n) || customNames(n))
-      .foreach(n => println(s"[scale10] skipping unknown query $n"))
-    val names = requested
-      .filter(Queries.all.contains) // custom probes have their own gates
+    val names = Drivers.select(Some(filter.getOrElse(defaults.mkString(","))),
+      extras = customProbes.map(_._1).toSet)
+    cloneK("documents", Seq("doc_id"))
+    cloneK("embeddings", Seq("vec_id"))
+    cloneK("events", Seq("event_id")) // user_id NOT shifted: same user population
+    cloneK("orders", Seq("o_orderkey")) // o_custkey NOT shifted: per-key density
+    cloneK("lineitem", Seq("l_orderkey")) // q158's profile source
+    // dims stay CONSTANT while facts grow k-fold — the realistic star
+    // shape (q197/q198/q204's materialized views join k-fold orders
+    // against the fixed customer dimension); plain copy, NOT cloned
+    Seq("customer", "nation").foreach { t =>
+      val p = s"$out/$t.parquet"
+      if (!new java.io.File(p).exists())
+        spark.read.parquet(s"$src/$t.parquet")
+          .write.mode("overwrite").parquet(p)
+    }
+    // grows k-fold on BOTH as-of sides — the expand path's L*R blowup is k^2
+    // per key while the merge path stays (L+R)*k; q15 probes exactly this
+
     names.foreach { n =>
       try time(n)(Queries.materialize(n, Queries.all(n)(spark, out)))
       catch { case e: Throwable => println(s"[scale10] $n FAILED: ${e.getMessage}") }
     }
     customProbes.foreach { case (label, run) =>
-      if (queries.isEmpty || queries.contains(label)) run()
+      if (filter.forall(_.split(",").map(_.trim).contains(label))) run()
     }
     spark.stop()
   }

@@ -6,8 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query-name filter (fast iteration).
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val names = Drivers.select(args.lift(2))
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Decimal→double hash-contract guard: queries compare bit-identically
@@ -17,11 +16,9 @@ object Verify {
     // LOUDLY here, not surface as flaky driver hash mismatches.
     val doubleBound = 9.007e11 // 2^53 / 10^4, rounded down
     val violations = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    names.foreach { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         val written = spark.read.parquet(s"$outDir/$name")
         val dCols = written.schema.fields
@@ -40,7 +37,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally spark.catalog.clearCache() // node-internal persists must not leak across queries
+      finally Drivers.sweep(spark)
     }
     if (violations.nonEmpty) {
       violations.foreach(v => System.err.println(s"[verify] DECIMAL-GUARD $v"))

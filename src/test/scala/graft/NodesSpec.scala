@@ -738,6 +738,27 @@ class NodesSpec extends AnyFunSuite {
     assert(e.getMessage.contains("refused"))
   }
 
+  test("EmbeddingNearDupNode LSH blocking: a subset of the brute-force pairs, planted duplicates found") {
+    // 60 random unit-variance vectors (pairwise cosine near 0 in 16 dims),
+    // six exact copies (ids 100+) and six slightly perturbed copies (200+)
+    val rnd = new scala.util.Random(7)
+    val base = (0L until 60L).map(i => i -> Array.fill(16)(rnd.nextGaussian().toFloat))
+    val exact = base.take(6).map { case (i, v) => (100L + i) -> v.clone() }
+    val near = base.slice(10, 16).map { case (i, v) =>
+      (200L + i) -> v.map(x => x + (rnd.nextGaussian() * 0.01).toFloat) }
+    val emb = (base ++ exact ++ near).toDF("vec_id", "embedding")
+    def pairs(brute: Boolean): Map[(Long, Long), Double] = runOne { d =>
+      d.add(srcNode(emb, "emb")) >> new EmbeddingNearDupNode(bruteForce = brute) >>
+        d.output("result")
+    }.as[(Long, Long, Double)].collect().map { case (a, b, s) => (a, b) -> s }.toMap
+    val lsh = pairs(brute = false)
+    val brute = pairs(brute = true)
+    assert(lsh.keySet.subsetOf(brute.keySet), s"LSH-only pairs: ${lsh.keySet -- brute.keySet}")
+    lsh.foreach { case (k, s) => assert(brute(k) == s, s"score of $k differs") }
+    val planted = (0L until 6L).map(i => (i, 100L + i))
+    assert(planted.forall(lsh.contains), s"missed: ${planted.filterNot(lsh.contains)}")
+  }
+
   test("SampleNode: deterministic, stratified, zero-shuffle") {
     val df = (0L until 2000L).map(i => (i, if (i % 2 == 0) "en" else "de")).toDF("doc_id", "lang")
     def sample() = runOne { d =>
